@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Checkpoint + lineage for long multi-stage jobs (north_rule: every stage
   * writes per-partition lineage + row-count metrics so a killed job resumes
@@ -53,7 +54,13 @@ final class Checkpoint(spark: SparkSession, root: String) {
   /** Run (or resume) a stage: `compute(g)` must return group `g`'s slice —
     * rows whose `pmod(hash-ish group key) == g`; the caller guarantees the
     * slices partition the stage output. Returns the full stage output
-    * reading every group's committed parquet.
+    * reading every group's committed parquet. `beforeCommit(g)` runs once
+    * group `g`'s data is in place and before its marker, so whatever it
+    * writes beside the group commits with it.
+    *
+    * Reads back take the schema of the DataFrame just written, which saves
+    * the footer-reading job of parquet schema inference; only a call that
+    * ran no group infers it (asking `compute` for a schema could run jobs).
     *
     * The per-group envelope (min/max of `xCol`/`yCol`, when present) goes
     * into the lineage row, mirroring the reference's parent-envelope
@@ -62,9 +69,11 @@ final class Checkpoint(spark: SparkSession, root: String) {
   def runStage(
       stage: String, nGroups: Int,
       compute: Int => DataFrame,
-      xCol: String = "", yCol: String = ""): DataFrame = {
+      xCol: String = "", yCol: String = "",
+      beforeCommit: Int => Unit = _ => ()): DataFrame = {
     fs.mkdirs(stageDir(stage))
     val done = completedGroups(stage)
+    var written: Option[StructType] = None
     (0 until nGroups).foreach { g =>
       if (!done.contains(g)) {
         val t0 = System.nanoTime()
@@ -76,19 +85,21 @@ final class Checkpoint(spark: SparkSession, root: String) {
         fs.delete(fin, true)
         require(fs.rename(tmp, fin), s"rename $tmp -> $fin failed")
         val wallMs = (System.nanoTime() - t0) / 1000000L
-        writeLineage(stage, g, fin.toString, wallMs, xCol, yCol)
+        written = Some(df.schema)
+        writeLineage(stage, g, fin.toString, df.schema, wallMs, xCol, yCol)
+        beforeCommit(g)
         fs.create(marker(stage, g), false).close() // commit point
       }
     }
-    spark.read.parquet(
+    written.fold(spark.read)(spark.read.schema).parquet(
       (0 until nGroups).map(g =>
         new HPath(stageDir(stage), s"group=$g").toString): _*)
   }
 
   private def writeLineage(
-      stage: String, g: Int, dir: String, wallMs: Long,
+      stage: String, g: Int, dir: String, schema: StructType, wallMs: Long,
       xCol: String, yCol: String): Unit = {
-    val df = spark.read.parquet(dir)
+    val df = spark.read.schema(schema).parquet(dir)
     val aggs =
       if (xCol.nonEmpty && df.columns.contains(xCol))
         Seq(count(lit(1)).as("rows"),

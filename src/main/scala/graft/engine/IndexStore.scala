@@ -1,10 +1,16 @@
 package graft.engine
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
+import java.nio.ByteBuffer
+import java.util.zip.CRC32
+
+import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
+import org.apache.spark.util.AccumulatorV2
 
 import graft.index.{CellGrid, PointRTree2D}
 
@@ -24,8 +30,91 @@ import graft.index.{CellGrid, PointRTree2D}
   * Cells stay whole within a group (group = cell mod nGroups), so a probe
   * touches exactly the groups its cells hash to, and a killed build loses
   * at most one uncommitted group.
+  *
+  * Every committed group carries a CELL MANIFEST `_cells_<g>` beside its
+  * parquet: the group's sorted `(cell, n)` pairs, written after the data
+  * and before the `_done_<g>` marker, so a marker vouches for both. Reads
+  * resolve latest-wins on the driver from the manifests and scan only the
+  * groups and cells they own — no window, no shuffle, no schema inference.
   */
 object IndexStore {
+
+  /** The stored table's schema, given to every scan explicitly. */
+  private val Schema = StructType(Seq(
+    StructField("cell", LongType), StructField("n", LongType),
+    StructField("tree", BinaryType)))
+
+  private def emptyTable(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), Schema)
+
+  /** A group's cells, ascending, with their point counts. */
+  private final case class CellManifest(cells: Array[Long], ns: Array[Long])
+
+  private object CellManifest {
+    def of(counts: Iterable[(Long, Long)]): CellManifest = {
+      val s = counts.toArray.sortBy(_._1)
+      CellManifest(s.map(_._1), s.map(_._2))
+    }
+  }
+
+  /** Collects a group's `(cell, n)` pairs inside the job that writes the
+    * group, so committing its manifest costs no job. Merging is a map
+    * union, so a retried task's repeated updates change nothing.
+    */
+  private final class CellCounts
+      extends AccumulatorV2[(Long, Long), CellManifest] {
+    private val counts = mutable.HashMap.empty[Long, Long]
+    def isZero: Boolean = counts.isEmpty
+    def copy(): CellCounts = { val c = new CellCounts; c.counts ++= counts; c }
+    def reset(): Unit = counts.clear()
+    def add(v: (Long, Long)): Unit = counts(v._1) = v._2
+    def merge(o: AccumulatorV2[(Long, Long), CellManifest]): Unit = o match {
+      case c: CellCounts => counts ++= c.counts
+      case _ => throw new UnsupportedOperationException(o.getClass.getName)
+    }
+    def value: CellManifest = CellManifest.of(counts)
+  }
+
+  /** Manifest bytes: count (int), `count` × (cell, n) longs, then the
+    * CRC32 of the pairs (long). A file whose length or checksum disagrees
+    * is torn and never trusted.
+    */
+  private def writeManifest(fs: FileSystem, p: HPath, m: CellManifest): Unit = {
+    val body = ByteBuffer.allocate(16 * m.cells.length)
+    m.cells.indices.foreach(i => body.putLong(m.cells(i)).putLong(m.ns(i)))
+    val crc = new CRC32
+    crc.update(body.array)
+    val out = fs.create(p, true)
+    try {
+      out.writeInt(m.cells.length)
+      out.write(body.array)
+      out.writeLong(crc.getValue)
+    } finally out.close()
+  }
+
+  private def readManifest(fs: FileSystem, p: HPath, len: Long): Option[CellManifest] =
+    if (len < 12 || (len - 12) % 16 != 0) None
+    else {
+      val in = fs.open(p)
+      try {
+        val n = in.readInt()
+        if (len != 12L + 16L * n) None
+        else {
+          val body = new Array[Byte](16 * n)
+          in.readFully(body)
+          val crc = new CRC32
+          crc.update(body)
+          if (in.readLong() != crc.getValue) None
+          else {
+            val b = ByteBuffer.wrap(body)
+            val cells = new Array[Long](n)
+            val ns = new Array[Long](n)
+            cells.indices.foreach { i => cells(i) = b.getLong(); ns(i) = b.getLong() }
+            Some(CellManifest(cells, ns))
+          }
+        }
+      } finally in.close()
+    }
 
   /** The store's filesystem, resolved from the root's scheme — `file:`,
     * `hdfs:`, `s3a:`, … — through the session's Hadoop configuration.
@@ -50,28 +139,60 @@ object IndexStore {
     t
   }
 
+  /** Commit a tree stage through [[Checkpoint]]: `slice(g)` returns group
+    * g's rows and a thunk yielding its manifest once they are written;
+    * the manifest lands before the group's marker. A recomputed group
+    * overwrites whatever manifest an earlier, uncommitted attempt left.
+    */
+  private def commitStage(spark: SparkSession, root: String, stage: String,
+      nGroups: Int)(slice: Int => (DataFrame, () => CellManifest)): DataFrame = {
+    val fs = hfs(spark, root)
+    val manifests = mutable.HashMap.empty[Int, () => CellManifest]
+    new Checkpoint(spark, root).runStage(stage, nGroups,
+      { g => val (df, m) = slice(g); manifests(g) = m; df },
+      beforeCommit = g => writeManifest(fs,
+        new HPath(new HPath(root, stage), s"_cells_$g"), manifests(g)()))
+  }
+
+  /** `rows` built with a fresh [[CellCounts]] its job fills. */
+  private def counted(spark: SparkSession)(
+      rows: CellCounts => DataFrame): (DataFrame, () => CellManifest) = {
+    val acc = new CellCounts
+    spark.sparkContext.register(acc)
+    (rows(acc), () => acc.value)
+  }
+
   /** Build (or resume building) the persisted index under `root`. Each
     * group's slice bulk-loads one packed tree per cell inside mapGroups —
-    * the per-partition STR build — and commits atomically via Checkpoint.
-    * Returns the full `(cell, n, tree)` table.
+    * the per-partition STR build — and commits atomically via Checkpoint,
+    * its manifest collected by the same job. Returns the base stage's
+    * `(cell, n, tree)` table.
     */
   def build(spark: SparkSession, points: Dataset[PointRow], grid: CellGrid,
       root: String, nGroups: Int = 8): DataFrame = {
     import spark.implicits._
-    val cp = new Checkpoint(spark, root)
     val celled = points.map(p => (grid.cellId(p.x, p.y), p))
-    cp.runStage("trees", nGroups, { g =>
-      celled.filter(_._1 % nGroups == g)
-        .groupByKey(_._1)
-        .mapGroups { (cell, it) =>
-          val arr = it.map(_._2).toArray
-          val tree = PointRTree2D.build(
-            arr.map(_.id), arr.map(_.x), arr.map(_.y))
-          (cell, arr.length.toLong, treeBytes(tree))
-        }
-        .toDF("cell", "n", "tree")
-    })
+    commitStage(spark, root, "trees", nGroups) { g =>
+      counted(spark) { acc =>
+        celled.filter(_._1 % nGroups == g)
+          .groupByKey(_._1)
+          .mapGroups { (cell, it) =>
+            val arr = it.map(_._2).toArray
+            val tree = PointRTree2D.build(
+              arr.map(_.id), arr.map(_.x), arr.map(_.y))
+            acc.add((cell, arr.length.toLong))
+            (cell, arr.length.toLong, treeBytes(tree))
+          }
+          .toDF("cell", "n", "tree")
+      }
+    }
   }
+
+  /** A committed stage: its (gen, kindRank) order key, name, and the
+    * committed groups' manifest file lengths (-1 when absent).
+    */
+  private final case class Stage(gen: Int, kindRank: Int, name: String,
+      groups: Seq[(Int, Long)])
 
   /** Committed generations under `root`, oldest first. Three stage kinds:
     * the base `trees` stage (generation 0), appends `trees_g<k>` (k ≥ 1),
@@ -80,12 +201,10 @@ object IndexStore {
     * want, and at equal k the compaction outranks the append (it already
     * contains it; matters when a stream replaying an old batchId
     * recreates a retired `trees_g<k>`). A stage counts only once it has
-    * ≥ 1 committed group marker. Returns (gen, kindRank, stage) with
-    * kindRank 1 for compactions, 0 otherwise, ordered by (gen, kindRank).
+    * ≥ 1 committed group marker. kindRank is 1 for compactions, 0
+    * otherwise; stages are ordered by (gen, kindRank).
     */
-  private def generations(spark: SparkSession,
-      root: String): Seq[(Int, Int, String)] = {
-    val cp = new Checkpoint(spark, root)
+  private def generations(spark: SparkSession, root: String): Seq[Stage] = {
     val fs = hfs(spark, root)
     val rootP = new HPath(root)
     val names =
@@ -93,19 +212,26 @@ object IndexStore {
       else fs.listStatus(rootP).filter(_.isDirectory).map(_.getPath.getName)
         .filter(n => n == "trees" || n.matches("trees_[gc]\\d+"))
     names.toSeq
-      .map {
-        case "trees" => (0, 0, "trees")
-        case n if n.startsWith("trees_c") =>
-          (n.stripPrefix("trees_c").toInt, 1, n)
-        case n => (n.stripPrefix("trees_g").toInt, 0, n)
+      .map { name =>
+        val files = fs.listStatus(new HPath(root, name))
+          .map(f => f.getPath.getName -> f.getLen).toMap
+        val groups = files.keys.filter(_.startsWith("_done_"))
+          .map(_.stripPrefix("_done_").toInt).toSeq.sorted
+          .map(g => g -> files.getOrElse(s"_cells_$g", -1L))
+        name match {
+          case "trees" => Stage(0, 0, name, groups)
+          case n if n.startsWith("trees_c") =>
+            Stage(n.stripPrefix("trees_c").toInt, 1, n, groups)
+          case n => Stage(n.stripPrefix("trees_g").toInt, 0, n, groups)
+        }
       }
-      .filter { case (_, _, n) => cp.completedGroups(n).nonEmpty }
-      .sortBy(t => (t._1, t._2))
+      .filter(_.groups.nonEmpty)
+      .sortBy(st => (st.gen, st.kindRank))
   }
 
   /** Number of committed stages (base + appends + compactions) — the LSM
-    * depth a maintenance scheduler triggers on; a probe unions exactly
-    * this many stages before latest-wins.
+    * depth a maintenance scheduler triggers on; a probe unions at most
+    * this many stage scans.
     */
   def generationCount(spark: SparkSession, root: String): Int =
     generations(spark, root).size
@@ -126,26 +252,91 @@ object IndexStore {
     fs.delete(d, true)
   }
 
-  private def readStage(spark: SparkSession, root: String,
-      stage: String): DataFrame = {
-    val cp = new Checkpoint(spark, root)
-    spark.read.parquet(cp.completedGroups(stage).toSeq.sorted
-      .map(g => new HPath(new HPath(root, stage), s"group=$g").toString): _*)
+  /** A committed group's share of the latest-wins view: its parquet
+    * directory, its manifest's cell count, and the cells it serves (the
+    * ones no later stage holds) with their point counts.
+    */
+  private final case class Owned(stage: String, path: String, total: Int,
+      cells: Array[Long], ns: Array[Long])
+
+  /** Resolve latest-wins over `stages` on the driver: walking them newest
+    * first in (gen, kindRank) order, each cell belongs to the first stage
+    * whose manifest lists it. A group whose manifest is missing (a store
+    * written before manifests existed, a hand-committed stage) or torn is
+    * derived from a projected `(cell, n)` scan — one job for all of them.
+    */
+  private def resolve(spark: SparkSession, root: String,
+      stages: Seq[Stage]): Seq[Owned] = {
+    import spark.implicits._
+    val fs = hfs(spark, root)
+    val listed = stages.flatMap { st =>
+      val dir = new HPath(root, st.name)
+      st.groups.map { case (g, len) =>
+        (st.name, new HPath(dir, s"group=$g").toString,
+          readManifest(fs, new HPath(dir, s"_cells_$g"), len))
+      }
+    }
+    val missing = listed.collect { case (_, path, None) => path }
+    val derived =
+      if (missing.isEmpty) Map.empty[String, CellManifest]
+      else missing
+        .map(p => spark.read.schema(Schema).parquet(p)
+          .select(lit(p), col("cell"), col("n")))
+        .reduce(_.union(_))
+        .as[(String, Long, Long)].collect()
+        .groupBy(_._1).map { case (p, rows) =>
+          p -> CellManifest.of(rows.map(r => (r._2, r._3)))
+        }
+    val seen = mutable.HashSet.empty[Long]
+    listed.reverse.map { case (stage, path, m0) =>
+      val m = m0.orElse(derived.get(path))
+        .getOrElse(CellManifest(Array.empty, Array.empty))
+      val own = m.cells.indices.filter(i => seen.add(m.cells(i)))
+      Owned(stage, path, m.cells.length, own.map(m.cells).toArray,
+        own.map(m.ns).toArray)
+    }.filter(_.cells.nonEmpty)
   }
+
+  /** The owned groups of every committed stage; fails on an empty root. */
+  private def served(spark: SparkSession, root: String): Seq[Owned] = {
+    val stages = generations(spark, root)
+    require(stages.nonEmpty, s"no committed index groups under $root")
+    resolve(spark, root, stages)
+  }
+
+  /** The `(cell, n, tree)` rows of `owned` whose cell passes `keep`: per
+    * stage, one parquet scan with the explicit schema over just the groups
+    * holding such cells, unioned. With `pushIn` the scan filters an
+    * `IN (cell, …)` the parquet reader can push down (for the few cells of
+    * a probe's cover); otherwise a stage serving fewer cells than its
+    * groups hold filters on a captured sorted array, since thousands of
+    * `IN` literals cost far more to plan than the scan saves.
+    */
+  private def view(spark: SparkSession, owned: Seq[Owned],
+      keep: Long => Boolean, pushIn: Boolean = false): DataFrame =
+    owned.groupBy(_.stage).values.toSeq.sortBy(_.head.stage).flatMap { gs =>
+      val sel = gs.map(o => o -> o.cells.filter(keep)).filter(_._2.nonEmpty)
+      Option.when(sel.nonEmpty) {
+        val cells = sel.flatMap(_._2).toArray.sorted
+        val scan = spark.read.schema(Schema).parquet(sel.map(_._1.path): _*)
+        if (pushIn) scan.where(col("cell").isin(cells.toSeq: _*))
+        else if (cells.length == sel.map(_._1.total).sum) scan
+        else scan.where(udf((c: Long) =>
+          java.util.Arrays.binarySearch(cells, c) >= 0).apply(col("cell")))
+      }
+    }.reduceOption(_.union(_)).getOrElse(emptyTable(spark))
 
   /** The stored index table: latest generation wins per cell. An appended
     * cell's generation-k tree already holds the cell's FULL point set (the
     * append merged the prior tree before rebuilding), so the view is a
-    * plain last-writer-wins over ≤ 4^res rows per generation — untouched
-    * cells keep serving their original bytes, which never move (the
-    * LSM-style contract that makes appends O(touched cells), not
-    * O(store), at 100 TB). Single-generation stores skip the window.
+    * plain last-writer-wins — untouched cells keep serving their original
+    * bytes, which never move (the LSM-style contract that makes appends
+    * O(touched cells), not O(store), at 100 TB). The winners come from the
+    * cell manifests on the driver, so the view is a union of parquet scans,
+    * each restricted to the cells its stage still serves.
     */
-  def table(spark: SparkSession, root: String): DataFrame = {
-    val view = tableUpTo(spark, root, Int.MaxValue)
-    require(view.isDefined, s"no committed index groups under $root")
-    view.get
-  }
+  def table(spark: SparkSession, root: String): DataFrame =
+    view(spark, served(spark, root), _ => true)
 
   /** The latest-wins view over stages with generation ≤ maxGen; None when
     * no such stage exists (a replayed append whose base generations were
@@ -154,21 +345,9 @@ object IndexStore {
     */
   private def tableUpTo(spark: SparkSession, root: String,
       maxGen: Int): Option[DataFrame] = {
-    import org.apache.spark.sql.expressions.Window
-    val gens = generations(spark, root).filter(_._1 <= maxGen)
-    if (gens.isEmpty) None
-    else if (gens.size == 1) Some(readStage(spark, root, gens.head._3))
-    else {
-      val unioned = gens.map { case (g, kr, stage) =>
-        readStage(spark, root, stage)
-          .withColumn("gen", lit(g)).withColumn("kr", lit(kr))
-      }.reduce(_.unionByName(_))
-      val w = Window.partitionBy("cell")
-        .orderBy(col("gen").desc, col("kr").desc)
-      Some(unioned.withColumn("rk", row_number().over(w))
-        .where(col("rk") === 1)
-        .select("cell", "n", "tree"))
-    }
+    val stages = generations(spark, root).filter(_.gen <= maxGen)
+    Option.when(stages.nonEmpty)(
+      view(spark, resolve(spark, root, stages), _ => true))
   }
 
   /** C4 over the PERSISTED index — incremental append without touching
@@ -188,12 +367,11 @@ object IndexStore {
       root: String, gen: Int, nGroups: Int = 8): DataFrame = {
     require(gen >= 1, s"append generations start at 1, got $gen")
     import spark.implicits._
-    val cp = new Checkpoint(spark, root)
     val celled = points.map(p => (grid.cellId(p.x, p.y), p))
     // materialize the touched-cell slice of the base view ONCE (semi-join
     // on the batch's cell set, no driver collect): without this, every
-    // one of the nGroups group jobs re-scans all generations and re-runs
-    // the latest-wins window — O(nGroups·store) instead of O(touched).
+    // one of the nGroups group jobs re-scans all generations —
+    // O(nGroups·store) instead of O(touched).
     // LAZY: the slice is only needed by uncommitted groups' compute
     // closures — a marker-idempotent re-invocation (every re-run of the
     // persisted bench queries, every stream batch replay) previously paid
@@ -210,52 +388,56 @@ object IndexStore {
         // outranked by the compacted stage (kindRank), so building them
         // against an empty base is safe and the replay stays a no-op
         // in the served view
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("cell",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("n",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("tree",
-              org.apache.spark.sql.types.BinaryType, nullable = true))))
+        emptyTable(spark)
     }
-    cp.runStage(s"trees_g$gen", nGroups, { g =>
-      val newCells = celled.filter(_._1 % nGroups == g)
-        .groupByKey(_._1)
-        .mapGroups { (cell, it) =>
-          val arr = it.map(_._2).toArray
-          (cell, arr.map(_.id), arr.map(_.x), arr.map(_.y))
-        }
-        .toDF("cell", "ids", "xs", "ys")
-      newCells.join(base.select(col("cell"), col("tree")), Seq("cell"), "left")
-        .select(col("cell"), col("ids"), col("xs"), col("ys"), col("tree"))
-        .as[(Long, Array[Long], Array[Double], Array[Double], Array[Byte])]
-        .map { case (cell, ids, xs, ys, old) =>
-          val (oi, ox, oy) =
-            if (old == null)
-              (Array.empty[Long], Array.empty[Double], Array.empty[Double])
-            else { val t = treeFrom(old); (t.ids, t.xs, t.ys) }
-          val tree = PointRTree2D.build(oi ++ ids, ox ++ xs, oy ++ ys)
-          (cell, (oi.length + ids.length).toLong, treeBytes(tree))
-        }
-        .toDF("cell", "n", "tree")
-    })
+    commitStage(spark, root, s"trees_g$gen", nGroups) { g =>
+      counted(spark) { acc =>
+        val newCells = celled.filter(_._1 % nGroups == g)
+          .groupByKey(_._1)
+          .mapGroups { (cell, it) =>
+            val arr = it.map(_._2).toArray
+            (cell, arr.map(_.id), arr.map(_.x), arr.map(_.y))
+          }
+          .toDF("cell", "ids", "xs", "ys")
+        newCells.join(base.select(col("cell"), col("tree")), Seq("cell"), "left")
+          .select(col("cell"), col("ids"), col("xs"), col("ys"), col("tree"))
+          .as[(Long, Array[Long], Array[Double], Array[Double], Array[Byte])]
+          .map { case (cell, ids, xs, ys, old) =>
+            val (oi, ox, oy) =
+              if (old == null)
+                (Array.empty[Long], Array.empty[Double], Array.empty[Double])
+              else { val t = treeFrom(old); (t.ids, t.xs, t.ys) }
+            val tree = PointRTree2D.build(oi ++ ids, ox ++ xs, oy ++ ys)
+            val n = (oi.length + ids.length).toLong
+            acc.add((cell, n))
+            (cell, n, treeBytes(tree))
+          }
+          .toDF("cell", "n", "tree")
+      }
+    }
     table(spark, root)
+  }
+
+  /** The stored trees of the served, non-empty cells among `cover`, read
+    * by an `IN (cell, …)`-filtered scan of just the groups holding them.
+    */
+  private def coveredTrees(spark: SparkSession, root: String,
+      cover: Seq[Long]): DataFrame = {
+    val cells = cover.toSet
+    view(spark, served(spark, root), cells.contains, pushIn = true)
+      .select("tree")
   }
 
   /** F1 over the persisted index: prune the cell table to the query box's
     * covered cells (an `IN` predicate the parquet scan can push down — the
     * persisted analog of envelope-based subtree pruning), deserialize just
-    * those trees, and probe point-in-box. Output: (id, x, y).
+    * those trees, and probe point-in-box. One job. Output: (id, x, y).
     */
   def rangeQuery(spark: SparkSession, root: String, grid: CellGrid,
       qMinX: Double, qMinY: Double, qMaxX: Double, qMaxY: Double): DataFrame = {
     import spark.implicits._
-    val cells = grid.cover(graft.geom.AABB.of2d(qMinX, qMinY, qMaxX, qMaxY))
-    table(spark, root)
-      .where(col("cell").isin(cells: _*))
-      .select("tree")
+    coveredTrees(spark, root,
+      grid.cover(graft.geom.AABB.of2d(qMinX, qMinY, qMaxX, qMaxY)))
       .as[Array[Byte]]
       .mapPartitions { it =>
         it.flatMap { bytes =>
@@ -283,24 +465,19 @@ object IndexStore {
     *
     * Each probe pass groups its candidate queries BY CELL before touching
     * the store, so every stored tree is deserialized at most once per
-    * pass regardless of how many queries hit it.
+    * pass regardless of how many queries hit it. The histogram comes from
+    * the cell manifests on the driver, and each pass scans the store view
+    * afresh (a parquet read, no materialized copy).
     */
   def knnQuery(spark: SparkSession, root: String, grid: CellGrid,
       queries: Dataset[QueryRow], k: Int): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    // materialize the generational view ONCE: the query runs three jobs
-    // against it (histogram collect + both probe passes), and on a
-    // multi-generation store each would otherwise re-run the union +
-    // latest-wins window — same single-pass-view treatment append/compact
-    // already apply
-    val store = table(spark, root).localCheckpoint(true)
+    val owned = served(spark, root)
+    val store = view(spark, owned, _ => true)
     // bounded: ≤ 4^res non-empty cells (the knnJoin histogram contract)
-    val histRows = store.select(col("cell"), col("n"))
-      .as[(Long, Long)].collect().sortBy(_._1)
-    val histKeys = histRows.map(_._1)
-    val histCnts = histRows.map(_._2)
-    val histB = spark.sparkContext.broadcast((histKeys, histCnts))
+    val hist = CellManifest.of(owned.flatMap(o => o.cells.zip(o.ns)))
+    val histB = spark.sparkContext.broadcast((hist.cells, hist.ns))
 
     def probe(cand: DataFrame): DataFrame =
       cand.groupBy("cell")
@@ -377,37 +554,36 @@ object IndexStore {
     * cells identical to the view it was computed from, masked until the
     * next compaction subsumes it. Correctness never depends on a
     * compaction finishing — it is pure maintenance, exactly like an LSM
-    * level merge. The view is materialized once (localCheckpoint) — a
-    * compaction is inherently O(store), but never O(nGroups·store).
+    * level merge. Group g reads only the source groups serving its cells,
+    * so a compaction is O(store), never O(nGroups·store), and each group's
+    * manifest is computed on the driver from the input manifests.
     */
   def compact(spark: SparkSession, root: String,
       nGroups: Int = 8): DataFrame = {
-    val gens = generations(spark, root)
-    require(gens.nonEmpty, s"no committed index groups under $root")
-    if (gens.size == 1) return readStage(spark, root, gens.head._3)
-    val m = gens.map(_._1).max
-    val target = s"trees_c$m"
-    val cur = table(spark, root).localCheckpoint(true)
-    val cp = new Checkpoint(spark, root)
-    cp.runStage(target, nGroups, { g =>
-      cur.where(col("cell") % nGroups === g)
-    })
-    gens.filter(_._3 != target)
-      .foreach { case (_, _, stage) => retireStage(spark, root, stage) }
+    val stages = generations(spark, root)
+    require(stages.nonEmpty, s"no committed index groups under $root")
+    if (stages.size == 1) return table(spark, root)
+    val target = s"trees_c${stages.map(_.gen).max}"
+    val owned = resolve(spark, root, stages)
+    commitStage(spark, root, target, nGroups) { g =>
+      val mine = (c: Long) => c % nGroups == g
+      (view(spark, owned, mine), () => CellManifest.of(owned.flatMap(o =>
+        o.cells.zip(o.ns).filter(cn => mine(cn._1)))))
+    }
+    stages.filter(_.name != target)
+      .foreach(st => retireStage(spark, root, st.name))
     table(spark, root)
   }
 
   /** F4 over the persisted index: within-distance probe of the covered
-    * disc's cells. Output: (id, d2).
+    * disc's cells. One job. Output: (id, d2).
     */
   def withinDistance(spark: SparkSession, root: String, grid: CellGrid,
       px: Double, py: Double, r2: Double): DataFrame = {
     import spark.implicits._
     val r = math.sqrt(r2)
-    val cells = grid.cover(graft.geom.AABB.of2d(px - r, py - r, px + r, py + r))
-    table(spark, root)
-      .where(col("cell").isin(cells: _*))
-      .select("tree")
+    coveredTrees(spark, root,
+      grid.cover(graft.geom.AABB.of2d(px - r, py - r, px + r, py + r)))
       .as[Array[Byte]]
       .mapPartitions { it =>
         it.flatMap { bytes =>
