@@ -1,13 +1,12 @@
 package graft
 
-import graft.index.{PointRTree2D, Simd}
+import graft.index.PointRTree2D
 
 /** Dev tool: single-thread per-core probe benchmark for the packed point
   * tree — the same-process measurement behind BASELINE.md's per-core
   * table (reference yardstick: rstar/README.md:29-39 — bulk 8.7 M rows/s,
   * 1-NN 1.32 µs, locate_at_point 0.18 µs hit / 0.27 µs miss). Runs each
-  * op warm, best of 5 rounds, on both the SIMD and scalar paths so the
-  * Vector-API delta is measured like-for-like in one JVM.
+  * op warm, best of 5 rounds.
   *
   * Usage: runMain graft.PerCore [nPoints] [nQueries]
   */
@@ -56,27 +55,21 @@ object PerCore {
       println(f"PERCORE $tag ${best.toDouble / q / 1000.0}%.3f us/op")
     }
 
-    Seq(false, true).foreach { scalar =>
-      Simd.forceScalar = scalar
-      val mode = if (scalar) "scalar" else if (Simd.on) "simd" else
-        "simd-unavailable(scalar)"
-      bench(s"$mode locate_hit") {
-        var s = 0L; var j = 0
-        while (j < q) { s += tree.locateAtPoint(hitX(j), hitY(j)); j += 1 }
-        s
-      }
-      bench(s"$mode locate_miss") {
-        var s = 0L; var j = 0
-        while (j < q) { s += tree.locateAtPoint(missX(j), missY(j)); j += 1 }
-        s
-      }
-      bench(s"$mode 1nn") {
-        var s = 0L; var j = 0
-        while (j < q) { s += tree.nearest(qx(j), qy(j))._1; j += 1 }
-        s
-      }
+    bench("locate_hit") {
+      var s = 0L; var j = 0
+      while (j < q) { s += tree.locateAtPoint(hitX(j), hitY(j)); j += 1 }
+      s
     }
-    Simd.forceScalar = false
+    bench("locate_miss") {
+      var s = 0L; var j = 0
+      while (j < q) { s += tree.locateAtPoint(missX(j), missY(j)); j += 1 }
+      s
+    }
+    bench("1nn") {
+      var s = 0L; var j = 0
+      while (j < q) { s += tree.nearest(qx(j), qy(j))._1; j += 1 }
+      s
+    }
 
     // LocalRTree tier (the BASELINE.md per-core table's middle column):
     // reference params MIN 2 / MAX 40 / REINSERT 1 (rstar-benches

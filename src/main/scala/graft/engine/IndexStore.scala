@@ -32,7 +32,7 @@ import graft.index.{CellGrid, PointRTree2D}
   * at most one uncommitted group.
   *
   * Every committed group carries a CELL MANIFEST `_cells_<g>` beside its
-  * parquet: the group's sorted `(cell, n)` pairs, written after the data
+  * parquet: the group's [[CellHistogram]], written after the data
   * and before the `_done_<g>` marker, so a marker vouches for both. Reads
   * resolve latest-wins on the driver from the manifests and scan only the
   * groups and cells they own — no window, no shuffle, no schema inference.
@@ -47,39 +47,29 @@ object IndexStore {
   private def emptyTable(spark: SparkSession): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), Schema)
 
-  /** A group's cells, ascending, with their point counts. */
-  private final case class CellManifest(cells: Array[Long], ns: Array[Long])
-
-  private object CellManifest {
-    def of(counts: Iterable[(Long, Long)]): CellManifest = {
-      val s = counts.toArray.sortBy(_._1)
-      CellManifest(s.map(_._1), s.map(_._2))
-    }
-  }
-
   /** Collects a group's `(cell, n)` pairs inside the job that writes the
     * group, so committing its manifest costs no job. Merging is a map
     * union, so a retried task's repeated updates change nothing.
     */
   private final class CellCounts
-      extends AccumulatorV2[(Long, Long), CellManifest] {
+      extends AccumulatorV2[(Long, Long), CellHistogram] {
     private val counts = mutable.HashMap.empty[Long, Long]
     def isZero: Boolean = counts.isEmpty
     def copy(): CellCounts = { val c = new CellCounts; c.counts ++= counts; c }
     def reset(): Unit = counts.clear()
     def add(v: (Long, Long)): Unit = counts(v._1) = v._2
-    def merge(o: AccumulatorV2[(Long, Long), CellManifest]): Unit = o match {
+    def merge(o: AccumulatorV2[(Long, Long), CellHistogram]): Unit = o match {
       case c: CellCounts => counts ++= c.counts
       case _ => throw new UnsupportedOperationException(o.getClass.getName)
     }
-    def value: CellManifest = CellManifest.of(counts)
+    def value: CellHistogram = CellHistogram.of(counts)
   }
 
   /** Manifest bytes: count (int), `count` × (cell, n) longs, then the
     * CRC32 of the pairs (long). A file whose length or checksum disagrees
     * is torn and never trusted.
     */
-  private def writeManifest(fs: FileSystem, p: HPath, m: CellManifest): Unit = {
+  private def writeManifest(fs: FileSystem, p: HPath, m: CellHistogram): Unit = {
     val body = ByteBuffer.allocate(16 * m.cells.length)
     m.cells.indices.foreach(i => body.putLong(m.cells(i)).putLong(m.ns(i)))
     val crc = new CRC32
@@ -92,7 +82,7 @@ object IndexStore {
     } finally out.close()
   }
 
-  private def readManifest(fs: FileSystem, p: HPath, len: Long): Option[CellManifest] =
+  private def readManifest(fs: FileSystem, p: HPath, len: Long): Option[CellHistogram] =
     if (len < 12 || (len - 12) % 16 != 0) None
     else {
       val in = fs.open(p)
@@ -110,7 +100,7 @@ object IndexStore {
             val cells = new Array[Long](n)
             val ns = new Array[Long](n)
             cells.indices.foreach { i => cells(i) = b.getLong(); ns(i) = b.getLong() }
-            Some(CellManifest(cells, ns))
+            Some(CellHistogram(cells, ns))
           }
         }
       } finally in.close()
@@ -145,9 +135,9 @@ object IndexStore {
     * overwrites whatever manifest an earlier, uncommitted attempt left.
     */
   private def commitStage(spark: SparkSession, root: String, stage: String,
-      nGroups: Int)(slice: Int => (DataFrame, () => CellManifest)): DataFrame = {
+      nGroups: Int)(slice: Int => (DataFrame, () => CellHistogram)): DataFrame = {
     val fs = hfs(spark, root)
-    val manifests = mutable.HashMap.empty[Int, () => CellManifest]
+    val manifests = mutable.HashMap.empty[Int, () => CellHistogram]
     new Checkpoint(spark, root).runStage(stage, nGroups,
       { g => val (df, m) = slice(g); manifests(g) = m; df },
       beforeCommit = g => writeManifest(fs,
@@ -156,7 +146,7 @@ object IndexStore {
 
   /** `rows` built with a fresh [[CellCounts]] its job fills. */
   private def counted(spark: SparkSession)(
-      rows: CellCounts => DataFrame): (DataFrame, () => CellManifest) = {
+      rows: CellCounts => DataFrame): (DataFrame, () => CellHistogram) = {
     val acc = new CellCounts
     spark.sparkContext.register(acc)
     (rows(acc), () => acc.value)
@@ -278,19 +268,18 @@ object IndexStore {
     }
     val missing = listed.collect { case (_, path, None) => path }
     val derived =
-      if (missing.isEmpty) Map.empty[String, CellManifest]
+      if (missing.isEmpty) Map.empty[String, CellHistogram]
       else missing
         .map(p => spark.read.schema(Schema).parquet(p)
           .select(lit(p), col("cell"), col("n")))
         .reduce(_.union(_))
         .as[(String, Long, Long)].collect()
         .groupBy(_._1).map { case (p, rows) =>
-          p -> CellManifest.of(rows.map(r => (r._2, r._3)))
+          p -> CellHistogram.of(rows.map(r => (r._2, r._3)))
         }
     val seen = mutable.HashSet.empty[Long]
     listed.reverse.map { case (stage, path, m0) =>
-      val m = m0.orElse(derived.get(path))
-        .getOrElse(CellManifest(Array.empty, Array.empty))
+      val m = m0.orElse(derived.get(path)).getOrElse(CellHistogram.empty)
       val own = m.cells.indices.filter(i => seen.add(m.cells(i)))
       Owned(stage, path, m.cells.length, own.map(m.cells).toArray,
         own.map(m.ns).toArray)
@@ -455,13 +444,12 @@ object IndexStore {
   /** K1/J2 over the persisted index — the 100 TB cold-start serving path:
     * answer a kNN join by DESERIALIZING the stored per-cell trees and
     * probing them, never rebuilding (reference analog: serde round-trip
-    * then query, rstar/src/rtree.rs:1289-1305). Two passes mirroring
-    * [[SpatialOps.knnJoin]]: ring expansion over the stored `(cell, n)`
-    * histogram until ≥ k candidates are guaranteed, a probe pass for the
-    * k-th-distance upper bound, then a disc-cover probe pass; per-cell
-    * probes keep float-exact boundary ties and the final (d2, id) window
-    * cut replicates the window path's tiebreak, so the output is
-    * bit-equal to the in-memory kNN join on the same inputs.
+    * then query, rstar/src/rtree.rs:1289-1305). The two passes of
+    * [[CellHistogram]], as in [[SpatialOps.knnJoin]], over the stored
+    * `(cell, n)` histogram; per-cell probes keep float-exact boundary ties
+    * and the final (d2, id) window cut replicates the window path's
+    * tiebreak, so the output is bit-equal to the in-memory kNN join on the
+    * same inputs.
     *
     * Each probe pass groups its candidate queries BY CELL before touching
     * the store, so every stored tree is deserialized at most once per
@@ -475,9 +463,6 @@ object IndexStore {
     import org.apache.spark.sql.expressions.Window
     val owned = served(spark, root)
     val store = view(spark, owned, _ => true)
-    // bounded: ≤ 4^res non-empty cells (the knnJoin histogram contract)
-    val hist = CellManifest.of(owned.flatMap(o => o.cells.zip(o.ns)))
-    val histB = spark.sparkContext.broadcast((hist.cells, hist.ns))
 
     def probe(cand: DataFrame): DataFrame =
       cand.groupBy("cell")
@@ -497,45 +482,18 @@ object IndexStore {
         }
         .toDF("qid", "id", "d2")
 
-    // Pass A: ring expansion per query until ≥ k stored points are
-    // guaranteed (same walk as SpatialOps.knnJoin pass A).
-    val candA = queries.flatMap { q =>
-      val (hk, hc) = histB.value
-      def cnt(c: Long): Long = {
-        val i = java.util.Arrays.binarySearch(hk, c)
-        if (i >= 0) hc(i) else 0L
-      }
-      val cx = grid.ix(q.x); val cy = grid.iy(q.y)
-      var cum = 0L
-      var ring = 0
-      val cells = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val maxRing = grid.cellsPerAxis
-      while (cum < k && ring <= maxRing) {
-        grid.ring(cx, cy, ring).foreach { c =>
-          val n = cnt(c)
-          if (n > 0) { cells += c; cum += n }
-        }
-        ring += 1
-      }
-      cells.map(c => (q.qid, q.x, q.y, c))
-    }.toDF("qid", "qx", "qy", "cell")
-
+    val qs = queries.select(col("qid"), col("x").as("qx"), col("y").as("qy"))
+    val candA = CellHistogram.of(owned.flatMap(o => o.cells.zip(o.ns)))
+      .candidates(qs, grid, k)
     val wAsc = Window.partitionBy("qid").orderBy(col("d2"), col("id"))
     val dUp = probe(candA)
       .withColumn("rn", row_number().over(wAsc))
       .where(col("rn") <= k)
       .groupBy("qid").agg(max("d2").as("dUp"))
-      .join(queries.toDF().select(col("qid"),
-        col("x").as("qx"), col("y").as("qy")), Seq("qid"))
+      .join(qs, Seq("qid"))
 
-    // Pass B: cover the disc of radius sqrt(dUp) — provably contains the
-    // true k nearest, so the final cut is exact.
     val candB = dUp.select(col("qid"), col("qx"), col("qy"),
-      explode(graft.functions.SpatialFunctions.stCoverCells(grid)(
-        col("qx") - sqrt(col("dUp")), col("qy") - sqrt(col("dUp")),
-        col("qx") + sqrt(col("dUp")), col("qy") + sqrt(col("dUp"))))
-        .as("cell"))
-
+      CellHistogram.discCover(grid, col("qx"), col("qy"), col("dUp")).as("cell"))
     probe(candB)
       .withColumn("rn", row_number().over(wAsc))
       .where(col("rn") <= k)
@@ -567,7 +525,7 @@ object IndexStore {
     val owned = resolve(spark, root, stages)
     commitStage(spark, root, target, nGroups) { g =>
       val mine = (c: Long) => c % nGroups == g
-      (view(spark, owned, mine), () => CellManifest.of(owned.flatMap(o =>
+      (view(spark, owned, mine), () => CellHistogram.of(owned.flatMap(o =>
         o.cells.zip(o.ns).filter(cn => mine(cn._1)))))
     }
     stages.filter(_.name != target)

@@ -1,9 +1,16 @@
 package graft.engine
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.ColumnShim
+import org.apache.spark.sql.types.{
+  DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
+import graft.engine.CellHistogram.discCover
 import graft.geom.AABB
 import graft.index.{CellGrid, Entry, LocalRTree, PointRTree2D}
 import graft.functions.SpatialFunctions._
@@ -73,17 +80,6 @@ object SpatialOps {
       .select(col("lid"), col("rid"))
   }
 
-  /** Intersection join against a BOUNDED right side: broadcast ONE
-    * `LocalRTree` of the whole layer and probe it per left row inside
-    * `mapPartitions` — zero shuffle of the (arbitrarily large) left side,
-    * the J1 sibling of [[knnJoinBroadcast]] and the plan a deployment
-    * uses whenever the layer fits an executor. Point-shaped left rows
-    * (minX==maxX, minY==maxY) take the `locateAllAtPoint` fast path; true
-    * rects use the envelope-intersecting query. Same closed-interval
-    * semantics as [[intersectionJoin]], and each qualifying pair is
-    * emitted exactly once (no grid copies, so no reference-point dedup
-    * is needed) — output row set identical.
-    */
   /** Upper bound for the bounded-layer broadcast contract: collecting more
     * than this many layer rows fails fast with an explicit contract
     * message instead of a driver OOM mid-collect. ~10 M entries ≈ 400 MB
@@ -110,6 +106,21 @@ object SpatialOps {
     rows
   }
 
+  /** The schema of an RDD of fixed-width UnsafeRows: no column is null. */
+  private def primitiveSchema(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (name, t) => StructField(name, t, nullable = false) })
+
+  /** Intersection join against a BOUNDED right side: broadcast ONE
+    * `LocalRTree` of the whole layer and probe it per left row inside
+    * `mapPartitions` — zero shuffle of the (arbitrarily large) left side,
+    * the J1 sibling of [[knnJoinBroadcast]] and the plan a deployment
+    * uses whenever the layer fits an executor. Point-shaped left rows
+    * (minX==maxX, minY==maxY) take the `locateAllAtPoint` fast path; true
+    * rects use the envelope-intersecting query. Same closed-interval
+    * semantics as [[intersectionJoin]], and each qualifying pair is
+    * emitted exactly once (no grid copies, so no reference-point dedup
+    * is needed) — output row set identical.
+    */
   def intersectionJoinBroadcast(left: DataFrame, right: DataFrame): DataFrame = {
     val spark = left.sparkSession
     import spark.implicits._
@@ -130,16 +141,11 @@ object SpatialOps {
     // reusable growable long array, and output rows are written straight
     // to one reused UnsafeRow — no Scala tuples, no Dataset encoder. Pair
     // set unchanged (spec-pinned against intersectionJoin row for row).
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("lid",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("rid",
-        org.apache.spark.sql.types.LongType, nullable = false)))
+    val schema = primitiveSchema("lid" -> LongType, "rid" -> LongType)
     val rdd = l.queryExecution.toRdd.mapPartitions { it =>
       val t = treeB.value
-      new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
-        private val writer =
-          new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter(2)
+      new Iterator[InternalRow] {
+        private val writer = new UnsafeRowWriter(2)
         private var ids = new Array[Long](64)
         private var n = 0
         private var pos = 0
@@ -158,7 +164,7 @@ object SpatialOps {
             t.foreachIntersecting(AABB.of2d(x0, y0, x1, y1))(collect)
           }
         override def hasNext: Boolean = { fill(); pos < n }
-        override def next(): org.apache.spark.sql.catalyst.InternalRow = {
+        override def next(): InternalRow = {
           fill()
           // reset() rewinds the cursor to the row start (fixed-width-only
           // row: null bits stay zeroed from construction)
@@ -170,7 +176,7 @@ object SpatialOps {
         }
       }
     }
-    org.apache.spark.sql.graft.ColumnShim.internalDf(spark, rdd, schema)
+    ColumnShim.internalDf(spark, rdd, schema)
   }
 
   /** Same join through the two-level index: both sides hash-co-partitioned
@@ -181,13 +187,13 @@ object SpatialOps {
     * index-nested-loop inside each partition, the distributed analog of
     * the reference's synchronized dual-tree descent
     * (rstar/src/algorithm/intersection_iterator.rs:15-104). Like
-    * [[probeRows]], the big sides never touch a Dataset encoder.
+    * [[probeCellRuns]], the big sides never touch a Dataset encoder.
     */
   def intersectionJoinTree(
       left: Dataset[RectRow], right: Dataset[RectRow],
       grid: CellGrid): Dataset[(Long, Long)] = {
     val spark = left.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val parts = shufflePartitions(left)
     def celled(ds: Dataset[RectRow]): DataFrame = ds.toDF()
       .select(
         explode(stCoverCells(grid)(
@@ -217,7 +223,7 @@ object SpatialOps {
     val rdd = lr.zipPartitions(rr) { (lit, rit) =>
       import scala.collection.mutable
       // primitive look-ahead per side (rows are reused by the reader)
-      final class Side(it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) {
+      final class Side(it: Iterator[InternalRow]) {
         var pending = false
         var key = 0L
         var id = 0L
@@ -320,7 +326,7 @@ object SpatialOps {
       left: Dataset[RectRow], right: Dataset[RectRow],
       grid: CellGrid, hotThreshold: Int): Dataset[(Long, Long)] = {
     val spark = left.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val parts = shufflePartitions(left)
     def celled(ds: Dataset[RectRow]): DataFrame = ds.toDF().select(
       explode(stCoverCells(grid)(
         col("minX"), col("minY"), col("maxX"), col("maxY"))).as("cell"),
@@ -352,35 +358,6 @@ object SpatialOps {
 
   // ------------------------------------------------------------ kNN join
 
-  /** Distributed kNN join (batch form of `nearest_neighbor` /
-    * `nearest_neighbor_iter`, rstar/src/rtree.rs:940-943, :1094-1099), in
-    * two provably-complete passes over the cell grid (SURVEY.md §3.3):
-    *
-    *   Pass A (candidate bound): each query ring-expands over the broadcast
-    *   per-cell histogram until the visited cells hold ≥ k points, probes
-    *   just those cells, and takes the k-th smallest candidate distance d_up
-    *   — an upper bound on the true k-th NN distance.
-    *
-    *   Pass B (exact): re-probe every cell intersecting the disc of radius
-    *   sqrt(d_up) around the query; the window top-k over those candidates
-    *   is exact, because no point outside the disc can beat the k-th
-    *   candidate already in hand.
-    *
-    * Both probes are cell equi-joins (query-cells side is small → Catalyst
-    * broadcasts it; the data side never moves). Result: (qid, id, d2, rn),
-    * rn ∈ [1, k], ordered by (d2, id) — the deterministic total tiebreak
-    * SURVEY §7.4 requires for oracle agreement. `keepTies` switches the
-    * window to `rank()`, reproducing the co-equal tie-set semantics of
-    * `nearest_neighbors` (K3, rstar/src/rtree.rs:977-1043).
-    */
-  /** Default kNN join: the same two-pass grid algorithm with the per-cell
-    * probe expressed in pure Catalyst — `WindowGroupLimit` pushes the top-k
-    * below the shuffle (a bounded per-partition heap), so the in-cell
-    * candidate blowup never crosses the wire and the whole path stays in
-    * Tungsten codegen. Benchmarks show this beats the typed tree-probe
-    * variant below until cells hold thousands of points (object churn);
-    * [[knnJoinTrees]] is the dense-cell alternative.
-    */
   /** kNN join against a BOUNDED static layer: broadcast one packed
     * [[graft.index.PointRTree2D]] of the whole layer and probe it inside
     * `mapPartitions` over the query side's InternalRows — ZERO shuffle of
@@ -414,20 +391,12 @@ object SpatialOps {
       // replicates the general path's total order bit-for-bit (NaN last,
       // -0.0 < 0.0). Output row set and schema identical to the general
       // path (spec-pinned against knnJoin k=1 row for row).
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("qid",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("d2",
-          org.apache.spark.sql.types.DoubleType, nullable = false),
-        org.apache.spark.sql.types.StructField("rn",
-          org.apache.spark.sql.types.IntegerType, nullable = false)))
+      val schema = primitiveSchema("qid" -> LongType, "id" -> LongType,
+        "d2" -> DoubleType, "rn" -> IntegerType)
       val rdd = q.queryExecution.toRdd.mapPartitions { it =>
         val t = treeB.value
-        new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
-          private val writer =
-            new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter(4)
+        new Iterator[InternalRow] {
+          private val writer = new UnsafeRowWriter(4)
           private var found = false
           private var bestId = 0L
           private var bestD2 = 0.0
@@ -446,7 +415,7 @@ object SpatialOps {
               t.nearestK(r.getDouble(1), r.getDouble(2), 1, keepTies = true)(track)
             }
           override def hasNext: Boolean = { fill(); found }
-          override def next(): org.apache.spark.sql.catalyst.InternalRow = {
+          override def next(): InternalRow = {
             fill()
             // reset() rewinds the cursor to the row start (fixed-width-only
             // row: null bits stay zeroed from construction)
@@ -460,7 +429,7 @@ object SpatialOps {
           }
         }
       }
-      return org.apache.spark.sql.graft.ColumnShim.internalDf(spark, rdd, schema)
+      return ColumnShim.internalDf(spark, rdd, schema)
     }
     val rdd = q.queryExecution.toRdd.mapPartitions { it =>
       val t = treeB.value
@@ -483,44 +452,30 @@ object SpatialOps {
     spark.createDataset(rdd).toDF("qid", "id", "d2", "rn")
   }
 
+  /** Distributed kNN join (batch form of `nearest_neighbor` /
+    * `nearest_neighbor_iter`, rstar/src/rtree.rs:940-943, :1094-1099), in
+    * the two provably-complete passes of [[CellHistogram]] (SURVEY.md
+    * §3.3). Both probes are cell equi-joins (query-cells side is small →
+    * Catalyst broadcasts it; the data side never moves). Result: (qid, id,
+    * d2, rn), rn ∈ [1, k], ordered by (d2, id) — the deterministic total
+    * tiebreak SURVEY §7.4 requires for oracle agreement. `keepTies`
+    * switches the window to `rank()`, reproducing the co-equal tie-set
+    * semantics of `nearest_neighbors` (K3, rstar/src/rtree.rs:977-1043).
+    *
+    * The per-cell probe is pure Catalyst — `WindowGroupLimit` pushes the
+    * top-k below the shuffle (a bounded per-partition heap), so the in-cell
+    * candidate blowup never crosses the wire and the whole path stays in
+    * Tungsten codegen. It beats the tree-probe variant until cells hold
+    * thousands of points (object churn); [[knnJoinTrees]] is the dense-cell
+    * alternative.
+    */
   def knnJoin(
       queries: Dataset[QueryRow], data: Dataset[PointRow], k: Int,
       grid: CellGrid, keepTies: Boolean = false): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-
     val dataCelled = data
       .withColumn("cell", stCell(grid)(col("x"), col("y")))
-    // Histogram broadcast as two sorted primitive arrays + binary search:
-    // serializes and probes far faster than a boxed Map at fine resolutions
-    // (res 9 → up to 262k non-empty cells).
-    val histRows = dataCelled.groupBy("cell").count()
-      .as[(Long, Long)].collect().sortBy(_._1)
-    val histKeys = histRows.map(_._1)
-    val histCnts = histRows.map(_._2)
-    val histB = spark.sparkContext.broadcast((histKeys, histCnts))
-
-    // Pass A: ring expansion per query until ≥ k candidates are guaranteed.
-    val candA = queries.flatMap { q =>
-      val (hk, hc) = histB.value
-      def cnt(c: Long): Long = {
-        val i = java.util.Arrays.binarySearch(hk, c)
-        if (i >= 0) hc(i) else 0L
-      }
-      val cx = grid.ix(q.x); val cy = grid.iy(q.y)
-      var cum = 0L
-      var ring = 0
-      val cells = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val maxRing = grid.cellsPerAxis
-      while (cum < k && ring <= maxRing) {
-        grid.ring(cx, cy, ring).foreach { c =>
-          val n = cnt(c)
-          if (n > 0) { cells += c; cum += n }
-        }
-        ring += 1
-      }
-      cells.map(c => (q.qid, q.x, q.y, c))
-    }.toDF("qid", "qx", "qy", "cell")
+    val candA = CellHistogram.collect(dataCelled.select("cell")).candidates(
+      queries.select(col("qid"), col("x").as("qx"), col("y").as("qy")), grid, k)
 
     // k == 1 (the 1-NN headline shape): both passes collapse to hash
     // aggregations — min / min_by with the same (d2, id) tiebreak the
@@ -543,13 +498,8 @@ object SpatialOps {
           .groupBy("qid").agg(max("d2").as("dUp"),
             first("qx").as("qx"), first("qy").as("qy"))
 
-    // Pass B: cover the disc of radius sqrt(dUp); top-k cut is exact.
     val candB = dUp.select(col("qid"), col("qx"), col("qy"),
-      explode(stCoverCells(grid)(
-        col("qx") - sqrt(col("dUp")), col("qy") - sqrt(col("dUp")),
-        col("qx") + sqrt(col("dUp")), col("qy") + sqrt(col("dUp"))))
-        .as("cell"))
-
+      discCover(grid, col("qx"), col("qy"), col("dUp")).as("cell"))
     val scoredB = candB
       .join(dataCelled, Seq("cell"))
       .withColumn("d2", stDistanceSq(col("x"), col("y"), col("qx"), col("qy")))
@@ -568,156 +518,161 @@ object SpatialOps {
         .select(col("qid"), col("id"), col("d2"), col("rn"))
   }
 
-  /** Co-partitioned InternalRow probe — the "columnar exec" for per-cell
-    * tree probes. Both sides are hash-repartitioned AND sorted by cell
-    * through the DataFrame API (so Catalyst plans the shuffles), then the
-    * probe runs as a zip of the two partitions' InternalRow iterators: a
-    * merge-cogroup over the sorted cell runs builds one packed
-    * `PointRTree2D` per cell straight from row primitives and probes it —
-    * ZERO Dataset encoder work on the (big) data side, which is what made
-    * the round-1 typed cogroup lose to the window path (BASELINE.md: the
-    * packed tree probes at ~2.8 µs/NN but object ser/deser dominated).
-    * Only the (small, ≤ queries·cells·k) result pays row construction.
-    *
-    * `cand` columns: (cell, qid, qx, qy); `dataRdd` must already be
-    * hash-partitioned into `parts` partitions by cell and sorted by cell
-    * within each (rows: cell, id, x, y) — callers shuffle the big side
-    * ONCE and reuse it across probe passes.
-    * Output: (qid, id, d2) — each candidate query's per-cell top-k,
-    * extended through boundary ties (distance float-equal to the k-th) so
-    * a downstream (d2, id) window cut is exact even when a cell holds more
-    * than k points tied at the k-th distance.
+  // ------------------------------------------------- cell-run cogroup
+
+  /** One cell run's index, probed once per candidate query point: `emit`
+    * receives each hit's (id, d2).
     */
-  private def probeRows(
-      cand: DataFrame,
-      dataRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      k: Int, parts: Int, spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    // Identical HashPartitioning(cell, parts) on both sides → identical
-    // row→partition assignment → zipPartitions is a co-partitioned cogroup.
-    val c = cand.select("cell", "qid", "qx", "qy")
-      .repartition(parts, col("cell")).sortWithinPartitions("cell")
-    val rdd = c.queryExecution.toRdd.zipPartitions(dataRdd) {
-      (qit, dit) =>
-        new Iterator[(Long, Long, Double)] {
-          // Primitive one-row look-ahead on the data side: the shuffle
-          // reader reuses its UnsafeRow, so fields are read immediately —
-          // never a row copy, never an object per point.
-          private var pending = false
-          private var pCell = 0L
-          private var pId = 0L
-          private var pX = 0.0
-          private var pY = 0.0
-          private def advance(): Unit =
-            if (dit.hasNext) {
-              val r = dit.next()
-              pCell = r.getLong(0); pId = r.getLong(1)
-              pX = r.getDouble(2); pY = r.getDouble(3)
-              pending = true
-            } else pending = false
-          advance()
+  private trait RunIndex {
+    def probe(qx: Double, qy: Double, emit: (Long, Double) => Unit): Unit
+  }
 
-          private var dCell = Long.MinValue
-          private var tree: PointRTree2D = null
-          private val buf = scala.collection.mutable.Queue.empty[(Long, Long, Double)]
+  private def shufflePartitions(df: Dataset[_]): Int =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
-          private def loadRun(cell: Long): Unit = {
-            while (pending && pCell < cell) advance()
-            if (!pending || pCell != cell) {
-              dCell = cell; tree = null
-            } else {
-              val ids = new scala.collection.mutable.ArrayBuffer[Long](64)
-              val xs = new scala.collection.mutable.ArrayBuffer[Double](64)
-              val ys = new scala.collection.mutable.ArrayBuffer[Double](64)
-              while (pending && pCell == cell) {
-                ids += pId; xs += pX; ys += pY
-                advance()
-              }
-              dCell = cell
-              tree = PointRTree2D.build(ids.toArray, xs.toArray, ys.toArray)
+  /** A cell-keyed layer in the layout [[probeCellRuns]] zips against:
+    * hash-partitioned by its leading `cell` column and sorted by cell
+    * within each partition. The eager localCheckpoint pins that physical
+    * layout, so both probe passes reuse one shuffle of the big side; its
+    * blocks are reclaimed by the ContextCleaner with the returned plan.
+    */
+  private def cellSorted(df: DataFrame): RDD[InternalRow] =
+    df.repartition(shufflePartitions(df), col("cell"))
+      .sortWithinPartitions("cell").localCheckpoint(true).queryExecution.toRdd
+
+  /** The co-partitioned InternalRow probe under the fused kNN joins — the
+    * "columnar exec" for per-cell index probes. `cand` rows are (cell,
+    * qid, qx, qy), any names; `data` rows are (cell, id, `width` doubles)
+    * in the [[cellSorted]] layout. `cand` is given the same partitioning
+    * and order through the DataFrame API (so Catalyst plans the shuffle),
+    * which makes `zipPartitions` a merge-cogroup over the sorted cell runs:
+    * each run is read once into primitive columns, `build` turns it into a
+    * [[RunIndex]], and every candidate query of that cell probes it.
+    * Neither side meets a Dataset encoder; hits are written straight to one
+    * reused UnsafeRow. Output: (qid, `hitId`, d2, qx, qy), under `cand`'s
+    * names — the probe echoes each query's point, so a pass can derive its
+    * radius bound without re-joining the candidates.
+    */
+  private def probeCellRuns(cand: DataFrame, data: RDD[InternalRow],
+      width: Int, hitId: String)(
+      build: (Array[Long], Array[Array[Double]]) => RunIndex): DataFrame = {
+    val Array(_, qidName, xName, yName) = cand.columns
+    val sorted = cand.repartition(shufflePartitions(cand), col("cell"))
+      .sortWithinPartitions("cell")
+    val rdd = sorted.queryExecution.toRdd.zipPartitions(data) { (qit, dit) =>
+      new Iterator[InternalRow] {
+        // Primitive one-row look-ahead on the data side: the shuffle reader
+        // reuses its UnsafeRow, so fields are read before it advances.
+        private var pending = false
+        private var pCell = 0L
+        private var pId = 0L
+        private val pVals = new Array[Double](width)
+        private def advance(): Unit =
+          if (dit.hasNext) {
+            val r = dit.next()
+            pCell = r.getLong(0); pId = r.getLong(1)
+            var j = 0
+            while (j < width) { pVals(j) = r.getDouble(2 + j); j += 1 }
+            pending = true
+          } else pending = false
+        advance()
+
+        // the index of cell `runCell`; null when the data holds none
+        private var runCell = Long.MinValue
+        private var index: RunIndex = null
+        private def loadRun(cell: Long): Unit = {
+          while (pending && pCell < cell) advance()
+          runCell = cell
+          index = null
+          if (pending && pCell == cell) {
+            val ids = Array.newBuilder[Long]
+            val cols = Array.fill(width)(Array.newBuilder[Double])
+            while (pending && pCell == cell) {
+              ids += pId
+              var j = 0
+              while (j < width) { cols(j) += pVals(j); j += 1 }
+              advance()
             }
+            index = build(ids.result(), cols.map(_.result()))
           }
-
-          private def fill(): Unit = {
-            while (buf.isEmpty && qit.hasNext) {
-              val q = qit.next()
-              val cell = q.getLong(0)
-              val qid = q.getLong(1)
-              val qx = q.getDouble(2)
-              val qy = q.getDouble(3)
-              if (cell != dCell) loadRun(cell)
-              if (tree != null) {
-                // keepTies=true ALWAYS: emit everything float-equal to the
-                // k-th distance so the final (d2, id) window never loses a
-                // lower-id point the heap's arbitrary tie order dropped
-                tree.nearestK(qx, qy, k, true) { (p, d2) =>
-                  buf.enqueue((qid, tree.ids(p), d2))
-                }
-              }
-            }
-          }
-
-          override def hasNext: Boolean = { fill(); buf.nonEmpty }
-          override def next(): (Long, Long, Double) = { fill(); buf.dequeue() }
         }
+
+        // the current query and its hits
+        private val writer = new UnsafeRowWriter(5)
+        private var qid = 0L
+        private var qx = 0.0
+        private var qy = 0.0
+        private var hitIds = new Array[Long](64)
+        private var hitD2 = new Array[Double](64)
+        private var n = 0
+        private var pos = 0
+        private val emit: (Long, Double) => Unit = { (id, d2) =>
+          if (n == hitIds.length) {
+            hitIds = java.util.Arrays.copyOf(hitIds, 2 * n)
+            hitD2 = java.util.Arrays.copyOf(hitD2, 2 * n)
+          }
+          hitIds(n) = id; hitD2(n) = d2; n += 1
+        }
+        private def fill(): Unit =
+          while (pos >= n && qit.hasNext) {
+            val r = qit.next()
+            val cell = r.getLong(0)
+            qid = r.getLong(1); qx = r.getDouble(2); qy = r.getDouble(3)
+            n = 0; pos = 0
+            if (cell != runCell) loadRun(cell)
+            if (index != null) index.probe(qx, qy, emit)
+          }
+        override def hasNext: Boolean = { fill(); pos < n }
+        override def next(): InternalRow = {
+          fill()
+          // fixed-width row: reset() rewinds, null bits stay zero
+          writer.reset()
+          writer.write(0, qid); writer.write(1, hitIds(pos))
+          writer.write(2, hitD2(pos))
+          writer.write(3, qx); writer.write(4, qy)
+          pos += 1
+          writer.getRow
+        }
+      }
     }
-    spark.createDataset(rdd).toDF("qid", "id", "d2")
+    val schema = primitiveSchema(qidName -> LongType, hitId -> LongType,
+      "d2" -> DoubleType, xName -> DoubleType, yName -> DoubleType)
+    ColumnShim.internalDf(cand.sparkSession, rdd, schema)
   }
 
   /** Tree-probe kNN join for dense cells: co-partition queries and data by
     * cell, bulk-load a per-cell packed tree, emit each query's top-k via
     * the best-first descent — O(log n) per neighbor instead of streaming
     * the whole in-cell candidate set through the window operator. The
-    * probe runs on InternalRows ([[probeRows]]); round 1's typed cogroup
-    * lost its probe-rate advantage to Dataset ser/deser.
+    * probe runs on InternalRows ([[probeCellRuns]]); round 1's typed
+    * cogroup lost its probe-rate advantage to Dataset ser/deser.
     */
   def knnJoinTrees(
       queries: Dataset[QueryRow], data: Dataset[PointRow], k: Int,
       grid: CellGrid, keepTies: Boolean = false): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val dataCelled = data
       .withColumn("cell", stCell(grid)(col("x"), col("y")))
       .select("cell", "id", "x", "y")
-    // Per-cell histogram: map-side-combined groupBy; bounded by 4^res cells.
-    // Collected ONCE — broadcast for pass A's ring expansion and re-created
-    // driver-side as a small DataFrame for the safe-query join below.
-    val histRows: Array[(Long, Long)] = dataCelled.groupBy("cell").count()
-      .as[(Long, Long)].collect()
-    val hist: Map[Long, Long] = histRows.toMap
-    val histB = spark.sparkContext.broadcast(hist)
+    // Collected ONCE: pass A's ring expansion and the safe-query join below.
+    val hist = CellHistogram.collect(dataCelled.select("cell"))
+    val dataRdd = cellSorted(dataCelled)
 
-    // Shuffle + sort the big data side ONCE; both probe passes zip against
-    // the same materialized layout (localCheckpoint pins the physical
-    // 32-way hash partitioning, so pass B pays no second data shuffle).
-    val dataShuffled = dataCelled
-      .repartition(parts, col("cell")).sortWithinPartitions("cell")
-      .localCheckpoint(true)
-    val dataRdd = dataShuffled.queryExecution.toRdd
-
+    // Per-cell top-k extended through float-exact ties at the k-th
+    // distance, so the (d2, id) window cut never loses a lower-id point
+    // the heap's arbitrary tie order dropped.
     def probe(cand: DataFrame): DataFrame =
-      probeRows(cand, dataRdd, k, parts, spark)
+      probeCellRuns(cand, dataRdd, 2, "id") { (ids, c) =>
+        val t = PointRTree2D.build(ids, c(0), c(1))
+        (qx, qy, emit) =>
+          t.nearestK(qx, qy, k, keepTies = true)((p, d2) => emit(t.ids(p), d2))
+      }.drop("qx", "qy")
 
-    // Pass A: ring expansion per query until ≥ k candidates are guaranteed;
-    // probe those cells → d_up = the k-th candidate distance upper bound.
-    val candA = queries.flatMap { q =>
-      val h = histB.value
-      val cx = grid.ix(q.x); val cy = grid.iy(q.y)
-      var cum = 0L
-      var ring = 0
-      val cells = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val maxRing = grid.cellsPerAxis
-      while (cum < k && ring <= maxRing) {
-        grid.ring(cx, cy, ring).foreach { c =>
-          val n = h.getOrElse(c, 0L)
-          if (n > 0) { cells += c; cum += n }
-        }
-        ring += 1
-      }
-      cells.map(c => (c, q.qid, q.x, q.y))
-    }.toDF("cell", "qid", "qx", "qy")
+    // Pass A: probe the ring-pass cells → d_up = the k-th candidate
+    // distance upper bound.
+    val candA = hist.candidates(
+      queries.select(col("qid"), col("x").as("qx"), col("y").as("qy")), grid, k)
     val wAsc = Window.partitionBy("qid").orderBy(col("d2"), col("id"))
     def rankCol =
       if (keepTies) rank().over(Window.partitionBy("qid").orderBy(col("d2")))
@@ -742,7 +697,7 @@ object SpatialOps {
     val n = grid.cellsPerAxis
     val cw = (grid.maxX - grid.minX) / n
     val ch = (grid.maxY - grid.minY) / n
-    val histDf = histRows.toSeq.toDF("cell", "cnt")
+    val histDf = hist.cells.zip(hist.ns).toSeq.toDF("cell", "cnt")
     val qinfo = queries.toDF("qid", "qx", "qy")
       .withColumn("cell", stCell(grid)(col("qx"), col("qy")))
       .join(broadcast(histDf), Seq("cell"), "left")
@@ -765,17 +720,12 @@ object SpatialOps {
 
     val safeRows = topA.join(broadcast(safeQ), Seq("qid"), "left_semi")
 
-    // Pass B (unsafe queries only): cover the disc of radius sqrt(dUp);
-    // per-cell tree probes then a window over ≤ (cells × k) rows — exact,
-    // because no point outside the disc can beat the k-th candidate in hand.
+    // Pass B (unsafe queries only): per-cell tree probes over the d_up disc
+    // cover, then a window over ≤ (cells × k) rows.
     val candB = unsafeQ
       .where(col("dUp").isNotNull)
-      .select(col("qid"), col("qx"), col("qy"),
-        explode(stCoverCells(grid)(
-          col("qx") - sqrt(col("dUp")), col("qy") - sqrt(col("dUp")),
-          col("qx") + sqrt(col("dUp")), col("qy") + sqrt(col("dUp"))))
-          .as("cell"))
-      .select("cell", "qid", "qx", "qy")
+      .select(discCover(grid, col("qx"), col("qy"), col("dUp")).as("cell"),
+        col("qid"), col("qx"), col("qy"))
 
     val unsafeRows = probe(candB)
       .withColumn("rn", rankCol)
@@ -789,18 +739,12 @@ object SpatialOps {
 
   /** Nearest-segment distance join for a LARGE line layer (G14
     * distributed; `Line::distance_2`, rstar/src/primitives/line.rs:71-113):
-    * the same two-pass grid scheme as [[knnJoin]], with segments registered
-    * in every cell their envelope covers, so no broadcast and no crossJoin
-    * — both sides meet only on cell keys.
-    *
-    *   Pass A: each point ring-expands over the broadcast line-per-cell
-    *   histogram until it sees ≥ 1 segment; the minimum point-to-segment
-    *   distance among those candidates is an upper bound d_up.
-    *   Pass B: probe every cell the d_up disc touches; a segment within
-    *   d_up of the point passes through the disc, so its envelope covers a
-    *   probed cell — the min over pass-B candidates is exact. (The disc
-    *   radius is padded by an ulp so sqrt rounding can never shave the
-    *   boundary cell.)
+    * the same two-pass grid scheme as [[knnJoin]] with k = 1, segments
+    * registered in every cell their envelope covers, so no broadcast and no
+    * crossJoin — both sides meet only on cell keys. The pass-A histogram
+    * counts registrations, which is enough to guarantee one candidate; a
+    * segment within d_up of the point passes through the disc, so its
+    * envelope covers a pass-B cell and the min over pass B is exact.
     *
     * `lines` needs columns (lid, x1, y1, x2, y2); output (id, min_d2) with
     * the distance arithmetic in the exact IEEE order of
@@ -808,40 +752,14 @@ object SpatialOps {
     */
   def lineNearestJoin(points: Dataset[PointRow], lines: DataFrame,
       grid: CellGrid): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
     val lineCelled = lines.select(
       col("lid"), col("x1"), col("y1"), col("x2"), col("y2"),
       explode(stCoverCells(grid)(
         least(col("x1"), col("x2")), least(col("y1"), col("y2")),
         greatest(col("x1"), col("x2")), greatest(col("y1"), col("y2"))))
         .as("cell"))
-    val histRows = lineCelled.groupBy("cell").count()
-      .as[(Long, Long)].collect().sortBy(_._1)
-    val histKeys = histRows.map(_._1)
-    val histCnts = histRows.map(_._2)
-    val histB = spark.sparkContext.broadcast((histKeys, histCnts))
-
-    val candA = points.flatMap { p =>
-      val (hk, hc) = histB.value
-      def cnt(c: Long): Long = {
-        val i = java.util.Arrays.binarySearch(hk, c)
-        if (i >= 0) hc(i) else 0L
-      }
-      val cx = grid.ix(p.x); val cy = grid.iy(p.y)
-      var cum = 0L
-      var ring = 0
-      val cells = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val maxRing = grid.cellsPerAxis
-      while (cum < 1 && ring <= maxRing) {
-        grid.ring(cx, cy, ring).foreach { c =>
-          val n = cnt(c)
-          if (n > 0) { cells += c; cum += n }
-        }
-        ring += 1
-      }
-      cells.map(c => (p.id, p.x, p.y, c))
-    }.toDF("id", "px", "py", "cell")
+    val candA = CellHistogram.collect(lineCelled.select("cell")).candidates(
+      points.select(col("id"), col("x").as("px"), col("y").as("py")), grid, 1)
 
     val d2 = stLineDistanceSq(col("x1"), col("y1"), col("x2"), col("y2"),
       col("px"), col("py"))
@@ -850,13 +768,57 @@ object SpatialOps {
       .groupBy("id").agg(min("d2").as("dUp"),
         first("px").as("px"), first("py").as("py"))
 
-    val r = sqrt(col("dUp")) * lit(1.0 + 1e-12)
     val candB = dUp.select(col("id"), col("px"), col("py"),
-      explode(stCoverCells(grid)(
-        col("px") - r, col("py") - r, col("px") + r, col("py") + r)).as("cell"))
+      discCover(grid, col("px"), col("py"), col("dUp")).as("cell"))
     candB.join(lineCelled, Seq("cell"))
       .select(col("id"), d2.as("d2"))
       .groupBy("id").agg(min("d2").as("min_d2"))
+  }
+
+  /** Top-k per `id` in (d2, gid) order, counting each (id, gid) pair once.
+    * Copies of a pair (a geometry registered in several probed cells)
+    * carry bit-identical d2, since d2 is a pure function of the pair, so
+    * in that order they are ADJACENT: this dedup rides the window's own
+    * exchange + sort, where dropDuplicates paid a second full shuffle.
+    * Adds rn (int).
+    */
+  private def distinctTopK(hits: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("id").orderBy(col("d2"), col("gid"))
+    hits.withColumn("pg", lag("gid", 1).over(w))
+      .where(col("pg").isNull || col("pg") =!= col("gid"))
+      .withColumn("rn", row_number().over(w))
+      .where(col("rn") <= k)
+  }
+
+  /** The two passes of the envelope-layer kNN joins. Multi-cell geometries
+    * are cover-registered, so a candidate probe finds them from any
+    * overlapped cell, but the ring-pass histogram counts each geometry
+    * ONCE, at its envelope's lower-corner reference cell. Counting
+    * registrations instead would overcount a spanning geometry and stop
+    * the expansion before k DISTINCT candidates are guaranteed — a
+    * correctness bug, not a tuning choice. Cells holding ≥ k reference
+    * corners hold ≥ k distinct geometries, since each geometry's cover
+    * includes its reference cell; and a geometry within d_up intersects
+    * the disc, so its envelope shares a cell with the disc's cover.
+    *
+    * `probe` maps (cell, id, px, py) candidates to (id, gid, d2, px, py)
+    * hits, in which an (id, gid) pair may repeat. Output: (id, gid, d2,
+    * rn), rn a long in [1, k], ordered by (d2, gid).
+    */
+  private def envelopeKnn(points: Dataset[PointRow], geoms: DataFrame, k: Int,
+      grid: CellGrid)(probe: DataFrame => DataFrame): DataFrame = {
+    val candA = CellHistogram
+      .collect(geoms.select(stCell(grid)(col("minX"), col("minY"))))
+      .candidates(
+        points.select(col("id"), col("x").as("px"), col("y").as("py")), grid, k)
+    val dUp = distinctTopK(probe(candA), k)
+      .groupBy("id").agg(max("d2").as("dUp"),
+        first("px").as("px"), first("py").as("py"))
+    val candB = dUp.select(
+      discCover(grid, col("px"), col("py"), col("dUp")).as("cell"),
+      col("id"), col("px"), col("py"))
+    distinctTopK(probe(candB), k)
+      .select(col("id"), col("gid"), col("d2"), col("rn").cast("long").as("rn"))
   }
 
   /** k nearest GEOMETRIES per point, for any layer registered by envelope
@@ -864,24 +826,8 @@ object SpatialOps {
     * column (the reference's NN works over any `PointDistance` object,
     * rstar/src/rtree.rs:940-975, rectangle.rs:79-111, line.rs:71-113; this
     * is that generality at the distributed tier, where [[knnJoin]] covers
-    * the point-layer fast path).
-    *
-    * Same two-pass bound scheme as [[knnJoin]] / [[lineNearestJoin]], with
-    * one twist: multi-cell geometries are cover-registered (so candidate
-    * joins find them from any overlapped cell), but the ring-expansion
-    * histogram counts each geometry ONCE, at its envelope's lower-corner
-    * reference cell. Counting registrations instead would overcount a
-    * spanning geometry and stop the expansion before k DISTINCT candidates
-    * are guaranteed — a correctness bug, not a tuning choice. Visiting
-    * cells holding ≥ k reference points guarantees ≥ k distinct joinable
-    * geometries (each geometry's cover includes its reference cell).
-    *
-    *   Pass A: ring-expand over the reference histogram to ≥ k geometries;
-    *   the k-th smallest exact distance among the (deduped) candidates is
-    *   the bound d_up. Pass B: probe every cell the d_up disc touches — a
-    *   geometry within d_up intersects the disc, so its envelope shares a
-    *   cell with the disc's bounding box — and the window top-k over the
-    *   deduped candidates is exact.
+    * the point-layer fast path). Candidates meet the layer in a cell
+    * equi-join ([[envelopeKnn]] has the two passes).
     *
     * `geoms` needs (gid, minX, minY, maxX, maxY, *payload columns);
     * `d2Expr` computes the exact squared point-geometry distance from the
@@ -890,243 +836,51 @@ object SpatialOps {
     */
   def knnEnvelopeJoin(points: Dataset[PointRow], geoms: DataFrame,
       d2Expr: Column, k: Int, grid: CellGrid): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
     val celled = geoms.withColumn("cell",
       explode(stCoverCells(grid)(
         col("minX"), col("minY"), col("maxX"), col("maxY"))))
-    val histRows = geoms
-      .select(stCell(grid)(col("minX"), col("minY")).as("cell"))
-      .groupBy("cell").count()
-      .as[(Long, Long)].collect().sortBy(_._1)
-    val histKeys = histRows.map(_._1)
-    val histCnts = histRows.map(_._2)
-    val histB = spark.sparkContext.broadcast((histKeys, histCnts))
-
-    val candA = points.flatMap { p =>
-      val (hk, hc) = histB.value
-      def cnt(c: Long): Long = {
-        val i = java.util.Arrays.binarySearch(hk, c)
-        if (i >= 0) hc(i) else 0L
-      }
-      val cx = grid.ix(p.x); val cy = grid.iy(p.y)
-      var cum = 0L
-      var ring = 0
-      val cells = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val maxRing = grid.cellsPerAxis
-      while (cum < k && ring <= maxRing) {
-        grid.ring(cx, cy, ring).foreach { c =>
-          val n = cnt(c)
-          if (n > 0) { cells += c; cum += n }
-        }
-        ring += 1
-      }
-      cells.map(c => (p.id, p.x, p.y, c))
-    }.toDF("id", "px", "py", "cell")
-
-    val wAsc = Window.partitionBy("id").orderBy(col("d2"), col("gid"))
-    val dUp = candA.join(celled, Seq("cell"))
-      .select(col("id"), col("px"), col("py"), col("gid"), d2Expr.as("d2"))
-      .withColumn("pg", lag("gid", 1).over(wAsc))
-      // copies of an (id, gid) pair carry bit-identical d2 (d2 is a pure
-      // function of the pair), so in (d2, gid) order they are ADJACENT —
-      // this dedup rides the window's own exchange+sort where
-      // dropDuplicates paid a second full shuffle
-      .where(col("pg").isNull || col("pg") =!= col("gid"))
-      .withColumn("rn", row_number().over(wAsc))
-      .where(col("rn") <= k)
-      .groupBy("id").agg(max("d2").as("dUp"),
-        first("px").as("px"), first("py").as("py"))
-
-    val r = sqrt(col("dUp")) * lit(1.0 + 1e-12) // ulp pad: sqrt rounds
-    val candB = dUp.select(col("id"), col("px"), col("py"),
-      explode(stCoverCells(grid)(
-        col("px") - r, col("py") - r, col("px") + r, col("py") + r)).as("cell"))
-    candB.join(celled, Seq("cell"))
-      .select(col("id"), col("gid"), d2Expr.as("d2"))
-      .withColumn("pg", lag("gid", 1).over(wAsc))
-      // copies of an (id, gid) pair carry bit-identical d2 (d2 is a pure
-      // function of the pair), so in (d2, gid) order they are ADJACENT —
-      // this dedup rides the window's own exchange+sort where
-      // dropDuplicates paid a second full shuffle
-      .where(col("pg").isNull || col("pg") =!= col("gid"))
-      .withColumn("rn", row_number().over(wAsc).cast("long"))
-      .where(col("rn") <= k)
-      .select(col("id"), col("gid"), col("d2"), col("rn"))
+    envelopeKnn(points, geoms, k, grid)(_.join(celled, Seq("cell"))
+      .select(col("id"), col("gid"), d2Expr.as("d2"), col("px"), col("py")))
   }
 
   /** Fused-probe variant of [[knnEnvelopeJoin]] for RECTANGLE layers (the
     * metric IS the envelope distance, so per-cell `LocalRTree`s of rect
-    * entries answer it exactly — segment layers keep the generic join,
-    * whose d2Expr ranks by true segment distance). Same two-pass bound
-    * scheme and the same reference-cell histogram; the candidate
-    * enumeration + distance evaluation + per-cell top-k all happen inside
-    * [[probeEnvRows]]'s zip of co-partitioned InternalRow iterators — the
-    * probe emits ≤ k rows per (query, cell) plus k-th-distance ties (so
-    * the downstream (d2, gid) window cut is exact), and only that bounded
-    * stream pays the dedup + global window. Output identical to
+    * entries answer it exactly — segment layers keep their own refinement,
+    * [[knnSegJoinTrees]]). Each cell run bulk-loads a `LocalRTree[Long]`
+    * whose frozen SoA mirror serves distance-ordered probes; per query it
+    * emits the k nearest by EXACT box distance (`AABB.distance2` clamps
+    * then squares in the same IEEE order as `stBoxDistanceSq`, so values
+    * are oracle-identical) EXTENDED through float-exact ties at the k-th
+    * distance — the (d2, gid) window cut then never loses a lower-gid tie
+    * the heap's arbitrary order dropped. Output identical to
     * [[knnEnvelopeJoin]] with the box metric, row for row.
     */
   def knnRectJoinTrees(points: Dataset[PointRow], rects: DataFrame,
       k: Int, grid: CellGrid): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val histRows = rects
-      .select(stCell(grid)(col("minX"), col("minY")).as("cell"))
-      .groupBy("cell").count()
-      .as[(Long, Long)].collect().sortBy(_._1)
-    val histKeys = histRows.map(_._1)
-    val histCnts = histRows.map(_._2)
-    val histB = spark.sparkContext.broadcast((histKeys, histCnts))
-
-    // shuffle + sort the rect side ONCE; both probe passes zip against the
-    // same pinned layout (the knnJoinTrees pattern)
-    val rectShuffled = rects
-      .select(
-        explode(stCoverCells(grid)(
-          col("minX"), col("minY"), col("maxX"), col("maxY"))).as("cell"),
-        col("gid"), col("minX"), col("minY"), col("maxX"), col("maxY"))
-      .repartition(parts, col("cell")).sortWithinPartitions("cell")
-      .localCheckpoint(true)
-    val rectRdd = rectShuffled.queryExecution.toRdd
-
-    val candA = points.flatMap { p =>
-      val (hk, hc) = histB.value
-      def cnt(c: Long): Long = {
-        val i = java.util.Arrays.binarySearch(hk, c)
-        if (i >= 0) hc(i) else 0L
-      }
-      val cx = grid.ix(p.x); val cy = grid.iy(p.y)
-      var cum = 0L
-      var ring = 0
-      val cells = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val maxRing = grid.cellsPerAxis
-      while (cum < k && ring <= maxRing) {
-        grid.ring(cx, cy, ring).foreach { c =>
-          val n = cnt(c)
-          if (n > 0) { cells += c; cum += n }
-        }
-        ring += 1
-      }
-      cells.map(c => (c, p.id, p.x, p.y))
-    }.toDF("cell", "id", "px", "py")
-
-    val wAsc = Window.partitionBy("id").orderBy(col("d2"), col("gid"))
-    val dUp = probeEnvRows(candA, rectRdd, k, parts, spark)
-      .withColumn("pg", lag("gid", 1).over(wAsc))
-      .where(col("pg").isNull || col("pg") =!= col("gid")) // adjacent-dup cut (see knnEnvelopeJoin)
-      .withColumn("rn", row_number().over(wAsc))
-      .where(col("rn") <= k)
-      .groupBy("id").agg(max("d2").as("dUp"),
-        first("px").as("px"), first("py").as("py"))
-
-    val r = sqrt(col("dUp")) * lit(1.0 + 1e-12) // ulp pad: sqrt rounds
-    val candB = dUp.select(col("id"), col("px"), col("py"),
+    val rectRdd = cellSorted(rects.select(
       explode(stCoverCells(grid)(
-        col("px") - r, col("py") - r, col("px") + r, col("py") + r)).as("cell"))
-      .select("cell", "id", "px", "py")
-    probeEnvRows(candB, rectRdd, k, parts, spark)
-      .withColumn("pg", lag("gid", 1).over(wAsc))
-      .where(col("pg").isNull || col("pg") =!= col("gid")) // adjacent-dup cut (see knnEnvelopeJoin)
-      .withColumn("rn", row_number().over(wAsc).cast("long"))
-      .where(col("rn") <= k)
-      .select(col("id"), col("gid"), col("d2"), col("rn"))
-  }
-
-  /** Co-partitioned InternalRow probe over RECT-entry trees — the envelope
-    * sibling of [[probeRows]]: `cand` is (cell, id, px, py); `dataRdd`
-    * rows are (cell, gid, minX, minY, maxX, maxY) hash-partitioned into
-    * `parts` by cell and cell-sorted. Each cell run bulk-loads a
-    * `LocalRTree[Long]` of rect entries whose frozen SoA mirror serves
-    * prune-free distance-ordered probes; per query it emits the k nearest
-    * by EXACT box distance (`AABB.distance2` clamps then squares in the
-    * same IEEE order as `stBoxDistanceSq`, so values are oracle-identical)
-    * EXTENDED through float-exact ties at the k-th distance — the
-    * downstream (d2, gid) window cut then never loses a lower-gid tie the
-    * heap's arbitrary order dropped.
-    */
-  private def probeEnvRows(
-      cand: DataFrame,
-      dataRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      k: Int, parts: Int, spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val c = cand.select("cell", "id", "px", "py")
-      .repartition(parts, col("cell")).sortWithinPartitions("cell")
-    val rdd = c.queryExecution.toRdd.zipPartitions(dataRdd) { (qit, dit) =>
-      new Iterator[(Long, Long, Double, Double, Double)] {
-        private var pending = false
-        private var pCell = 0L
-        private var pGid = 0L
-        private val pBox = new Array[Double](4)
-        private def advance(): Unit =
-          if (dit.hasNext) {
-            val r = dit.next()
-            pCell = r.getLong(0); pGid = r.getLong(1)
-            pBox(0) = r.getDouble(2); pBox(1) = r.getDouble(3)
-            pBox(2) = r.getDouble(4); pBox(3) = r.getDouble(5)
-            pending = true
-          } else pending = false
-        advance()
-
-        private var dCell = Long.MinValue
-        private var tree: LocalRTree[Long] = null
-        private val buf =
-          scala.collection.mutable.Queue.empty[(Long, Long, Double, Double, Double)]
-
-        private def loadRun(cell: Long): Unit = {
-          while (pending && pCell < cell) advance()
-          if (!pending || pCell != cell) {
-            dCell = cell; tree = null
-          } else {
-            val es = scala.collection.mutable.ArrayBuffer.empty[Entry[Long]]
-            while (pending && pCell == cell) {
-              es += Entry(AABB.of2d(pBox(0), pBox(1), pBox(2), pBox(3)), pGid)
-              advance()
-            }
-            dCell = cell
-            tree = new LocalRTree[Long](2, 40, 1).bulkLoad(es.toArray)
+        col("minX"), col("minY"), col("maxX"), col("maxY"))).as("cell"),
+      col("gid"), col("minX"), col("minY"), col("maxX"), col("maxY")))
+    envelopeKnn(points, rects, k, grid)(probeCellRuns(_, rectRdd, 4, "gid") {
+      (gids, c) =>
+        val t = new LocalRTree[Long](2, 40, 1).bulkLoad(Array.tabulate(gids.length)(i =>
+          Entry(AABB.of2d(c(0)(i), c(1)(i), c(2)(i), c(3)(i)), gids(i))))
+        (qx, qy, emit) => {
+          val it = t.nearestNeighborIter(Array(qx, qy))
+          var got = 0
+          var kth = Double.MaxValue
+          var done = false
+          while (!done && it.hasNext) {
+            val (e, dd) = it.next()
+            if (got < k) {
+              emit(e.value, dd)
+              got += 1
+              if (got == k) kth = dd
+            } else if (dd == kth) emit(e.value, dd) // float-exact tie extension
+            else done = true
           }
         }
-
-        private def fill(): Unit = {
-          while (buf.isEmpty && qit.hasNext) {
-            val q = qit.next()
-            val cell = q.getLong(0)
-            val qid = q.getLong(1)
-            val qx = q.getDouble(2)
-            val qy = q.getDouble(3)
-            if (cell != dCell) loadRun(cell)
-            if (tree != null) {
-              val it = tree.nearestNeighborIter(Array(qx, qy))
-              var got = 0
-              var kth = Double.MaxValue
-              var done = false
-              while (!done && it.hasNext) {
-                val (e, dd) = it.next()
-                if (got < k) {
-                  buf.enqueue((qid, e.value, dd, qx, qy))
-                  got += 1
-                  if (got == k) kth = dd
-                } else if (dd == kth) { // float-exact tie extension
-                  buf.enqueue((qid, e.value, dd, qx, qy))
-                } else done = true
-              }
-            }
-          }
-        }
-
-        override def hasNext: Boolean = { fill(); buf.nonEmpty }
-        override def next(): (Long, Long, Double, Double, Double) = {
-          fill(); buf.dequeue()
-        }
-      }
-    }
-    // the probe echoes each query's (px, py) so pass A can derive its
-    // radius bound WITHOUT re-joining the candidate table (the join was a
-    // sort-merge over the full probe stream; two doubles per bounded
-    // output row are far cheaper)
-    spark.createDataset(rdd).toDF("id", "gid", "d2", "px", "py")
+    })
   }
 
   /** Scala twin of `SpatialFunctions.stLineDistanceSq` — the SAME ops in
@@ -1154,212 +908,66 @@ object SpatialOps {
   /** Fused-probe variant of [[knnEnvelopeJoin]] for SEGMENT layers — the
     * sibling of [[knnRectJoinTrees]] where the ranking metric (true
     * point-segment distance, rstar/src/primitives/line.rs:71-113) is NOT
-    * the tree's envelope metric. The per-cell tree still drives the probe:
-    * its distance-ordered envelope iterator yields candidates by box
-    * distance — a LOWER BOUND of the segment distance — and the probe
-    * refines each candidate to its exact [[segDistanceSq]], stopping once
-    * the next envelope distance strictly exceeds the current k-th exact
-    * distance (any unvisited segment then has seg-d2 ≥ box-d2 > k-th, so
-    * it can neither enter the top k nor tie at the k-th — the classic
+    * the tree's envelope metric. Each cell run bulk-loads a `LocalRTree`
+    * of segment ENVELOPES (values index the run's coordinate columns); its
+    * distance-ordered envelope iterator yields candidates by box distance
+    * — a LOWER BOUND of the segment distance — and the probe refines each
+    * candidate to its exact [[segDistanceSq]], stopping once the next
+    * envelope distance strictly exceeds the current k-th exact distance
+    * (any unvisited segment then has seg-d2 ≥ box-d2 > k-th, so it can
+    * neither enter the top k nor tie at the k-th — the classic
     * lower-bound-pruned NN argument, exact). Emits ≤ k rows per
     * (query, cell) plus float-exact ties at the k-th distance; the same
-    * two-pass bound scheme, dedup, and (d2, gid) window as the generic
-    * join make the output identical row for row.
+    * two passes, dedup and (d2, gid) window as the generic join make the
+    * output identical row for row.
     *
     * `segs` needs (gid, x1, y1, x2, y2, minX, minY, maxX, maxY).
     */
   def knnSegJoinTrees(points: Dataset[PointRow], segs: DataFrame,
       k: Int, grid: CellGrid): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val histRows = segs
-      .select(stCell(grid)(col("minX"), col("minY")).as("cell"))
-      .groupBy("cell").count()
-      .as[(Long, Long)].collect().sortBy(_._1)
-    val histKeys = histRows.map(_._1)
-    val histCnts = histRows.map(_._2)
-    val histB = spark.sparkContext.broadcast((histKeys, histCnts))
-
-    // shuffle + sort the segment side ONCE; both probe passes zip against
-    // the same pinned layout (the knnRectJoinTrees pattern)
-    val segShuffled = segs
-      .select(
-        explode(stCoverCells(grid)(
-          col("minX"), col("minY"), col("maxX"), col("maxY"))).as("cell"),
-        col("gid"), col("x1"), col("y1"), col("x2"), col("y2"))
-      .repartition(parts, col("cell")).sortWithinPartitions("cell")
-      .localCheckpoint(true)
-    val segRdd = segShuffled.queryExecution.toRdd
-
-    val candA = points.flatMap { p =>
-      val (hk, hc) = histB.value
-      def cnt(c: Long): Long = {
-        val i = java.util.Arrays.binarySearch(hk, c)
-        if (i >= 0) hc(i) else 0L
-      }
-      val cx = grid.ix(p.x); val cy = grid.iy(p.y)
-      var cum = 0L
-      var ring = 0
-      val cells = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val maxRing = grid.cellsPerAxis
-      while (cum < k && ring <= maxRing) {
-        grid.ring(cx, cy, ring).foreach { c =>
-          val n = cnt(c)
-          if (n > 0) { cells += c; cum += n }
-        }
-        ring += 1
-      }
-      cells.map(c => (c, p.id, p.x, p.y))
-    }.toDF("cell", "id", "px", "py")
-
-    val wAsc = Window.partitionBy("id").orderBy(col("d2"), col("gid"))
-    val dUp = probeSegRows(candA, segRdd, k, parts, spark)
-      .withColumn("pg", lag("gid", 1).over(wAsc))
-      .where(col("pg").isNull || col("pg") =!= col("gid")) // adjacent-dup cut (see knnEnvelopeJoin)
-      .withColumn("rn", row_number().over(wAsc))
-      .where(col("rn") <= k)
-      .groupBy("id").agg(max("d2").as("dUp"),
-        first("px").as("px"), first("py").as("py"))
-
-    val r = sqrt(col("dUp")) * lit(1.0 + 1e-12) // ulp pad: sqrt rounds
-    val candB = dUp.select(col("id"), col("px"), col("py"),
+    val segRdd = cellSorted(segs.select(
       explode(stCoverCells(grid)(
-        col("px") - r, col("py") - r, col("px") + r, col("py") + r)).as("cell"))
-      .select("cell", "id", "px", "py")
-    probeSegRows(candB, segRdd, k, parts, spark)
-      .withColumn("pg", lag("gid", 1).over(wAsc))
-      .where(col("pg").isNull || col("pg") =!= col("gid")) // adjacent-dup cut (see knnEnvelopeJoin)
-      .withColumn("rn", row_number().over(wAsc).cast("long"))
-      .where(col("rn") <= k)
-      .select(col("id"), col("gid"), col("d2"), col("rn"))
-  }
-
-  /** Co-partitioned InternalRow probe over SEGMENT-entry trees: `cand` is
-    * (cell, id, px, py); `dataRdd` rows are (cell, gid, x1, y1, x2, y2)
-    * hash-partitioned into `parts` by cell and cell-sorted. Each cell run
-    * bulk-loads a `LocalRTree` of segment ENVELOPES (values index parallel
-    * coordinate arrays); probes walk the distance-ordered envelope
-    * iterator, refine to exact [[segDistanceSq]], and cut with the
-    * lower-bound rule (stop at box-d2 strictly above the k-th exact d2).
-    * Emits each query's k nearest by exact segment distance EXTENDED
-    * through float-exact ties at the k-th — the downstream (d2, gid)
-    * window cut then never loses a lower-gid tie.
-    */
-  private def probeSegRows(
-      cand: DataFrame,
-      dataRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      k: Int, parts: Int, spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val c = cand.select("cell", "id", "px", "py")
-      .repartition(parts, col("cell")).sortWithinPartitions("cell")
-    val rdd = c.queryExecution.toRdd.zipPartitions(dataRdd) { (qit, dit) =>
-      new Iterator[(Long, Long, Double, Double, Double)] {
-        private var pending = false
-        private var pCell = 0L
-        private var pGid = 0L
-        private val pSeg = new Array[Double](4)
-        private def advance(): Unit =
-          if (dit.hasNext) {
-            val r = dit.next()
-            pCell = r.getLong(0); pGid = r.getLong(1)
-            pSeg(0) = r.getDouble(2); pSeg(1) = r.getDouble(3)
-            pSeg(2) = r.getDouble(4); pSeg(3) = r.getDouble(5)
-            pending = true
-          } else pending = false
-        advance()
-
-        private var dCell = Long.MinValue
-        private var tree: LocalRTree[Long] = null
-        private var gids: Array[Long] = null
-        private var xs1: Array[Double] = null
-        private var ys1: Array[Double] = null
-        private var xs2: Array[Double] = null
-        private var ys2: Array[Double] = null
-        private val buf =
-          scala.collection.mutable.Queue.empty[(Long, Long, Double, Double, Double)]
-
-        private def loadRun(cell: Long): Unit = {
-          while (pending && pCell < cell) advance()
-          if (!pending || pCell != cell) {
-            dCell = cell; tree = null
-          } else {
-            val g = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val a1 = scala.collection.mutable.ArrayBuffer.empty[Double]
-            val b1 = scala.collection.mutable.ArrayBuffer.empty[Double]
-            val a2 = scala.collection.mutable.ArrayBuffer.empty[Double]
-            val b2 = scala.collection.mutable.ArrayBuffer.empty[Double]
-            while (pending && pCell == cell) {
-              g += pGid; a1 += pSeg(0); b1 += pSeg(1); a2 += pSeg(2); b2 += pSeg(3)
-              advance()
-            }
-            gids = g.toArray; xs1 = a1.toArray; ys1 = b1.toArray
-            xs2 = a2.toArray; ys2 = b2.toArray
-            val es = Array.tabulate(gids.length) { i =>
-              Entry(AABB.of2d(
-                math.min(xs1(i), xs2(i)), math.min(ys1(i), ys2(i)),
-                math.max(xs1(i), xs2(i)), math.max(ys1(i), ys2(i))), i.toLong)
-            }
-            dCell = cell
-            tree = new LocalRTree[Long](2, 40, 1).bulkLoad(es)
-          }
-        }
-
-        private def fill(): Unit = {
-          while (buf.isEmpty && qit.hasNext) {
-            val q = qit.next()
-            val cell = q.getLong(0)
-            val qid = q.getLong(1)
-            val qx = q.getDouble(2)
-            val qy = q.getDouble(3)
-            if (cell != dCell) loadRun(cell)
-            if (tree != null) {
-              val it = tree.nearestNeighborIter(Array(qx, qy))
-              // size-k max-heap of exact distances: peek = current k-th
-              val heap = new java.util.PriorityQueue[java.lang.Double](
-                k, java.util.Collections.reverseOrder())
-              val evald = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-              var done = false
-              while (!done && it.hasNext) {
-                val (e, boxD2) = it.next() // ascending envelope distance
-                if (heap.size == k && boxD2 > heap.peek()) done = true
-                else {
-                  val i = e.value.toInt
-                  val d2 = segDistanceSq(xs1(i), ys1(i), xs2(i), ys2(i), qx, qy)
-                  evald += ((gids(i), d2))
-                  if (heap.size < k) heap.add(d2)
-                  else if (d2 < heap.peek()) { heap.poll(); heap.add(d2) }
-                }
-              }
-              if (evald.nonEmpty) {
-                val kth: Double =
-                  if (heap.size == k) heap.peek() else Double.MaxValue
-                evald.foreach { case (g, d) =>
-                  if (d <= kth) buf.enqueue((qid, g, d, qx, qy))
-                }
-              }
+        col("minX"), col("minY"), col("maxX"), col("maxY"))).as("cell"),
+      col("gid"), col("x1"), col("y1"), col("x2"), col("y2")))
+    envelopeKnn(points, segs, k, grid)(probeCellRuns(_, segRdd, 4, "gid") {
+      (gids, c) =>
+        val Array(xs1, ys1, xs2, ys2) = c
+        val t = new LocalRTree[Long](2, 40, 1).bulkLoad(Array.tabulate(gids.length)(i =>
+          Entry(AABB.of2d(
+            math.min(xs1(i), xs2(i)), math.min(ys1(i), ys2(i)),
+            math.max(xs1(i), xs2(i)), math.max(ys1(i), ys2(i))), i.toLong)))
+        (qx, qy, emit) => {
+          val it = t.nearestNeighborIter(Array(qx, qy))
+          // size-k max-heap of exact distances: peek = current k-th
+          val heap = new java.util.PriorityQueue[java.lang.Double](
+            k, java.util.Collections.reverseOrder())
+          val evald = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
+          var done = false
+          while (!done && it.hasNext) {
+            val (e, boxD2) = it.next() // ascending envelope distance
+            if (heap.size == k && boxD2 > heap.peek()) done = true
+            else {
+              val i = e.value.toInt
+              val d2 = segDistanceSq(xs1(i), ys1(i), xs2(i), ys2(i), qx, qy)
+              evald += ((gids(i), d2))
+              if (heap.size < k) heap.add(d2)
+              else if (d2 < heap.peek()) { heap.poll(); heap.add(d2) }
             }
           }
+          val kth: Double = if (heap.size == k) heap.peek() else Double.MaxValue
+          evald.foreach { case (g, d) => if (d <= kth) emit(g, d) }
         }
-
-        override def hasNext: Boolean = { fill(); buf.nonEmpty }
-        override def next(): (Long, Long, Double, Double, Double) = {
-          fill(); buf.dequeue()
-        }
-      }
-    }
-    // (px, py) echoed per output row — see probeEnvRows
-    spark.createDataset(rdd).toDF("id", "gid", "d2", "px", "py")
+    })
   }
 
   /** Distributed kNN join in d DIMENSIONS over [[graft.index.CellGridN]] —
     * the n-dim tier (reference points are n-dimensional,
     * rstar/src/point.rs:158-179; the 2-D [[knnJoin]] remains the web-geo
     * fast path with its pure-Catalyst probe). Same two provably-complete
-    * passes: shell-expand over the broadcast histogram until ≥ k points,
-    * exact k-th candidate distance d_up, then cover the d_up hyper-ball's
-    * bounding box (ulp-padded) and window top-k — exact by the same disc
-    * argument, axis-generalized. Rows: (id, p: Array[Double]).
+    * passes: shell-expand over the histogram until ≥ k points, exact k-th
+    * candidate distance d_up, then cover the d_up hyper-ball's bounding
+    * box (ulp-padded) and window top-k — exact by the same disc argument,
+    * axis-generalized. Rows: (id, p: Array[Double]).
     */
   def knnJoinNd(
       queries: Dataset[(Long, Array[Double])],
@@ -1369,30 +977,12 @@ object SpatialOps {
     import spark.implicits._
     val dataCelled = data.map(r => (grid.cellId(r._2), r._1, r._2))
       .toDF("cell", "id", "p")
-    val histRows = dataCelled.groupBy("cell").count()
-      .as[(Long, Long)].collect().sortBy(_._1)
-    val histKeys = histRows.map(_._1)
-    val histCnts = histRows.map(_._2)
-    val histB = spark.sparkContext.broadcast((histKeys, histCnts))
+    val histB = CellHistogram.collect(dataCelled.select("cell")).broadcast(spark)
 
-    val candA = queries.flatMap { q =>
-      val (hk, hc) = histB.value
-      def cnt(c: Long): Long = {
-        val i = java.util.Arrays.binarySearch(hk, c)
-        if (i >= 0) hc(i) else 0L
-      }
-      val c0 = Array.tabulate(grid.dims)(d => grid.idx(d, q._2(d)))
-      var cum = 0L
-      var ring = 0
-      val cells = scala.collection.mutable.ArrayBuffer.empty[Long]
-      while (cum < k && ring <= grid.cellsPerAxis) {
-        grid.ring(c0, ring).foreach { c =>
-          val n = cnt(c)
-          if (n > 0) { cells += c; cum += n }
-        }
-        ring += 1
-      }
-      cells.map(c => (q._1, q._2, c))
+    val candA = queries.flatMap { case (qid, qp) =>
+      val c0 = Array.tabulate(grid.dims)(d => grid.idx(d, qp(d)))
+      histB.value.ringCells(k, grid.cellsPerAxis)(r => grid.ring(c0, r))
+        .map(c => (qid, qp, c))
     }.toDF("qid", "qp", "cell")
 
     val d2 = aggregate(
@@ -1406,7 +996,7 @@ object SpatialOps {
       .groupBy("qid").agg(max("d2").as("dUp"), first("qp").as("qp"))
 
     val candB = dUp.as[(Long, Double, Array[Double])].flatMap { case (qid, up, qp) =>
-      val r = math.sqrt(up) * (1.0 + 1e-12)
+      val r = math.sqrt(up) * CellHistogram.DiscPad
       val lo = qp.map(_ - r)
       val hi = qp.map(_ + r)
       grid.cover(AABB.fromBounds(lo, hi)).map(c => (qid, qp, c))

@@ -909,8 +909,8 @@ object LocalRTree {
       * distance-ordered iterator. Entry keys are exact envelope distances,
       * so the first entry popped is the nearest.
       */
-    private def seedHeap(px: Double, py: Double): LongKeyHeap = {
-      val heap = new LongKeyHeap(64)
+    private def seedHeap(px: Double, py: Double): LongHeap = {
+      val heap = new LongHeap(64)
       if (entries.length > 0)
         heap.enqueue(boxDist2(levelEnvs(top), 0, px, py), top.toLong << 32)
       heap
@@ -920,7 +920,7 @@ object LocalRTree {
       * ONLY for 1-NN (it discards anything provably farther than the
       * nearest entry); the distance-ordered iterator must keep everything.
       */
-    @inline private def expand(heap: LongKeyHeap, v: Long,
+    @inline private def expand(heap: LongHeap, v: Long,
         px: Double, py: Double, bound: Double, prune: Boolean): Double = {
       var b = bound
       val level = (v >>> 32).toInt
@@ -1081,51 +1081,6 @@ object LocalRTree {
       walk(root, 0)
       new FlatMirror[T](entriesB.toArray[Entry[T]], entryEnvsB.toArray,
         levelEnvs.map(_.toArray), starts.map(_.toArray), ends.map(_.toArray))
-    }
-  }
-
-  /** Primitive min-heap (double key, long payload) — no boxing anywhere. */
-  private[index] final class LongKeyHeap(initialCapacity: Int) {
-    private var keys = new Array[Double](initialCapacity)
-    private var vals = new Array[Long](initialCapacity)
-    private var n = 0
-    def nonEmpty: Boolean = n > 0
-    def headKey: Double = keys(0)
-    def headVal: Long = vals(0)
-    def enqueue(k: Double, v: Long): Unit = {
-      if (n == keys.length) {
-        keys = java.util.Arrays.copyOf(keys, n * 2)
-        vals = java.util.Arrays.copyOf(vals, n * 2)
-      }
-      var i = n
-      n += 1
-      while (i > 0) {
-        val parent = (i - 1) >> 1
-        if (keys(parent) <= k) { keys(i) = k; vals(i) = v; return }
-        keys(i) = keys(parent); vals(i) = vals(parent)
-        i = parent
-      }
-      keys(0) = k; vals(0) = v
-    }
-    def dequeue(): Long = {
-      val top = vals(0)
-      n -= 1
-      if (n > 0) {
-        val k = keys(n); val v = vals(n)
-        var i = 0
-        var child = 1
-        while (child < n) {
-          if (child + 1 < n && keys(child + 1) < keys(child)) child += 1
-          if (keys(child) >= k) child = n
-          else {
-            keys(i) = keys(child); vals(i) = vals(child)
-            i = child
-            child = 2 * i + 1
-          }
-        }
-        keys(i) = k; vals(i) = v
-      }
-      top
     }
   }
 

@@ -83,7 +83,6 @@ final class PointRTree2D private (
     */
   def locateAtPoint(px: Double, py: Double): Int = {
     if (size == 0) return -1
-    val simd = Simd.on // capture once per query; JIT folds the leaf branch
     def walk(level: Int, i: Int): Int = {
       val e = levels(level)
       val b = 4 * i
@@ -91,7 +90,6 @@ final class PointRTree2D private (
       if (level == 0) {
         val from = i * leafSize
         val to = math.min(from + leafSize, size)
-        if (simd) return VectorKernels.findEq(xs, ys, from, to, px, py)
         var p = from
         while (p < to) {
           if (xs(p) == px && ys(p) == py) return p
@@ -196,13 +194,6 @@ final class PointRTree2D private (
     * Specialized best-first: nodes go through the heap, leaf points are
     * scanned in place against the running best — no per-point heap churn.
     * Ties resolve to the smaller point id (deterministic total order).
-    */
-  /** Exact 1-NN leaf scans stay SCALAR by measurement: the SIMD block
-    * kernel ([[VectorKernels.nearestInRange]], parity spec-pinned) reads
-    * ~5-10% SLOWER here — best-distance leaves improve the running best
-    * often enough that the reduce-then-rescan pattern pays for itself
-    * only on wider leaves. locateAtPoint keeps its SIMD path (~10% win,
-    * pure compare-mask, no rescan). Recorded in BASELINE.md (round 5).
     */
   def nearest(px: Double, py: Double): (Int, Double) = {
     if (size == 0) return (-1, Double.MaxValue)
@@ -338,49 +329,5 @@ object PointRTree2D {
       m = pm
     }
     new PointRTree2D(n, oIds, oXs, oYs, lvls.toArray, leafSize, fanout)
-  }
-
-  /** Primitive min-heap: double keys, long payloads. */
-  private final class LongHeap(initialCapacity: Int) {
-    private var keys = new Array[Double](initialCapacity)
-    private var vals = new Array[Long](initialCapacity)
-    private var n = 0
-    def nonEmpty: Boolean = n > 0
-    def headKey: Double = keys(0)
-    def enqueue(k: Double, v: Long): Unit = {
-      if (n == keys.length) {
-        keys = java.util.Arrays.copyOf(keys, n * 2)
-        vals = java.util.Arrays.copyOf(vals, n * 2)
-      }
-      var i = n
-      n += 1
-      while (i > 0) {
-        val parent = (i - 1) >> 1
-        if (keys(parent) <= k) { keys(i) = k; vals(i) = v; return }
-        keys(i) = keys(parent); vals(i) = vals(parent)
-        i = parent
-      }
-      keys(0) = k; vals(0) = v
-    }
-    def dequeue(): Long = {
-      val top = vals(0)
-      n -= 1
-      if (n > 0) {
-        val k = keys(n); val v = vals(n)
-        var i = 0
-        var child = 1
-        while (child < n) {
-          if (child + 1 < n && keys(child + 1) < keys(child)) child += 1
-          if (keys(child) >= k) child = n
-          else {
-            keys(i) = keys(child); vals(i) = vals(child)
-            i = child
-            child = 2 * i + 1
-          }
-        }
-        keys(i) = k; vals(i) = v
-      }
-      top
-    }
   }
 }

@@ -28,44 +28,6 @@ class PointRTree2DSpec extends AnyFunSuite {
     }
   }
 
-  test("SIMD and scalar probe paths agree bit-for-bit (locateAtPoint, " +
-    "nearest) — and report which paths this JVM actually ran") {
-    import graft.index.{Simd, VectorKernels}
-    info(s"Simd.on = ${Simd.on} (false = module absent, scalar-only JVM)")
-    def locAll(): Seq[Int] =
-      P.take(500).map(p => T.locateAtPoint(p(0), p(1))).toSeq ++
-        Q.map(q => T.locateAtPoint(q(0) + 1e-7, q(1) + 1e-7)).toSeq
-    val saved = Simd.forceScalar
-    try {
-      Simd.forceScalar = true
-      val locS = locAll()
-      Simd.forceScalar = false
-      val locV = locAll()
-      assert(locS == locV) // same FIRST-match index, hit and miss
-    } finally Simd.forceScalar = saved
-    // the block-nearest kernel (kept for wider-leaf layouts; nearest()'s
-    // 16-wide leaves measured faster scalar) agrees with a scalar fold
-    // under the exact (d2, id) lexicographic rule
-    if (Simd.on) {
-      val d = new Array[Double](1)
-      Q.foreach { q =>
-        val bi = VectorKernels.nearestInRange(
-          T.xs, T.ys, T.ids, 0, T.size, q(0), q(1), d)
-        var best = -1; var bestD = Double.MaxValue; var bestId = Long.MaxValue
-        var p = 0
-        while (p < T.size) {
-          val dx = T.xs(p) - q(0); val dy = T.ys(p) - q(1)
-          val dd = dx * dx + dy * dy
-          if (dd < bestD || (dd == bestD && T.ids(p) < bestId)) {
-            bestD = dd; best = p; bestId = T.ids(p)
-          }
-          p += 1
-        }
-        assert(bi == best && d(0) == bestD)
-      }
-    }
-  }
-
   test("box query vs filtered scan (closed intervals)") {
     Q.take(60).foreach { q =>
       val (qx, qy) = (q(0), q(1))
