@@ -1223,22 +1223,27 @@ object PipelineQueries {
     // move the part files in (an atomic rename per file, microseconds
     // apart), so one trigger sees both sides. The emitted pair set is
     // batch-structure-invariant either way — this trims lifecycles, never
-    // results.
-    def stagedLeg2(tpe: String): String = {
-      val stage = java.nio.file.Files.createTempDirectory(s"${tag}_s").toString
+    // results. The stage is a SIBLING of the source dir (a child would be
+    // listed by the live source), so the rename stays on one filesystem;
+    // ATOMIC_MOVE throws rather than degrade to copy + delete, which would
+    // let the source list a half-copied part file.
+    def stagedLeg2(tpe: String, outDir: String): String = {
+      val stage = java.nio.file.Files.createTempDirectory(
+        java.nio.file.Paths.get(outDir).getParent, s"${tag}_s").toString
       ev.where(col("event_type") === tpe && unix_micros(col("ts")) >= cutUs)
         .drop("event_type")
         .write.mode("overwrite").parquet(stage)
       stage
     }
-    def moveIn(stage: String, outDir: String): Unit = {
-      new java.io.File(stage).listFiles().foreach { f =>
-        if (f.getName.startsWith("part-"))
-          java.nio.file.Files.move(f.toPath,
-            java.nio.file.Paths.get(outDir, f.getName))
-      }
-      rmrfTemp(stage)
-    }
+    def moveIn(stage: String, outDir: String): Unit =
+      try {
+        new java.io.File(stage).listFiles().foreach { f =>
+          if (f.getName.startsWith("part-"))
+            java.nio.file.Files.move(f.toPath,
+              java.nio.file.Paths.get(outDir, f.getName),
+              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        }
+      } finally rmrfTemp(stage)
     leg("click", clickDir)
     leg("view", viewDir)
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -1271,8 +1276,8 @@ object PipelineQueries {
       q.processAllAvailable() // micro-batch 1: first half-month, both sides
       // micro-batch 2: the rest — batch-2 clicks near the cut must still
       // find their batch-1 views in the join state
-      val s1 = stagedLeg2("click")
-      val s2 = stagedLeg2("view")
+      val s1 = stagedLeg2("click", clickDir)
+      val s2 = stagedLeg2("view", viewDir)
       moveIn(s1, clickDir); moveIn(s2, viewDir)
       q.processAllAvailable()
       graft.streaming.StreamMetrics.record(q)

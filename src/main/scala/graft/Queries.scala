@@ -421,11 +421,8 @@ object Queries {
 
   // ------------------------------------------------- J1: pairwise join
 
-  /** Default = the pure-DataFrame cell equi-join plan: it stays inside
-    * whole-stage codegen AND inside AQE's skew-join splitting, which the
-    * typed cogroup tree variant (`SpatialOps.intersectionJoinTree`, still
-    * exercised in SpatialOpsSpec/SkewSpec) sits outside — the more
-    * scale-robust default at 100 TB.
+  /** The pure-DataFrame cell equi-join plan: it stays inside whole-stage
+    * codegen, and AQE's skew-join splitting divides hot cells at runtime.
     */
   def intersectionJoin(spark: SparkSession, dir: String): DataFrame = {
     def toRows(df: DataFrame) = df.select(

@@ -1,7 +1,7 @@
 package graft.engine
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions._
@@ -177,183 +177,6 @@ object SpatialOps {
       }
     }
     ColumnShim.internalDf(spark, rdd, schema)
-  }
-
-  /** Same join through the two-level index: both sides hash-co-partitioned
-    * and sorted by cell through the DataFrame API, then joined as a zip of
-    * InternalRow iterators — a synchronized merge over the sorted cell
-    * runs builds a per-cell `LocalRTree` on the smaller run (whose frozen
-    * SoA mirror serves the probes) and probes it with the larger:
-    * index-nested-loop inside each partition, the distributed analog of
-    * the reference's synchronized dual-tree descent
-    * (rstar/src/algorithm/intersection_iterator.rs:15-104). Like
-    * [[probeCellRuns]], the big sides never touch a Dataset encoder.
-    */
-  def intersectionJoinTree(
-      left: Dataset[RectRow], right: Dataset[RectRow],
-      grid: CellGrid): Dataset[(Long, Long)] = {
-    val spark = left.sparkSession
-    val parts = shufflePartitions(left)
-    def celled(ds: Dataset[RectRow]): DataFrame = ds.toDF()
-      .select(
-        explode(stCoverCells(grid)(
-          col("minX"), col("minY"), col("maxX"), col("maxY"))).as("key"),
-        col("id"), col("minX"), col("minY"), col("maxX"), col("maxY"))
-      .repartition(parts, col("key")).sortWithinPartitions("key")
-    zipIntersect(spark, celled(left), celled(right), grid, saltBits = 0)
-  }
-
-  /** The fused per-cell probe shared by [[intersectionJoinTree]] and
-    * [[intersectionJoinTreeSalted]]: both inputs must be (key LONG, id,
-    * minX, minY, maxX, maxY) hash-co-partitioned and sorted by `key`
-    * (= cell << saltBits | salt); the zip merges the sorted key runs on raw
-    * InternalRows, builds a per-run `LocalRTree` on the smaller side and
-    * probes it with the larger — no Dataset encoder ever touches the big
-    * sides (the round-2 salted path ran on typed cogroup and paid full
-    * object churn exactly on the declared-hot cells).
-    */
-  private def zipIntersect(
-      spark: SparkSession, lCelled: DataFrame, rCelled: DataFrame,
-      grid: CellGrid, saltBits: Int): Dataset[(Long, Long)] = {
-    import spark.implicits._
-    val lr = lCelled.queryExecution.toRdd
-    val rr = rCelled.queryExecution.toRdd
-    val g = grid
-    val sb = saltBits
-    val rdd = lr.zipPartitions(rr) { (lit, rit) =>
-      import scala.collection.mutable
-      // primitive look-ahead per side (rows are reused by the reader)
-      final class Side(it: Iterator[InternalRow]) {
-        var pending = false
-        var key = 0L
-        var id = 0L
-        val box = new Array[Double](4)
-        def advance(): Unit =
-          if (it.hasNext) {
-            val r = it.next()
-            key = r.getLong(0); id = r.getLong(1)
-            box(0) = r.getDouble(2); box(1) = r.getDouble(3)
-            box(2) = r.getDouble(4); box(3) = r.getDouble(5)
-            pending = true
-          } else pending = false
-        def skipRun(): Unit = { val k = key; while (pending && key == k) advance() }
-        /** Load the current key's run into SoA buffers; returns count. */
-        def loadRun(ids: mutable.ArrayBuffer[Long],
-            boxes: mutable.ArrayBuffer[Double]): Int = {
-          ids.clear(); boxes.clear()
-          val k = key
-          while (pending && key == k) {
-            ids += id
-            boxes += box(0) += box(1) += box(2) += box(3)
-            advance()
-          }
-          ids.length
-        }
-      }
-      val ls = new Side(lit); ls.advance()
-      val rs = new Side(rit); rs.advance()
-      val lIds = mutable.ArrayBuffer.empty[Long]
-      val lBoxes = mutable.ArrayBuffer.empty[Double]
-      val rIds = mutable.ArrayBuffer.empty[Long]
-      val rBoxes = mutable.ArrayBuffer.empty[Double]
-      val out = mutable.Queue.empty[(Long, Long)]
-
-      def joinRun(key: Long): Unit = {
-        val cell = key >>> sb
-        val nl = lIds.length; val nr = rIds.length
-        // index the smaller run, probe with the larger (fewer tree builds)
-        val (bIds, bBoxes, pIds, pBoxes, leftIsBuild) =
-          if (nl <= nr) (lIds, lBoxes, rIds, rBoxes, true)
-          else (rIds, rBoxes, lIds, lBoxes, false)
-        val entries = Array.tabulate(bIds.length) { i =>
-          Entry(AABB.of2d(bBoxes(4 * i), bBoxes(4 * i + 1),
-            bBoxes(4 * i + 2), bBoxes(4 * i + 3)), bIds(i))
-        }
-        val tree = new LocalRTree[Long](2, 40, 1).bulkLoad(entries)
-        var j = 0
-        while (j < pIds.length) {
-          val pMinX = pBoxes(4 * j); val pMinY = pBoxes(4 * j + 1)
-          val q = AABB.of2d(pMinX, pMinY, pBoxes(4 * j + 2), pBoxes(4 * j + 3))
-          val pid = pIds(j)
-          tree.foreachIntersecting(q) { e =>
-            // reference-point dedup: emit in the intersection's lower cell
-            // (the CELL, not the salted key — salting only refines the
-            // co-partitioning; dedup semantics are unchanged)
-            val bMinX = e.env.lower(0); val bMinY = e.env.lower(1)
-            if (g.cellId(math.max(pMinX, bMinX), math.max(pMinY, bMinY)) == cell) {
-              if (leftIsBuild) out.enqueue((e.value, pid))
-              else out.enqueue((pid, e.value))
-            }
-          }
-          j += 1
-        }
-      }
-
-      new Iterator[(Long, Long)] {
-        private def fill(): Unit = {
-          while (out.isEmpty && ls.pending && rs.pending) {
-            if (ls.key < rs.key) ls.skipRun()
-            else if (rs.key < ls.key) rs.skipRun()
-            else {
-              val k = ls.key
-              ls.loadRun(lIds, lBoxes)
-              rs.loadRun(rIds, rBoxes)
-              joinRun(k)
-            }
-          }
-        }
-        def hasNext: Boolean = { fill(); out.nonEmpty }
-        def next(): (Long, Long) = { fill(); out.dequeue() }
-      }
-    }
-    spark.createDataset(rdd)
-  }
-
-  /** Skew-aware variant of [[intersectionJoinTree]] (north_rule: hot dense
-    * urban cells must not serialize the join). A first histogram pass finds
-    * cells whose left-side occupancy exceeds `hotThreshold`; their rows are
-    * split across `ceil(cnt / hotThreshold)` salts (deterministic from the
-    * row id), and the probe side is replicated to every salt of that cell —
-    * the classic salted-join rewrite, applied per cell. Cold cells pay
-    * nothing (salt factor 1). AQE's skew-join splitting remains on as the
-    * runtime backstop for residual imbalance.
-    *
-    * Results are identical to the unsalted join: salting only refines the
-    * co-partitioning key (cell, salt); the reference-point dedup still runs
-    * on the cell alone.
-    */
-  def intersectionJoinTreeSalted(
-      left: Dataset[RectRow], right: Dataset[RectRow],
-      grid: CellGrid, hotThreshold: Int): Dataset[(Long, Long)] = {
-    val spark = left.sparkSession
-    val parts = shufflePartitions(left)
-    def celled(ds: Dataset[RectRow]): DataFrame = ds.toDF().select(
-      explode(stCoverCells(grid)(
-        col("minX"), col("minY"), col("maxX"), col("maxY"))).as("cell"),
-      col("id"), col("minX"), col("minY"), col("maxX"), col("maxY"))
-    // histogram pass: bounded by 4^res cells — the driver-grid pattern
-    val lCelled = celled(left)
-    val salts: Map[Long, Int] = lCelled
-      .groupBy("cell").agg(count(lit(1)).as("n"))
-      .where(col("n") > hotThreshold)
-      .collect()
-      .map(r => r.getLong(0) ->
-        math.min(256, ((r.getLong(1) + hotThreshold - 1) / hotThreshold).toInt))
-      .toMap
-    // salt factor as a broadcast map LITERAL, so the whole keying stays a
-    // codegen'd Column expression (cold cells: no entry -> factor 1)
-    val sCol = coalesce(element_at(typedlit(salts), col("cell")), lit(1))
-      .cast("long")
-    val cols = Seq(col("id"), col("minX"), col("minY"), col("maxX"), col("maxY"))
-    val lKeyed = lCelled
-      .select((shiftleft(col("cell"), 8) +
-        pmod(xxhash64(col("id")), sCol)).as("key") +: cols: _*)
-      .repartition(parts, col("key")).sortWithinPartitions("key")
-    val rKeyed = celled(right)
-      .withColumn("salt", explode(sequence(lit(0L), sCol - 1)))
-      .select((shiftleft(col("cell"), 8) + col("salt")).as("key") +: cols: _*)
-      .repartition(parts, col("key")).sortWithinPartitions("key")
-    zipIntersect(spark, lKeyed, rKeyed, grid, saltBits = 8)
   }
 
   // ------------------------------------------------------------ kNN join
@@ -1087,63 +910,6 @@ object SpatialOps {
         tree.queryIntersecting(q).map(e => (e.value.id, e.value.x, e.value.y))
       }
       .toDF("id", "x", "y")
-  }
-
-  /** Adaptive cell split — the locality-preserving skew handler for INDEX
-    * BUILDS (SURVEY §4.4; salting is the join-side twin): cells whose
-    * occupancy exceeds `hotThreshold` are re-keyed at a finer resolution
-    * (`grid.res + deltaRes`), so dense urban tiles shatter into spatially
-    * coherent children (range queries over the built index still prune by
-    * geometry — a salt suffix cannot be pruned). Cold cells keep their
-    * coarse id. Partition keys: coarse id shifted left 2·deltaRes bits for
-    * cold cells; fine id tagged with a high bit for hot ones — disjoint key
-    * spaces, no collisions.
-    *
-    * Returns (keyed points, hot-cell count). The same keying function is a
-    * pure function of (x, y, hot set), so probe sides reproduce it exactly.
-    *
-    * Cost: ONE pass over the data. Each point emits its resolution ladder
-    * (≤ (maxRes-res)/deltaRes cells); map-side combine reduces that to one
-    * count per occupied (res, cell), and only counts above the threshold
-    * are collected (≤ n/hotThreshold per level — the bounded histogram). A
-    * cell splits iff its TOTAL occupancy exceeds the threshold, which is
-    * the fixed point the old round-trip loop converged to (a hot cell's
-    * parent holds at least its points, so every hot cell's ancestor chain
-    * is split and the cell is always reached) — without up to 8 full-data
-    * `groupByKey.count` passes, which at 100 TB would dominate the build.
-    */
-  def adaptiveCellKeys(
-      points: Dataset[PointRow], grid: CellGrid, hotThreshold: Long,
-      deltaRes: Int = 2, maxRes: Int = 14): (DataFrame, Int) = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    // grids by resolution; pkey = (res << 32) | cellId (cell ids fit 2·res
-    // ≤ 28 bits at maxRes 14)
-    val grids: Map[Int, CellGrid] =
-      (grid.res to maxRes).map(r => r -> grid.copy(res = r)).toMap
-    def enc(res: Int, cell: Long): Long = (res.toLong << 32) | cell
-
-    def keyFn(split: Set[Long])(x: Double, y: Double): Long = {
-      var r = grid.res
-      var cell = grids(r).cellId(x, y)
-      while (r + deltaRes <= maxRes && split.contains(enc(r, cell))) {
-        r += deltaRes
-        cell = grids(r).cellId(x, y)
-      }
-      enc(r, cell)
-    }
-
-    // refinable levels only: a cell at res > maxRes - deltaRes can't split
-    val ladder = (grid.res to (maxRes - deltaRes) by deltaRes).toArray
-    val splitFinal = points
-      .flatMap(p => ladder.iterator.map(r => enc(r, grids(r).cellId(p.x, p.y))))
-      .groupByKey(identity).count()
-      .filter { case (_, n) => n > hotThreshold }
-      .map(_._1).collect().toSet
-    val keyed = points
-      .map(p => (p.id, p.x, p.y, keyFn(splitFinal)(p.x, p.y)))
-      .toDF("id", "x", "y", "pkey")
-    (keyed, splitFinal.size)
   }
 
   // ------------------------------------------------- point-in-polygon join

@@ -28,9 +28,6 @@ final class PointRTree2D private (
 
   import PointRTree2D._
 
-  private def env(level: Int, i: Int, corner: Int): Double =
-    levels(level)(4 * i + corner)
-
   private def envDist2(level: Int, i: Int, px: Double, py: Double): Double = {
     val e = levels(level)
     val b = 4 * i
@@ -73,43 +70,6 @@ final class PointRTree2D private (
     var i = 0
     val top = levels.length - 1
     while (i < nodesAt(top)) { walk(top, i); i += 1 }
-  }
-
-  /** FIRST point exactly at (px, py) — index, or -1. The reference's
-    * `locate_at_point` (rstar/src/rtree.rs, README.md:38-39 benchmark):
-    * early-exit descent, 4-compare envelope reject per node over the
-    * packed level arrays, no closure and no allocation on the path —
-    * unlike [[foreachInBox]], which must visit every match.
-    */
-  def locateAtPoint(px: Double, py: Double): Int = {
-    if (size == 0) return -1
-    def walk(level: Int, i: Int): Int = {
-      val e = levels(level)
-      val b = 4 * i
-      if (px < e(b) || px > e(b + 2) || py < e(b + 1) || py > e(b + 3)) return -1
-      if (level == 0) {
-        val from = i * leafSize
-        val to = math.min(from + leafSize, size)
-        var p = from
-        while (p < to) {
-          if (xs(p) == px && ys(p) == py) return p
-          p += 1
-        }
-        -1
-      } else {
-        val from = i * fanout
-        val to = math.min(from + fanout, nodesAt(level - 1))
-        var c = from
-        var r = -1
-        while (r < 0 && c < to) { r = walk(level - 1, c); c += 1 }
-        r
-      }
-    }
-    val top = levels.length - 1
-    var i = 0
-    var r = -1
-    while (r < 0 && i < nodesAt(top)) { r = walk(top, i); i += 1 }
-    r
   }
 
   /** Visit every point with squared distance ≤ r2 from (px, py). */
@@ -188,53 +148,6 @@ final class PointRTree2D private (
         }
       }
     }
-  }
-
-  /** Exact 1-NN: (point index, squared distance), or -1 when empty.
-    * Specialized best-first: nodes go through the heap, leaf points are
-    * scanned in place against the running best — no per-point heap churn.
-    * Ties resolve to the smaller point id (deterministic total order).
-    */
-  def nearest(px: Double, py: Double): (Int, Double) = {
-    if (size == 0) return (-1, Double.MaxValue)
-    val heap = new LongHeap(64)
-    val top = levels.length - 1
-    var i = 0
-    while (i < nodesAt(top)) {
-      heap.enqueue(envDist2(top, i, px, py), encodeNode(top, i))
-      i += 1
-    }
-    var best = -1
-    var bestD = Double.MaxValue
-    var bestId = Long.MaxValue
-    while (heap.nonEmpty && heap.headKey <= bestD) {
-      val h = heap.dequeue()
-      val level = nodeLevel(h)
-      val idx = nodeIndex(h)
-      if (level == 0) {
-        val from = idx * leafSize
-        val to = math.min(from + leafSize, size)
-        var p = from
-        while (p < to) {
-          val dx = xs(p) - px; val dy = ys(p) - py
-          val d = dx * dx + dy * dy
-          if (d < bestD || (d == bestD && ids(p) < bestId)) {
-            bestD = d; best = p; bestId = ids(p)
-          }
-          p += 1
-        }
-      } else {
-        val from = idx * fanout
-        val to = math.min(from + fanout, nodesAt(level - 1))
-        var c = from
-        while (c < to) {
-          val d = envDist2(level - 1, c, px, py)
-          if (d <= bestD) heap.enqueue(d, encodeNode(level - 1, c))
-          c += 1
-        }
-      }
-    }
-    (best, bestD)
   }
 }
 

@@ -41,29 +41,6 @@ class PointRTree2DSpec extends AnyFunSuite {
     }
   }
 
-  test("locateAtPoint: every stored point is found (exact coords), misses " +
-    "return -1, duplicates return a matching index") {
-    // hits: every stored point locates to an index with its exact coords
-    P.zipWithIndex.foreach { case (p, _) =>
-      val i = T.locateAtPoint(p(0), p(1))
-      assert(i >= 0)
-      assert(T.xs(i) == p(0) && T.ys(i) == p(1))
-    }
-    // misses: perturbed coordinates are not in the set
-    Q.foreach { q =>
-      val px = q(0) + 1e-7; val py = q(1) + 1e-7
-      val want = P.exists(p => p(0) == px && p(1) == py)
-      assert((T.locateAtPoint(px, py) >= 0) == want)
-    }
-    // duplicate coordinates: any one of the duplicates is a valid answer
-    val dup = Array(Array(1.0, 2.0), Array(1.0, 2.0), Array(3.0, 4.0))
-    val td = build(dup)
-    val i = td.locateAtPoint(1.0, 2.0)
-    assert(i >= 0 && td.xs(i) == 1.0 && td.ys(i) == 2.0)
-    assert(td.locateAtPoint(9.0, 9.0) == -1)
-    assert(build(Array.empty[Array[Double]]).locateAtPoint(0.0, 0.0) == -1)
-  }
-
   test("radius query vs filtered scan") {
     Q.take(60).foreach { q =>
       val got = scala.collection.mutable.Set.empty[Long]
@@ -77,10 +54,14 @@ class PointRTree2DSpec extends AnyFunSuite {
 
   test("1-NN and ordered kNN vs sort-by-distance") {
     Q.foreach { q =>
-      val (bi, bd) = T.nearest(q(0), q(1))
       val want = P.map(p => Pt.distance2(p, q)).min
-      assert(bd == want)
-      assert(Pt.distance2(P(T.ids(bi).toInt), q) == want)
+      val nn = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
+      T.nearestK(q(0), q(1), 1, keepTies = true)((p, d) => nn += ((p, d)))
+      assert(nn.head._2 == want)
+      nn.foreach { case (p, d) =>
+        assert(d == want)
+        assert(Pt.distance2(P(T.ids(p).toInt), q) == want)
+      }
       val ds = scala.collection.mutable.ArrayBuffer.empty[Double]
       T.nearestK(q(0), q(1), 10)((_, d) => ds += d)
       assert(ds.toSeq == P.map(p => Pt.distance2(p, q)).sorted.take(10).toSeq)
@@ -98,12 +79,14 @@ class PointRTree2DSpec extends AnyFunSuite {
 
   test("empty and tiny trees") {
     val e = PointRTree2D.build(Array.empty, Array.empty, Array.empty)
-    assert(e.nearest(0, 0)._1 == -1)
     var n = 0
+    e.nearestK(0, 0, 1, keepTies = true)((_, _) => n += 1)
     e.foreachInBox(-1, -1, 1, 1)(_ => n += 1)
     assert(n == 0)
     val one = build(Array(Array(0.5, 0.5)))
-    assert(one.nearest(0, 0)._2 == 0.5)
+    val d2 = scala.collection.mutable.ArrayBuffer.empty[Double]
+    one.nearestK(0, 0, 1, keepTies = true)((_, d) => d2 += d)
+    assert(d2.toSeq == Seq(0.5))
   }
 
   test("duplicate coordinates all retrievable") {

@@ -8,10 +8,10 @@ import graft.data.PagesGen
 import graft.engine._
 import graft.index.CellGrid
 
-/** Hot-cell skew handling (north_rule): a Zipf-ish skewed layer — most
-  * geometry piled into a handful of urban cells — must (a) produce results
-  * identical to the unsalted join and (b) actually split the hot cells'
-  * work across salts.
+/** Hot-cell skew handling (north_rule): on a Zipf-ish skewed layer — most
+  * geometry piled into a handful of urban cells — the grid join must stay
+  * exact, and a pathological stop-shingle must not blow up the near-dup
+  * candidate set.
   */
 class SkewSpec extends AnyFunSuite {
 
@@ -43,96 +43,33 @@ class SkewSpec extends AnyFunSuite {
     }
   }
 
-  test("salted tree join == unsalted join on skewed data (exact pair set)") {
+  test("intersectionJoin on a hot-cell layer == brute-force crossJoin, " +
+    "pair for pair, no pair repeated") {
+    import spark.implicits._
     val l = skewedPoints(4000, 100)
     val r = skewedPoints(800, 200)
-    val plain = SpatialOps.intersectionJoinTree(l, r, grid).collect().toSet
-    val salted = SpatialOps.intersectionJoinTreeSalted(l, r, grid,
-      hotThreshold = 200).collect().toSet
-    assert(salted == plain)
-    assert(plain.nonEmpty)
-  }
-
-  test("salted join runs on the fused InternalRow probe: no typed cogroup " +
-    "in the plan, dense-hot-cell runtime in the unsalted path's class") {
-    val l = skewedPoints(60000, 100).localCheckpoint(true)
-    val r = skewedPoints(12000, 200).localCheckpoint(true)
-    // the round-2 salted path ran on groupByKey.cogroup — full Dataset
-    // encoder churn exactly on the declared-hot cells it exists for
-    val plan = SpatialOps.intersectionJoinTreeSalted(l, r, grid, 200)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CoGroup") && !plan.contains("MapGroups"),
-      s"typed cogroup leaked back into the salted join plan:\n$plan")
-    def run(f: => org.apache.spark.sql.Dataset[(Long, Long)]): (Long, Double) = {
-      val t0 = System.nanoTime()
-      val n = f.count()
-      (n, (System.nanoTime() - t0) / 1e9)
+    // fixture check: one lonLat(4) cell holds more than half the left side
+    val g = grid // local copy: closures must not capture the suite instance
+    val hottest = l.flatMap(t =>
+        g.cover(graft.geom.AABB.of2d(t.minX, t.minY, t.maxX, t.maxY)))
+      .toDF("cell").groupBy("cell").count()
+      .agg(max("count")).collect()(0).getLong(0)
+    assert(hottest > 2000, s"fixture not skewed enough: $hottest")
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(x => (x.getLong(0), x.getLong(1))).toSeq.sorted
+    val want = pairs(l.toDF().as("a").crossJoin(r.toDF().as("b"))
+      .where(col("a.minX") <= col("b.maxX") && col("a.maxX") >= col("b.minX") &&
+        col("a.minY") <= col("b.maxY") && col("a.maxY") >= col("b.minY"))
+      .select(col("a.id"), col("b.id")))
+    assert(want.nonEmpty)
+    // at lonLat(4) the hot disc sits inside one cell; at lonLat(9) it spans
+    // several, so hot pairs straddle cell borders and exercise the dedup
+    Seq(grid, CellGrid.lonLat(9)).foreach { g =>
+      val got = SpatialOps.intersectionJoin(l.toDF(), r.toDF(), g)
+      assert(got.count() == got.distinct().count(),
+        s"duplicate pairs emitted at res ${g.res}")
+      assert(pairs(got) == want, s"pair set differs at res ${g.res}")
     }
-    // warm both paths, then measure: salting pays a histogram job + probe
-    // replication, so it may trail on a fixture this small — the assertion
-    // pins it to the fused path's complexity class (the typed-cogroup
-    // version measured >3x here), with margin for this box's noise spikes
-    run(SpatialOps.intersectionJoinTree(l, r, grid))
-    run(SpatialOps.intersectionJoinTreeSalted(l, r, grid, 200))
-    val (np, tp) = run(SpatialOps.intersectionJoinTree(l, r, grid))
-    val (ns, ts) = run(SpatialOps.intersectionJoinTreeSalted(l, r, grid, 200))
-    assert(np == ns)
-    // the plan-shape assertion above is the gate; wall-clock is info-only
-    // because this box shows sporadic multi-minute 2-3x load episodes
-    // (BASELINE.md) that would flake a timing assert on correct code
-    info(f"hot-cell join: unsalted $tp%.2f s, salted fused $ts%.2f s" +
-      (if (ts >= tp * 2.5 + 2.0) "  [out of expected class — likely ambient load]" else ""))
-  }
-
-  test("adaptive cell split: recursive re-keying bounds occupancy, keys " +
-    "stay spatially coherent, cold cells untouched") {
-    import spark.implicits._
-    val pts = skewedPoints(6000, 300)
-      .map(r => PointRow(r.id, r.minX, r.minY))
-    // the split set must come from ONE histogram pass over the data (the
-    // old loop ran up to 8 full groupByKey.count rounds — a build-cost
-    // disaster at 100 TB); one shuffled count = one Spark job
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (keyed, nSplit) =
-      try {
-        val r = SpatialOps.adaptiveCellKeys(pts, grid,
-          hotThreshold = 500, deltaRes = 2)
-        Thread.sleep(500) // listener bus is async; job starts land quickly
-        r
-      } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() <= 2,
-      s"adaptive split ran ${jobs.get()} jobs; the histogram needs one pass")
-    assert(nSplit >= 1, "fixture should force at least one split")
-    val byKey = keyed.groupBy("pkey").count().collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    // total preserved
-    assert(byKey.map(_._2).sum == 6000)
-    // occupancy bounded: recursion stops only at the threshold or maxRes;
-    // a 0.5°-wide urban disc needs several rounds to shatter
-    val rawMax = pts.toDF()
-      .withColumn("coarse", graft.functions.SpatialFunctions.stCell(grid)(
-        col("x"), col("y")))
-      .groupBy("coarse").count().agg(org.apache.spark.sql.functions.max("count"))
-      .collect()(0).getLong(0)
-    val splitMax = byKey.map(_._2).max
-    assert(rawMax > 3000, s"fixture not skewed: $rawMax")
-    assert(splitMax <= 500, s"occupancy above threshold after split: $splitMax")
-    // spatial coherence: each point's key is exactly the cell of its
-    // encoded resolution (a pure function of coordinates)
-    keyed.collect().foreach { r =>
-      val key = r.getLong(3)
-      val res = (key >> 32).toInt
-      val fine = grid.copy(res = res)
-      assert((key & 0xffffffffL) == fine.cellId(r.getDouble(1), r.getDouble(2)))
-    }
-    // cold cells keep the coarse resolution
-    assert(byKey.exists(k => (k._1 >> 32).toInt == grid.res))
   }
 
   test("ngram near-dup: a pathological stop-shingle stays bounded by the " +
@@ -169,25 +106,5 @@ class SkewSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((7L, 1000L), (13L, 1001L)),
       s"capped near-dup pairs wrong: $got")
-  }
-
-  test("salting actually splits the hot cell across many co-partition keys") {
-    import spark.implicits._
-    val l = skewedPoints(4000, 100)
-    // reproduce the internal keying to observe the split
-    val g = grid // local copy: closures must not capture the suite instance
-    val celled = l.flatMap { t =>
-      g.cover(graft.geom.AABB.of2d(t.minX, t.minY, t.maxX, t.maxY))
-        .map(c => (c, t.id))
-    }.toDF("cell", "id")
-    val hist = celled.groupBy("cell").count().collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val hottest = hist.maxBy(_._2)
-    assert(hottest._2 > 2000, s"fixture not skewed enough: $hottest")
-    // with threshold 200 the hot cell must shatter into ≥ 10 salts
-    val salts = math.min(256, ((hottest._2 + 199) / 200).toInt)
-    assert(salts >= 10)
-    // and AQE remains enabled as the runtime backstop
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
   }
 }

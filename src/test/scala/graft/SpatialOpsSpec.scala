@@ -69,16 +69,6 @@ class SpatialOpsSpec extends AnyFunSuite {
     assert(want.nonEmpty)
   }
 
-  test("intersectionJoinTree (cogrouped per-cell R-trees) == DataFrame plan") {
-    val s = sc
-    val l = rects(400, 1000)
-    val r = rects(300, 2000)
-    val got = SpatialOps.intersectionJoinTree(l, r, grid).collect().toSet
-    val want = SpatialOps.intersectionJoin(l.toDF(), r.toDF(), grid)
-      .collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-    assert(got == want)
-  }
-
   test("self-join of a point layer yields exactly n pairs " +
     "(intersection_iterator.rs:137-155)") {
     val s = sc
