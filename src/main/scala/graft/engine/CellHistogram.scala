@@ -18,6 +18,11 @@ import graft.index.CellGrid
   *   ([[CellHistogram.discCover]]); no entry outside it can beat the k-th
   *   candidate in hand, so the top-k over those candidates is exact.
   *
+  * [[SpatialOps.twoPassKnn]] is the one skeleton of the two 2-D passes;
+  * each operator supplies only its histogram, probe and cut.
+  * [[SpatialOps.knnJoinNd]] walks `CellGridN` shells with [[ringCells]]
+  * and pads its pass-B box by [[CellHistogram.DiscPad]].
+  *
   * Bounded by the grid (≤ 4^res entries), so it is collected to the
   * driver and broadcast. An [[IndexStore]] group's cell manifest is the
   * same type.

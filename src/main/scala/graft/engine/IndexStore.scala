@@ -444,12 +444,10 @@ object IndexStore {
   /** K1/J2 over the persisted index — the 100 TB cold-start serving path:
     * answer a kNN join by DESERIALIZING the stored per-cell trees and
     * probing them, never rebuilding (reference analog: serde round-trip
-    * then query, rstar/src/rtree.rs:1289-1305). The two passes of
-    * [[CellHistogram]], as in [[SpatialOps.knnJoin]], over the stored
-    * `(cell, n)` histogram; per-cell probes keep float-exact boundary ties
-    * and the final (d2, id) window cut replicates the window path's
-    * tiebreak, so the output is bit-equal to the in-memory kNN join on the
-    * same inputs.
+    * then query, rstar/src/rtree.rs:1289-1305). [[SpatialOps.twoPassKnn]]
+    * over the stored `(cell, n)` histogram with [[SpatialOps.knnJoin]]'s
+    * (d2, id) cut; per-cell probes keep float-exact boundary ties, so the
+    * output is bit-equal to the in-memory kNN join on the same inputs.
     *
     * Each probe pass groups its candidate queries BY CELL before touching
     * the store, so every stored tree is deserialized at most once per
@@ -460,7 +458,6 @@ object IndexStore {
   def knnQuery(spark: SparkSession, root: String, grid: CellGrid,
       queries: Dataset[QueryRow], k: Int): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val owned = served(spark, root)
     val store = view(spark, owned, _ => true)
 
@@ -473,30 +470,19 @@ object IndexStore {
         .flatMap { case (bytes, qs) =>
           val t = treeFrom(bytes) // once per (cell, pass), not per query
           qs.iterator.flatMap { case (qid, qx, qy) =>
-            val buf = Vector.newBuilder[(Long, Long, Double)]
+            val buf = Vector.newBuilder[(Long, Long, Double, Double, Double)]
             t.nearestK(qx, qy, k, keepTies = true) { (p, d2) =>
-              buf += ((qid, t.ids(p), d2))
+              buf += ((qid, t.ids(p), d2, qx, qy))
             }
             buf.result()
           }
         }
-        .toDF("qid", "id", "d2")
+        .toDF("qid", "id", "d2", "qx", "qy")
 
-    val qs = queries.select(col("qid"), col("x").as("qx"), col("y").as("qy"))
-    val candA = CellHistogram.of(owned.flatMap(o => o.cells.zip(o.ns)))
-      .candidates(qs, grid, k)
-    val wAsc = Window.partitionBy("qid").orderBy(col("d2"), col("id"))
-    val dUp = probe(candA)
-      .withColumn("rn", row_number().over(wAsc))
-      .where(col("rn") <= k)
-      .groupBy("qid").agg(max("d2").as("dUp"))
-      .join(qs, Seq("qid"))
-
-    val candB = dUp.select(col("qid"), col("qx"), col("qy"),
-      CellHistogram.discCover(grid, col("qx"), col("qy"), col("dUp")).as("cell"))
-    probe(candB)
-      .withColumn("rn", row_number().over(wAsc))
-      .where(col("rn") <= k)
+    SpatialOps.twoPassKnn(
+      queries.select(col("qid"), col("x").as("qx"), col("y").as("qy")),
+      CellHistogram.of(owned.flatMap(o => o.cells.zip(o.ns))), grid, k)(
+      probe, SpatialOps.pointCut(k, keepTies = false))
       .select(col("qid"), col("id"), col("d2"), col("rn"))
   }
 

@@ -181,23 +181,24 @@ object SpatialOps {
 
   // ------------------------------------------------------------ kNN join
 
-  /** kNN join against a BOUNDED static layer: broadcast one packed
+  /** 1-NN join against a BOUNDED static layer: broadcast one packed
     * [[graft.index.PointRTree2D]] of the whole layer and probe it inside
     * `mapPartitions` over the query side's InternalRows — ZERO shuffle of
     * the (arbitrarily large) query stream, the batch sibling of
     * [[graft.streaming.StreamOps.nnStream]] and the plan a 100 TB
     * deployment uses whenever the layer fits an executor (the
     * BroadcastHashJoin of kNN; [[knnJoin]] is the shuffle path for layers
-    * that don't). Output is bit-identical to [[knnJoin]]: the tree emits
-    * through float-exact ties at the k-th distance, and the per-query cut
-    * re-sorts by (d2, id) — the window path's exact tiebreak. Distances
+    * that don't). `k` must be 1; [[knnJoinTrees]] is the k-NN join. Output
+    * (qid, id, d2, rn = 1) is bit-identical to [[knnJoin]] with k = 1: the
+    * nearest by (d2, id), the window path's exact tiebreak. Distances
     * agree bit-for-bit: squaring a clamped |dx| equals squaring the signed
     * dx (IEEE negation is exact).
     */
   def knnJoinBroadcast(
       queries: Dataset[QueryRow], data: Dataset[PointRow], k: Int): DataFrame = {
+    require(k == 1, s"knnJoinBroadcast answers 1-NN only (k = $k); " +
+      "knnJoinTrees is the k-NN join")
     val spark = queries.sparkSession
-    import spark.implicits._
     // bounded-layer contract: the caller asserts the layer fits in memory
     // (the 100 TB analog broadcasts exactly this much) — guarded so misuse
     // fails fast with the contract message, not a driver OOM mid-collect
@@ -205,85 +206,94 @@ object SpatialOps {
     val treeB = spark.sparkContext.broadcast(graft.index.PointRTree2D.build(
       pts.map(_.id), pts.map(_.x), pts.map(_.y)))
     val q = queries.toDF().select("qid", "x", "y")
-    if (k == 1) {
-      // HOT PATH (the bench headline's 1-NN leg, one probe per entity
-      // row): the keepTies-then-cut rule degenerates to "minimum by
-      // (d2, id)", tracked in two locals inside the callback — no buffer,
-      // no sort, no tuples — and each output row is written straight to
-      // one reused UnsafeRow (no Dataset encoder). Double.compare
-      // replicates the general path's total order bit-for-bit (NaN last,
-      // -0.0 < 0.0). Output row set and schema identical to the general
-      // path (spec-pinned against knnJoin k=1 row for row).
-      val schema = primitiveSchema("qid" -> LongType, "id" -> LongType,
-        "d2" -> DoubleType, "rn" -> IntegerType)
-      val rdd = q.queryExecution.toRdd.mapPartitions { it =>
-        val t = treeB.value
-        new Iterator[InternalRow] {
-          private val writer = new UnsafeRowWriter(4)
-          private var found = false
-          private var bestId = 0L
-          private var bestD2 = 0.0
-          private var qid = 0L
-          private val track: (Int, Double) => Unit = { (p, d2) =>
-            val id = t.ids(p)
-            val c = java.lang.Double.compare(d2, bestD2)
-            if (!found || c < 0 || (c == 0 && id < bestId)) {
-              bestD2 = d2; bestId = id; found = true
-            }
-          }
-          private def fill(): Unit =
-            while (!found && it.hasNext) {
-              val r = it.next()
-              qid = r.getLong(0)
-              t.nearestK(r.getDouble(1), r.getDouble(2), 1, keepTies = true)(track)
-            }
-          override def hasNext: Boolean = { fill(); found }
-          override def next(): InternalRow = {
-            fill()
-            // reset() rewinds the cursor to the row start (fixed-width-only
-            // row: null bits stay zeroed from construction)
-            writer.reset()
-            writer.write(0, qid)
-            writer.write(1, bestId)
-            writer.write(2, bestD2)
-            writer.write(3, 1)
-            found = false
-            writer.getRow
-          }
-        }
-      }
-      return ColumnShim.internalDf(spark, rdd, schema)
-    }
+    // HOT PATH (the bench headline's 1-NN leg, one probe per entity row):
+    // the tree emits every point tied at the minimum, and "minimum by
+    // (d2, id)" is tracked in two locals inside the callback — no buffer,
+    // no sort, no tuples — and each output row is written straight to one
+    // reused UnsafeRow (no Dataset encoder). Double.compare is the
+    // window's total order bit-for-bit (NaN last, -0.0 < 0.0). Output row
+    // set and schema spec-pinned against knnJoin k=1 row for row.
+    val schema = primitiveSchema("qid" -> LongType, "id" -> LongType,
+      "d2" -> DoubleType, "rn" -> IntegerType)
     val rdd = q.queryExecution.toRdd.mapPartitions { it =>
       val t = treeB.value
-      it.flatMap { r =>
-        val qid = r.getLong(0)
-        val x = r.getDouble(1)
-        val y = r.getDouble(2)
-        // keepTies = true, then cut to k in (d2, id) order: membership and
-        // rank match the window path's (d2, id) ordering exactly
-        val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-        t.nearestK(x, y, k, keepTies = true) { (p, d2) =>
-          buf += ((t.ids(p), d2))
+      new Iterator[InternalRow] {
+        private val writer = new UnsafeRowWriter(4)
+        private var found = false
+        private var bestId = 0L
+        private var bestD2 = 0.0
+        private var qid = 0L
+        private val track: (Int, Double) => Unit = { (p, d2) =>
+          val id = t.ids(p)
+          val c = java.lang.Double.compare(d2, bestD2)
+          if (!found || c < 0 || (c == 0 && id < bestId)) {
+            bestD2 = d2; bestId = id; found = true
+          }
         }
-        val cut = buf.sortInPlaceBy { case (id, d2) => (d2, id) }.take(k)
-        cut.iterator.zipWithIndex.map { case ((id, d2), i) =>
-          (qid, id, d2, i + 1)
+        private def fill(): Unit =
+          while (!found && it.hasNext) {
+            val r = it.next()
+            qid = r.getLong(0)
+            t.nearestK(r.getDouble(1), r.getDouble(2), 1, keepTies = true)(track)
+          }
+        override def hasNext: Boolean = { fill(); found }
+        override def next(): InternalRow = {
+          fill()
+          // reset() rewinds the cursor to the row start (fixed-width-only
+          // row: null bits stay zeroed from construction)
+          writer.reset()
+          writer.write(0, qid)
+          writer.write(1, bestId)
+          writer.write(2, bestD2)
+          writer.write(3, 1)
+          found = false
+          writer.getRow
         }
       }
     }
-    spark.createDataset(rdd).toDF("qid", "id", "d2", "rn")
+    ColumnShim.internalDf(spark, rdd, schema)
+  }
+
+  /** The two passes of [[CellHistogram]], shared by every 2-D kNN
+    * operator, which supplies only its histogram, its probe and its cut.
+    * `queries` rows are (qid, qx, qy), any names. `probe` maps (cell, qid,
+    * qx, qy) candidates to (qid, hit, d2, qx, qy) hits — it echoes the
+    * query point, so no pass joins back to the queries; `cut` keeps each
+    * query's best hits, at most k of them plus ties, and may add columns.
+    * Pass A's cut bounds d_up, the largest kept d2 per query; pass B's cut
+    * over the d_up disc cover is the result.
+    */
+  private[engine] def twoPassKnn(queries: DataFrame, hist: CellHistogram,
+      grid: CellGrid, k: Int)(
+      probe: DataFrame => DataFrame, cut: DataFrame => DataFrame): DataFrame = {
+    val Array(qid, qx, qy) = queries.columns
+    val dUp = cut(probe(hist.candidates(queries, grid, k)))
+      .groupBy(qid).agg(max("d2").as("dUp"), first(qx).as(qx), first(qy).as(qy))
+    cut(probe(dUp.select(discCover(grid, col(qx), col(qy), col("dUp")).as("cell"),
+      col(qid), col(qx), col(qy))))
+  }
+
+  /** The point operators' cut: each query's top k in (d2, id) order, or
+    * every hit ranked ≤ k by d2 when `keepTies` (the co-equal tie-set
+    * semantics of `nearest_neighbors`, K3, rstar/src/rtree.rs:977-1043).
+    * Adds rn (int).
+    */
+  private[engine] def pointCut(k: Int, keepTies: Boolean)(hits: DataFrame): DataFrame = {
+    val w = Window.partitionBy("qid")
+    hits.withColumn("rn",
+      if (keepTies) rank().over(w.orderBy(col("d2")))
+      else row_number().over(w.orderBy(col("d2"), col("id"))))
+      .where(col("rn") <= k)
   }
 
   /** Distributed kNN join (batch form of `nearest_neighbor` /
     * `nearest_neighbor_iter`, rstar/src/rtree.rs:940-943, :1094-1099), in
-    * the two provably-complete passes of [[CellHistogram]] (SURVEY.md
-    * §3.3). Both probes are cell equi-joins (query-cells side is small →
+    * the two provably-complete passes of [[twoPassKnn]] (SURVEY.md §3.3).
+    * Both probes are cell equi-joins (query-cells side is small →
     * Catalyst broadcasts it; the data side never moves). Result: (qid, id,
     * d2, rn), rn ∈ [1, k], ordered by (d2, id) — the deterministic total
     * tiebreak SURVEY §7.4 requires for oracle agreement. `keepTies`
-    * switches the window to `rank()`, reproducing the co-equal tie-set
-    * semantics of `nearest_neighbors` (K3, rstar/src/rtree.rs:977-1043).
+    * switches the cut to `rank()` ([[pointCut]]).
     *
     * The per-cell probe is pure Catalyst — `WindowGroupLimit` pushes the
     * top-k below the shuffle (a bounded per-partition heap), so the in-cell
@@ -297,48 +307,13 @@ object SpatialOps {
       grid: CellGrid, keepTies: Boolean = false): DataFrame = {
     val dataCelled = data
       .withColumn("cell", stCell(grid)(col("x"), col("y")))
-    val candA = CellHistogram.collect(dataCelled.select("cell")).candidates(
-      queries.select(col("qid"), col("x").as("qx"), col("y").as("qy")), grid, k)
-
-    // k == 1 (the 1-NN headline shape): both passes collapse to hash
-    // aggregations — min / min_by with the same (d2, id) tiebreak the
-    // window used — which partial-aggregate MAP-SIDE, so the shuffle
-    // carries one row per query instead of every candidate pair the
-    // window path sorts. This is also the plan that survives 100×: the
-    // candidate blow-up never crosses the wire.
-    val wAsc = Window.partitionBy("qid").orderBy(col("d2"), col("id"))
-    val scoredA = candA
-      .join(dataCelled, Seq("cell"))
-      .withColumn("d2", stDistanceSq(col("x"), col("y"), col("qx"), col("qy")))
-    val dUp =
-      if (k == 1)
-        scoredA.groupBy("qid").agg(min("d2").as("dUp"),
-          first("qx").as("qx"), first("qy").as("qy"))
-      else
-        scoredA
-          .withColumn("rn", row_number().over(wAsc))
-          .where(col("rn") <= k)
-          .groupBy("qid").agg(max("d2").as("dUp"),
-            first("qx").as("qx"), first("qy").as("qy"))
-
-    val candB = dUp.select(col("qid"), col("qx"), col("qy"),
-      discCover(grid, col("qx"), col("qy"), col("dUp")).as("cell"))
-    val scoredB = candB
-      .join(dataCelled, Seq("cell"))
-      .withColumn("d2", stDistanceSq(col("x"), col("y"), col("qx"), col("qy")))
-    if (k == 1 && !keepTies)
-      scoredB.groupBy("qid")
-        .agg(min_by(struct(col("id"), col("d2")),
-          struct(col("d2"), col("id"))).as("m"))
-        .select(col("qid"), col("m.id").as("id"), col("m.d2").as("d2"),
-          lit(1).as("rn")) // IntegerType, as row_number emits
-    else
-      scoredB
-        .withColumn("rn",
-          if (keepTies) rank().over(Window.partitionBy("qid").orderBy(col("d2")))
-          else row_number().over(wAsc))
-        .where(col("rn") <= k)
-        .select(col("qid"), col("id"), col("d2"), col("rn"))
+    twoPassKnn(queries.select(col("qid"), col("x").as("qx"), col("y").as("qy")),
+      CellHistogram.collect(dataCelled.select("cell")), grid, k)(
+      _.join(dataCelled, Seq("cell")).select(col("qid"), col("id"),
+        stDistanceSq(col("x"), col("y"), col("qx"), col("qy")).as("d2"),
+        col("qx"), col("qy")),
+      pointCut(k, keepTies))
+      .select(col("qid"), col("id"), col("d2"), col("rn"))
   }
 
   // ------------------------------------------------- cell-run cogroup
@@ -468,93 +443,28 @@ object SpatialOps {
     * the best-first descent — O(log n) per neighbor instead of streaming
     * the whole in-cell candidate set through the window operator. The
     * probe runs on InternalRows ([[probeCellRuns]]); round 1's typed
-    * cogroup lost its probe-rate advantage to Dataset ser/deser.
+    * cogroup lost its probe-rate advantage to Dataset ser/deser. Passes
+    * and cut as [[knnJoin]]'s ([[twoPassKnn]], [[pointCut]]); the data
+    * side is shuffled once for both passes ([[cellSorted]]).
     */
   def knnJoinTrees(
       queries: Dataset[QueryRow], data: Dataset[PointRow], k: Int,
       grid: CellGrid, keepTies: Boolean = false): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
     val dataCelled = data
       .withColumn("cell", stCell(grid)(col("x"), col("y")))
       .select("cell", "id", "x", "y")
-    // Collected ONCE: pass A's ring expansion and the safe-query join below.
-    val hist = CellHistogram.collect(dataCelled.select("cell"))
     val dataRdd = cellSorted(dataCelled)
-
     // Per-cell top-k extended through float-exact ties at the k-th
-    // distance, so the (d2, id) window cut never loses a lower-id point
-    // the heap's arbitrary tie order dropped.
-    def probe(cand: DataFrame): DataFrame =
-      probeCellRuns(cand, dataRdd, 2, "id") { (ids, c) =>
+    // distance, so the (d2, id) cut never loses a lower-id point the
+    // heap's arbitrary tie order dropped.
+    twoPassKnn(queries.select(col("qid"), col("x").as("qx"), col("y").as("qy")),
+      CellHistogram.collect(dataCelled.select("cell")), grid, k)(
+      probeCellRuns(_, dataRdd, 2, "id") { (ids, c) =>
         val t = PointRTree2D.build(ids, c(0), c(1))
         (qx, qy, emit) =>
           t.nearestK(qx, qy, k, keepTies = true)((p, d2) => emit(t.ids(p), d2))
-      }.drop("qx", "qy")
-
-    // Pass A: probe the ring-pass cells → d_up = the k-th candidate
-    // distance upper bound.
-    val candA = hist.candidates(
-      queries.select(col("qid"), col("x").as("qx"), col("y").as("qy")), grid, k)
-    val wAsc = Window.partitionBy("qid").orderBy(col("d2"), col("id"))
-    def rankCol =
-      if (keepTies) rank().over(Window.partitionBy("qid").orderBy(col("d2")))
-      else row_number().over(wAsc)
-
-    // localCheckpoint (eager): topA feeds both the dUp bound and the safe-
-    // query result without recompute; unlike cache() the blocks are
-    // reference-counted and reclaimed by the ContextCleaner as soon as the
-    // returned plan is no longer referenced — no standing unpersist leak.
-    val topA = probe(candA)
-      .withColumn("rn", rankCol)
-      .where(col("rn") <= k)
-      .localCheckpoint(true)
-    val dUp = topA.groupBy("qid")
-      .agg(max("d2").as("dUp"), count(lit(1)).as("got"))
-
-    // Safe-query shortcut: when the query's own cell holds ≥ k points and
-    // the d_up disc lies strictly inside that cell, pass A's own-cell probe
-    // already saw every possible competitor — no second pass. At uniform
-    // densities this retires the bulk of the queries; only border-straddling
-    // discs pay pass B.
-    val n = grid.cellsPerAxis
-    val cw = (grid.maxX - grid.minX) / n
-    val ch = (grid.maxY - grid.minY) / n
-    val histDf = hist.cells.zip(hist.ns).toSeq.toDF("cell", "cnt")
-    val qinfo = queries.toDF("qid", "qx", "qy")
-      .withColumn("cell", stCell(grid)(col("qx"), col("qy")))
-      .join(broadcast(histDf), Seq("cell"), "left")
-      .na.fill(0L, Seq("cnt"))
-      .join(dUp, Seq("qid"), "left")
-    val exLo = lit(grid.minX) + (col("cell") / n).cast("long") * cw
-    val eyLo = lit(grid.minY) + pmod(col("cell"), lit(n.toLong)) * ch
-    val border = least(
-      col("qx") - exLo, exLo + cw - col("qx"),
-      col("qy") - eyLo, eyLo + ch - col("qy"))
-    // Shrink the safe test by an ulp-scale epsilon: `exLo = minX + ix*cw`
-    // can differ by ulps from the floor((x-minX)/extent*n) boundary stCell
-    // uses, so a disc a few ulps from the cell edge must NOT be classified
-    // safe (it would skip pass B and could return a non-exact neighbor).
-    val safeFlag =
-      col("cnt") >= k && col("dUp") < border * border * lit(1.0 - 1e-9)
-    val safeQ = qinfo.where(safeFlag).select("qid")
-    val unsafeQ = qinfo.where(!safeFlag || col("dUp").isNull)
-      .select(col("qid"), col("qx"), col("qy"), col("dUp"))
-
-    val safeRows = topA.join(broadcast(safeQ), Seq("qid"), "left_semi")
-
-    // Pass B (unsafe queries only): per-cell tree probes over the d_up disc
-    // cover, then a window over ≤ (cells × k) rows.
-    val candB = unsafeQ
-      .where(col("dUp").isNotNull)
-      .select(discCover(grid, col("qx"), col("qy"), col("dUp")).as("cell"),
-        col("qid"), col("qx"), col("qy"))
-
-    val unsafeRows = probe(candB)
-      .withColumn("rn", rankCol)
-      .where(col("rn") <= k)
-
-    safeRows.unionByName(unsafeRows)
+      },
+      pointCut(k, keepTies))
       .select(col("qid"), col("id"), col("d2"), col("rn"))
   }
 
@@ -562,7 +472,7 @@ object SpatialOps {
 
   /** Nearest-segment distance join for a LARGE line layer (G14
     * distributed; `Line::distance_2`, rstar/src/primitives/line.rs:71-113):
-    * the same two-pass grid scheme as [[knnJoin]] with k = 1, segments
+    * [[twoPassKnn]] with k = 1 and a min-d2-per-point cut, segments
     * registered in every cell their envelope covers, so no broadcast and no
     * crossJoin — both sides meet only on cell keys. The pass-A histogram
     * counts registrations, which is enough to guarantee one candidate; a
@@ -581,21 +491,15 @@ object SpatialOps {
         least(col("x1"), col("x2")), least(col("y1"), col("y2")),
         greatest(col("x1"), col("x2")), greatest(col("y1"), col("y2"))))
         .as("cell"))
-    val candA = CellHistogram.collect(lineCelled.select("cell")).candidates(
-      points.select(col("id"), col("x").as("px"), col("y").as("py")), grid, 1)
-
-    val d2 = stLineDistanceSq(col("x1"), col("y1"), col("x2"), col("y2"),
-      col("px"), col("py"))
-    val dUp = candA.join(lineCelled, Seq("cell"))
-      .select(col("id"), col("px"), col("py"), d2.as("d2"))
-      .groupBy("id").agg(min("d2").as("dUp"),
-        first("px").as("px"), first("py").as("py"))
-
-    val candB = dUp.select(col("id"), col("px"), col("py"),
-      discCover(grid, col("px"), col("py"), col("dUp")).as("cell"))
-    candB.join(lineCelled, Seq("cell"))
-      .select(col("id"), d2.as("d2"))
-      .groupBy("id").agg(min("d2").as("min_d2"))
+    twoPassKnn(points.select(col("id"), col("x").as("px"), col("y").as("py")),
+      CellHistogram.collect(lineCelled.select("cell")), grid, 1)(
+      _.join(lineCelled, Seq("cell")).select(col("id"), col("lid"),
+        stLineDistanceSq(col("x1"), col("y1"), col("x2"), col("y2"),
+          col("px"), col("py")).as("d2"),
+        col("px"), col("py")),
+      _.groupBy("id").agg(min("d2").as("d2"),
+        first("px").as("px"), first("py").as("py")))
+      .select(col("id"), col("d2").as("min_d2"))
   }
 
   /** Top-k per `id` in (d2, gid) order, counting each (id, gid) pair once.
@@ -613,7 +517,7 @@ object SpatialOps {
       .where(col("rn") <= k)
   }
 
-  /** The two passes of the envelope-layer kNN joins. Multi-cell geometries
+  /** The envelope-layer kNN joins' [[twoPassKnn]]. Multi-cell geometries
     * are cover-registered, so a candidate probe finds them from any
     * overlapped cell, but the ring-pass histogram counts each geometry
     * ONCE, at its envelope's lower-corner reference cell. Counting
@@ -625,24 +529,16 @@ object SpatialOps {
     * the disc, so its envelope shares a cell with the disc's cover.
     *
     * `probe` maps (cell, id, px, py) candidates to (id, gid, d2, px, py)
-    * hits, in which an (id, gid) pair may repeat. Output: (id, gid, d2,
-    * rn), rn a long in [1, k], ordered by (d2, gid).
+    * hits, in which an (id, gid) pair may repeat; the cut is
+    * [[distinctTopK]]. Output: (id, gid, d2, rn), rn a long in [1, k],
+    * ordered by (d2, gid).
     */
   private def envelopeKnn(points: Dataset[PointRow], geoms: DataFrame, k: Int,
-      grid: CellGrid)(probe: DataFrame => DataFrame): DataFrame = {
-    val candA = CellHistogram
-      .collect(geoms.select(stCell(grid)(col("minX"), col("minY"))))
-      .candidates(
-        points.select(col("id"), col("x").as("px"), col("y").as("py")), grid, k)
-    val dUp = distinctTopK(probe(candA), k)
-      .groupBy("id").agg(max("d2").as("dUp"),
-        first("px").as("px"), first("py").as("py"))
-    val candB = dUp.select(
-      discCover(grid, col("px"), col("py"), col("dUp")).as("cell"),
-      col("id"), col("px"), col("py"))
-    distinctTopK(probe(candB), k)
+      grid: CellGrid)(probe: DataFrame => DataFrame): DataFrame =
+    twoPassKnn(points.select(col("id"), col("x").as("px"), col("y").as("py")),
+      CellHistogram.collect(geoms.select(stCell(grid)(col("minX"), col("minY")))),
+      grid, k)(probe, distinctTopK(_, k))
       .select(col("id"), col("gid"), col("d2"), col("rn").cast("long").as("rn"))
-  }
 
   /** k nearest GEOMETRIES per point, for any layer registered by envelope
     * — rectangles, segments, or any shape with an exact point-distance

@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
   * [[sampleVideoFrames]] extracts per-frame luma features from the decoded
   * planes. Compressed codecs (H.264 etc.) remain the one honest gap: the
   * JDK ships none, and a codec would slot into the per-frame loop without
-  * touching any plan. The generic [[decode]]/[[decodeBatch]] path keeps a
-  * clearly-marked stub for arbitrary/opaque formats.
+  * touching any plan.
   */
 object MediaOps {
 
@@ -441,56 +440,6 @@ object MediaOps {
     }
   }
 
-  final case class MediaRow(media_id: Long, fmt: String, payload: Array[Byte])
-  final case class MediaMeta(
-      media_id: Long, fmt: String, width: Int, height: Int, n_frames: Int,
-      bytes: Long)
-  final case class Frame(media_id: Long, frame_idx: Int, feature: Long)
-
-  /** STUB decode for arbitrary/opaque payloads (the real-decode paths are
-    * [[decodeImages]] for PNG, [[decodeAudio]] for WAV, [[decodeVideo]]
-    * for Y4M): deterministic fake metadata derived from the payload bytes.
-    * A compressed-format codec would parse container headers here;
-    * per-partition batching is the part that matters for Spark (one
-    * decoder instance per partition, not per row).
-    */
-  private def decodeBatch(batch: Iterator[MediaRow]): Iterator[MediaMeta] = {
-    // simulate per-partition decoder initialization cost happening ONCE
-    val decoderHandle = new java.util.zip.CRC32()
-    batch.map { m =>
-      decoderHandle.reset()
-      decoderHandle.update(m.payload, 0, math.min(16, m.payload.length))
-      val mix = decoderHandle.getValue
-      MediaMeta(
-        m.media_id, m.fmt,
-        width = 320 + (m.payload.length % 320),
-        height = 240 + (m.payload.length % 240),
-        n_frames = 1 + (mix % 24).toInt,
-        bytes = m.payload.length.toLong)
-    }
-  }
-
-  def decode(ds: Dataset[MediaRow]): Dataset[MediaMeta] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.mapPartitions(decodeBatch)
-  }
-
-  /** Frame sampling: one row per sampled frame index (every `stride`-th),
-    * with a STUB per-frame feature (deterministic from id + index). The
-    * explode happens in the plan (`posexplode`-equivalent), so frame rows
-    * are produced distributed, never on the driver.
-    */
-  def sampleFrames(meta: Dataset[MediaMeta], stride: Int): Dataset[Frame] = {
-    val spark = meta.sparkSession
-    import spark.implicits._
-    meta.flatMap { m =>
-      (0 until m.n_frames by stride).iterator.map { i =>
-        Frame(m.media_id, i, graft.data.PagesGen.splitmix64(m.media_id * 131 + i))
-      }
-    }
-  }
-
   /** REAL image resize: integer box-filter downsample by factor `f` —
     * each output channel is the floor-average of its f×f input block
     * (exact integer arithmetic; odd right/bottom edges crop, the standard
@@ -641,34 +590,5 @@ object MediaOps {
           .cast("long").as("dist"))
       .distinct() // a pair may collide in both bands
       .where(col("dist") <= maxDist)
-  }
-
-  /** Metadata-only resize (no payload touch): keeps the binary column
-    * schema stable when only dims matter; [[resizeImages]] is the real
-    * raster path.
-    */
-  def resize(meta: Dataset[MediaMeta], maxW: Int): Dataset[MediaMeta] = {
-    val spark = meta.sparkSession
-    import spark.implicits._
-    meta.map { m =>
-      if (m.width <= maxW) m
-      else m.copy(
-        width = maxW,
-        height = math.max(1, (m.height.toLong * maxW / m.width).toInt))
-    }
-  }
-
-  /** Wrap any table with a text column as a media table (fake payloads from
-    * the text bytes) — the fixture path used by tests and SparkEntry.
-    */
-  def fromDocuments(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(
-      col("doc_id").as("media_id"),
-      (when(col("doc_id") % 3 === 0, "img")
-        .when(col("doc_id") % 3 === 1, "audio").otherwise("video")).as("fmt"),
-      encode(col("text"), "UTF-8").as("payload"))
-      .as[MediaRow]
   }
 }

@@ -125,6 +125,9 @@ class KnnAdversarialSpec extends AnyFunSuite {
   }
 
   test("knnJoinTrees k=4, keepTies and k > |layer| == brute force") {
+    same(SpatialOps.knnJoinTrees(queries, points, 1, grid), brutePoints(1))
+    same(SpatialOps.knnJoinTrees(queries, points, 1, grid, keepTies = true),
+      brutePoints(1, keepTies = true))
     same(SpatialOps.knnJoinTrees(queries, points, 4, grid), brutePoints(4))
     same(SpatialOps.knnJoinTrees(queries, points, 4, grid, keepTies = true),
       brutePoints(4, keepTies = true))
@@ -164,6 +167,7 @@ class KnnAdversarialSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_adv").toString
     try {
       IndexStore.build(spark, points, grid, root, nGroups = 2)
+      same(IndexStore.knnQuery(spark, root, grid, queries, 1), brutePoints(1))
       same(IndexStore.knnQuery(spark, root, grid, queries, 4), brutePoints(4))
       same(IndexStore.knnQuery(spark, root, grid, queries, 20), brutePoints(20))
     } finally {

@@ -376,31 +376,6 @@ class PipelineSpec extends AnyFunSuite {
     out.unpersist()
   }
 
-  test("media stub plumbing: binary columns through batched decode, " +
-    "frame sampling, resize — schema and determinism") {
-    import spark.implicits._
-    val media = MediaOps.fromDocuments(docs)
-    val meta = MediaOps.decode(media).cache()
-    assert(meta.count() == docs.count())
-    val m = meta.collect()
-    assert(m.forall(x => x.width >= 320 && x.width < 640))
-    assert(m.forall(x => x.height >= 240 && x.height < 480))
-    assert(m.forall(x => x.n_frames >= 1 && x.n_frames <= 24))
-    // payload byte length survives the decode
-    val lens = docs.select(col("doc_id"),
-      length(encode(col("text"), "UTF-8")).cast("long").as("b")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    m.foreach(x => assert(x.bytes == lens(x.media_id)))
-    // frame sampling explodes distributed; stride halves the rows-ish
-    val frames = MediaOps.sampleFrames(meta, stride = 2)
-    val expected = m.map(x => (x.n_frames + 1) / 2).sum
-    assert(frames.count() == expected)
-    // resize clamps and preserves aspect monotonicity
-    val resized = MediaOps.resize(meta, maxW = 400).collect()
-    assert(resized.forall(_.width <= 400))
-    meta.unpersist()
-  }
-
   test("REAL image decode: distributed PNG encode -> javax.imageio decode " +
     "round-trips dimensions and every pixel") {
     import spark.implicits._

@@ -124,7 +124,7 @@ class SpatialOpsSpec extends AnyFunSuite {
       .select("id").collect().map(_.getLong(0)).toSet == Set(0L, 1L, 2L, 3L))
   }
 
-  test("knnJoin k=1 (hash-agg fast path) == brute-force 1-NN, d2 bit-exact") {
+  test("knnJoin k=1 == brute-force 1-NN, d2 bit-exact") {
     val s = sc
     import s.implicits._
     val data = points(2000, 4000)
@@ -150,7 +150,7 @@ class SpatialOpsSpec extends AnyFunSuite {
   }
 
   test("knnJoinBroadcast (zero-shuffle bounded-layer probe) == knnJoin " +
-    "row for row, k=1 and k=5") {
+    "k=1 row for row; k > 1 is rejected") {
     val s = sc
     import s.implicits._
     val data = points(2000, 4000)
@@ -161,16 +161,17 @@ class SpatialOpsSpec extends AnyFunSuite {
       df.select("qid", "id", "d2", "rn").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .toSet
-    for (k <- Seq(1, 5))
-      assert(key(SpatialOps.knnJoinBroadcast(queries, data, k)) ==
-        key(SpatialOps.knnJoin(queries, data, k, grid)), s"k=$k")
+    assert(key(SpatialOps.knnJoinBroadcast(queries, data, 1)) ==
+      key(SpatialOps.knnJoin(queries, data, 1, grid)))
     // exact-tie membership: four co-equal points, the (d2, id) cut keeps
-    // the lowest ids — identical to the window path's tiebreak
+    // the lowest id — identical to the window path's tiebreak
     val tied = Seq(PointRow(10, 1, 0), PointRow(4, -1, 0), PointRow(7, 0, 1),
       PointRow(2, 0, -1), PointRow(9, 3, 3)).toDS()
     val q1 = Seq(QueryRow(0, 0, 0)).toDS()
-    assert(key(SpatialOps.knnJoinBroadcast(q1, tied, 2)) ==
-      key(SpatialOps.knnJoin(q1, tied, 2, grid)))
+    assert(key(SpatialOps.knnJoinBroadcast(q1, tied, 1)) == Set((0L, 2L, 1.0, 1)))
+    assert(key(SpatialOps.knnJoin(q1, tied, 1, grid)) == Set((0L, 2L, 1.0, 1)))
+    assertThrows[IllegalArgumentException](
+      SpatialOps.knnJoinBroadcast(q1, tied, 2))
   }
 
   test("intersectionJoinBroadcast (zero-shuffle bounded-layer probe) == " +

@@ -75,7 +75,7 @@ class StoreJobsSpec extends AnyFunSuite {
   }
 
   test("3-generation store: rangeQuery is 1 job with no shuffle, knnQuery " +
-    "≤ 8 jobs, build gains no job") {
+    "≤ 7 jobs, build gains no job") {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val grid = CellGrid.lonLat(4)
@@ -112,7 +112,7 @@ class StoreJobsSpec extends AnyFunSuite {
       assert(rows > 0 && knnRows >= 150)
       assert(rangeJobs == 1, s"rangeQuery ran $rangeJobs jobs")
       assert(rangeShuffle == 0L, s"rangeQuery wrote $rangeShuffle shuffle bytes")
-      assert(knnJobs <= 8, s"knnQuery ran $knnJobs jobs")
+      assert(knnJobs <= 7, s"knnQuery ran $knnJobs jobs")
       // 11 jobs before the manifests: per group its write (with the
       // exchange below it) and lineage, plus the footer reads
       assert(buildJobs <= 11, s"build ran $buildJobs jobs")
