@@ -1,11 +1,7 @@
 package graft.engine
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{explode, lit, sqrt}
-
-import graft.functions.SpatialFunctions.stCoverCells
-import graft.index.CellGrid
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-cell entry counts, ascending by cell — the candidate bound shared
   * by every distributed kNN operator. Each answers rstar's
@@ -14,14 +10,13 @@ import graft.index.CellGrid
   *   Pass A: ring-expand from the query's cell over this histogram until
   *   the visited cells hold ≥ k entries ([[ringCells]]); the k-th smallest
   *   candidate distance d_up bounds the true k-th NN distance from above.
-  *   Pass B: probe every cell of the d_up disc
-  *   ([[CellHistogram.discCover]]); no entry outside it can beat the k-th
+  *   Pass B: probe every cell of the padded d_up ball
+  *   ([[KnnGrid.ballCover]]); no entry outside it can beat the k-th
   *   candidate in hand, so the top-k over those candidates is exact.
   *
-  * [[SpatialOps.twoPassKnn]] is the one skeleton of the two 2-D passes;
-  * each operator supplies only its histogram, probe and cut.
-  * [[SpatialOps.knnJoinNd]] walks `CellGridN` shells with [[ringCells]]
-  * and pads its pass-B box by [[CellHistogram.DiscPad]].
+  * [[SpatialOps.twoPassKnn]] is the one skeleton of the two passes, for
+  * 2-D `CellGrid`s and n-D `CellGridN`s alike ([[KnnGrid]]); each operator
+  * supplies only its histogram, probe and cut.
   *
   * Bounded by the grid (≤ 4^res entries), so it is collected to the
   * driver and broadcast. An [[IndexStore]] group's cell manifest is the
@@ -62,22 +57,6 @@ final case class CellHistogram(cells: Array[Long], ns: Array[Long]) {
     */
   def broadcast(spark: SparkSession): Broadcast[CellHistogram] =
     spark.sparkContext.broadcast(this)
-
-  /** Pass A over a 2-D grid: pairs each `(id, x, y)` row of `queries`
-    * (any column names, read by position) with every cell [[ringCells]]
-    * returns for it. Output: (cell, then the three input columns).
-    */
-  def candidates(queries: DataFrame, grid: CellGrid, need: Long): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val histB = broadcast(spark)
-    val Array(id, x, y) = queries.columns
-    queries.as[(Long, Double, Double)].flatMap { case (qid, qx, qy) =>
-      val cx = grid.ix(qx); val cy = grid.iy(qy)
-      histB.value.ringCells(need, grid.cellsPerAxis)(r => grid.ring(cx, cy, r))
-        .map(c => (c, qid, qx, qy))
-    }.toDF("cell", id, x, y)
-  }
 }
 
 object CellHistogram {
@@ -96,19 +75,5 @@ object CellHistogram {
     val spark = cells.sparkSession
     import spark.implicits._
     of(cells.toDF("cell").groupBy("cell").count().as[(Long, Long)].collect())
-  }
-
-  /** Relative pad on a pass-B radius: `sqrt` rounds, and an unpadded disc
-    * can shave off the cell its boundary touches. A padded cover is a
-    * superset of the unpadded one, so the exact top-k cut is unchanged.
-    */
-  val DiscPad: Double = 1.0 + 1e-12
-
-  /** Pass B: the cells of the (padded) disc of squared radius `dUp` around
-    * (qx, qy), one row each.
-    */
-  def discCover(grid: CellGrid, qx: Column, qy: Column, dUp: Column): Column = {
-    val r = sqrt(dUp) * lit(DiscPad)
-    explode(stCoverCells(grid)(qx - r, qy - r, qx + r, qy + r))
   }
 }

@@ -10,9 +10,8 @@ import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types.{
   DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
-import graft.engine.CellHistogram.discCover
 import graft.geom.AABB
-import graft.index.{CellGrid, Entry, LocalRTree, PointRTree2D}
+import graft.index.{CellGrid, CellGridN, Entry, LocalRTree, PointRTree2D}
 import graft.functions.SpatialFunctions._
 
 /** Row shapes for the distributed index: narrow (id + geometry) on purpose —
@@ -254,23 +253,24 @@ object SpatialOps {
     ColumnShim.internalDf(spark, rdd, schema)
   }
 
-  /** The two passes of [[CellHistogram]], shared by every 2-D kNN
-    * operator, which supplies only its histogram, its probe and its cut.
-    * `queries` rows are (qid, qx, qy), any names. `probe` maps (cell, qid,
-    * qx, qy) candidates to (qid, hit, d2, qx, qy) hits — it echoes the
-    * query point, so no pass joins back to the queries; `cut` keeps each
-    * query's best hits, at most k of them plus ties, and may add columns.
-    * Pass A's cut bounds d_up, the largest kept d2 per query; pass B's cut
-    * over the d_up disc cover is the result.
+  /** The two passes of [[CellHistogram]], shared by every grid kNN
+    * operator, which supplies only its histogram, its probe and its cut;
+    * the grid supplies the passes' cells ([[KnnGrid]]). `queries` rows are
+    * qid followed by the grid's point columns, any names. `probe` maps
+    * (cell, qid, point) candidates to (qid, hit, d2, point) hits — it
+    * echoes the query point, so no pass joins back to the queries; `cut`
+    * keeps each query's best hits, at most k of them plus ties, and may add
+    * columns. Pass A's cut bounds d_up, the largest kept d2 per query; pass
+    * B's cut over the d_up ball cover is the result.
     */
-  private[engine] def twoPassKnn(queries: DataFrame, hist: CellHistogram,
-      grid: CellGrid, k: Int)(
-      probe: DataFrame => DataFrame, cut: DataFrame => DataFrame): DataFrame = {
-    val Array(qid, qx, qy) = queries.columns
-    val dUp = cut(probe(hist.candidates(queries, grid, k)))
-      .groupBy(qid).agg(max("d2").as("dUp"), first(qx).as(qx), first(qy).as(qy))
-    cut(probe(dUp.select(discCover(grid, col(qx), col(qy), col("dUp")).as("cell"),
-      col(qid), col(qx), col(qy))))
+  private[engine] def twoPassKnn[G](queries: DataFrame, hist: CellHistogram,
+      grid: G, k: Int)(
+      probe: DataFrame => DataFrame, cut: DataFrame => DataFrame)(
+      implicit knn: KnnGrid[G]): DataFrame = {
+    val qid +: point = queries.columns.toSeq
+    val dUp = cut(probe(knn.ringCandidates(grid, hist, k)(queries)))
+      .groupBy(qid).agg(max("d2").as("dUp"), point.map(c => first(c).as(c)): _*)
+    cut(probe(knn.ballCover(grid)(dUp)))
   }
 
   /** The point operators' cut: each query's top k in (d2, id) order, or
@@ -682,52 +682,30 @@ object SpatialOps {
   /** Distributed kNN join in d DIMENSIONS over [[graft.index.CellGridN]] —
     * the n-dim tier (reference points are n-dimensional,
     * rstar/src/point.rs:158-179; the 2-D [[knnJoin]] remains the web-geo
-    * fast path with its pure-Catalyst probe). Same two provably-complete
-    * passes: shell-expand over the histogram until ≥ k points, exact k-th
-    * candidate distance d_up, then cover the d_up hyper-ball's bounding
-    * box (ulp-padded) and window top-k — exact by the same disc argument,
-    * axis-generalized. Rows: (id, p: Array[Double]).
+    * fast path), in the [[twoPassKnn]] passes over Chebyshev shells and
+    * the d_up ball's bounding box. It supplies a cell equi-join probe with
+    * the SQL twin's left-fold d2 and [[knnJoin]]'s (d2, id) cut; a point
+    * lives in one cell and a pass's cells are distinct, so no (qid, id)
+    * pair repeats. Rows: (id, p: Array[Double]); output (qid, id, d2, rn),
+    * rn a long in [1, k].
     */
   def knnJoinNd(
       queries: Dataset[(Long, Array[Double])],
       data: Dataset[(Long, Array[Double])],
-      k: Int, grid: graft.index.CellGridN): DataFrame = {
+      k: Int, grid: CellGridN): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
     val dataCelled = data.map(r => (grid.cellId(r._2), r._1, r._2))
       .toDF("cell", "id", "p")
-    val histB = CellHistogram.collect(dataCelled.select("cell")).broadcast(spark)
-
-    val candA = queries.flatMap { case (qid, qp) =>
-      val c0 = Array.tabulate(grid.dims)(d => grid.idx(d, qp(d)))
-      histB.value.ringCells(k, grid.cellsPerAxis)(r => grid.ring(c0, r))
-        .map(c => (qid, qp, c))
-    }.toDF("qid", "qp", "cell")
-
     val d2 = aggregate(
       zip_with(col("p"), col("qp"), (a, b) => (a - b) * (a - b)),
       lit(0.0d), (acc, x) => acc + x)
-    val wAsc = Window.partitionBy("qid").orderBy(col("d2"), col("id"))
-    val dUp = candA.join(dataCelled, Seq("cell"))
-      .select(col("qid"), col("qp"), col("id"), d2.as("d2"))
-      .withColumn("rn", row_number().over(wAsc))
-      .where(col("rn") <= k)
-      .groupBy("qid").agg(max("d2").as("dUp"), first("qp").as("qp"))
-
-    val candB = dUp.as[(Long, Double, Array[Double])].flatMap { case (qid, up, qp) =>
-      val r = math.sqrt(up) * CellHistogram.DiscPad
-      val lo = qp.map(_ - r)
-      val hi = qp.map(_ + r)
-      grid.cover(AABB.fromBounds(lo, hi)).map(c => (qid, qp, c))
-    }.toDF("qid", "qp", "cell")
-
-    // no dedup needed: a point lives in exactly one cell and the cover's
-    // cells are distinct, so each (qid, id) pair joins at most once
-    candB.join(dataCelled, Seq("cell"))
-      .select(col("qid"), col("id"), d2.as("d2"))
-      .withColumn("rn", row_number().over(wAsc).cast("long"))
-      .where(col("rn") <= k)
-      .select(col("qid"), col("id"), col("d2"), col("rn"))
+    twoPassKnn(queries.toDF("qid", "qp"),
+      CellHistogram.collect(dataCelled.select("cell")), grid, k)(
+      _.join(dataCelled, Seq("cell"))
+        .select(col("qid"), col("id"), d2.as("d2"), col("qp")),
+      pointCut(k, keepTies = false))
+      .select(col("qid"), col("id"), col("d2"), col("rn").cast("long").as("rn"))
   }
 
   // --------------------------------------------------- selections as scans

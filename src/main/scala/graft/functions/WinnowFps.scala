@@ -26,6 +26,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *     grams (positions 0 .. n-w for n = numChars-k+1 grams), distinct.
   *     Documents with fewer than w grams yield an empty array (callers
   *     filter `length(text) >= k+w-1`, the twin's full-window rule).
+  *   - on malformed UTF-8 that gate and this decoder can disagree: lead
+  *     bytes 0xC0–0xC1 decode here as 2-byte and 0xF5–0xFF as 4-byte
+  *     sequences, where Spark's `length` counts each as one character
+  *     and reads on at the next byte. A malformed document can then pass
+  *     the gate and yield no fingerprint, or fail it while holding a full
+  *     window. On valid UTF-8 the two counts agree.
   *
   * The sliding-window minima ride a monotone deque (O(n) total), then
   * sort + dedup in place ([[ShingleHash31s]]'s representation contract).

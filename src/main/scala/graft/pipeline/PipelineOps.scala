@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.NativeFunctions._
+
 /** Large-scale training-data pipeline operators over the `documents` /
   * `embeddings` tables: deduplication (exact, n-gram Jaccard, MinHash+LSH,
   * SimHash), similarity search (brute-force + LSH-bucketed ANN), and text
@@ -418,7 +420,9 @@ object PipelineOps {
     * polynomial hash, then keep each w-window's minimum hash — any two
     * documents sharing a substring of length ≥ w+k-1 are guaranteed to
     * share a fingerprint, while only ~2/(w+1) of the grams survive. Output:
-    * DISTINCT (doc_id, fp).
+    * DISTINCT (doc_id, fp), provided doc_id is unique in `docs`: each row's
+    * fingerprints are distinct, but nothing dedupes across rows, so two
+    * rows sharing a doc_id can emit the same pair twice.
     *
     * Winnowing is a doc-LOCAL fold, so it is computed IN-ROW by the native
     * [[graft.functions.WinnowFps]] expression (rolling gram hash + monotone
@@ -437,10 +441,7 @@ object PipelineOps {
     docs
       .where(length(col("text")) >= k + w - 1) // docs with >= 1 full window
       .select(col("doc_id"),
-        explode(org.apache.spark.sql.graft.ColumnShim.column(
-          graft.functions.WinnowFps(
-            org.apache.spark.sql.graft.ColumnShim.expression(col("text")),
-            k, w))).as("fp"))
+        explode(winnowFps(col("text"), k, w)).as("fp"))
 
   // ----------------------------------------------------- decontamination
 
@@ -836,7 +837,6 @@ object PipelineOps {
     */
   def heavyHitters(docs: DataFrame, k: Int = 4095,
       denom: Long = 1500L): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnShim
     val grams = docs
       .withColumn("ws", split(col("text"), " "))
       // sequence(0, -1) DESCENDS in Spark: single-word docs (zero bigrams
@@ -846,11 +846,8 @@ object PipelineOps {
         "transform(sequence(0, size(ws) - 2), " +
           "i -> concat(element_at(ws, i + 1), ' ', element_at(ws, i + 2)))"))
         .as("w"))
-    val mg = ColumnShim.column(
-      graft.functions.MisraGries(ColumnShim.expression(col("w")), k)
-        .toAggregateExpression())
     val cand = grams
-      .agg(mg.as("sk"), count(lit(1)).as("n"))
+      .agg(misraGries(col("w"), k).as("sk"), count(lit(1)).as("n"))
       .withColumn("t", greatest(lit(1L), expr(s"n div ${denom}L")))
       .select(col("t"), explode(col("sk")).as("e"))
       .select(col("e.w").as("w"), col("t"))
@@ -879,8 +876,6 @@ object PipelineOps {
     */
   def bloomFlaggedUserStats(events: DataFrame, minErrors: Long,
       bits: Int = 1 << 17, hashes: Int = 5): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnShim
-    import graft.functions.{BloomAgg, BloomMightContain}
     // tiny (≤ distinct users) but derived from a full scan: materialize
     // once, it feeds both the bitmap job and the exact semi-join
     val flagged = events.where(col("event_type") === "error")
@@ -888,13 +883,10 @@ object PipelineOps {
       .where(col("n_err") >= lit(minErrors))
       .select("user_id")
       .localCheckpoint(true)
-    val bloomCol = ColumnShim.column(
-      BloomAgg(ColumnShim.expression(col("user_id")), bits, hashes)
-        .toAggregateExpression())
-    val bitmap = flagged.agg(bloomCol.as("bf")).head().getAs[Array[Byte]](0)
+    val bitmap = flagged.agg(bloomAgg(col("user_id"), bits, hashes).as("bf"))
+      .head().getAs[Array[Byte]](0)
     events
-      .where(ColumnShim.column(BloomMightContain(
-        ColumnShim.expression(col("user_id")), bitmap, hashes)))
+      .where(bloomMightContain(col("user_id"), bitmap, hashes))
       .join(flagged, Seq("user_id"), "left_semi")
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
@@ -1133,7 +1125,7 @@ object PipelineOps {
     val de = emb.select(col("vec_id").as("id"),
       transform(col("embedding"), x =>
         floor(x.cast("double") * lit(1000.0)).cast("long")).as("de"))
-    val dot = intDot(col("qe"), col("de"))
+    val dot = dotLL(col("qe"), col("de"))
     val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("id"))
     qe.crossJoin(de)
       .select(col("qid"), col("id"), dot.as("dot"))
@@ -1141,29 +1133,18 @@ object PipelineOps {
       .where(col("rn") <= k)
   }
 
-  /** Exact double dot of two float-array columns — the native codegen
-    * expression ([[graft.functions.ArrayDotFF]]); same left-to-right
-    * widen-multiply-accumulate fold as the HOF form, so the SQL twin and
-    * recorded hashes are unchanged.
-    */
-  private def floatDot(a: Column, b: Column): Column =
-    org.apache.spark.sql.graft.ColumnShim.column(
-      graft.functions.ArrayDotFF(
-        org.apache.spark.sql.graft.ColumnShim.expression(a),
-        org.apache.spark.sql.graft.ColumnShim.expression(b)))
-
   /** Brute-force cosine top-k (float path, rows-only check): exact ranking
     * for the data at hand; the IEEE-sum order is fixed (array order) but not
     * oracle-portable.
     */
   def annCosine(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    def norm(v: Column): Column = sqrt(floatDot(v, v))
+    def norm(v: Column): Column = sqrt(dotFF(v, v))
     val qe = emb.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
         norm(col("embedding")).as("qn"))
     val de = emb.select(col("vec_id").as("id"), col("embedding").as("de"),
       norm(col("embedding")).as("dn"))
-    val dot = floatDot(col("qe"), col("de"))
+    val dot = dotFF(col("qe"), col("de"))
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("id"))
     qe.crossJoin(de)
       .select(col("qid"), col("id"),
@@ -1189,11 +1170,7 @@ object PipelineOps {
     import graft.functions.OracleHash
     val bits = (0 until nBits).map { j =>
       val cs = OracleHash.hyperplane(table, j, dims)
-      val dot = org.apache.spark.sql.graft.ColumnShim.column(
-        graft.functions.ArrayDotFD(
-          org.apache.spark.sql.graft.ColumnShim.expression(v),
-          org.apache.spark.sql.graft.ColumnShim.expression(
-            typedlit(cs.toSeq))))
+      val dot = dotFD(v, typedlit(cs.toSeq))
       when(dot >= 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
     }
     bits.reduce(_.bitwiseOR(_))
@@ -1202,16 +1179,6 @@ object PipelineOps {
   /** Floor-scaled integer vector (the oracle-exact embedding domain). */
   private def intVec(v: Column): Column =
     transform(v, x => floor(x.cast("double") * lit(1000.0)).cast("long"))
-
-  /** Exact integer dot product of two long-array columns — the native
-    * codegen expression ([[graft.functions.ArrayDotLL]]); same
-    * left-to-right fold as the HOF form, so every SQL twin is unchanged.
-    */
-  private def intDot(a: Column, b: Column): Column =
-    org.apache.spark.sql.graft.ColumnShim.column(
-      graft.functions.ArrayDotLL(
-        org.apache.spark.sql.graft.ColumnShim.expression(a),
-        org.apache.spark.sql.graft.ColumnShim.expression(b)))
 
   // ------------------------------------------- exact IVF-pruned ANN top-k
 
@@ -1222,17 +1189,14 @@ object PipelineOps {
     * reference's bound-pruned nearest_neighbor descent
     * (rstar/src/algorithm/nearest_neighbor.rs:232-295):
     *
-    *   Index: nClusters centers — deterministic lowest-id seeds, then
-    *   `kmeansIters` Lloyd refinements (per-cluster element-wise mean,
-    *   computed as a tiny nClusters×dims aggregation) that tighten the
-    *   radii and hence the pruning; nClusters defaults to ~√n (clamped),
-    *   the standard IVF list-count rule. Every vector joins its max-dot
-    *   center; per cluster keep (center, size, R = max ||v - c||) — by
-    *   Cauchy-Schwarz, for any query q and any member v of cluster c:
-    *   q·v ≤ q·c + ||q||·R_c  (the bound; valid for ANY center, so
-    *   refinement affects speed, never correctness — center arithmetic is
-    *   double-rounded and the bound carries relative + absolute pads that
-    *   dominate the ≤64-term accumulation error by 5 orders).
+    *   Index: nClusters centers, the lowest-id vectors as seeds. Every
+    *   vector joins its max-dot center; per cluster keep (center, size,
+    *   R = max ||v - c||) — by Cauchy-Schwarz, for any query q and any
+    *   member v of cluster c: q·v ≤ q·c + ||q||·R_c (the bound; valid for
+    *   ANY center, so better centers would only tighten the pruning, never
+    *   change a result — center arithmetic is double-rounded and the
+    *   bound carries relative + absolute pads that dominate the ≤64-term
+    *   accumulation error by 5 orders).
     *
     *   Pass A: each query probes just enough top-bound clusters to hold
     *   ≥ k members; the exact k-th best dot among them, dk, is a lower
@@ -1248,87 +1212,52 @@ object PipelineOps {
     * pruning ratio on a clustered fixture).
     */
   def annIvfTopK(emb: DataFrame, nQueries: Int, k: Int,
-      nClusters: Int = 0, kmeansIters: Int = 1): DataFrame =
-    annIvfPassB(emb, nQueries, k, nClusters, kmeansIters)._1
+      nClusters: Int): DataFrame =
+    annIvfPassB(emb, nQueries, k, nClusters)._1
 
   /** [[annIvfTopK]] plus its pass-B candidate stream (pre-ranking), so
     * specs can assert the pruning ratio without duplicating the plan.
     */
   private[graft] def annIvfPassB(emb: DataFrame, nQueries: Int, k: Int,
-      nClusters: Int = 0, kmeansIters: Int = 1): (DataFrame, DataFrame) = {
+      nClusters: Int): (DataFrame, DataFrame) = {
     val vecs = emb.select(col("vec_id").as("id"), intVec(col("embedding")).as("v"))
-    val kC =
-      if (nClusters > 0) nClusters
-      else {
-        // ~√n lists, the standard IVF sizing (clamped to sane ends). The
-        // count() is an eager INDEX-BUILD job (parquet footer counts — no
-        // scan); callers on a hot path should pass nClusters explicitly,
-        // as the driver query does.
-        val n = emb.count()
-        math.max(16, math.min(1024, math.ceil(math.sqrt(n.toDouble)).toInt))
-      }
-    // native codegen twin of the HOF fold `aggregate(zip_with(a, b,
-    // (x, y) => x.cast(double) * y), 0.0, _ + _)` — identical IEEE
-    // summation order ([[graft.functions.ArrayDotLD]])
-    def dblDot(a: Column, b: Column): Column =
-      org.apache.spark.sql.graft.ColumnShim.column(
-        graft.functions.ArrayDotLD(
-          org.apache.spark.sql.graft.ColumnShim.expression(a),
-          org.apache.spark.sql.graft.ColumnShim.expression(b)))
-    // Deterministic seeds: the kC lowest-id vectors, as double centers.
-    val seeds = vecs.orderBy("id").limit(kC)
+    // Deterministic centers: the nClusters lowest-id vectors, as doubles.
+    val centers = vecs.orderBy("id").limit(nClusters)
       .select((row_number().over(Window.orderBy("id")) - 1).as("cluster"),
         transform(col("v"), x => x.cast("double")).as("cv"))
     // Assignment: argmax dot(v, center); ties to the lowest cluster id.
     // max_by over (cdot, -cluster) instead of a row_number window: the
     // hash aggregate partial-combines MAP-SIDE, so the shuffle carries n
-    // rows instead of the n×kC cross-join output the window sorted.
-    def assign(cs: DataFrame): DataFrame = vecs.crossJoin(broadcast(cs))
-      .withColumn("cdot", dblDot(col("v"), col("cv")))
+    // rows instead of the n×nClusters cross-join output the window sorted.
+    // Materialized ONCE: it feeds stats, the pass-A dk probe, and the
+    // pass-B candidate join, and without pinning each use re-runs the
+    // assignment. At 100 TB this is precisely the IVF index a real
+    // deployment WRITES (cluster-id per vector, bucketed by cluster);
+    // localCheckpoint is the single-job stand-in for that index build.
+    val assigned = vecs.crossJoin(broadcast(centers))
+      .withColumn("cdot", dotLD(col("v"), col("cv")))
       .groupBy("id")
       .agg(max_by(struct(col("cluster"), col("v"), col("cv")),
         struct(col("cdot"), (-col("cluster")).as("nc"))).as("m"))
       .select(col("m.cluster").as("cluster"), col("id"),
         col("m.v").as("v"), col("m.cv").as("cv"))
-    // Lloyd refinement: element-wise member means (empty clusters drop out;
-    // coverage holds — every vector re-assigns to some surviving center).
-    val centers = (1 to kmeansIters).foldLeft(seeds) { (cs, _) =>
-      assign(cs)
-        .select(col("cluster"), posexplode(col("v")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(avg(col("col").cast("double")).as("m"))
-        .groupBy("cluster")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("cv"))
-    }
-    // Materialize the assignment ONCE: it feeds stats, the pass-A dk
-    // probe, and the pass-B candidate join, and without pinning each use
-    // re-runs the full seed→assign→refine lineage (3× the dominant cost).
-    // At 100 TB this is precisely the IVF index a real deployment WRITES
-    // (cluster-id per vector, bucketed by cluster); localCheckpoint is the
-    // single-job stand-in for that index build.
-    val assigned = assign(centers).localCheckpoint(true)
+      .localCheckpoint(true)
     // Cluster stats: size + conservative member radius (padded sqrt).
-    // native twin of `aggregate(zip_with(v, cv, (a, b) => (a - b)^2),
-    // 0.0, _ + _)` — same per-step IEEE rounding (ArrayDist2LD)
-    val r2 = org.apache.spark.sql.graft.ColumnShim.column(
-      graft.functions.ArrayDist2LD(
-        org.apache.spark.sql.graft.ColumnShim.expression(col("v")),
-        org.apache.spark.sql.graft.ColumnShim.expression(col("cv"))))
     val stats = assigned
-      .withColumn("r", sqrt(r2) * lit(1.0 + 1e-9) + lit(1e-6))
+      .withColumn("r",
+        sqrt(dist2LD(col("v"), col("cv"))) * lit(1.0 + 1e-9) + lit(1e-6))
       .groupBy("cluster")
       .agg(count(lit(1)).as("csize"), max("r").as("rc"), first("cv").as("cv"))
     // Queries with conservative norms; bounds vs every cluster (the cluster
     // table is the broadcast-size analog of the grid histogram).
-    val qn = sqrt(intDot(col("qv"), col("qv")).cast("double")) *
+    val qn = sqrt(dotLL(col("qv"), col("qv")).cast("double")) *
       lit(1.0 + 1e-12) + lit(1e-9)
     val bounds = vecs.where(col("id") < nQueries)
       .select(col("id").as("qid"), col("v").as("qv"))
       .withColumn("qnorm", qn)
       .crossJoin(broadcast(stats))
       .withColumn("bound",
-        (dblDot(col("qv"), col("cv")) +
+        (dotLD(col("qv"), col("cv")) +
           col("qnorm") * col("rc")) * lit(1.0 + 1e-9) + lit(1.0))
       .select("qid", "qv", "cluster", "csize", "bound")
     // Pass A: minimal top-bound prefix holding >= k members.
@@ -1340,7 +1269,7 @@ object PipelineOps {
     val members = assigned.select(col("cluster"), col("id"), col("v"))
     val wTop = Window.partitionBy("qid").orderBy(col("dot").desc, col("id"))
     val dk = passA.join(members, Seq("cluster"))
-      .withColumn("dot", intDot(col("qv"), col("v")))
+      .withColumn("dot", dotLL(col("qv"), col("v")))
       .withColumn("rn", row_number().over(wTop))
       .where(col("rn") <= k)
       .groupBy("qid").agg(min("dot").as("dk"))
@@ -1349,7 +1278,7 @@ object PipelineOps {
       .where(col("bound") >= col("dk").cast("double"))
     val candB = passB.join(members, Seq("cluster"))
     val result = candB
-      .withColumn("dot", intDot(col("qv"), col("v")))
+      .withColumn("dot", dotLL(col("qv"), col("v")))
       .withColumn("rn", row_number().over(wTop).cast("long"))
       .where(col("rn") <= k)
       .select(col("qid"), col("id"), col("dot"), col("rn"))
@@ -1391,7 +1320,7 @@ object PipelineOps {
       .select("qid", "qv", "id", "v")
       .dropDuplicates("qid", "id")
     val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("id"))
-    cand.withColumn("dot", intDot(col("qv"), col("v")))
+    cand.withColumn("dot", dotLL(col("qv"), col("v")))
       .withColumn("rn", row_number().over(w).cast("long"))
       .where(col("rn") <= k)
       .select("qid", "id", "dot", "rn")

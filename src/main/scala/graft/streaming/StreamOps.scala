@@ -38,33 +38,12 @@ object StreamOps {
         col("e.lon").as("x"), col("e.lat").as("y"))
       .withColumn("cell", stCell(grid)(col("x"), col("y")))
 
-  /** Streaming J1: entity stream ⋈ static tile layer. The tile side is
-    * exploded to covered cells once (static, so Spark broadcasts it under
-    * AQE thresholds); the stream side carries its cell id from
-    * [[entityStream]], and the join is a STATELESS stream-static inner
-    * equi-join on cell + the closed-interval containment predicate — no
-    * watermark needed, so it runs at ingest rate on any sink.
-    */
-  def tileJoinStream(entities: DataFrame, tiles: DataFrame,
-      grid: CellGrid): DataFrame = {
-    import graft.functions.SpatialFunctions.{stCoverCells, stContainsPoint}
-    val tileCelled = tiles.select(
-      col("tile_id"), col("minX"), col("minY"), col("maxX"), col("maxY"),
-      explode(stCoverCells(grid)(
-        col("minX"), col("minY"), col("maxX"), col("maxY"))).as("cell"))
-    entities.join(tileCelled, Seq("cell"))
-      .where(stContainsPoint(
-        col("minX"), col("minY"), col("maxX"), col("maxY"),
-        col("x"), col("y")))
-      .select(col("url"), col("warc_ts"), col("x"), col("y"), col("tile_id"))
-  }
-
-  /** Generic-layer sibling of [[tileJoinStream]]: a streaming point table
-    * (id, x, y) joined against a static rect layer (gid, minX, minY, maxX,
-    * maxY) — stateless stream-static cell equi-join + closed-interval
-    * containment, append-mode, no watermark needed. Each qualifying
-    * (point, rect) pair is emitted exactly once: the point carries ONE
-    * cell, so the rect's multi-cell explode never duplicates a pair.
+  /** Streaming J1: a streaming point table (id, x, y) joined against a
+    * static rect layer (gid, minX, minY, maxX, maxY) — stateless
+    * stream-static cell equi-join + closed-interval containment,
+    * append-mode, no watermark needed. Each qualifying (point, rect) pair
+    * is emitted exactly once: the point carries ONE cell, so the rect's
+    * multi-cell explode never duplicates a pair.
     */
   def boxJoinStream(points: DataFrame, rects: DataFrame,
       grid: CellGrid): DataFrame = {

@@ -74,25 +74,24 @@ class AnnSpec extends AnyFunSuite {
     assert(ivf == brute)
   }
 
-  test("annIvfTopK with k-means refinement PRUNES on clustered data: " +
+  test("annIvfTopK with seed centers PRUNES on clustered data: " +
     "pass B touches a small fraction of query x corpus, exactness intact") {
     val df = clustered(8, 100) // 800 vectors, 8 tight caps
     val n = 800L
     val nQ = 16
-    val (res, candB) = PipelineOps.annIvfPassB(df, nQ, 5,
-      nClusters = 16, kmeansIters = 2)
+    val (res, candB) = PipelineOps.annIvfPassB(df, nQ, 5, nClusters = 16)
     // exactness first (the bound must hold through double centers)
     val brute = asSet(PipelineOps.annTopKInt(df, nQ, 5)
       .withColumn("rn", col("rn").cast("long")))
     assert(asSet(res) == brute)
-    // pruning: brute force scans nQ x n pairs; refined IVF must probe far
-    // fewer (tight caps -> small radii -> most clusters fail the dk bound)
+    // pruning: brute force scans nQ x n pairs; IVF must probe far fewer
+    // (tight caps -> small radii -> most clusters fail the dk bound)
     val probed = candB.count()
     val frac = probed.toDouble / (nQ * n)
     info(f"IVF pass-B probed fraction on clustered data: $frac%.3f")
     assert(frac <= 0.5, f"IVF pruned nothing on clustered data: $frac%.3f")
-    // refinement must not hurt the auto-sized default path either
-    assert(asSet(PipelineOps.annIvfTopK(df, nQ, 5)) == brute)
+    // and with ~√n clusters, a count that does not divide the caps
+    assert(asSet(PipelineOps.annIvfTopK(df, nQ, 5, nClusters = 29)) == brute)
   }
 
   test("annLshTopK recall >= 0.9 vs exact top-k on clustered embeddings") {

@@ -7,14 +7,15 @@ import org.apache.spark.sql.functions._
 
 import graft.engine._
 import graft.functions.SpatialFunctions.{stBoxDistanceSq, stDistanceSq, stLineDistanceSq}
-import graft.index.CellGrid
+import graft.index.{CellGrid, CellGridN}
 
 /** Every distributed kNN operator against a brute-force crossJoin on one
   * adversarial fixture: the whole layer in ONE grid cell (the ring pass
   * must cross many empty rings), exact-duplicate points (ties at the k-th
   * distance), queries exactly on cell borders and corners or outside the
-  * domain, and k larger than the layer. Results must agree row for row —
-  * ids, bit-exact d2, rank and column types.
+  * domain, and k larger than the layer; the n-D join gets the same
+  * fixture at z = 0. Results must agree row for row — ids, bit-exact d2,
+  * rank and column types.
   */
 class KnnAdversarialSpec extends AnyFunSuite {
 
@@ -161,6 +162,25 @@ class KnnAdversarialSpec extends AnyFunSuite {
         col("y2"), col("px"), col("py")).as("d2"))
       .groupBy("id").agg(min("d2").as("min_d2"))
     same(SpatialOps.lineNearestJoin(queryPoints, lines, grid), want)
+  }
+
+  test("knnJoinNd k=1, k=4 and k > |layer| == brute force (fixture at z = 0)") {
+    val s = spark; import s.implicits._
+    // 16 cells per axis: the layer's cell is [0, 22.5) × [0, 11.25) × [0, 0.125)
+    val gridNd = CellGridN(Array(-180.0, -90.0, -1.0), Array(180.0, 90.0, 1.0), 4)
+    def lift(pts: Seq[(Long, Double, Double)]) =
+      pts.map { case (id, x, y) => (id, Array(x, y, 0.0)) }.toDS()
+    val (qs, data) = (lift(queryPts), lift(layer))
+    val d2 = aggregate(zip_with(col("p"), col("qp"), (a, b) => (a - b) * (a - b)),
+      lit(0.0d), (acc, x) => acc + x)
+    Seq(1, 4, 20).foreach { k =>
+      same(SpatialOps.knnJoinNd(qs, data, k, gridNd),
+        qs.toDF("qid", "qp").crossJoin(data.toDF("id", "p"))
+          .select(col("qid"), col("id"), d2.as("d2"))
+          .withColumn("rn", row_number().over(Window.partitionBy("qid")
+            .orderBy(col("d2"), col("id"))).cast("long"))
+          .where(col("rn") <= k))
+    }
   }
 
   test("IndexStore.knnQuery k=4 and k > |layer| == brute force") {

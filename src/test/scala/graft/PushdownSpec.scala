@@ -80,7 +80,7 @@ class PushdownSpec extends AnyFunSuite {
     "product over the data side") {
     spark.sparkContext.setLogLevel("ERROR")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val plan = graft.pipeline.PipelineOps.annIvfTopK(emb, 10, 10, 32)
+    val plan = graft.pipeline.PipelineOps.annIvfTopK(emb, 10, 10, nClusters = 32)
       .queryExecution.executedPlan.toString
     // queries x clusters and vectors x seeds are bounded broadcast
     // cross-products (the histogram analog); the DATA side must only ever

@@ -61,29 +61,29 @@ class StreamSpec extends AnyFunSuite {
     assert(batch.values.sum > 0)
   }
 
-  test("streaming tile join == batch intersection join on the same input " +
+  test("streaming box join == batch intersection join on the same input " +
     "(stateless stream-static equi-join)") {
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
     val grid = CellGrid.lonLat(4)
     val dir = java.nio.file.Files.createTempDirectory("graft_stream_j").toString
     PagesGen.pages(spark, 800, skewShare = 0.3).write
       .mode("overwrite").parquet(dir)
     val tiles = PagesGen.tiles(spark, 500, maxW = 2.0)
-      .select(col("tile_id"), col("minX"), col("minY"),
+      .select(col("tile_id").as("gid"), col("minX"), col("minY"),
         col("maxX"), col("maxY"))
       .localCheckpoint(true)
 
-    val q = StreamOps.tileJoinStream(
-        StreamOps.entityStream(spark, dir, grid), tiles, grid)
+    val q = StreamOps.boxJoinStream(
+        StreamOps.entityStream(spark, dir, grid)
+          .select(col("url").as("id"), col("x"), col("y")), tiles, grid)
       .writeStream.format("memory").queryName("tile_join")
       .outputMode("append").start()
     q.processAllAvailable()
     q.stop()
-    val got = spark.table("tile_join")
-      .select("url", "x", "y", "tile_id").collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getLong(3)))
-      .toSet
+    // sorted sequences, not sets: a page's entities can repeat a pair, and
+    // the join must emit each copy exactly once
+    val got = spark.table("tile_join").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
 
     // batch oracle: same entities, brute-force containment join
     val ents = spark.read.parquet(dir)
@@ -92,9 +92,8 @@ class StreamSpec extends AnyFunSuite {
     val want = ents.crossJoin(tiles)
       .where(col("x") >= col("minX") && col("x") <= col("maxX") &&
         col("y") >= col("minY") && col("y") <= col("maxY"))
-      .select("url", "x", "y", "tile_id").collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getLong(3)))
-      .toSet
+      .select("url", "gid").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
     assert(got == want)
     assert(want.nonEmpty)
   }
