@@ -1,10 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.io.File
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+
+import graft.engine.IndexStore
 import graft.functions.OracleHash
+import graft.index.CellGrid
 import graft.pipeline.{MediaOps, PipelineOps}
+import graft.streaming.{StreamMetrics, StreamOps}
 import TpchGeo.load
 
 /** Training-data-pipeline operators exposed through SparkEntry, over the
@@ -1057,151 +1064,149 @@ object PipelineQueries {
        |FROM px GROUP BY doc_id, wo, ho ORDER BY media_id""".stripMargin
   }
 
-  /** STREAMING exact dedup, end-to-end as a driver-oracle hard signal: the
-    * documents table is replayed through the REAL Structured Streaming
-    * path (`StreamOps.dedupStreamDocs` — file source, two micro-batches,
-    * `flatMapGroupsWithState` keeper state) and the final emitted set must
-    * equal the BATCH min-id-per-content rule the DuckDB twin computes.
-    * Micro-batch 2 injects duplicates of every third document under
-    * shifted-up ids: if the cross-batch state lookup were broken, each of
-    * those would re-emit and the driver's row/hash compare would fail —
-    * so the green row certifies the stateful stream, not just a batch
-    * rewrite of it.
+  // ------------------------------------------------ streaming replays
+
+  /** Shuffle partitions for the stateful stream queries. Spark bakes the
+    * count into the state store at the first micro-batch (the checkpoint
+    * then pins it), and every micro-batch commits one delta file per
+    * partition: a 32-partition session would commit 8× the checkpoint
+    * files of 4 for a few-thousand-row keeper or session state.
     */
-  def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val tag = s"qsd_${System.nanoTime()}"
-    val inDir = java.nio.file.Files.createTempDirectory(tag).toString
-    val ckpt = java.nio.file.Files.createTempDirectory(s"${tag}_c").toString
-    val base = load(spark, dir, "documents").select("doc_id", "text")
-    base.write.mode("overwrite").parquet(inDir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType, nullable = false)))
-    // Scope the stream to 8 state partitions: the partition count is baked
-    // into the state store from the first micro-batch's conf (then pinned
-    // by the checkpoint), and every micro-batch commits one delta file PER
-    // partition — 32 quadruples the checkpoint IO for a 5k-doc keeper
-    // state. Restored after stop(), past the last planned batch.
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    // all teardown in finally: a throw mid-stream must not leave the whole
-    // suite running on 8 shuffle partitions, nor leak the stream query,
-    // the memory-sink temp view, or the temp dirs
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+  private val StreamShufflePartitions = "spark.sql.shuffle.partitions" -> "4"
+
+  /** One [[replayStream]] invocation as its sink and result see it: `name`
+    * is unique per invocation (it names a memory-sink table) and
+    * `dir(child)` is a path under the replay's temp root.
+    */
+  private[graft] final case class Replay(name: String, root: String) {
+    def dir(child: String): String = s"$root/$child"
+  }
+
+  /** The two-micro-batch replay behind every `q_stream_*` query. Each
+    * `(batch1, batch2)` pair is one file source: batch 1 is written to it
+    * and the stream opened with batch 1's schema. Under the `conf`
+    * overrides the harness starts `sink(streams, replay)` with its own
+    * checkpoint, drains micro-batch 1, feeds every batch 2, drains again,
+    * records [[StreamMetrics]] and materializes `result` into one
+    * partition, so the returned frame holds no stream state (Bench
+    * re-invokes these queries).
+    *
+    * Batch 2 is staged: each source's batch 2 is written to a sibling dir
+    * (a child would be listed by the live source), then its part files
+    * are moved in with `ATOMIC_MOVE`, which throws instead of degrading to
+    * copy + delete (the source could list a half-copied file). A direct
+    * write lets a trigger fire mid-write and split batch 2 (the two-source
+    * join showed 5 batches, one of pure overhead). A trigger can still
+    * fire between two moves, e.g. between two sources': the join's
+    * emitted set does not depend on that split, so staging trims
+    * lifecycles, never its results.
+    *
+    * Every dir lives under one temp root. One teardown stops the query,
+    * restores the conf, drops the memory table and deletes the root, also
+    * when the sink, the feed or `result` throws.
+    */
+  private[graft] def replayStream(spark: SparkSession, tag: String,
+      conf: Seq[(String, String)], sources: Seq[(DataFrame, DataFrame)])(
+      sink: (Seq[DataFrame], Replay) => DataStreamWriter[Row])(
+      result: Replay => DataFrame): DataFrame = {
+    val saved = conf.map { case (k, _) => k -> spark.conf.get(k) }
+    val name = s"${tag}_${System.nanoTime()}"
+    val r = Replay(name, Files.createTempDirectory(name).toString)
+    var q: StreamingQuery = null
     try {
-      q = graft.streaming.StreamOps.dedupStreamDocs(spark,
-          spark.readStream.schema(schema).parquet(inDir))
-        .writeStream.format("memory").queryName(tag)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      q.processAllAvailable() // micro-batch 1: the full base table
-      // micro-batch 2: exact duplicates under STRICTLY LARGER ids — state
-      // must swallow every one (first-seen wins; ids only grow, so the
-      // stream keeper == the batch min over base ∪ dups == min over base)
-      base.where(col("doc_id") % 3 === 0)
-        .select((col("doc_id") + lit(10000000L)).as("doc_id"), col("text"))
-        .write.mode("append").parquet(inDir)
-      q.processAllAvailable()
-      graft.streaming.StreamMetrics.record(q)
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      val streams = sources.zipWithIndex.map { case ((b1, _), i) =>
+        b1.write.parquet(r.dir(s"source$i"))
+        spark.readStream.schema(b1.schema).parquet(r.dir(s"source$i"))
+      }
+      q = sink(streams, r)
+        .option("checkpointLocation", r.dir("checkpoint")).start()
+      q.processAllAvailable() // micro-batch 1
+      sources.zipWithIndex.foreach { case ((_, b2), i) =>
+        b2.write.parquet(r.dir(s"stage$i"))
+      }
+      sources.indices.foreach { i =>
+        new File(r.dir(s"stage$i")).listFiles()
+          .filter(_.getName.startsWith("part-")).foreach { f =>
+            Files.move(f.toPath, Paths.get(r.dir(s"source$i"), f.getName),
+              StandardCopyOption.ATOMIC_MOVE)
+          }
+      }
+      q.processAllAvailable() // micro-batch 2
+      StreamMetrics.record(q)
       q.stop()
-      // materialize the (small, bounded: one row per distinct content) sink
-      // table — Bench re-invokes this query several times per run and must
-      // not accumulate state
-      val out = spark.table(tag).orderBy("h", "keeper")
-      val rows = out.collect().toSeq
+      val out = result(r)
       spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), out.schema)
+        spark.sparkContext.parallelize(out.collect().toSeq, 1), out.schema)
     } finally {
       if (q != null && q.isActive) q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-      if (spark.catalog.tableExists(tag)) spark.catalog.dropTempView(tag)
-      rmrfTemp(inDir); rmrfTemp(ckpt)
+      saved.foreach { case (k, v) => spark.conf.set(k, v) }
+      if (spark.catalog.tableExists(name)) spark.catalog.dropTempView(name)
+      rmrfTemp(r.root)
     }
   }
 
-  /** Bounded recursive delete for the stream harness temp dirs (both roots
-    * are `Files.createTempDirectory` children, never user paths).
+  /** [[replayStream]] into an append-mode memory sink: `op` turns the
+    * streams into the query, whose table is read back ordered by `order`.
+    */
+  private[graft] def replayToMemory(spark: SparkSession, tag: String,
+      conf: Seq[(String, String)], sources: Seq[(DataFrame, DataFrame)],
+      order: String*)(op: Seq[DataFrame] => DataFrame): DataFrame =
+    replayStream(spark, tag, conf, sources)((streams, r) =>
+      op(streams).writeStream.format("memory").queryName(r.name)
+        .outputMode("append"))(
+      r => spark.table(r.name).orderBy(order.map(col): _*))
+
+  /** Bounded recursive delete of a replay's temp root (a
+    * `Files.createTempDirectory` child, never a user path).
     */
   private def rmrfTemp(p: String): Unit = {
-    val f = new java.io.File(p)
+    val f = new File(p)
     if (f.isDirectory) f.listFiles().foreach(c => rmrfTemp(c.getPath))
     f.delete()
   }
 
-  /** STREAMING sessionization, end-to-end as a driver-oracle hard signal:
-    * the events table is replayed through the REAL Structured Streaming
-    * path ([[graft.streaming.StreamOps.sessionizeStream]] — file source,
-    * two time-split micro-batches, `flatMapGroupsWithState` open-session
-    * state) and the emitted CLOSED sessions must equal the batch
-    * sessionization minus each user's final (still-open) session — the
-    * DuckDB twin computes exactly that. Sessions spanning the batch cut
-    * certify the cross-batch state merge: if state were dropped between
-    * batches, every spanning session would split in two and the driver's
-    * hash compare would fail.
+  /** Streaming exact dedup ([[StreamOps.dedupStreamDocs]], keeper state in
+    * `flatMapGroupsWithState`) over the documents table. Batch 2 repeats
+    * every third document under a strictly larger id: the state written
+    * in batch 1 must swallow each repeat, so the emitted keepers equal the
+    * batch min id per content. A broken cross-batch lookup re-emits them.
+    */
+  def streamDedup(spark: SparkSession, dir: String): DataFrame = {
+    val base = load(spark, dir, "documents").select("doc_id", "text")
+    val dups = base.where(col("doc_id") % 3 === 0)
+      .select((col("doc_id") + lit(10000000L)).as("doc_id"), col("text"))
+    replayToMemory(spark, "qsd", Seq(StreamShufflePartitions),
+        Seq(base -> dups), "h", "keeper")(
+      s => StreamOps.dedupStreamDocs(spark, s.head))
+  }
+
+  /** Streaming sessionization ([[StreamOps.sessionizeStream]], open-session
+    * state) over events split at a day boundary. The emitted closed
+    * sessions must equal the batch sessionization minus each user's open
+    * last session. Sessions spanning the cut emit whole only if the open
+    * session survived batch 1 in state; dropped state splits them.
     */
   def streamSessionize(spark: SparkSession, dir: String): DataFrame = {
-    val tag = s"qss_${System.nanoTime()}"
-    val inDir = java.nio.file.Files.createTempDirectory(tag).toString
-    val ckpt = java.nio.file.Files.createTempDirectory(s"${tag}_c").toString
     val ev = load(spark, dir, "events").select(col("user_id"),
       col("event_id"), col("ts").cast("timestamp").as("ts"))
     val cutUs = 1704153600000000L // 2024-01-02T00:00:00Z — day-1 boundary
-    ev.where(unix_micros(col("ts")) < cutUs)
-      .write.mode("overwrite").parquet(inDir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType, nullable = false)))
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      q = graft.streaming.StreamOps.sessionizeStream(spark,
-          spark.readStream.schema(schema).parquet(inDir), gapSec = 1800L)
-        .writeStream.format("memory").queryName(tag)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      q.processAllAvailable() // micro-batch 1: events before the cut
-      // micro-batch 2: the rest — per-user event time stays monotone
-      // across the batch boundary (the operator's ordering contract)
-      ev.where(unix_micros(col("ts")) >= cutUs)
-        .write.mode("append").parquet(inDir)
-      q.processAllAvailable()
-      graft.streaming.StreamMetrics.record(q)
-      q.stop()
-      val out = spark.table(tag).orderBy("user_id", "sess_idx")
-      val rows = out.collect().toSeq
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), out.schema)
-    } finally {
-      if (q != null && q.isActive) q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-      if (spark.catalog.tableExists(tag)) spark.catalog.dropTempView(tag)
-      rmrfTemp(inDir); rmrfTemp(ckpt)
-    }
+    // per-user event time stays monotone across the cut (the operator's
+    // ordering contract)
+    replayToMemory(spark, "qss", Seq(StreamShufflePartitions),
+        Seq(ev.where(unix_micros(col("ts")) < cutUs) ->
+          ev.where(unix_micros(col("ts")) >= cutUs)),
+        "user_id", "sess_idx")(
+      s => StreamOps.sessionizeStream(spark, s.head, gapSec = 1800L))
   }
 
-  /** STREAMING stream-stream interval join as a driver-oracle hard
-    * signal: clicks and views replay as TWO separate file streams in two
-    * time-split micro-batches each, joined by
-    * [[graft.streaming.StreamOps.intervalJoinStream]] (watermarked
-    * two-sided state). Cross-boundary pairs — a batch-2 click attributed
-    * to a batch-1 view — only match if the view-side STATE survived the
-    * first commit, so a green row certifies the buffered-state machinery,
-    * not just per-batch joining. In-order replay within the watermark
-    * contract ⇒ the emitted set equals the batch interval join, which is
-    * the twin.
+  /** Stream-stream interval join ([[StreamOps.intervalJoinStream]],
+    * watermarked two-sided state): clicks and views replay as two file
+    * sources. A batch-2 click pairs with a batch-1 view only if the view
+    * survived batch 1 in join state, so the emitted set equals the batch
+    * interval join only when that state works.
     */
   def streamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val tag = s"qsj_${System.nanoTime()}"
-    val clickDir = java.nio.file.Files.createTempDirectory(tag).toString
-    val viewDir = java.nio.file.Files.createTempDirectory(s"${tag}_v").toString
-    val ckpt = java.nio.file.Files.createTempDirectory(s"${tag}_c").toString
     val ev = load(spark, dir, "events").select(col("event_id"),
       col("ts").cast("timestamp").as("ts"), col("user_id"), col("event_type"))
     // the batch boundary is chosen so at least one (view, click) pair
@@ -1210,89 +1215,21 @@ object PipelineQueries {
     // this query certifies (a boundary with no straddling pair would
     // pass on a stateless per-batch join too)
     val cutUs = 1704979170113231L
-    def leg(tpe: String, outDir: String): Unit =
-      ev.where(col("event_type") === tpe && unix_micros(col("ts")) < cutUs)
-        .drop("event_type")
-        .write.mode("overwrite").parquet(outDir)
-    // Batch-2 feed for a LIVE two-source stream: the query polls
-    // continuously, so writing the second click leg directly into its
-    // source dir lets a trigger fire BETWEEN the two leg writes and split
-    // micro-batch 2 into two single-side batches (observed: 5 batches,
-    // one ~1.2 s batch of pure overhead). Stage both legs first, then
-    // move the part files in (an atomic rename per file, microseconds
-    // apart), so one trigger sees both sides. The emitted pair set is
-    // batch-structure-invariant either way — this trims lifecycles, never
-    // results. The stage is a SIBLING of the source dir (a child would be
-    // listed by the live source), so the rename stays on one filesystem;
-    // ATOMIC_MOVE throws rather than degrade to copy + delete, which would
-    // let the source list a half-copied part file.
-    def stagedLeg2(tpe: String, outDir: String): String = {
-      val stage = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(outDir).getParent, s"${tag}_s").toString
-      ev.where(col("event_type") === tpe && unix_micros(col("ts")) >= cutUs)
-        .drop("event_type")
-        .write.mode("overwrite").parquet(stage)
-      stage
+    def leg(tpe: String): (DataFrame, DataFrame) = {
+      val e = ev.where(col("event_type") === tpe).drop("event_type")
+      e.where(unix_micros(col("ts")) < cutUs) ->
+        e.where(unix_micros(col("ts")) >= cutUs)
     }
-    def moveIn(stage: String, outDir: String): Unit =
-      try {
-        new java.io.File(stage).listFiles().foreach { f =>
-          if (f.getName.startsWith("part-"))
-            java.nio.file.Files.move(f.toPath,
-              java.nio.file.Paths.get(outDir, f.getName),
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        }
-      } finally rmrfTemp(stage)
-    leg("click", clickDir)
-    leg("view", viewDir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType, nullable = false),
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     // No-data micro-batches only advance the watermark and EVICT state —
     // an inner stream-stream join emits pairs exclusively on input rows,
     // so the two eviction-only lifecycles (observed ~1.2 s each) cannot
-    // change the emitted set; skip them for this harness. NOT applied to
-    // streamWindow: append-mode window finalization EMITS in the trailing
-    // no-data batch and needs it.
-    val savedNoData =
-      spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      q = graft.streaming.StreamOps.intervalJoinStream(
-          spark.readStream.schema(schema).parquet(clickDir),
-          spark.readStream.schema(schema).parquet(viewDir),
-          maxLagSec = 7200L)
-        .writeStream.format("memory").queryName(tag)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      q.processAllAvailable() // micro-batch 1: first half-month, both sides
-      // micro-batch 2: the rest — batch-2 clicks near the cut must still
-      // find their batch-1 views in the join state
-      val s1 = stagedLeg2("click", clickDir)
-      val s2 = stagedLeg2("view", viewDir)
-      moveIn(s1, clickDir); moveIn(s2, viewDir)
-      q.processAllAvailable()
-      graft.streaming.StreamMetrics.record(q)
-      q.stop()
-      val out = spark.table(tag).orderBy("click_id", "view_id")
-      val rows = out.collect().toSeq
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), out.schema)
-    } finally {
-      if (q != null && q.isActive) q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-      spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", savedNoData)
-      if (spark.catalog.tableExists(tag)) spark.catalog.dropTempView(tag)
-      rmrfTemp(clickDir); rmrfTemp(viewDir); rmrfTemp(ckpt)
-    }
+    // change the emitted set; skip them here. NOT applied to streamWindow:
+    // append-mode window finalization EMITS in the trailing no-data batch
+    // and needs it.
+    replayToMemory(spark, "qsj", Seq(StreamShufflePartitions,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"),
+        Seq(leg("click"), leg("view")), "click_id", "view_id")(
+      s => StreamOps.intervalJoinStream(s(0), s(1), maxLagSec = 7200L))
   }
 
   /** Twin of [[streamJoin]]: the plain batch interval join — in-order
@@ -1319,55 +1256,22 @@ object PipelineQueries {
        |      FROM g) t
        |WHERE sess_idx < mx ORDER BY user_id, sess_idx""".stripMargin
 
-  /** STREAMING stream-static spatial join, end-to-end as a second
-    * streaming hard signal: the customer point layer is replayed through a
-    * REAL file stream in two micro-batches and box-joined (stateless cell
-    * equi-join + closed-interval containment,
-    * [[graft.streaming.StreamOps.boxJoinStream]]) against the static
-    * supplier rect layer; the emitted pair set must equal the batch
-    * point-in-box join the DuckDB twin computes. Batch 2 streams the
-    * second half of the points, so a green row certifies the join across
-    * micro-batch boundaries, not a single-batch rewrite.
+  /** Stream-static box join ([[StreamOps.boxJoinStream]], stateless cell
+    * equi-join + closed-interval containment) of the customer points,
+    * even keys in batch 1 and the rest in batch 2, against the static
+    * supplier rects. The emitted pairs must equal the batch point-in-box
+    * join across both micro-batches.
     */
   def streamTileJoin(spark: SparkSession, dir: String): DataFrame = {
-    val tag = s"qstj_${System.nanoTime()}"
-    val inDir = java.nio.file.Files.createTempDirectory(tag).toString
-    val ckpt = java.nio.file.Files.createTempDirectory(s"${tag}_c").toString
     val pts = TpchGeo.points(load(spark, dir, "customer"), "c_custkey")
     val rects = TpchGeo.rects(load(spark, dir, "supplier"), "s_suppkey")
       .select(col("id").as("gid"),
         col("min_x").as("minX"), col("min_y").as("minY"),
         col("max_x").as("maxX"), col("max_y").as("maxY"))
-    pts.where(col("id") % 2 === 0).write.mode("overwrite").parquet(inDir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("x",
-        org.apache.spark.sql.types.DoubleType, nullable = false),
-      org.apache.spark.sql.types.StructField("y",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      q = graft.streaming.StreamOps.boxJoinStream(
-          spark.readStream.schema(schema).parquet(inDir),
-          rects, graft.index.CellGrid.lonLat(6))
-        .writeStream.format("memory").queryName(tag)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      q.processAllAvailable() // micro-batch 1: even-keyed points
-      pts.where(col("id") % 2 =!= 0).write.mode("append").parquet(inDir)
-      q.processAllAvailable() // micro-batch 2: the rest
-      graft.streaming.StreamMetrics.record(q)
-      q.stop()
-      val out = spark.table(tag).orderBy("id", "gid")
-      val rows = out.collect().toSeq
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), out.schema)
-    } finally {
-      if (q != null && q.isActive) q.stop()
-      if (spark.catalog.tableExists(tag)) spark.catalog.dropTempView(tag)
-      rmrfTemp(inDir); rmrfTemp(ckpt)
-    }
+    replayToMemory(spark, "qstj", Nil,
+        Seq(pts.where(col("id") % 2 === 0) -> pts.where(col("id") % 2 =!= 0)),
+        "id", "gid")(
+      s => StreamOps.boxJoinStream(s.head, rects, CellGrid.lonLat(6)))
   }
 
   val streamTileJoinSql: String =
@@ -1378,69 +1282,25 @@ object PipelineQueries {
        |AND p.y >= r.min_y AND p.y <= r.max_y
        |ORDER BY id, gid""".stripMargin
 
-  /** STREAMING watermarked windowed aggregation, end-to-end as the third
-    * streaming hard signal — this one certifies EVENT-TIME semantics (the
-    * other two pin state and stream-static joins): the events table is
-    * replayed as per-cell entities in two micro-batches through
-    * [[graft.streaming.StreamOps.cellCounts]] (1-hour tumbling windows,
-    * 2-hour watermark, append mode). Micro-batch 1 carries 3/4 of the
-    * events and establishes the watermark; micro-batch 2 replays the
-    * remaining quarter, almost all of it now LATE beyond the watermark —
-    * the engine must drop those rows, then finalize and emit every window
-    * whose end the watermark passed. The DuckDB twin applies the same
-    * drop-and-finalize predicates arithmetically, so a green row certifies
-    * both the late-row drop AND the append-mode finalization boundary; if
-    * late rows leaked into the aggregates, nearly every emitted window's
-    * count would differ.
+  /** Watermarked windowed aggregation ([[StreamOps.cellCounts]], 1-hour
+    * tumbling windows, 2-hour watermark, append mode) of per-cell events.
+    * Batch 1 carries 3/4 of the events and sets the watermark; almost all
+    * of batch 2's held-back quarter is then late. The twin applies the
+    * same drop and finalize predicates, so the emitted windows certify
+    * both the late-row drop and the append-mode finalization boundary.
     */
   def streamWindow(spark: SparkSession, dir: String): DataFrame = {
     import TpchGeo.{px, py}
-    val tag = s"qsw_${System.nanoTime()}"
-    val inDir = java.nio.file.Files.createTempDirectory(tag).toString
-    val ckpt = java.nio.file.Files.createTempDirectory(s"${tag}_c").toString
     val ents = load(spark, dir, "events").select(
-      col("event_id"), col("ts").as("warc_ts"),
+      col("event_id"), col("ts").cast("timestamp").as("warc_ts"),
       px(col("event_id")).as("x"), py(col("event_id")).as("y"))
-    ents.where(col("event_id") % 4 =!= 0).drop("event_id")
-      .write.mode("overwrite").parquet(inDir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("warc_ts",
-        org.apache.spark.sql.types.TimestampType, nullable = false),
-      org.apache.spark.sql.types.StructField("x",
-        org.apache.spark.sql.types.DoubleType, nullable = false),
-      org.apache.spark.sql.types.StructField("y",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      val stream = spark.readStream.schema(schema).parquet(inDir)
-        .withColumn("cell",
-          graft.functions.SpatialFunctions.stCell(Queries.grid)(
-            col("x"), col("y")))
-      q = graft.streaming.StreamOps.cellCounts(stream, "1 hour", "2 hours")
-        .writeStream.format("memory").queryName(tag)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      q.processAllAvailable() // micro-batch 1: sets watermark = max_ts - 2h
-      // micro-batch 2: the held-back quarter — rows in windows the
-      // watermark already closed must be dropped, and batch 2's commit
-      // finalizes + emits every window with end <= watermark
-      ents.where(col("event_id") % 4 === 0).drop("event_id")
-        .write.mode("append").parquet(inDir)
-      q.processAllAvailable()
-      graft.streaming.StreamMetrics.record(q)
-      q.stop()
-      val out = spark.table(tag).orderBy("win_start", "cell")
-      val rows = out.collect().toSeq
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), out.schema)
-    } finally {
-      if (q != null && q.isActive) q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-      if (spark.catalog.tableExists(tag)) spark.catalog.dropTempView(tag)
-      rmrfTemp(inDir); rmrfTemp(ckpt)
-    }
+    def part(keep: Column): DataFrame = ents.where(keep).drop("event_id")
+    replayToMemory(spark, "qsw", Seq(StreamShufflePartitions),
+        Seq(part(col("event_id") % 4 =!= 0) -> part(col("event_id") % 4 === 0)),
+        "win_start", "cell")(
+      s => StreamOps.cellCounts(
+        s.head.withColumn("cell", graft.functions.SpatialFunctions
+          .stCell(Queries.grid)(col("x"), col("y"))), "1 hour", "2 hours"))
   }
 
   /** The twin's two predicates mirror the engine exactly: (1) a batch-2
@@ -1471,57 +1331,24 @@ object PipelineQueries {
        |ORDER BY win_start, cell""".stripMargin
   }
 
-  /** FOURTH streaming hard signal — the serving loop end-to-end: customer
-    * points stream in two REAL micro-batches into the persisted
-    * generational index (`StreamOps.indexSink`: batch 0 bulk-builds,
-    * batch 1 appends as generation 1), and the answer is served from the
-    * STORE by `IndexStore.rangeQuery` — so a green row certifies
-    * stream-driven index maintenance (ingest → index → serve), not just
-    * stream transforms. The DuckDB twin is the all-points range query.
+  /** Ingest → index → serve: customer points stream in two micro-batches
+    * into the persisted generational store ([[StreamOps.indexSink]]: batch
+    * 0 bulk-builds, batch 1 appends generation 1), and the answer is the
+    * STORE's `IndexStore.rangeQuery`, not the stream's output.
     */
   def streamIndex(spark: SparkSession, dir: String): DataFrame = {
-    val tag = s"qsi_${System.nanoTime()}"
-    val inDir = java.nio.file.Files.createTempDirectory(tag).toString
-    val ckpt = java.nio.file.Files.createTempDirectory(s"${tag}_c").toString
-    val root = java.nio.file.Files.createTempDirectory(s"${tag}_r").toString
     val pts = TpchGeo.points(load(spark, dir, "customer"), "c_custkey")
-    pts.where(col("id") % 2 === 0).write.mode("overwrite").parquet(inDir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("x",
-        org.apache.spark.sql.types.DoubleType, nullable = false),
-      org.apache.spark.sql.types.StructField("y",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      // nGroups = 1: group count is the kill/resume granularity knob, and
-      // this harness rebuilds a FRESH store per invocation — every group
-      // commit costs a write job + a lineage job + marker FS ops, so the
-      // 16 sequential commits of the nGroups=8 default (and still the 4 of
-      // round 6's nGroups=2) were pure per-job overhead here. Kill/resume
-      // at real group granularity is pinned by CheckpointSpec at nGroups=8.
-      q = graft.streaming.StreamOps.indexSink(
-          spark.readStream.schema(schema).parquet(inDir),
-          Queries.grid, root, nGroups = 1)
-        .option("checkpointLocation", ckpt)
-        .start()
-      q.processAllAvailable() // micro-batch 0: bulk-build the base store
-      pts.where(col("id") % 2 =!= 0).write.mode("append").parquet(inDir)
-      q.processAllAvailable() // micro-batch 1: generational append
-      graft.streaming.StreamMetrics.record(q)
-      q.stop()
-      // serve from the STORE (generational view), not from the stream
-      val out = graft.engine.IndexStore.rangeQuery(spark, root, Queries.grid,
+    // nGroups = 1: groups are the kill/resume granularity, and each call
+    // builds a fresh store, where every group commit is a write job + a
+    // lineage job + marker FS ops of pure overhead. Kill/resume at real
+    // group granularity is pinned by CheckpointSpec at nGroups = 8.
+    replayStream(spark, "qsi", Nil,
+        Seq(pts.where(col("id") % 2 === 0) -> pts.where(col("id") % 2 =!= 0)))(
+      (s, r) => StreamOps.indexSink(s.head, Queries.grid, r.dir("store"),
+        nGroups = 1))(
+      r => IndexStore.rangeQuery(spark, r.dir("store"), Queries.grid,
         Queries.QB._1, Queries.QB._2, Queries.QB._3, Queries.QB._4)
-        .orderBy("id")
-      val rows = out.collect().toSeq
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), out.schema)
-    } finally {
-      if (q != null && q.isActive) q.stop()
-      rmrfTemp(inDir); rmrfTemp(ckpt); rmrfTemp(root)
-    }
+        .orderBy("id"))
   }
 
   val streamIndexSql: String = Queries.persistedRangeSql

@@ -4,10 +4,35 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.ColumnShim.{column, expression => e}
 
 /** The native Catalyst expressions of this package as `Column`s, one
-  * function each, so operator code never converts between Column and
-  * Expression itself (the [[OracleHash.polyHash31]] pattern).
+  * function each: the only module that converts between Column and
+  * Expression, so operator code never does.
   */
 object NativeFunctions {
+
+  /** Polynomial rolling hash of a string column: fold
+    * h = (h·31 + codepoint) mod P31 over the characters — evaluated by the
+    * native codegen expression [[StrHash31]] (one JVM loop per row; the
+    * equivalent per-character HOF chain costs a lambda dispatch and a
+    * single-char UTF8String per step). SQL twin:
+    * [[OracleHash.polyHash31Sql]].
+    */
+  def polyHash31(s: Column): Column = column(StrHash31(e(s)))
+
+  /** Whole minhash signature (array of `numPerms` 31-bit minima) computed
+    * by the native [[MinHashSig]] expression in one pass per document —
+    * bit-identical to exploding shingles and min-aggregating
+    * `OracleHash.affine(polyHash31(shingle))` per permutation.
+    */
+  def minhashSig(s: Column, n: Int, numPerms: Int): Column =
+    column(MinHashSig(e(s), n, numPerms))
+
+  /** Sorted-distinct 31-bit shingle-hash set per document (native
+    * [[ShingleHash31s]] expression) — the per-doc set representation the
+    * exact-Jaccard verify intersects; twin space is `SELECT DISTINCT
+    * doc_id, sh31` in the generated CTEs.
+    */
+  def shingleHash31s(s: Column, n: Int): Column =
+    column(ShingleHash31s(e(s), n))
 
   def winnowFps(text: Column, k: Int, w: Int): Column =
     column(WinnowFps(e(text), k, w))

@@ -22,7 +22,9 @@ import org.apache.spark.sql.functions._
   * h_{a,b}(x) = (a·x + b) mod p — the standard MinHash permutation
   * construction (Broder 1997; Carter–Wegman universal hashing). Constants
   * a, b are derived Scala-side from SplitMix64 and baked into both the
-  * Spark plan and the SQL text as literals.
+  * Spark plan and the SQL text as literals. The hashes that run as native
+  * expressions (`polyHash31`, `minhashSig`, `shingleHash31s`) are
+  * [[NativeFunctions]]; their SQL twins stay here.
   */
 object OracleHash {
 
@@ -53,35 +55,7 @@ object OracleHash {
 
   // -------------------------------------------------- 31-bit string hash
 
-  /** Polynomial rolling hash of a string column: fold
-    * h = (h·31 + codepoint) mod P31 over the characters — evaluated by the
-    * native codegen expression [[StrHash31]] (one JVM loop per row; the
-    * equivalent per-character HOF chain costs a lambda dispatch and a
-    * single-char UTF8String per step).
-    */
-  def polyHash31(s: Column): Column =
-    org.apache.spark.sql.graft.ColumnShim.column(
-      StrHash31(org.apache.spark.sql.graft.ColumnShim.expression(s)))
-
-  /** Whole minhash signature (array of `numPerms` 31-bit minima) computed
-    * by the native [[MinHashSig]] expression in one pass per document —
-    * bit-identical to exploding shingles and min-aggregating
-    * `affine(polyHash31(shingle))` per permutation.
-    */
-  def minhashSig(s: Column, n: Int, numPerms: Int): Column =
-    org.apache.spark.sql.graft.ColumnShim.column(
-      MinHashSig(org.apache.spark.sql.graft.ColumnShim.expression(s), n, numPerms))
-
-  /** Sorted-distinct 31-bit shingle-hash set per document (native
-    * [[ShingleHash31s]] expression) — the per-doc set representation the
-    * exact-Jaccard verify intersects; twin space is `SELECT DISTINCT
-    * doc_id, sh31` in the generated CTEs.
-    */
-  def shingleHash31s(s: Column, n: Int): Column =
-    org.apache.spark.sql.graft.ColumnShim.column(
-      ShingleHash31s(org.apache.spark.sql.graft.ColumnShim.expression(s), n))
-
-  /** DuckDB twin of [[polyHash31]]. */
+  /** DuckDB twin of [[NativeFunctions.polyHash31]]. */
   def polyHash31Sql(s: String): String =
     s"list_reduce(list_prepend(0::BIGINT, list_transform(string_split($s, ''), " +
       s"c -> ascii(c)::BIGINT)), (h, c) -> (h * 31 + c) % $P31)"

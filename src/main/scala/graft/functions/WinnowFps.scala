@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Semantics are bit-identical to the exploded form and to the DuckDB
   * twin (`PipelineQueries.fingerprintsSql`):
-  *   - gram hash = OracleHash polyHash31 of each k-codepoint substring
+  *   - gram hash = NativeFunctions.polyHash31 of each k-codepoint substring
   *     (h = fold (h·31 + cp) mod 2^31-1 — [[StrHash31]]'s codepoint walk),
   *     computed here as a rolling hash: subtracting the leading
   *     codepoint's 31^(k-1) term mod p is EXACT modular arithmetic, so

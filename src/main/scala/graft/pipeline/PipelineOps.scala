@@ -160,7 +160,7 @@ object PipelineOps {
     val sh = docs.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
       .where(size(toks) >= n) // the shingles() short-doc gate
       .select(col("doc_id"),
-        graft.functions.OracleHash.shingleHash31s(col("text"), n).as("hs"))
+        shingleHash31s(col("text"), n).as("hs"))
     // candidate pairs join the per-doc arrays; |sh| ≤ 2·|cand| docs, so
     // Catalyst broadcasts the sides AQE sizes as small — and at any scale
     // these are plain equi-joins on doc id, never on shingles
@@ -469,7 +469,7 @@ object PipelineOps {
     def grams(df: DataFrame) = df
       .where(size(split(col("text"), " ")) >= n) // the shingles() short-doc gate
       .select(col("doc_id"),
-        graft.functions.OracleHash.shingleHash31s(col("text"), n).as("hs"))
+        shingleHash31s(col("text"), n).as("hs"))
     val evalGrams = grams(evalSet)
       .select(explode(col("hs")).as("sh31")).distinct()
     grams(corpus)
@@ -713,9 +713,8 @@ object PipelineOps {
     */
   def hashSample(docs: DataFrame, rates: Map[String, Int], defaultRate: Int,
       denom: Int = 100): DataFrame = {
-    import graft.functions.OracleHash
     val key = concat(col("lang"), lit(":"), col("doc_id").cast("string"))
-    val slot = pmod(OracleHash.polyHash31(key), lit(denom.toLong))
+    val slot = pmod(polyHash31(key), lit(denom.toLong))
     val rate = rates.toSeq.sortBy(_._1).foldRight(lit(defaultRate.toLong)) {
       case ((l, r), els) => when(col("lang") === l, lit(r.toLong)).otherwise(els)
     }
@@ -759,7 +758,7 @@ object PipelineOps {
     // universal family (a bijection on the field) to scramble position;
     // mod-100 slot tests (hashSample) read LOW digits and don't need it
     val slot = OracleHash.affine(
-      OracleHash.polyHash31(concat(lit("bal:"), col("doc_id").cast("string"))),
+      polyHash31(concat(lit("bal:"), col("doc_id").cast("string"))),
       OracleHash.permA(97), OracleHash.permB(97))
     docs
       .join(broadcast(counts), "lang")
@@ -794,7 +793,6 @@ object PipelineOps {
     * duplicated across 30% of docs).
     */
   def chunkDedup(docs: DataFrame, w: Int): DataFrame = {
-    import graft.functions.OracleHash
     val chunks = docs
       .withColumn("ws", split(col("text"), " "))
       .withColumn("nc", expr(s"(size(ws) + ${w - 1}) div $w"))
@@ -802,7 +800,7 @@ object PipelineOps {
         s"transform(sequence(0, nc - 1), " +
           s"i -> array_join(slice(ws, i * $w + 1, $w), ' '))")))
       .select(col("doc_id"), col("nc"), col("pos"),
-        OracleHash.polyHash31(col("col")).as("ch"))
+        polyHash31(col("col")).as("ch"))
     chunks
       // keeper per chunk = lexicographic min of (doc_id, pos) — identical
       // to the rn=1 row of ROW_NUMBER() OVER (PARTITION BY ch ORDER BY
@@ -929,7 +927,6 @@ object PipelineOps {
   val EmailRe = "[a-z0-9._]+@[a-z0-9]+\\.[a-z]+"
   val PhoneRe = "[0-9]{3}-[0-9]{4}"
   def piiScrub(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    import graft.functions.OracleHash
     val red = regexp_replace(
       regexp_replace(col(textCol), EmailRe, "<EMAIL>"),
       PhoneRe, "<PHONE>")
@@ -939,7 +936,7 @@ object PipelineOps {
       size(regexp_extract_all(col(textCol), lit(PhoneRe), lit(0)))
         .cast("long").as("n_phones"),
       length(red).cast("long").as("n_chars_red"),
-      OracleHash.polyHash31(red).as("red_hash"))
+      polyHash31(red).as("red_hash"))
   }
 
   /** Interval (range) join — match fact rows to every interval containing

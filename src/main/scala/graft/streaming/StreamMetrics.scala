@@ -3,15 +3,16 @@ package graft.streaming
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Operator-vs-harness cost split for the streaming benchmark records:
-  * a `q_stream_*` SparkEntry query's wall time is dominated by its test
-  * harness (temp-dir setup, file-source listing, `processAllAvailable`
-  * polling, memory-sink collect) — ~14 s of a 64 s round-5 suite — while
-  * the OPERATOR cost is the micro-batch processing time Structured
-  * Streaming itself reports. Each stream harness records the sum of its
-  * query's `triggerExecution` durations here just before `stop()`, and
-  * Bench publishes it per query alongside the wall number, with the
-  * budget gate tracking the operator number (the thing a regression
-  * would move — harness cost is constant-per-invocation and scale-free).
+  * a `q_stream_*` SparkEntry query's wall time is dominated by the replay
+  * harness `PipelineQueries.replayStream` (temp-dir setup, file-source
+  * listing, `processAllAvailable` polling, memory-sink collect) — ~14 s of
+  * a 64 s round-5 suite — while the OPERATOR cost is the micro-batch
+  * processing time Structured Streaming itself reports. The harness
+  * records the sum of each query's `triggerExecution` durations here just
+  * before `stop()`, and Bench publishes it per query alongside the wall
+  * number, with the budget gate tracking the operator number (the thing
+  * a regression would move — harness cost is constant-per-invocation and
+  * scale-free).
   */
 object StreamMetrics {
 

@@ -88,13 +88,13 @@ object StreamOps {
   }
 
   /** Streaming exact dedup with EXPLICIT custom state
-    * (`flatMapGroupsWithState` over `KeyValueGroupedDataset`): key = the
-    * 128-bit content hash, state = the keeper url chosen when the hash was
-    * first seen. The first batch containing a hash emits exactly one row —
-    * the minimum-url copy, matching the batch keeper rule
-    * ([[graft.pipeline.PipelineOps.exactDupGroups]] keeps the min id) —
-    * and every later arrival of the same content, within or across
-    * micro-batches, is swallowed by the state lookup.
+    * (`flatMapGroupsWithState` over `KeyValueGroupedDataset`) on
+    * (doc_id, text) rows: key = the 128-bit content hash, state = the
+    * keeper id chosen when the hash was first seen. The first batch
+    * containing a hash emits exactly one row, the min-id copy (the batch
+    * keeper rule of [[graft.pipeline.PipelineOps.exactDupGroups]]); every
+    * later arrival of the same content, within or across micro-batches, is
+    * swallowed by the state lookup. Output (h, keeper, n_chars).
     *
     * Scale notes: this is the standard streaming-dedup design — state
     * lives in the per-partition state store (RocksDB/HDFS-backed on a real
@@ -103,33 +103,6 @@ object StreamOps {
     * semantics but not the keeper bookkeeping; the explicit GroupState
     * carries it, and a TTL (`GroupStateTimeout.ProcessingTimeTimeout` +
     * `setTimeoutDuration`) slots in where the retention window is bounded.
-    */
-  def dedupStream(spark: SparkSession, pages: DataFrame): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    pages
-      .select(col("url"), col("text"),
-        md5(col("text").cast("binary")).as("h"))
-      .as[(String, String, String)]
-      .groupByKey(_._3)
-      .flatMapGroupsWithState[String, (String, String, String)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (h: String, rows: Iterator[(String, String, String)],
-            state: GroupState[String]) =>
-          if (state.exists) Iterator.empty // content already kept
-          else {
-            val keeper = rows.minBy(_._1) // deterministic: min url wins
-            state.update(keeper._1)
-            Iterator((h, keeper._1, keeper._2))
-          }
-      }
-      .toDF("h", "keeper_url", "text")
-  }
-
-  /** [[dedupStream]] keyed by numeric document id (the documents-table
-    * shape): same state design — key = 128-bit content hash, state = the
-    * keeper id chosen when the hash was first seen, min-id rule within the
-    * first batch, later arrivals swallowed. Output (h, keeper, n_chars).
     */
   def dedupStreamDocs(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._

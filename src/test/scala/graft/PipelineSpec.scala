@@ -55,6 +55,7 @@ class PipelineSpec extends AnyFunSuite {
   test("MinHashSig native expression == exploded shingle min-agg, " +
     "bit-for-bit, incl. multi-byte and consecutive-space docs") {
     import graft.functions.OracleHash._
+    import graft.functions.NativeFunctions._
     val n = 3; val numPerms = 32
     // fixture docs PLUS adversarial rows: multi-byte codepoints, doubled
     // spaces (empty tokens), leading/trailing spaces
@@ -88,6 +89,7 @@ class PipelineSpec extends AnyFunSuite {
   test("ShingleHash31s native expression == sorted-distinct exploded " +
     "shingle hashes, bit-for-bit, incl. multi-byte and empty-token docs") {
     import graft.functions.OracleHash._
+    import graft.functions.NativeFunctions._
     val n = 3
     val extra = spark.createDataFrame(Seq(
       (100001L, "héllo wörld żółć 漢字 spark spark join"),
@@ -139,7 +141,7 @@ class PipelineSpec extends AnyFunSuite {
   test("StrHash31 native expression == HOF fold == local codepoint fold " +
     "(incl. non-BMP), inside whole-stage codegen") {
     import spark.implicits._
-    import graft.functions.{OracleHash, StrHash31}
+    import graft.functions.{NativeFunctions, OracleHash, StrHash31}
     val fixtures = Seq("abc", "", "key agg row", "a😀b", "日本語 text")
       .toDF("s")
     // the column-API fold StrHash31 replaced (kept here as the semantic twin)
@@ -147,7 +149,7 @@ class PipelineSpec extends AnyFunSuite {
       filter(split(col("s"), ""), c => length(c) > 0),
       lit(0L), (h, c) => (h * lit(31L) + ascii(c)) % lit(OracleHash.P31))
     val rows = fixtures
-      .select(col("s"), OracleHash.polyHash31(col("s")).as("native"),
+      .select(col("s"), NativeFunctions.polyHash31(col("s")).as("native"),
         hof.as("hofv"))
       .collect()
     rows.foreach { r =>
@@ -164,7 +166,7 @@ class PipelineSpec extends AnyFunSuite {
       org.apache.spark.unsafe.types.UTF8String.fromString("abc")) == 96354L)
     // stays in whole-stage codegen on a real scan (a local Seq collapses
     // to LocalTableScan with interpreted eval — not the hot path)
-    val plan = docs.select(OracleHash.polyHash31(col("text")))
+    val plan = docs.select(NativeFunctions.polyHash31(col("text")))
       .queryExecution.executedPlan.toString
     // "*(n)" prefixes mark operators inside a WholeStageCodegen stage
     assert(plan.contains("*(1) Project [strhash31"), plan)
@@ -271,7 +273,7 @@ class PipelineSpec extends AnyFunSuite {
     val sp = spark
     import sp.implicits._
     import org.apache.spark.sql.expressions.Window
-    import graft.functions.OracleHash
+    import graft.functions.NativeFunctions
     val (k, w) = (16, 8)
     // the sf docs corpus plus adversarial rows: multibyte codepoints,
     // exactly-one-window length, one-below-a-window length, repeats
@@ -290,7 +292,7 @@ class PipelineSpec extends AnyFunSuite {
       .select(col("doc_id"),
         posexplode(transform(
           sequence(lit(1), length(col("text")) - lit(k - 1)),
-          i => OracleHash.polyHash31(col("text").substr(i, lit(k))))))
+          i => NativeFunctions.polyHash31(col("text").substr(i, lit(k))))))
       .withColumnRenamed("pos", "p").withColumnRenamed("col", "h")
     val win = Window.partitionBy("doc_id").orderBy("p")
       .rowsBetween(Window.currentRow, w - 1)

@@ -99,45 +99,72 @@ class StreamSpec extends AnyFunSuite {
   }
 
   test("streaming dedup (flatMapGroupsWithState): one keeper per distinct " +
-    "text across micro-batches, min-url rule, text byte-identical") {
+    "text across micro-batches, min-id rule, n_chars == keeper code points") {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_d").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_dc").toString
-    val base = PagesGen.pages(spark, 300, skewShare = 0.3).toDF()
-      .localCheckpoint(true)
-    // batch 1: originals + 60 in-batch duplicates under LARGER urls (the
-    // min-url keeper rule must pick the originals)
-    val dupIn1 = base.limit(60)
-      .withColumn("url", concat(lit("zzz-dup1-"), col("url")))
-    base.unionByName(dupIn1).write.mode("overwrite").parquet(dir)
+    val base = spark.range(300)
+      .map(id => (id, PagesGen.pageFor(id, skewShare = 0.3).text))
+      .toDF("doc_id", "text").localCheckpoint(true)
+    // batch 1: originals + 60 in-batch duplicates under LARGER ids (the
+    // min-id keeper rule must pick the originals)
+    val dupIn1 = base.limit(60).withColumn("doc_id", col("doc_id") + 1000L)
+    // batch 2: cross-batch duplicates under SMALLER ids — they arrive after
+    // the state committed, so they must emit NOTHING (first-seen wins;
+    // state, not a per-batch min, decides)
+    val dupIn2 = base.limit(120).withColumn("doc_id", col("doc_id") - 1000L)
+    val got = PipelineQueries.replayToMemory(spark, "dedup_spec", Nil,
+        Seq(base.unionByName(dupIn1) -> dupIn2), "h")(
+      s => StreamOps.dedupStreamDocs(spark, s.head))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val textOf = base.as[(Long, String)].collect().toMap
+    // the batch oracle: min original id per distinct text
+    val wantKeepers = textOf.groupBy(_._2).view.mapValues(_.keys.min).toMap
+    // one keeper per distinct content, one row per content hash
+    assert(got.length == wantKeepers.size)
+    assert(got.map(_._1).distinct.length == got.length)
+    // every keeper is an original id (no dup1/dup2 id ever won) and
+    // exactly the batch oracle's choice for its text
+    assert(got.map(_._2).toSet == wantKeepers.values.toSet)
+    got.foreach { case (_, k, n) =>
+      val t = textOf(k)
+      assert(wantKeepers(t) == k)
+      assert(n == t.codePointCount(0, t.length).toLong)
+    }
+  }
 
-    val q = StreamOps.dedupStream(spark,
-        spark.readStream.schema(StreamOps.pagesSchema).parquet(dir))
-      .writeStream.format("memory").queryName("dedup_stream")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    // batch 2: cross-batch duplicates under lexicographically SMALLER urls
-    // — they arrive after the state committed, so they must emit NOTHING
-    // (first-seen wins; state, not per-batch min, decides)
-    base.limit(120)
-      .withColumn("url", concat(lit("aaa-dup2-"), col("url")))
-      .write.mode("append").parquet(dir)
-    q.processAllAvailable()
-    q.stop()
-
-    val got = spark.table("dedup_stream").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
-    val wantTexts = base.select("text").distinct().as[String].collect().toSet
-    assert(got.length == wantTexts.size) // one keeper per distinct content
-    assert(got.map(_._3).toSet == wantTexts) // text travels byte-identical
-    // every keeper is an original url (no dup1/dup2 url ever won)
-    assert(got.forall(r => !r._2.startsWith("zzz-") && !r._2.startsWith("aaa-")))
-    // and the keeper is exactly the batch oracle's choice (min url per text)
-    val wantKeepers = base.groupBy("text").agg(min("url").as("u"))
-      .as[(String, String)].collect().toMap
-    got.foreach { case (_, u, t) => assert(wantKeepers(t) == u) }
+  test("replay harness teardown: a batch-2 failure reaches the caller and " +
+    "leaves no query, conf override, memory table or temp dir behind") {
+    spark.sparkContext.setLogLevel("ERROR")
+    import spark.implicits._
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled")
+    val confBefore = keys.map(k => k -> spark.conf.get(k))
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def probeDirs(): Set[String] =
+      tmp.listFiles().map(_.getName).filter(_.startsWith("teardown_probe")).toSet
+    val dirsBefore = probeDirs()
+    var seen: PipelineQueries.Replay = null
+    val err = intercept[Exception] {
+      PipelineQueries.replayStream(spark, "teardown_probe",
+          Seq(keys(0) -> "3", keys(1) -> "false"),
+          Seq(Seq(1L, 2L).toDF("v") -> Seq(3L).toDF("v")))(
+        (s, r) => {
+          seen = r
+          s.head.as[Long].map { v => require(v < 3L, s"poison row $v"); v }
+            .toDF("v").writeStream.format("memory").queryName(r.name)
+            .outputMode("append")
+        })(
+        r => spark.table(r.name))
+    }
+    // the operator's own failure, not a teardown error, reaches the caller
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("poison row 3")), err)
+    assert(seen != null, "the failure must come after the stream started")
+    assert(spark.streams.active.isEmpty)
+    assert(keys.map(k => k -> spark.conf.get(k)) == confBefore)
+    assert(!spark.catalog.tableExists(seen.name))
+    assert(!new java.io.File(seen.root).exists())
+    assert(probeDirs() == dirsBefore)
   }
 
   test("streaming sessionization (flatMapGroupsWithState): closed sessions " +
