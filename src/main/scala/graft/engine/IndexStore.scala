@@ -154,7 +154,7 @@ object IndexStore {
 
   /** Build (or resume building) the persisted index under `root`. Each
     * group's slice bulk-loads one packed tree per cell inside mapGroups —
-    * the per-partition STR build — and commits atomically via Checkpoint,
+    * the per-partition OMT build — and commits atomically via Checkpoint,
     * its manifest collected by the same job. Returns the base stage's
     * `(cell, n, tree)` table.
     */
@@ -349,7 +349,7 @@ object IndexStore {
     *
     * Reference analog: bulk-then-insert (rstar/src/rtree.rs:1307-1371) —
     * here the insert unit is the cell, and the rebuilt cell tree is the
-    * same packed STR structure the base build produces, so probe paths
+    * same packed OMT structure the base build produces, so probe paths
     * are generation-oblivious.
     */
   def append(spark: SparkSession, points: Dataset[PointRow], grid: CellGrid,

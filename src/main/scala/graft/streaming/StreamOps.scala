@@ -63,10 +63,12 @@ object StreamOps {
   /** Streaming K1 against a bounded static layer: exact 1-NN of every
     * streamed entity, probing a broadcast packed tree ([[graft.index.PointRTree2D]])
     * inside a deterministic typed map — the streaming analog of the
-    * reference's `nearest_neighbor` loop. For layers too large to
-    * broadcast, route the stream through micro-batch `foreachBatch` into
-    * the grid kNN join instead; this operator is the low-latency
-    * bounded-layer path (POI layers, beacon sets).
+    * reference's `nearest_neighbor` loop. The nearest is the least by
+    * (d2, id), [[graft.engine.SpatialOps.knnJoinBroadcast]]'s tiebreak,
+    * so the answer does not depend on the tree's point order. For layers
+    * too large to broadcast, route the stream through micro-batch
+    * `foreachBatch` into the grid kNN join instead; this operator is the
+    * low-latency bounded-layer path (POI layers, beacon sets).
     */
   def nnStream(spark: SparkSession, entities: DataFrame,
       ids: Array[Long], xs: Array[Double], ys: Array[Double]): DataFrame = {
@@ -77,10 +79,17 @@ object StreamOps {
       .as[(String, Double, Double)]
       .map { case (url, x, y) =>
         val t = treeB.value
+        var found = false
         var bestId = -1L
         var bestD2 = Double.MaxValue
-        t.nearestK(x, y, 1, false) { (p, d2) =>
-          bestId = t.ids(p); bestD2 = d2
+        // every point tied at the minimum comes back; keep the least
+        // (d2, id) in Double.compare order, knnJoinBroadcast's tiebreak
+        t.nearestK(x, y, 1, keepTies = true) { (p, d2) =>
+          val id = t.ids(p)
+          val c = java.lang.Double.compare(d2, bestD2)
+          if (!found || c < 0 || (c == 0 && id < bestId)) {
+            bestId = id; bestD2 = d2; found = true
+          }
         }
         (url, x, y, bestId, bestD2)
       }

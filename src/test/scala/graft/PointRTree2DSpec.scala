@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.engine.IndexStore
 import graft.geom.Pt
 import graft.index.PointRTree2D
 
@@ -19,7 +20,7 @@ class PointRTree2DSpec extends AnyFunSuite {
   private val Q = points(200, seed = 22)
   private lazy val T = build(P)
 
-  test("STR order preserves the exact multiset") {
+  test("OMT order preserves the exact multiset") {
     assert(T.size == 3000)
     assert(T.ids.sorted.toSeq == (0L until 3000L))
     val coords = T.ids.zip(T.xs.zip(T.ys)).toMap
@@ -98,5 +99,54 @@ class PointRTree2DSpec extends AnyFunSuite {
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
     t.nearestK(0.0, 0.0, 5)((p, _) => got += t.ids(p))
     assert(got.size == 5)
+  }
+
+  test("a tree serialized by the earlier STR build reads back and answers " +
+    "box, radius and kNN queries as brute force") {
+    import PointRTree2DPropertySpec.{knnAgrees, probe, sameMultiset}
+    // Fixture point_tree_2000.bin: IndexStore.treeBytes of
+    // PointRTree2D.build(ids = 0 until 2000, xs, ys) over `fixture` below,
+    // written by the STR build (sorted x-slabs, y-sorted within a slab)
+    // that the OMT build replaced.
+    val in = getClass.getResourceAsStream("/graft/point_tree_2000.bin")
+    val t = try IndexStore.treeFrom(in.readAllBytes()) finally in.close()
+    val layer = PointRTree2DSpec.fixture
+    assert(sameMultiset(t, layer))
+    val r = new java.util.SplittableRandom(3L)
+    val qs = Seq.fill(200)((r.nextDouble() * 12 - 1, r.nextDouble() * 12 - 1)) ++
+      Seq.fill(100)((r.nextInt(22) * 0.25 - 0.5, r.nextInt(22) * 0.25 - 0.5))
+    qs.foreach { case (qx, qy) =>
+      val box = Array.newBuilder[Long]
+      t.foreachInBox(qx - 0.3, qy - 0.3, qx + 0.3, qy + 0.3)(p => box += t.ids(p))
+      assert(box.result().sorted.toSeq == layer.indices.filter { i =>
+        qx - 0.3 <= layer.xs(i) && layer.xs(i) <= qx + 0.3 &&
+          qy - 0.3 <= layer.ys(i) && layer.ys(i) <= qy + 0.3
+      }.map(_.toLong))
+      val near = Array.newBuilder[Long]
+      t.foreachWithin(qx, qy, 0.25)(p => near += t.ids(p))
+      assert(near.result().sorted.toSeq == layer.indices
+        .filter(i => layer.d2(i, qx, qy) <= 0.25).map(_.toLong))
+      for (k <- Seq(1, 4, 10); ties <- Seq(false, true))
+        assert(knnAgrees(layer, qx, qy, k, ties, probe(t, qx, qy, k, ties)),
+          s"kNN at ($qx, $qy), k = $k, keepTies = $ties")
+    }
+  }
+}
+
+object PointRTree2DSpec {
+  /** The stored fixture's 2 000 points: 1 500 uniform in [0, 10)², a
+    * 20 × 20 lattice of step 0.5 (exact ties) and 100 duplicates of its
+    * first 100 points.
+    */
+  def fixture: PointRTree2DPropertySpec.Layer = {
+    val r = new java.util.SplittableRandom(20261019L)
+    val xs = new Array[Double](2000)
+    val ys = new Array[Double](2000)
+    for (i <- 0 until 2000) {
+      if (i < 1500) { xs(i) = r.nextDouble() * 10; ys(i) = r.nextDouble() * 10 }
+      else if (i < 1900) { xs(i) = (i % 20) * 0.5; ys(i) = ((i / 20) % 20) * 0.5 }
+      else { xs(i) = xs(i - 400); ys(i) = ys(i - 400) }
+    }
+    PointRTree2DPropertySpec.Layer(PointRTree2DPropertySpec.Lattice, xs, ys)
   }
 }
