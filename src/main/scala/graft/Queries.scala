@@ -747,8 +747,9 @@ object Queries {
 
   /** kNN join answered from the PERSISTED index (the 100 TB cold-start
     * serving path): the same stored `(cell, n, tree BINARY)` table as
-    * [[persistedRange]], probed best-first per ring-cover cell WITHOUT any
-    * rebuild (IndexStore.knnQuery; reference analog serde-then-query,
+    * [[persistedRange]], each stored tree of the queries' count-bounded
+    * covers probed best-first once, WITHOUT any rebuild
+    * (IndexStore.knnQuery; reference analog serde-then-query,
     * rstar/src/rtree.rs:1289-1305). Bit-equal to q_knn_join on the same
     * inputs, so it shares that oracle.
     */

@@ -441,48 +441,64 @@ object IndexStore {
       .toDF("id", "x", "y")
   }
 
+  /** Upper bound on a [[knnQuery]] batch: the batch is collected and its
+    * covers are planned on the driver, so a larger one fails fast with a
+    * contract message instead of a driver OOM mid-collect. A serving batch
+    * is hundreds of queries; split a bigger one into batches.
+    */
+  val MaxKnnBatch: Long = 100L * 1000
+
   /** K1/J2 over the persisted index — the 100 TB cold-start serving path:
     * answer a kNN join by DESERIALIZING the stored per-cell trees and
     * probing them, never rebuilding (reference analog: serde round-trip
-    * then query, rstar/src/rtree.rs:1289-1305). [[SpatialOps.twoPassKnn]]
-    * over the stored `(cell, n)` histogram with [[SpatialOps.knnJoin]]'s
-    * (d2, id) cut; per-cell probes keep float-exact boundary ties, so the
+    * then query, rstar/src/rtree.rs:1289-1305). One pass: the driver
+    * collects the batch (at most [[MaxKnnBatch]] queries) and bounds each
+    * query's cover from the cell manifests alone
+    * ([[CellHistogram.knnCover]]); one scan of the covered cells probes
+    * each stored tree once, deserialized once for all the queries
+    * covering its cell, and [[SpatialOps.knnJoin]]'s (d2, id) cut ranks
+    * the hits. Per-cell probes keep float-exact boundary ties, so the
     * output is bit-equal to the in-memory kNN join on the same inputs.
-    *
-    * Each probe pass groups its candidate queries BY CELL before touching
-    * the store, so every stored tree is deserialized at most once per
-    * pass regardless of how many queries hit it. The histogram comes from
-    * the cell manifests on the driver, and each pass scans the store view
-    * afresh (a parquet read, no materialized copy).
     */
   def knnQuery(spark: SparkSession, root: String, grid: CellGrid,
       queries: Dataset[QueryRow], k: Int): DataFrame = {
     import spark.implicits._
     val owned = served(spark, root)
-    val store = view(spark, owned, _ => true)
-
-    def probe(cand: DataFrame): DataFrame =
-      cand.groupBy("cell")
-        .agg(collect_list(struct(col("qid"), col("qx"), col("qy"))).as("qs"))
-        .join(store, Seq("cell"))
-        .select(col("tree"), col("qs"))
-        .as[(Array[Byte], Seq[(Long, Double, Double)])]
-        .flatMap { case (bytes, qs) =>
-          val t = treeFrom(bytes) // once per (cell, pass), not per query
-          qs.iterator.flatMap { case (qid, qx, qy) =>
-            val buf = Vector.newBuilder[(Long, Long, Double, Double, Double)]
-            t.nearestK(qx, qy, k, keepTies = true) { (p, d2) =>
-              buf += ((qid, t.ids(p), d2, qx, qy))
+    val hist = CellHistogram.of(owned.flatMap(o => o.cells.zip(o.ns)))
+    val batch = SpatialOps.collectBounded(queries, MaxKnnBatch)(
+      s"knnQuery: query batch exceeds $MaxKnnBatch rows — the batch is " +
+        "planned on the driver; split it into smaller batches")
+    // each query under every cell of its cover, or under `everywhere`
+    // when that cover is every cell
+    val byCell = mutable.LongMap.empty[mutable.ArrayBuffer[QueryRow]]
+    val everywhere = mutable.ArrayBuffer.empty[QueryRow]
+    batch.foreach { q =>
+      val cover = hist.knnCover(grid, k)(q.x, q.y)
+      if (cover.length == hist.cells.length) everywhere += q
+      else cover.foreach(byCell.getOrElseUpdate(_, mutable.ArrayBuffer.empty) += q)
+    }
+    // Lifetime: as CellHistogram.broadcast's — the result's lazy plan holds
+    // it, so ContextCleaner frees it once that plan is unreferenced.
+    val planB = spark.sparkContext.broadcast(
+      (byCell.map { case (c, qs) => c -> qs.toArray }.toMap, everywhere.toArray))
+    val keep: Long => Boolean =
+      if (everywhere.nonEmpty) _ => true else byCell.contains
+    val hits = view(spark, owned, keep).select("cell", "tree")
+      .as[(Long, Array[Byte])]
+      .flatMap { case (cell, bytes) =>
+        val (cellQs, allQs) = planB.value
+        val t = treeFrom(bytes) // once per stored tree, for all its queries
+        (cellQs.getOrElse(cell, Array.empty[QueryRow]) ++ allQs).iterator
+          .flatMap { q =>
+            val buf = Vector.newBuilder[(Long, Long, Double)]
+            t.nearestK(q.x, q.y, k, keepTies = true) { (i, d2) =>
+              buf += ((q.qid, t.ids(i), d2))
             }
             buf.result()
           }
-        }
-        .toDF("qid", "id", "d2", "qx", "qy")
-
-    SpatialOps.twoPassKnn(
-      queries.select(col("qid"), col("x").as("qx"), col("y").as("qy")),
-      CellHistogram.of(owned.flatMap(o => o.cells.zip(o.ns))), grid, k)(
-      probe, SpatialOps.pointCut(k, keepTies = false))
+      }
+      .toDF("qid", "id", "d2")
+    SpatialOps.pointCut(k, keepTies = false)(hits)
       .select(col("qid"), col("id"), col("d2"), col("rn"))
   }
 

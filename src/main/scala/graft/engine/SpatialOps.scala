@@ -89,21 +89,26 @@ object SpatialOps {
     */
   val MaxBroadcastLayerRows: Long = 10L * 1000 * 1000
 
-  /** Collect a BOUNDED layer in one pass: the plan is capped at
-    * MaxBroadcastLayerRows + 1 rows via `limit`, so an over-bound layer
-    * fails fast on the contract (never a driver OOM mid-collect), and the
-    * collected rows themselves feed the tree build — the layer's lineage
-    * executes exactly once per broadcast-join call, not once for a guard
-    * count and again for the collect.
+  /** Collect at most `cap` rows in one pass: the plan is capped at
+    * `cap + 1` rows via `limit`, so an over-cap input fails fast with the
+    * `overCap` contract message (never a driver OOM mid-collect), and the
+    * collected rows themselves are the result — the input's lineage
+    * executes exactly once, not once for a guard count and again for the
+    * collect.
     */
-  private def collectBounded[T](ds: Dataset[T], op: String): Array[T] = {
-    val rows = ds.limit(MaxBroadcastLayerRows.toInt + 1).collect()
-    require(rows.length <= MaxBroadcastLayerRows,
+  private[engine] def collectBounded[T](ds: Dataset[T], cap: Long)(
+      overCap: => String): Array[T] = {
+    val rows = ds.limit(cap.toInt + 1).collect()
+    require(rows.length <= cap, overCap)
+    rows
+  }
+
+  /** A broadcast join's layer, collected under [[MaxBroadcastLayerRows]]. */
+  private def collectLayer[T](ds: Dataset[T], op: String): Array[T] =
+    collectBounded(ds, MaxBroadcastLayerRows)(
       s"$op: layer exceeds $MaxBroadcastLayerRows rows — the broadcast " +
         "path is for BOUNDED layers only; use the grid shuffle plan for " +
         "layers this size")
-    rows
-  }
 
   /** The schema of an RDD of fixed-width UnsafeRows: no column is null. */
   private def primitiveSchema(fields: (String, DataType)*): StructType =
@@ -123,13 +128,15 @@ object SpatialOps {
   def intersectionJoinBroadcast(left: DataFrame, right: DataFrame): DataFrame = {
     val spark = left.sparkSession
     import spark.implicits._
-    val rects = collectBounded(
+    val rects = collectLayer(
       right.select("id", "minX", "minY", "maxX", "maxY")
         .as[(Long, Double, Double, Double, Double)],
       "intersectionJoinBroadcast")
     val entries = rects.map { case (id, x0, y0, x1, y1) =>
       Entry(AABB.of2d(x0, y0, x1, y1), id)
     }
+    // Lifetime: as CellHistogram.broadcast's — the result's lazy plan holds
+    // it, so ContextCleaner frees it once that plan is unreferenced.
     val treeB = spark.sparkContext.broadcast(
       new LocalRTree[Long](2, 40, 1).bulkLoad(entries))
     val l = left.select("id", "minX", "minY", "maxX", "maxY")
@@ -201,7 +208,9 @@ object SpatialOps {
     // bounded-layer contract: the caller asserts the layer fits in memory
     // (the 100 TB analog broadcasts exactly this much) — guarded so misuse
     // fails fast with the contract message, not a driver OOM mid-collect
-    val pts = collectBounded(data, "knnJoinBroadcast")
+    val pts = collectLayer(data, "knnJoinBroadcast")
+    // Lifetime: as CellHistogram.broadcast's — the result's lazy plan holds
+    // it, so ContextCleaner frees it once that plan is unreferenced.
     val treeB = spark.sparkContext.broadcast(graft.index.PointRTree2D.build(
       pts.map(_.id), pts.map(_.x), pts.map(_.y)))
     val q = queries.toDF().select("qid", "x", "y")
@@ -759,6 +768,8 @@ object SpatialOps {
     val spark = base.sparkSession
     import spark.implicits._
     val cover = grid.cover(q).toSet
+    // Lifetime: as CellHistogram.broadcast's — the result's lazy plan holds
+    // it, so ContextCleaner frees it once that plan is unreferenced.
     val coverB = spark.sparkContext.broadcast(cover)
     val tagged = base.map(p => (grid.cellId(p.x, p.y), p.id, p.x, p.y, false))
       .union(batch.map(p => (grid.cellId(p.x, p.y), p.id, p.x, p.y, true)))

@@ -73,6 +73,9 @@ object StreamOps {
   def nnStream(spark: SparkSession, entities: DataFrame,
       ids: Array[Long], xs: Array[Double], ys: Array[Double]): DataFrame = {
     import spark.implicits._
+    // Lifetime: captured by the streaming plan, which every micro-batch of
+    // every query started on it runs again, so never destroyed eagerly;
+    // ContextCleaner frees it once that plan is unreferenced.
     val treeB = spark.sparkContext.broadcast(
       graft.index.PointRTree2D.build(ids, xs, ys))
     entities.select(col("url"), col("x"), col("y"))

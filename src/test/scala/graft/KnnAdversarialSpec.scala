@@ -13,8 +13,8 @@ import graft.index.{CellGrid, CellGridN}
   * adversarial fixture: the whole layer in ONE grid cell (the ring pass
   * must cross many empty rings), exact-duplicate points (ties at the k-th
   * distance), queries exactly on cell borders and corners or outside the
-  * domain, and k larger than the layer; the n-D join gets the same
-  * fixture at z = 0. Results must agree row for row — ids, bit-exact d2,
+  * domain, out-of-domain points clamped into a query's border cell, and
+  * k larger than the layer; the n-D join gets the same fixture at z = 0. Results must agree row for row — ids, bit-exact d2,
   * rank and column types.
   */
 class KnnAdversarialSpec extends AnyFunSuite {
@@ -39,7 +39,10 @@ class KnnAdversarialSpec extends AnyFunSuite {
     (4L, 10.0, 2.0), (5L, 10.0, 2.0),
     (6L, 0.0, 0.0), // on the cell's lower-left corner
     (7L, 6.0, 5.0), (8L, 4.0, 5.0), (9L, 5.0, 6.0),
-    (10L, 22.4, 11.2), (11L, 15.0, 7.5))
+    (10L, 22.4, 11.2), (11L, 15.0, 7.5),
+    // outside the domain: clamped into border cells far from their boxes
+    (12L, -500.0, 0.0), (13L, -500.0, 0.0), (14L, -500.0, 0.0),
+    (15L, -500.0, 0.0), (16L, 200.0, 95.0))
 
   private val queryPts = Seq(
     (0L, 5.0, 5.0),       // on the duplicates: four at d2 = 0
@@ -50,7 +53,8 @@ class KnnAdversarialSpec extends AnyFunSuite {
     (5L, 170.0, 80.0),    // far corner: many empty rings
     (6L, 180.0, 90.0),    // domain max, clamped
     (7L, 7.5, 3.5),       // six points tied at d2 = 8.5
-    (8L, -200.0, 0.0))    // outside the domain
+    (8L, -200.0, 0.0),    // outside the domain
+    (9L, -170.0, 0.0))    // its border cell holds 4 clamped points 330° off
 
   private def points = { val s = spark; import s.implicits._
     layer.map { case (id, x, y) => PointRow(id, x, y) }.toDS() }
@@ -190,6 +194,11 @@ class KnnAdversarialSpec extends AnyFunSuite {
       same(IndexStore.knnQuery(spark, root, grid, queries, 1), brutePoints(1))
       same(IndexStore.knnQuery(spark, root, grid, queries, 4), brutePoints(4))
       same(IndexStore.knnQuery(spark, root, grid, queries, 20), brutePoints(20))
+      val s = spark; import s.implicits._
+      val overCap = intercept[IllegalArgumentException](IndexStore.knnQuery(
+        spark, root, grid, spark.range(IndexStore.MaxKnnBatch + 1)
+          .map(QueryRow(_, 5.0, 5.0)), 1))
+      assert(overCap.getMessage.contains("query batch exceeds"))
     } finally {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(rm)
