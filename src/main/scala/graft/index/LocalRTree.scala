@@ -31,6 +31,11 @@ final case class Entry[T](env: AABB, value: T) extends LocalRTree.Node[T]
   *   - dual-tree intersection candidates (rstar/src/algorithm/
   *     intersection_iterator.rs:15-104).
   *
+  * Each query has one implementation, a walk over the node graph. The one
+  * exception is a frozen 2-D tree's [[LocalRTree.FlatMirror]], which serves
+  * exactly the engine's two hot probes, `foreachIntersecting` and the
+  * default-metric `nearestNeighborIter`; everything else walks the nodes.
+  *
   * Not thread-safe for mutation; queries are read-only and safe to share.
   */
 @SerialVersionUID(1L)
@@ -47,14 +52,15 @@ final class LocalRTree[T](
 
   private var root: Inner[T] = Inner.empty[T]
   private var cnt: Int = 0
-  // Frozen = built by bulkLoad and unmodified since: flat envelope caches
-  // are valid (see Inner.flatEnvs). Any mutation clears it; rebuild-based
+  // Frozen = built by bulkLoad and unmodified since: the only state in
+  // which the mirror may serve probes. Any mutation clears it; rebuild-based
   // removal re-freezes through bulkLoad.
   private var frozen: Boolean = false
 
-  /** Lazily-built SoA mirror of a frozen 2-D tree (see [[FlatMirror]]):
-    * the hot query paths run on flat primitive arrays instead of the node
-    * graph. Null when unavailable (mutated tree, n-dim, custom distance).
+  /** Lazily-built SoA mirror of a frozen 2-D tree (see [[FlatMirror]]). It
+    * answers only `foreachIntersecting` and the default-metric
+    * `nearestNeighborIter`; every other query walks the node graph. Null
+    * when unavailable (empty, mutated or not 2-D).
     */
   @transient private var mirrorCache: FlatMirror[T] = _
   private def mirror: FlatMirror[T] =
@@ -472,55 +478,25 @@ final class LocalRTree[T](
   /** Unordered scan of all elements (`iter`, rstar/src/rtree.rs:313-329). */
   def iterator: Iterator[Entry[T]] = select(_ => true, _ => true)
 
-  /** Internal-iteration (push-based) variant of `queryIntersecting` for hot
-    * probe loops — the reference's `_int` style
-    * (rstar/src/algorithm/iterators.rs:98-145, motivation rtree.rs:98-108):
-    * plain recursion, no iterator or stack allocation per probe.
+  /** Push-based `queryIntersecting` for the broadcast box probe — the
+    * reference's `_int` style (rstar/src/algorithm/iterators.rs:98-145,
+    * motivation rtree.rs:98-108). A frozen 2-D tree answers from the SoA
+    * mirror (plain recursion over primitive arrays, no allocation per
+    * probe); any other tree runs the selection iterator.
     */
   def foreachIntersecting(q: AABB)(f: Entry[T] => Unit): Unit = {
     val m = mirror
-    if (m != null) {
+    if (m != null)
       m.foreachIntersecting(q.lower(0), q.lower(1), q.upper(0), q.upper(1))(f)
-      return
-    }
-    val dims = if (cnt > 0) root.env.dims else 2
-    val useFlat = frozen
-    def walk(n: Inner[T]): Unit = {
-      val kids = n.children
-      val flat = if (useFlat) n.flatEnvs(dims) else null
-      val stride = 2 * dims
-      var i = 0
-      while (i < kids.length) {
-        val hit =
-          if (flat != null) flatIntersects(flat, i * stride, dims, q)
-          else q.intersects(kids(i).env)
-        if (hit) kids(i) match {
-          case e: Entry[T @unchecked] => f(e)
-          case in: Inner[T @unchecked] => walk(in)
-        }
-        i += 1
-      }
-    }
-    if (cnt > 0 && q.intersects(root.env)) walk(root)
+    else queryIntersecting(q).foreach(f)
   }
 
   /** FIRST element containing the point — `locate_at_point`
-    * (rstar/src/rtree.rs:760-800; the README.md:38-39 benchmark op):
-    * early-exit descent. Frozen 2-D trees answer from the SoA mirror
-    * (packed 4-compare envelope rejects, no per-probe allocation); the
-    * general path falls back to the lazy selection iterator.
+    * (rstar/src/rtree.rs:760-800): the lazy selection iterator stops at its
+    * first hit.
     */
-  def locateAtPoint(p: Array[Double]): Option[Entry[T]] = {
-    if (p.length == 2) {
-      val m = mirror
-      if (m != null) {
-        val i = m.locateAtPoint(p(0), p(1))
-        return if (i < 0) None else Some(m.entries(i))
-      }
-    }
-    val it = locateAllAtPoint(p)
-    if (it.hasNext) Some(it.next()) else None
-  }
+  def locateAtPoint(p: Array[Double]): Option[Entry[T]] =
+    locateAllAtPoint(p).nextOption()
 
   /** Membership test (`contains`, rstar/src/rtree.rs:870-892). */
   def containsEntry(e: Entry[T]): Boolean =
@@ -537,37 +513,19 @@ final class LocalRTree[T](
       p: Array[Double],
       dist: Entry[T] => Double = null): Option[(Entry[T], Double)] = {
     if (cnt == 0) return None
-    if (dist == null && p.length == 2) {
-      val m = mirror
-      if (m != null) {
-        val distOut = new Array[Double](1)
-        val i = m.nearest(p(0), p(1), distOut)
-        return if (i < 0) None else Some((m.entries(i), distOut(0)))
-      }
-    }
     val d = if (dist == null) (e: Entry[T]) => e.env.distance2(p) else dist
     val heap = new DistHeap[Node[T]](32)
     var smallestMinMax = Double.MaxValue
-    val dims = root.env.dims
-    val scratch = new Array[Double](dims)
-    val useFlat = frozen
     def pushChildren(inner: Inner[T]): Unit = {
       val kids = inner.children
-      val flat = if (useFlat) inner.flatEnvs(dims) else null
-      val stride = 2 * dims
       var i = 0
       while (i < kids.length) {
-        val dd =
-          if (flat != null) flatDistance2(flat, i * stride, dims, p)
-          else kids(i).env.distance2(p)
+        val dd = kids(i).env.distance2(p)
         if (dd <= smallestMinMax) {
           kids(i) match {
             case e: Entry[T @unchecked] => heap.enqueue(dd, e)
             case in: Inner[T @unchecked] =>
-              val mm =
-                if (flat != null)
-                  flatMinMaxDist2(flat, i * stride, dims, p, scratch)
-                else in.env.minMaxDist2(p)
+              val mm = in.env.minMaxDist2(p)
               if (mm < smallestMinMax) smallestMinMax = mm
               heap.enqueue(dd, in)
           }
@@ -596,7 +554,8 @@ final class LocalRTree[T](
     * (rstar/src/rtree.rs:1075-1122, algorithm nearest_neighbor.rs:56-158):
     * a min-heap mixing nodes (keyed by envelope lower-bound distance) and
     * elements (keyed by exact distance); a popped element is the next
-    * nearest.
+    * nearest. With the default envelope metric, a frozen 2-D tree streams
+    * from the SoA mirror (the engine's per-cell kNN probe).
     */
   def nearestNeighborIter(
       p: Array[Double],
@@ -609,23 +568,16 @@ final class LocalRTree[T](
         }
     }
     val d = if (dist == null) (e: Entry[T]) => e.env.distance2(p) else dist
-    val flatOk = frozen && dist == null
     new Iterator[(Entry[T], Double)] {
       private val heap = new DistHeap[Node[T]](32)
-      private val dims = if (cnt > 0) root.env.dims else 2
       if (cnt > 0) heap.enqueue(root.env.distance2(p), root)
 
       private def settle(): Unit = {
         while (heap.nonEmpty && !heap.headVal.isInstanceOf[Entry[_]]) {
-          val inner = heap.dequeue().asInstanceOf[Inner[T]]
-          val kids = inner.children
-          val flat = if (flatOk) inner.flatEnvs(dims) else null
-          val stride = 2 * dims
+          val kids = heap.dequeue().asInstanceOf[Inner[T]].children
           var i = 0
           while (i < kids.length) {
-            if (flat != null)
-              heap.enqueue(flatDistance2(flat, i * stride, dims, p), kids(i))
-            else kids(i) match {
+            kids(i) match {
               case e: Entry[T @unchecked] => heap.enqueue(d(e), e)
               case in: Inner[T @unchecked] =>
                 heap.enqueue(in.env.distance2(p), in)
@@ -789,12 +741,21 @@ final class LocalRTree[T](
         }
         val merged = AABB.empty(in.env.dims)
         in.children.foreach(c => merged.mergeInPlace(c.env))
-        require(merged == in.env,
+        require(sameBounds(merged.lower, in.env.lower) &&
+          sameBounds(merged.upper, in.env.upper),
           s"stale envelope: have ${in.env}, children merge to $merged")
         in.children.foreach(c => walk(c, depth + 1, isRoot = false))
     }
     walk(root, 0, isRoot = true)
   }
+
+  /** Bounds compare as numbers, as the reference's `assert_eq!` on `f64`
+    * does: insertion widens with `AABB.merged` (`math.min`/`math.max`, which
+    * order -0.0 below 0.0) while the fold keeps the first of tied bounds,
+    * so 0.0 and -0.0 both stand for one bound. NaN matches NaN.
+    */
+  private def sameBounds(a: Array[Double], b: Array[Double]): Boolean =
+    a.indices.forall(i => a(i) == b(i) || a(i).isNaN && b(i).isNaN)
 }
 
 object LocalRTree {
@@ -813,31 +774,6 @@ object LocalRTree {
       val e = AABB.empty(dims)
       children.foreach(c => e.mergeInPlace(c.env))
       env = e
-    }
-
-    /** Flat copy of the children's envelopes (lower then upper per child,
-      * stride 2·dims): hot query loops scan this sequentially instead of
-      * chasing Entry→AABB→array pointers — the JVM stand-in for the
-      * reference's inline envelopes. Only valid on frozen (bulk-loaded)
-      * trees; rebuilt lazily after deserialization (idempotent, so the
-      * benign publish race between reader threads is safe).
-      */
-    @transient private var flat: Array[Double] = _
-    def flatEnvs(dims: Int): Array[Double] = {
-      var f = flat
-      val want = children.length * 2 * dims
-      if (f == null || f.length != want) {
-        f = new Array[Double](want)
-        var i = 0
-        while (i < children.length) {
-          val e = children(i).env
-          System.arraycopy(e.lower, 0, f, i * 2 * dims, dims)
-          System.arraycopy(e.upper, 0, f, i * 2 * dims + dims, dims)
-          i += 1
-        }
-        flat = f
-      }
-      f
     }
   }
 
@@ -859,12 +795,17 @@ object LocalRTree {
 
   /** Whole-tree struct-of-arrays mirror of a FROZEN 2-D tree: per-level
     * flat envelope arrays plus contiguous child ranges (DFS order), so the
-    * NN/box hot loops touch only primitive arrays — no Node pattern
+    * engine's two hot probes touch only primitive arrays — no Node pattern
     * matches, no pointer chasing, no per-child megamorphic dispatch. The
     * same layout idea as [[PointRTree2D]], generalized to rectangle
     * entries and the bulk-load tree's variable fan-out. Built lazily on
     * first query, invalidated by any mutation (the `frozen` flag), and
     * @transient across serialization.
+    *
+    * It serves exactly two probes: the box walk `foreachIntersecting`
+    * (the broadcast intersection join) and the distance-ordered
+    * `nearestIter` (the per-cell rect and segment kNN). Every other query
+    * walks the node graph, so no query has a second implementation here.
     *
     * Level 0 = leaf parents (child ranges index `entries`); level
     * `levels-1` = root. Envelopes are (minX, minY, maxX, maxY) stride 4.
@@ -883,46 +824,12 @@ object LocalRTree {
       dx * dx + dy * dy
     }
 
-    /** 2-D MinMaxDist (Roussopoulos 1995): an upper bound on the distance
-      * to the nearest entry inside the box — used only for pruning, so any
-      * valid bound preserves exactness.
-      */
-    @inline private def minMaxDist2(
-        a: Array[Double], off: Int, px: Double, py: Double): Double = {
-      val cx = (a(off) + a(off + 2)) / 2
-      val cy = (a(off + 1) + a(off + 3)) / 2
-      val nearX = if (px <= cx) a(off) else a(off + 2)
-      val farX = if (px >= cx) a(off) else a(off + 2)
-      val nearY = if (py <= cy) a(off + 1) else a(off + 3)
-      val farY = if (py >= cy) a(off + 1) else a(off + 3)
-      val dxN = px - nearX; val dxF = px - farX
-      val dyN = py - nearY; val dyF = py - farY
-      val viaX = dxN * dxN + dyF * dyF
-      val viaY = dyN * dyN + dxF * dxF
-      math.min(viaX, viaY)
-    }
-
     private val top = levelEnvs.length - 1
     private val ENTRY = 1L << 62
 
-    /** Best-first heap seeded with the root; shared by 1-NN and the
-      * distance-ordered iterator. Entry keys are exact envelope distances,
-      * so the first entry popped is the nearest.
-      */
-    private def seedHeap(px: Double, py: Double): LongHeap = {
-      val heap = new LongHeap(64)
-      if (entries.length > 0)
-        heap.enqueue(boxDist2(levelEnvs(top), 0, px, py), top.toLong << 32)
-      heap
-    }
-
-    /** Enqueue a popped node's children. `prune` = MinMaxDist cut, valid
-      * ONLY for 1-NN (it discards anything provably farther than the
-      * nearest entry); the distance-ordered iterator must keep everything.
-      */
+    /** Enqueue a popped node's children, keyed by envelope distance. */
     @inline private def expand(heap: LongHeap, v: Long,
-        px: Double, py: Double, bound: Double, prune: Boolean): Double = {
-      var b = bound
+        px: Double, py: Double): Unit = {
       val level = (v >>> 32).toInt
       val idx = (v & 0xffffffffL).toInt
       val from = childStart(level)(idx)
@@ -930,48 +837,31 @@ object LocalRTree {
       if (level == 0) {
         var i = from
         while (i < to) {
-          val dd = boxDist2(entryEnvs, 4 * i, px, py)
-          if (!prune || dd <= b) heap.enqueue(dd, ENTRY | i)
+          heap.enqueue(boxDist2(entryEnvs, 4 * i, px, py), ENTRY | i)
           i += 1
         }
       } else {
         val a = levelEnvs(level - 1)
         var i = from
         while (i < to) {
-          val dd = boxDist2(a, 4 * i, px, py)
-          if (!prune || dd <= b) {
-            if (prune) {
-              val mm = minMaxDist2(a, 4 * i, px, py)
-              if (mm < b) b = mm
-            }
-            heap.enqueue(dd, ((level - 1).toLong << 32) | i)
-          }
+          heap.enqueue(boxDist2(a, 4 * i, px, py), ((level - 1).toLong << 32) | i)
           i += 1
         }
       }
-      b
     }
 
-    /** Exact 1-NN: entry index, or -1 on empty. `distOut(0)` = distance². */
-    def nearest(px: Double, py: Double, distOut: Array[Double]): Int = {
-      val heap = seedHeap(px, py)
-      var bound = Double.MaxValue
-      while (heap.nonEmpty) {
-        val k = heap.headKey
-        val v = heap.dequeue()
-        if ((v & ENTRY) != 0) { distOut(0) = k; return (v & 0xffffffffL).toInt }
-        bound = expand(heap, v, px, py, bound, prune = true)
-      }
-      -1
-    }
-
-    /** Distance-ordered stream of (entry index, distance²). */
+    /** Distance-ordered stream of (entry index, distance²): a best-first
+      * heap seeded with the root. Entry keys are exact envelope distances,
+      * so each popped entry is the next nearest.
+      */
     def nearestIter(px: Double, py: Double): Iterator[(Int, Double)] =
       new Iterator[(Int, Double)] {
-        private val heap = seedHeap(px, py)
+        private val heap = new LongHeap(64)
+        if (entries.length > 0)
+          heap.enqueue(boxDist2(levelEnvs(top), 0, px, py), top.toLong << 32)
         private def settle(): Unit =
           while (heap.nonEmpty && (heap.headVal & ENTRY) == 0)
-            expand(heap, heap.dequeue(), px, py, Double.MaxValue, prune = false)
+            expand(heap, heap.dequeue(), px, py)
         def hasNext: Boolean = { settle(); heap.nonEmpty }
         def next(): (Int, Double) = {
           settle()
@@ -980,38 +870,6 @@ object LocalRTree {
           ((v & 0xffffffffL).toInt, k)
         }
       }
-
-    /** First entry whose envelope contains (px, py) — early-exit descent
-      * for the `locate_at_point` hot path: returns as soon as a leaf hit
-      * is found instead of exhausting every containing subtree.
-      */
-    def locateAtPoint(px: Double, py: Double): Int = {
-      if (entries.length == 0) return -1
-      def in(a: Array[Double], off: Int): Boolean =
-        px >= a(off) && px <= a(off + 2) && py >= a(off + 1) && py <= a(off + 3)
-      def walk(level: Int, idx: Int): Int = {
-        val from = childStart(level)(idx)
-        val to = childEnd(level)(idx)
-        if (level == 0) {
-          var i = from
-          while (i < to) {
-            if (in(entryEnvs, 4 * i)) return i
-            i += 1
-          }
-          -1
-        } else {
-          val a = levelEnvs(level - 1)
-          var i = from
-          var r = -1
-          while (r < 0 && i < to) {
-            if (in(a, 4 * i)) r = walk(level - 1, i)
-            i += 1
-          }
-          r
-        }
-      }
-      if (in(levelEnvs(top), 0)) walk(top, 0) else -1
-    }
 
     /** Push-based closed-box intersection over the flat levels. */
     def foreachIntersecting(qMinX: Double, qMinY: Double, qMaxX: Double,
@@ -1142,70 +1000,7 @@ object LocalRTree {
     }
   }
 
-  // ---- flat-envelope primitives (see Inner.flatEnvs) -------------------
-
-  private[index] def flatDistance2(
-      f: Array[Double], base: Int, dims: Int, p: Array[Double]): Double = {
-    var acc = 0.0
-    var d = 0
-    while (d < dims) {
-      val lo = f(base + d); val hi = f(base + dims + d); val v = p(d)
-      val c = (if (v < lo) lo else if (v > hi) hi else v) - v
-      acc += c * c
-      d += 1
-    }
-    acc
-  }
-
-  private[index] def flatIntersects(
-      f: Array[Double], base: Int, dims: Int, q: AABB): Boolean = {
-    var d = 0
-    while (d < dims) {
-      if (f(base + d) > q.upper(d) || f(base + dims + d) < q.lower(d))
-        return false
-      d += 1
-    }
-    true
-  }
-
-  /** Same order of operations as AABB.minMaxDist2. */
-  private[index] def flatMinMaxDist2(
-      f: Array[Double], base: Int, dims: Int, p: Array[Double],
-      scratch: Array[Double]): Double = {
-    var bestDiff = 0.0
-    var bestMin = 0.0
-    var bestIdx = 0
-    var d = 0
-    while (d < dims) {
-      val lo = f(base + d) - p(d)
-      val hi = f(base + dims + d) - p(d)
-      var mn = lo * lo
-      var mx = hi * hi
-      if (mx < mn) { val t = mn; mn = mx; mx = t }
-      val diff = mx - mn
-      scratch(d) = mx
-      if (diff >= bestDiff) { bestDiff = diff; bestMin = mn; bestIdx = d }
-      d += 1
-    }
-    scratch(bestIdx) = bestMin
-    var acc = 0.0
-    d = 0
-    while (d < dims) { acc += scratch(d); d += 1 }
-    acc
-  }
-
   private[index] def ceilDiv(a: Int, b: Int): Int = (a + b - 1) / b
-
-  /** OMT cluster count per axis (cluster_group_iterator.rs:63-79):
-    * depth = ceil(log_M n); clusters = ceil(n / M^(depth-1));
-    * per-axis = floor(clusters^(1/dims)).
-    */
-  private[index] def clustersPerAxis(n: Int, m: Int, dims: Int): Int = {
-    val depth = math.ceil(math.log(n.toDouble) / math.log(m.toDouble)).toInt
-    val nSubtree = math.pow(m.toDouble, (depth - 1).toDouble)
-    val clusters = math.ceil(n.toDouble / nSubtree)
-    math.floor(math.pow(clusters, 1.0 / dims)).toInt
-  }
 
   /** Multi-way selection over primitive key columns: permutes the index
     * array (and every key column alongside it, so column reads stay

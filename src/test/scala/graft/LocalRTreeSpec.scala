@@ -391,10 +391,11 @@ class LocalRTreeSpec extends AnyFunSuite {
     assert(t2.size == 0)
   }
 
-  test("locateAtPoint (first match, rtree.rs:760-800): mirror fast path " +
-    "and generic fallback agree with locateAllAtPoint on hits and misses") {
+  test("locateAtPoint (first match, rtree.rs:760-800) agrees with " +
+    "locateAllAtPoint") {
+    // hits and misses on a bulk-loaded, an insert-mutated and a rect tree
     val ps = points(1200, seed = 31)
-    val frozen = pointTree(ps) // bulk-loaded → frozen → mirror path
+    val frozen = pointTree(ps)
     ps.foreach { p =>
       val got = frozen.locateAtPoint(p)
       assert(got.isDefined && got.get.env.containsPoint(p))
@@ -405,7 +406,7 @@ class LocalRTreeSpec extends AnyFunSuite {
       assert(got.isDefined == want.nonEmpty)
       got.foreach(e => assert(want.contains(e)))
     }
-    // mutated tree (insert) → no mirror → generic fallback, same contract
+    // mutated tree (insert), same contract
     val thawed = pointTree(ps.take(600))
     ps.slice(600, 700).foreach(p =>
       thawed.insert(Entry(AABB.fromPoint(p), 9999)))
