@@ -1339,9 +1339,9 @@ object PipelineQueries {
   def streamIndex(spark: SparkSession, dir: String): DataFrame = {
     val pts = TpchGeo.points(load(spark, dir, "customer"), "c_custkey")
     // nGroups = 1: groups are the kill/resume granularity, and each call
-    // builds a fresh store, where every group commit is a write job + a
-    // lineage job + marker FS ops of pure overhead. Kill/resume at real
-    // group granularity is pinned by CheckpointSpec at nGroups = 8.
+    // builds a fresh store, where every group commit is a write job +
+    // lineage, manifest and marker FS ops of pure overhead. Kill/resume at
+    // real group granularity is pinned by CheckpointSpec at nGroups = 8.
     replayStream(spark, "qsi", Nil,
         Seq(pts.where(col("id") % 2 === 0) -> pts.where(col("id") % 2 =!= 0)))(
       (s, r) => StreamOps.indexSink(s.head, Queries.grid, r.dir("store"),

@@ -1,7 +1,11 @@
 package graft.engine
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -17,7 +21,10 @@ import org.apache.spark.sql.types.StructType
   *   - completion markers `_done_<g>` form the manifest — a directory
   *     listing, immune to torn writes;
   *   - per-group lineage rows (stage, group, rows, envelope, wall_ms,
-  *     attempt) append to `<root>/_lineage/` parquet.
+  *     attempt) append to `<root>/_lineage/` parquet. The rows and the
+  *     envelope are observed inside the group's write (`Dataset.observe`),
+  *     and the driver writes the one-row file itself, so a committed group
+  *     costs exactly its write job.
   *
   * Resume = rerun the same stage call: groups with markers are skipped and
   * their parquet re-read; only missing groups recompute. Group granularity
@@ -62,9 +69,10 @@ final class Checkpoint(spark: SparkSession, root: String) {
     * the footer-reading job of parquet schema inference; only a call that
     * ran no group infers it (asking `compute` for a schema could run jobs).
     *
-    * The per-group envelope (min/max of `xCol`/`yCol`, when present) goes
-    * into the lineage row, mirroring the reference's parent-envelope
-    * bookkeeping (rstar/src/node.rs:98-102) at the stage tier.
+    * The per-group row count and envelope (min/max of `xCol`/`yCol`, when
+    * present) are observed in the write and go into the lineage row,
+    * mirroring the reference's parent-envelope bookkeeping
+    * (rstar/src/node.rs:98-102) at the stage tier.
     */
   def runStage(
       stage: String, nGroups: Int,
@@ -78,15 +86,27 @@ final class Checkpoint(spark: SparkSession, root: String) {
       if (!done.contains(g)) {
         val t0 = System.nanoTime()
         val df = compute(g)
+        val withEnv = xCol.nonEmpty && df.columns.contains(xCol)
+        val obs = Observation()
+        val observed =
+          if (withEnv) df.observe(obs, count(lit(1)).as("rows"),
+            min(xCol).as("min_x"), min(yCol).as("min_y"),
+            max(xCol).as("max_x"), max(yCol).as("max_y"))
+          else df.observe(obs, count(lit(1)).as("rows"))
         val tmp = new HPath(stageDir(stage), s".tmp_group_$g")
         val fin = new HPath(stageDir(stage), s"group=$g")
         fs.delete(tmp, true)
-        df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+        observed.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
         fs.delete(fin, true)
         require(fs.rename(tmp, fin), s"rename $tmp -> $fin failed")
         val wallMs = (System.nanoTime() - t0) / 1000000L
         written = Some(df.schema)
-        writeLineage(stage, g, fin.toString, df.schema, wallMs, xCol, yCol)
+        val m = obs.get // filled by the write above, so this never waits
+        // a stage without xCol records a NaN envelope; an empty group's
+        // min/max are null
+        writeLineage(stage, g, m("rows").asInstanceOf[Long], wallMs, k =>
+          if (!withEnv) Some(Double.NaN)
+          else Option(m(k)).map(_.asInstanceOf[Number].doubleValue))
         beforeCommit(g)
         fs.create(marker(stage, g), false).close() // commit point
       }
@@ -96,40 +116,43 @@ final class Checkpoint(spark: SparkSession, root: String) {
         new HPath(stageDir(stage), s"group=$g").toString): _*)
   }
 
-  private def writeLineage(
-      stage: String, g: Int, dir: String, schema: StructType, wallMs: Long,
-      xCol: String, yCol: String): Unit = {
-    val df = spark.read.schema(schema).parquet(dir)
-    val aggs =
-      if (xCol.nonEmpty && df.columns.contains(xCol))
-        Seq(count(lit(1)).as("rows"),
-          min(xCol).as("min_x"), min(yCol).as("min_y"),
-          max(xCol).as("max_x"), max(yCol).as("max_y"))
-      else
-        Seq(count(lit(1)).as("rows"),
-          lit(Double.NaN).as("min_x"), lit(Double.NaN).as("min_y"),
-          lit(Double.NaN).as("max_x"), lit(Double.NaN).as("max_y"))
+  /** Appends one lineage row to `<root>/_lineage/`: a one-row parquet file
+    * in [[Checkpoint.LineageSchema]], written by the driver to a hidden
+    * temp name (readers skip dot-files) and renamed into place, so no
+    * Spark job runs and no reader sees a partial file.
+    */
+  private def writeLineage(stage: String, g: Int, rows: Long, wallMs: Long,
+      envelope: String => Option[Double]): Unit = {
+    val dir = new HPath(root, "_lineage")
+    fs.mkdirs(dir)
+    val name = java.util.UUID.randomUUID().toString
+    val tmp = new HPath(dir, s".tmp-$name.parquet")
+    val fin = new HPath(dir, s"part-$name.parquet")
     // one clock read: committed_at (human-facing ISO) and committed_ms
     // (ordering key) must denote the same instant
     val now = java.time.Instant.now()
-    df.agg(aggs.head, aggs.tail: _*)
-      .select(lit(stage).as("stage"), lit(g).as("grp"), col("rows"),
-        col("min_x"), col("min_y"), col("max_x"), col("max_y"),
-        lit(wallMs).as("wall_ms"),
-        lit(now.toString).as("committed_at"),
-        // fixed-width ordering key: Instant.toString emits 0/3/6/9
-        // fractional digits, and at a shared prefix the SHORTER string
-        // sorts lexicographically after the longer one ("...00Z" >
-        // "...00.500Z"), so the ISO column is for humans only — ordering
-        // uses epoch millis, which compare correctly across JVM restarts.
-        lit(now.toEpochMilli).as("committed_ms"),
-        // attempt id: a crash between lineage append and marker creation
-        // makes resume recompute the group and append a second row;
-        // lineage() keeps only the latest attempt per (stage, grp) so
-        // metrics never double-count.
-        lit(System.nanoTime()).as("attempt"))
-      .write.mode(SaveMode.Append).parquet(
-        new HPath(root, "_lineage").toString)
+    val row = new SimpleGroupFactory(Checkpoint.LineageSchema).newGroup()
+      .append("stage", stage).append("grp", g).append("rows", rows)
+    Seq("min_x", "min_y", "max_x", "max_y")
+      .foreach(k => envelope(k).foreach(row.append(k, _))) // None: null
+    row.append("wall_ms", wallMs)
+      .append("committed_at", now.toString)
+      // fixed-width ordering key: Instant.toString emits 0/3/6/9
+      // fractional digits, and at a shared prefix the SHORTER string
+      // sorts lexicographically after the longer one ("...00Z" >
+      // "...00.500Z"), so the ISO column is for humans only — ordering
+      // uses epoch millis, which compare correctly across JVM restarts.
+      .append("committed_ms", now.toEpochMilli)
+      // attempt id: a crash between lineage append and marker creation
+      // makes resume recompute the group and append a second row;
+      // lineage() keeps only the latest attempt per (stage, grp) so
+      // metrics never double-count.
+      .append("attempt", System.nanoTime())
+    val conf = spark.sparkContext.hadoopConfiguration
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf).withType(Checkpoint.LineageSchema).build()
+    try w.write(row) finally w.close()
+    require(fs.rename(tmp, fin), s"rename $tmp -> $fin failed")
   }
 
   /** One row per (stage, grp): the latest attempt only (earlier attempts of
@@ -160,6 +183,25 @@ final class Checkpoint(spark: SparkSession, root: String) {
 }
 
 object Checkpoint {
+
+  /** The `_lineage` row's parquet schema: the columns and types Spark
+    * wrote the lineage with, every column optional as Spark writes them,
+    * so older Spark-written files and driver-written ones read as one table.
+    */
+  private val LineageSchema: MessageType = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional binary stage (STRING);
+      |  optional int32 grp;
+      |  optional int64 rows;
+      |  optional double min_x;
+      |  optional double min_y;
+      |  optional double max_x;
+      |  optional double max_y;
+      |  optional int64 wall_ms;
+      |  optional binary committed_at (STRING);
+      |  optional int64 committed_ms;
+      |  optional int64 attempt;
+      |}""".stripMargin)
 
   /** The checkpointed flagship build (C2 at scale): pages → extracted
     * entities with cell ids, committed group-by-group so a killed build

@@ -327,25 +327,17 @@ object IndexStore {
   def table(spark: SparkSession, root: String): DataFrame =
     view(spark, served(spark, root), _ => true)
 
-  /** The latest-wins view over stages with generation ≤ maxGen; None when
-    * no such stage exists (a replayed append whose base generations were
-    * compacted away hits this — its output is dominated by the compacted
-    * stage anyway, see [[append]]).
-    */
-  private def tableUpTo(spark: SparkSession, root: String,
-      maxGen: Int): Option[DataFrame] = {
-    val stages = generations(spark, root).filter(_.gen <= maxGen)
-    Option.when(stages.nonEmpty)(
-      view(spark, resolve(spark, root, stages), _ => true))
-  }
-
   /** C4 over the PERSISTED index — incremental append without touching
     * untouched cells: the new batch's cells are merged with their stored
     * trees (deserialize, concat point arrays, rebuild at bulk rate) and
     * committed as generation `gen`; every other cell's bytes stay exactly
     * where they are and keep serving. Group-committed through Checkpoint
     * like the base build, so a killed append resumes and a re-invocation
-    * with the same `gen` is a no-op (marker-idempotent).
+    * with the same `gen` is a no-op (marker-idempotent). The prior trees
+    * of the touched cells are read straight from their stored groups,
+    * chosen on the driver from the manifests and the batch's cell set, so
+    * a commit group costs its write job and the exchanges it plans —
+    * nothing is materialized between groups.
     *
     * Reference analog: bulk-then-insert (rstar/src/rtree.rs:1307-1371) —
     * here the insert unit is the cell, and the rebuilt cell tree is the
@@ -357,30 +349,29 @@ object IndexStore {
     require(gen >= 1, s"append generations start at 1, got $gen")
     import spark.implicits._
     val celled = points.map(p => (grid.cellId(p.x, p.y), p))
-    // materialize the touched-cell slice of the base view ONCE (semi-join
-    // on the batch's cell set, no driver collect): without this, every
-    // one of the nGroups group jobs re-scans all generations —
-    // O(nGroups·store) instead of O(touched).
-    // LAZY: the slice is only needed by uncommitted groups' compute
-    // closures — a marker-idempotent re-invocation (every re-run of the
-    // persisted bench queries, every stream batch replay) previously paid
-    // the distinct + eager-checkpoint jobs just to skip all groups.
-    lazy val base = tableUpTo(spark, root, gen - 1) match {
-      case Some(view) =>
-        val touched = celled.map(_._1).distinct().toDF("cell")
-        view.join(broadcast(touched), Seq("cell"), "left_semi")
-          .localCheckpoint(true)
-      case None =>
-        // no base ≤ gen-1: either a store seeded by append alone, or a
-        // stream REPLAYING a batch whose generations a compaction already
-        // subsumed and retired — in that case this stage's rows are
-        // outranked by the compacted stage (kindRank), so building them
-        // against an empty base is safe and the replay stays a no-op
-        // in the served view
-        emptyTable(spark)
-    }
+    // The base slice is planned on the driver: the latest-wins owners of
+    // generations ≤ gen - 1 come from their manifests, and the batch's
+    // distinct cells from one job with no shuffle (a per-partition set,
+    // then collect; bounded by the grid, like the manifests every read
+    // holds). Group g's base is then a scan of just the source groups
+    // serving its touched cells. No stage ≤ gen - 1 leaves the base
+    // empty: either a store seeded by append alone, or a stream REPLAYING
+    // a batch whose generations a compaction already subsumed and retired
+    // — this stage's rows are then outranked by the compacted stage
+    // (kindRank), so the replay stays a no-op in the served view.
+    // LAZY: only uncommitted groups' compute closures need them, so a
+    // marker-idempotent re-invocation (every re-run of the persisted bench
+    // queries, every stream batch replay) runs no job before skipping.
+    lazy val prior =
+      resolve(spark, root, generations(spark, root).filter(_.gen < gen))
+    lazy val touched: Set[Long] = points.mapPartitions { it =>
+      val seen = mutable.LongMap.empty[Unit]
+      it.foreach(p => seen(grid.cellId(p.x, p.y)) = ())
+      Iterator.single(seen.keys.toArray)
+    }.collect().flatten.toSet
     commitStage(spark, root, s"trees_g$gen", nGroups) { g =>
       counted(spark) { acc =>
+        val base = view(spark, prior, c => c % nGroups == g && touched(c))
         val newCells = celled.filter(_._1 % nGroups == g)
           .groupByKey(_._1)
           .mapGroups { (cell, it) =>

@@ -1,9 +1,13 @@
 package graft.engine
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.SparkException
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graft.ColumnShim
@@ -89,16 +93,34 @@ object SpatialOps {
     */
   val MaxBroadcastLayerRows: Long = 10L * 1000 * 1000
 
-  /** Collect at most `cap` rows in one pass: the plan is capped at
-    * `cap + 1` rows via `limit`, so an over-cap input fails fast with the
-    * `overCap` contract message (never a driver OOM mid-collect), and the
-    * collected rows themselves are the result — the input's lineage
-    * executes exactly once, not once for a guard count and again for the
-    * collect.
+  /** Collect at most `cap` rows in one job: each partition returns at most
+    * `cap + 1` rows, and the result handler fails as soon as the running
+    * total passes `cap`, so an over-cap input fails fast with the `overCap`
+    * contract message (never a driver OOM mid-collect) and the collected
+    * rows themselves are the result — the input's lineage executes exactly
+    * once. (`limit(cap + 1).collect()` scans one partition first and then
+    * the rest: two jobs.) An input planned as a local relation is already
+    * on the driver and is collected with no job at all.
     */
   private[engine] def collectBounded[T](ds: Dataset[T], cap: Long)(
       overCap: => String): Array[T] = {
-    val rows = ds.limit(cap.toInt + 1).collect()
+    val rows = ds.queryExecution.executedPlan match {
+      case _: LocalTableScanExec => ds.collect()
+      case _ =>
+        implicit val ct: ClassTag[T] = ds.encoder.clsTag
+        val rdd = ds.rdd
+        val parts = new Array[Array[T]](rdd.partitions.length)
+        var total = 0L
+        try ds.sparkSession.sparkContext.runJob(rdd,
+          (it: Iterator[T]) => it.take(cap.toInt + 1).toArray,
+          (i: Int, part: Array[T]) => {
+            total += part.length
+            require(total <= cap, overCap)
+            parts(i) = part
+          })
+        catch { case e: SparkException if total > cap => throw e.getCause }
+        parts.flatten
+    }
     require(rows.length <= cap, overCap)
     rows
   }

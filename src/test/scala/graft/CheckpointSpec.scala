@@ -406,4 +406,82 @@ class CheckpointSpec extends AnyFunSuite {
     }.toSet
     assert(got == wantNn)
   }
+
+  test("lineage is observed in the write: rows and envelope equal a " +
+    "read-back aggregate of each group; an empty group records a null " +
+    "envelope, a stage without xCol a NaN one") {
+    spark.sparkContext.setLogLevel("ERROR")
+    val root = java.nio.file.Files.createTempDirectory("graft_cp4").toString
+    val cp = new Checkpoint(spark, root)
+    // group 3 of 4 is empty: the keys are id % 3
+    val df = spark.range(600).select(
+      (col("id") % 3).as("g"),
+      (sin(col("id")) * 170.0).as("x"), (cos(col("id") * 7) * 80.0).as("y"))
+    cp.runStage("env", 4, g => df.where(col("g") === g), xCol = "x", yCol = "y")
+    cp.runStage("plain", 2, g => df.where(col("g") % 2 === g))
+    val lin = cp.lineage()
+    def row(stage: String, g: Int) = {
+      val rs = lin.where(col("stage") === stage && col("grp") === g).collect()
+      assert(rs.length == 1, s"$stage/$g: ${rs.length} lineage rows")
+      rs(0)
+    }
+    (0 until 4).foreach { g =>
+      val want = spark.read.parquet(s"$root/env/group=$g")
+        .agg(count(lit(1)), min("x"), min("y"), max("x"), max("y")).collect()(0)
+      val got = row("env", g)
+      assert(got.getAs[Long]("rows") == want.getLong(0), s"group $g rows")
+      Seq("min_x", "min_y", "max_x", "max_y").zipWithIndex.foreach {
+        case (k, i) =>
+          if (want.isNullAt(i + 1)) assert(got.isNullAt(got.fieldIndex(k)), s"$g $k")
+          else assert(got.getAs[Double](k) == want.getDouble(i + 1), s"$g $k")
+      }
+    }
+    assert(row("env", 3).getAs[Long]("rows") == 0L)
+    assert(row("env", 3).isNullAt(row("env", 3).fieldIndex("min_x")))
+    (0 until 2).foreach { g =>
+      val got = row("plain", g)
+      assert(got.getAs[Long]("rows") ==
+        spark.read.parquet(s"$root/plain/group=$g").count())
+      Seq("min_x", "min_y", "max_x", "max_y").foreach(k =>
+        assert(got.getAs[Double](k).isNaN, s"plain $g $k"))
+      assert(got.getAs[Long]("wall_ms") >= 0L && got.getAs[Long]("attempt") != 0L)
+    }
+  }
+
+  test("a _lineage mixing Spark-written files with driver-written ones " +
+    "reads one row per (stage, grp), the latest attempt winning") {
+    spark.sparkContext.setLogLevel("ERROR")
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_cp5").toString
+    // Spark-written rows in the schema the Spark writer gave the lineage:
+    // earlier, uncommitted attempts of groups 0 and 1 of stage "s"
+    Seq(("s", 0, 999L, 1.0, 2.0, 3.0, 4.0, 10L, "2026-01-01T00:00:00Z",
+        1767225600000L, 1L),
+      ("s", 1, 999L, 1.0, 2.0, 3.0, 4.0, 10L, "2026-01-01T00:00:01Z",
+        1767225601000L, 2L))
+      .toDF("stage", "grp", "rows", "min_x", "min_y", "max_x", "max_y",
+        "wall_ms", "committed_at", "committed_ms", "attempt")
+      .write.mode("append").parquet(s"$root/_lineage")
+    // and one from before committed_ms existed, of another stage
+    Seq(("old", 0, 7L, "2026-01-01T00:00:02Z", 3L))
+      .toDF("stage", "grp", "rows", "committed_at", "attempt")
+      .write.mode("append").parquet(s"$root/_lineage")
+    val cp = new Checkpoint(spark, root)
+    val df = spark.range(90).select((col("id") % 3).as("g"),
+      col("id").cast("double").as("x"), col("id").cast("double").as("y"))
+    cp.runStage("s", 3, g => df.where(col("g") === g), xCol = "x", yCol = "y")
+    // Spark names its files part-<task>-<uuid>-c000.snappy.parquet, the
+    // driver part-<uuid>.parquet
+    val (sparkFiles, driverFiles) = new java.io.File(s"$root/_lineage")
+      .listFiles().map(_.toString).filter(_.endsWith(".parquet"))
+      .filterNot(_.contains("/.")).partition(_.endsWith(".snappy.parquet"))
+    assert(driverFiles.length == 3, "one driver-written file per group")
+    val sparkSchema = sparkFiles.map(spark.read.parquet(_).schema)
+      .find(_.fieldNames.contains("committed_ms")).get
+    driverFiles.foreach(f => assert(spark.read.parquet(f).schema == sparkSchema,
+      "driver-written lineage keeps the Spark-written columns and types"))
+    val lin = cp.lineage().select("stage", "grp", "rows").as[(String, Int, Long)]
+      .collect().sortBy(r => (r._1, r._2)).toSeq
+    assert(lin == Seq(("old", 0, 7L), ("s", 0, 30L), ("s", 1, 30L), ("s", 2, 30L)))
+  }
 }

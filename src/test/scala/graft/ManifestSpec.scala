@@ -162,4 +162,27 @@ class ManifestSpec extends AnyFunSuite {
     assert(IndexStore.generationCount(spark, root) == 3)
     assertExact(root, base ++ batch1 ++ batch2, "replayed")
   }
+
+  test("an append onto a store whose manifests were deleted plans its base " +
+    "slice from the derived scan") {
+    val root = copyStore()
+    manifests(root).foreach(Files.delete)
+    val batch3 = pts(3600, 3900)
+    append(root, batch3, 3)
+    // the new stage commits its own manifests; the old stages stay without
+    assert(manifests(root).size == nGroups)
+    assertExact(root, base ++ batch1 ++ batch2 ++ batch3, "append, no manifests")
+  }
+
+  test("an append whose batch touches no stored cell") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_manifest_disjoint").toString
+    val west = base.filter(_.x < -1.0)
+    val east = batch1.filter(_.x > 1.0)
+    val cellsOf = (ps: Seq[PointRow]) => ps.map(p => grid.cellId(p.x, p.y)).toSet
+    assert(east.nonEmpty && (cellsOf(west) intersect cellsOf(east)).isEmpty)
+    IndexStore.build(spark, spark.createDataset(west), grid, root, nGroups)
+    append(root, east, 1)
+    assertExact(root, west ++ east, "disjoint append")
+  }
 }

@@ -12,10 +12,12 @@ import graft.engine.{IndexStore, PointRow, QueryRow}
 import graft.index.CellGrid
 
 /** Spark job counts of the persisted-store calls on a 3-generation store
-  * (base + 2 appends): reads resolve latest-wins on the driver from the
-  * cell manifests, so a range probe is one scan job with no shuffle, a
-  * kNN batch is bounded on the driver and probes the stored trees in one
-  * pass, and the manifests the build commits ride inside its write jobs.
+  * (base + 2 appends, then a compaction): reads resolve latest-wins on the
+  * driver from the cell manifests, so a range probe is one scan job with
+  * no shuffle, a kNN batch is bounded on the driver and probes the stored
+  * trees in one pass, and every commit group is one write job — the
+  * manifests and lineage rows it commits are collected inside that write,
+  * and an append plans its base slice on the driver.
   */
 class StoreJobsSpec extends AnyFunSuite {
 
@@ -92,7 +94,9 @@ class StoreJobsSpec extends AnyFunSuite {
       val (buildJobs, _) = measure(l, "build") {
         IndexStore.build(spark, pts(0, 3000), grid, root, nGroups = 2)
       }
-      IndexStore.append(spark, pts(3000, 3400), grid, root, gen = 1, nGroups = 2)
+      val (appendJobs, _) = measure(l, "append") {
+        IndexStore.append(spark, pts(3000, 3400), grid, root, gen = 1, nGroups = 2)
+      }
       IndexStore.append(spark, pts(3400, 3600), grid, root, gen = 2, nGroups = 2)
       assert(IndexStore.generationCount(spark, root) == 3)
 
@@ -108,16 +112,29 @@ class StoreJobsSpec extends AnyFunSuite {
       val (knnJobs, _) = measure(l, "knn") {
         knnRows = IndexStore.knnQuery(spark, root, grid, qs, 3).collect().length
       }
-      info(s"jobs: build $buildJobs, range $rangeJobs, knn $knnJobs; " +
-        s"range shuffle bytes $rangeShuffle")
+      val (compactJobs, _) = measure(l, "compact") {
+        IndexStore.compact(spark, root, nGroups = 2)
+      }
+      info(s"jobs: build $buildJobs, append $appendJobs, range $rangeJobs, " +
+        s"knn $knnJobs, compact $compactJobs; range shuffle bytes $rangeShuffle")
       assert(rows > 0 && knnRows >= 150)
       assert(rangeJobs == 1, s"rangeQuery ran $rangeJobs jobs")
       assert(rangeShuffle == 0L, s"rangeQuery wrote $rangeShuffle shuffle bytes")
-      // one of them collects the spark.range query batch
-      assert(knnJobs <= 4, s"knnQuery ran $knnJobs jobs")
-      // 11 jobs before the manifests: per group its write (with the
-      // exchange below it) and lineage, plus the footer reads
-      assert(buildJobs <= 11, s"build ran $buildJobs jobs")
+      // the spark.range query batch collected in one job (a local batch
+      // takes none), then the covered-cell scan's exchange into the
+      // (d2, id) cut and the cut's result
+      assert(knnJobs == 3, s"knnQuery ran $knnJobs jobs")
+      // per group, the exchange of the batch by cell and the write, whose
+      // lineage row and manifest are observed inside it: 2·nGroups
+      assert(buildJobs == 4, s"build ran $buildJobs jobs")
+      // the batch's touched cells collected once; per group, the exchange
+      // of the batch by cell, the exchange of the stored base slice for the
+      // left join, and the write: 1 + 3·nGroups
+      assert(appendJobs == 7, s"append ran $appendJobs jobs")
+      // per group, the write alone: its scan reads just the source groups
+      // holding its cells, and its manifest comes from the input manifests
+      assert(compactJobs == 2, s"compact ran $compactJobs jobs")
+      assert(IndexStore.generationCount(spark, root) == 1)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 }
