@@ -9,6 +9,10 @@ import java.util.Arrays
   *     and is detected via `lower(0) > upper(0)` (rstar/src/aabb.rs:127-138);
   *   - containment and intersection use closed intervals — touching counts
   *     (rstar/src/aabb.rs:140-148, :162-165);
+  *   - they are positive comparisons, as the reference's are
+  *     (rstar/src/aabb.rs:145-165), so a NaN coordinate, in either box or
+  *     point, never matches; merging therefore skips a NaN bound, so a
+  *     node's envelope stays a number and never hides its other entries;
   *   - merging with the empty box is the identity (rstar/src/aabb.rs:256-275);
   *   - `minMaxDist2` keeps the reference's exact order of floating-point
   *     operations, which a reference regression pins down
@@ -31,7 +35,7 @@ final class AABB(val lower: Array[Double], val upper: Array[Double])
   def containsPoint(p: Array[Double]): Boolean = {
     var i = 0
     while (i < lower.length) {
-      if (lower(i) > p(i) || upper(i) < p(i)) return false
+      if (!(lower(i) <= p(i) && upper(i) >= p(i))) return false
       i += 1
     }
     true
@@ -41,7 +45,7 @@ final class AABB(val lower: Array[Double], val upper: Array[Double])
   def containsEnvelope(other: AABB): Boolean = {
     var i = 0
     while (i < lower.length) {
-      if (lower(i) > other.lower(i) || upper(i) < other.upper(i)) return false
+      if (!(lower(i) <= other.lower(i) && upper(i) >= other.upper(i))) return false
       i += 1
     }
     true
@@ -53,26 +57,31 @@ final class AABB(val lower: Array[Double], val upper: Array[Double])
   def intersects(other: AABB): Boolean = {
     var i = 0
     while (i < lower.length) {
-      if (lower(i) > other.upper(i) || upper(i) < other.lower(i)) return false
+      if (!(lower(i) <= other.upper(i) && upper(i) >= other.lower(i))) return false
       i += 1
     }
     true
   }
 
   /** Component-wise min/max union (rstar/src/aabb.rs:150-160). Merging with
-    * the empty box is the identity because the empty box is +Max/-Max.
+    * the empty box is the identity because the empty box is +Max/-Max. A
+    * NaN bound on either side is skipped, as `mergeInPlace` skips one.
     */
   def merged(other: AABB): AABB = {
     val lo = new Array[Double](lower.length)
     val up = new Array[Double](lower.length)
     var i = 0
     while (i < lower.length) {
-      lo(i) = math.min(lower(i), other.lower(i))
-      up(i) = math.max(upper(i), other.upper(i))
+      lo(i) = skipNaN(lower(i), other.lower(i), math.min)
+      up(i) = skipNaN(upper(i), other.upper(i), math.max)
       i += 1
     }
     new AABB(lo, up)
   }
+
+  @inline private def skipNaN(a: Double, b: Double,
+      f: (Double, Double) => Double): Double =
+    if (b.isNaN) a else if (a.isNaN) b else f(a, b)
 
   /** Mutating merge for build hot paths; only call on boxes this code owns. */
   def mergeInPlace(other: AABB): Unit = {

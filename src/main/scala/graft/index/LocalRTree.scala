@@ -296,7 +296,9 @@ final class LocalRTree[T](
         overlap < bestOverlap ||
           (overlap == bestOverlap && (enlarge < bestEnlarge ||
             (enlarge == bestEnlarge && area < bestArea)))
-      if (better) {
+      // the first child stands when none compares below the start (the
+      // reference's `min_index = 0`), e.g. on NaN areas from ±Inf extents
+      if (best == null || better) {
         best = c; bestOverlap = overlap; bestEnlarge = enlarge; bestArea = area
       }
       i += 1
@@ -348,7 +350,9 @@ final class LocalRTree[T](
         perim += envOf(byLower, 0, k).perimeterValue +
           envOf(byLower, k, n).perimeterValue
       }
-      if (perim < bestAxisPerim) {
+      // axis 0 stands when no sum is below the start (the reference's
+      // `best_axis = 0`), e.g. when ±Inf extents make every sum Inf
+      if (axisSorted == null || perim < bestAxisPerim) {
         bestAxisPerim = perim; bestAxis = axis; axisSorted = byLower
       }
       axis += 1

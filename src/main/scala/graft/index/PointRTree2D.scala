@@ -22,6 +22,13 @@ package graft.index
   * (NaN last, NaN == NaN), the total order of the window path. A NaN
   * coordinate never widens an envelope; its point's d2 is NaN for every
   * query, the order's maximum.
+  *
+  * k-NN: best-first over node handles, seeded with the leaf that a greedy
+  * descent reaches (the child of least envelope distance at each level).
+  * That leaf is scanned first, so the search holds a k-th distance before
+  * its first pop and prunes children from the root's expansion on. It
+  * stands in for the bound rstar's `nearest_neighbor` has from the start
+  * (MinMaxDist, `nearest_neighbor.rs:232-295`).
   */
 @SerialVersionUID(1L)
 final class PointRTree2D private (
@@ -110,33 +117,46 @@ final class PointRTree2D private (
   /** k nearest points, emitted in ascending distance order; when
     * `keepTies`, extends past k while the distance equals the k-th
     * (K3 semantics, in `Double.compare` order). Pruned best-first search
-    * (the reference's `nearest_neighbor.rs:232-295`): only node handles
-    * go on the primitive heap, a popped leaf is scanned straight into the
-    * sorted result buffer, a child or point enters only while it can still
-    * beat the current k-th distance, and the search ends when the heap's
-    * head cannot. All state is per call: one tree serves concurrent tasks.
+    * (the reference's `nearest_neighbor.rs:232-295`), seeded: a greedy
+    * descent (least envelope distance at each level) reaches one leaf,
+    * which is scanned first, so the k-th distance prunes from the root's
+    * expansion on, as the reference's MinMaxDist bound (Roussopoulos,
+    * Kelley and Vincent 1995) does. Then only node handles go on the
+    * primitive heap, a popped leaf other than the seed is scanned straight
+    * into the sorted result buffer, a child or point enters only while it
+    * can still beat the current k-th distance, and the search ends when
+    * the heap's head cannot. All state is per call: one tree serves
+    * concurrent tasks.
     */
   def nearestK(px: Double, py: Double, k: Int, keepTies: Boolean = false)(
       emit: (Int, Double) => Unit): Unit = {
     if (size == 0 || k <= 0) return
     val best = new KBest(k, keepTies, math.min(k, size) + 1)
-    val heap = new LongHeap(64)
     val top = levels.length - 1
+    var seed = 0 // the greedy descent's node, a leaf once l reaches 0
+    var l = top
+    while (l > 0) {
+      val from = seed * fanout
+      val to = math.min(from + fanout, nodesAt(l - 1))
+      var least = Double.PositiveInfinity
+      seed = from
+      var c = from
+      while (c < to) {
+        val d = envDist2(l - 1, c, px, py)
+        if (d < least) { least = d; seed = c }
+        c += 1
+      }
+      l -= 1
+    }
+    scanLeaf(seed, px, py, best)
+    val heap = new LongHeap(64)
     heap.enqueue(envDist2(top, 0, px, py), handle(top, 0))
     while (heap.nonEmpty && best.admits(heap.headKey)) {
       val h = heap.dequeue()
       val level = handleLevel(h)
       val idx = handleIndex(h)
       if (level == 0) {
-        val from = idx * leafSize
-        val to = math.min(from + leafSize, size)
-        var p = from
-        while (p < to) {
-          val dx = xs(p) - px; val dy = ys(p) - py
-          val d = dx * dx + dy * dy
-          if (best.admits(d)) best.add(d, p)
-          p += 1
-        }
+        if (idx != seed) scanLeaf(idx, px, py, best)
       } else {
         val from = idx * fanout
         val to = math.min(from + fanout, nodesAt(level - 1))
@@ -149,6 +169,19 @@ final class PointRTree2D private (
       }
     }
     best.emitAll(emit)
+  }
+
+  /** Offer every point of leaf `leaf` to `best`. */
+  private def scanLeaf(leaf: Int, px: Double, py: Double, best: KBest): Unit = {
+    val from = leaf * leafSize
+    val to = math.min(from + leafSize, size)
+    var p = from
+    while (p < to) {
+      val dx = xs(p) - px; val dy = ys(p) - py
+      val d = dx * dx + dy * dy
+      if (best.admits(d)) best.add(d, p)
+      p += 1
+    }
   }
 }
 

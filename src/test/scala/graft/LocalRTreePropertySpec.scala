@@ -21,8 +21,11 @@ import graft.index.{Entry, LocalRTree}
   * Both the engine's `(2, 40, 1)` parameters and the defaults, layer sizes
   * 0, 1, 40, 41 and 1 601 (one node, one past it, two levels plus one),
   * point and rectangle entries with duplicates, zero-area boxes and ±0.0.
-  * NaN and ±Inf coordinates are out of scope. Pure Scala, 500 generated
-  * cases per property.
+  * NaN and ±Inf coordinates, in entries and queries, are covered by the box
+  * and point queries, which follow rstar's positive comparisons
+  * (rstar/src/aabb.rs:140-165: a NaN never matches), and by an insert-built
+  * tree answering as the bulk-loaded tree of the same entries. Pure Scala,
+  * 500 generated cases per property.
   */
 class LocalRTreePropertySpec extends AnyFunSuite {
   import LocalRTreePropertySpec._
@@ -34,15 +37,18 @@ class LocalRTreePropertySpec extends AnyFunSuite {
     assert(r.succeeded >= 500)
   }
 
-  private val genLayer: Gen[Layer] = for {
+  private def genLayerOf(specialShare: Gen[Double]): Gen[Layer] = for {
     state <- Gen.oneOf(States)
     params <- Gen.oneOf(EngineParams, DefaultParams)
     n <- Gen.oneOf(Sizes)
     rects <- Gen.oneOf(false, true)
     kind <- Gen.oneOf(Uniform, Lattice, Pool)
     zeroShare <- Gen.oneOf(0.0, 0.1, 0.4)
+    special <- specialShare
     seed <- Gen.long
-  } yield Layer.generate(state, params, n, rects, kind, zeroShare, seed)
+  } yield Layer.generate(state, params, n, rects, kind, zeroShare, seed, special)
+
+  private val genLayer: Gen[Layer] = genLayerOf(Gen.const(0.0))
 
   /** A query coordinate: anywhere, on the lattice or half-way between
     * lattice points (exact ties), or a signed zero.
@@ -52,29 +58,59 @@ class LocalRTreePropertySpec extends AnyFunSuite {
     3 -> Gen.choose(-10, 10).map(_ / 2.0),
     1 -> Gen.oneOf(0.0, -0.0))
 
-  private def genPoint(layer: Layer): Gen[Array[Double]] = Gen.frequency(
-    3 -> Gen.listOfN(layer.dims, genCoord).map(_.toArray),
+  /** `genCoord`, or NaN / ±Inf. */
+  private val genSpecialCoord: Gen[Double] =
+    Gen.frequency(4 -> genCoord, 1 -> Gen.oneOf(Specials))
+
+  private def genPoint(layer: Layer,
+      coord: Gen[Double] = genCoord): Gen[Array[Double]] = Gen.frequency(
+    3 -> Gen.listOfN(layer.dims, coord).map(_.toArray),
     // an entry's corner: a guaranteed hit, often on a shared border
     2 -> Gen.choose(0, math.max(0, layer.size - 1)).flatMap { i =>
       if (layer.size == 0) Gen.const(Array.fill(layer.dims)(0.0))
       else Gen.oneOf(layer.lo(i), layer.hi(i)).map(_.clone())
     })
 
-  private def genBox(layer: Layer): Gen[(Array[Double], Array[Double])] =
+  private def genBox(layer: Layer,
+      coord: Gen[Double] = genCoord): Gen[(Array[Double], Array[Double])] =
     Gen.frequency(
-      4 -> Gen.zip(genPoint(layer), genPoint(layer)).map { case (a, b) =>
-        (Array.tabulate(layer.dims)(d => math.min(a(d), b(d))),
-          Array.tabulate(layer.dims)(d => math.max(a(d), b(d))))
+      4 -> Gen.zip(genPoint(layer, coord), genPoint(layer, coord)).map {
+        case (a, b) =>
+          (Array.tabulate(layer.dims)(d => math.min(a(d), b(d))),
+            Array.tabulate(layer.dims)(d => math.max(a(d), b(d))))
       },
-      1 -> genPoint(layer).map(p => (p, p.clone()))) // zero-area query
+      1 -> genPoint(layer, coord).map(p => (p, p.clone()))) // zero-area query
 
-  private val genCase: Gen[Case] = for {
-    layer <- genLayer
-    points <- Gen.listOfN(3, genPoint(layer))
-    boxes <- Gen.listOfN(3, genBox(layer))
-    r2 <- Gen.frequency(3 -> Gen.choose(0.0, 30.0), 1 -> Gen.const(0.0))
-    onBorder <- Gen.choose(0, math.max(0, layer.size - 1))
-  } yield Case(layer, points, boxes, r2, onBorder)
+  private def genCaseOf(layers: Gen[Layer], coord: Gen[Double]): Gen[Case] =
+    for {
+      layer <- layers
+      points <- Gen.listOfN(3, genPoint(layer, coord))
+      boxes <- Gen.listOfN(3, genBox(layer, coord))
+      r2 <- Gen.frequency(3 -> Gen.choose(0.0, 30.0), 1 -> Gen.const(0.0))
+      onBorder <- Gen.choose(0, math.max(0, layer.size - 1))
+    } yield Case(layer, points, boxes, r2, onBorder)
+
+  private val genCase: Gen[Case] = genCaseOf(genLayer, genCoord)
+
+  /** Entries and queries with NaN / ±Inf coordinates (a share of 2 or 30 %
+    * of the entry coordinates).
+    */
+  private val genSpecialCase: Gen[Case] =
+    genCaseOf(genLayerOf(Gen.oneOf(0.02, 0.3)), genSpecialCoord)
+
+  /** Box and point answers as sorted value lists, in the order
+    * foreachIntersecting, queryIntersecting, queryContained and
+    * locateAllAtPoint per query.
+    */
+  private def boxAndPointAnswers(t: LocalRTree[Int], c: Case): Seq[Seq[Int]] =
+    c.boxes.flatMap { case (qlo, qhi) =>
+      val q = AABB.fromBounds(qlo, qhi)
+      val pushed = Seq.newBuilder[Int]
+      t.foreachIntersecting(q)(e => pushed += e.value)
+      Seq(pushed.result().sorted,
+        t.queryIntersecting(q).map(_.value).toSeq.sorted,
+        t.queryContained(q).map(_.value).toSeq.sorted)
+    } ++ c.points.map(p => t.locateAllAtPoint(p).map(_.value).toSeq.sorted)
 
   test("the generator covers every state, size and parameter set, with " +
     "duplicates, zero-area boxes and ±0.0") {
@@ -117,6 +153,57 @@ class LocalRTreePropertySpec extends AnyFunSuite {
           t.queryContained(q).map(_.value).toSeq.sorted == inside
       }
     })
+  }
+
+  test("with NaN and ±Inf: foreachIntersecting == queryIntersecting == " +
+    "filtered scan under rstar's predicates, and so do queryContained and " +
+    "locateAllAtPoint") {
+    check(Prop.forAll(genSpecialCase) { c =>
+      val l = c.layer
+      val want = c.boxes.flatMap { case (qlo, qhi) =>
+        val hit = l.indices.filter(l.intersects(_, qlo, qhi))
+        Seq(hit, hit, l.indices.filter(l.within(_, qlo, qhi)))
+      } ++ c.points.map(p => l.indices.filter(l.containsPoint(_, p)))
+      boxAndPointAnswers(l.tree, c) == want
+    })
+  }
+
+  test("with NaN and ±Inf: an insert-built tree answers as the bulk-loaded " +
+    "tree of the same entries, and no inner envelope holds a NaN") {
+    def nanFree(t: LocalRTree[Int]): Boolean = {
+      def walk(n: LocalRTree.Node[Int]): Boolean = n match {
+        case in: LocalRTree.Inner[Int @unchecked] =>
+          !(in.env.lower ++ in.env.upper).exists(_.isNaN) &&
+            in.children.forall(walk)
+        case _ => true
+      }
+      walk(t.rootNode)
+    }
+    check(Prop.forAll(genSpecialCase) { c =>
+      c.layer.dims == 3 || {
+        val bulk = c.layer.copy(state = Bulk2D).tree
+        val inserted = c.layer.copy(state = Inserted2D).tree
+        inserted.sanityCheck(checkFanout = true)
+        boxAndPointAnswers(inserted, c) == boxAndPointAnswers(bulk, c) &&
+          nanFree(bulk) && nanFree(inserted)
+      }
+    })
+  }
+
+  test("a NaN entry is never a box hit, in the mirror or the node graph") {
+    val pts = Array.tabulate(200)(i => Entry(AABB.fromPoint(
+      Array((i % 20) * 0.5, (i / 20) * 1.0)), i))
+    val nan = Entry(AABB.fromPoint(Array(Double.NaN, 5.0)), 200)
+    val q = AABB.of2d(0, 0, 10, 10)
+    val bulk = new LocalRTree[Int](2, 40, 1).bulkLoad(pts :+ nan)
+    val pushed = Seq.newBuilder[Int]
+    bulk.foreachIntersecting(q)(e => pushed += e.value)
+    assert(pushed.result().sorted == (0 until 200))
+    assert(bulk.queryIntersecting(q).map(_.value).toSeq.sorted == (0 until 200))
+    val inserted = new LocalRTree[Int](2, 40, 1)
+    (pts :+ nan).foreach(inserted.insert)
+    assert(!inserted.rootNode.env.lower.exists(_.isNaN))
+    assert(inserted.queryIntersecting(q).map(_.value).toSeq.sorted == (0 until 200))
   }
 
   test("locateAtPoint is defined exactly when locateAllAtPoint is " +
@@ -192,6 +279,8 @@ object LocalRTreePropertySpec {
   val EngineParams: (Int, Int, Int) = (2, 40, 1)
   val DefaultParams: (Int, Int, Int) = (3, 6, 2)
   val Sizes: Seq[Int] = Seq(0, 1, 40, 41, 1601)
+  val Specials: Seq[Double] =
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
 
   sealed trait Kind
   case object Uniform extends Kind // distinct coordinates
@@ -247,11 +336,14 @@ object LocalRTreePropertySpec {
 
   object Layer {
     def generate(state: State, params: (Int, Int, Int), n: Int,
-        rects: Boolean, kind: Kind, zeroShare: Double, seed: Long): Layer = {
+        rects: Boolean, kind: Kind, zeroShare: Double, seed: Long,
+        specialShare: Double = 0.0): Layer = {
       val r = new SplittableRandom(seed)
       val dims = dimsOf(state)
       def coord(): Double =
-        if (r.nextDouble() < zeroShare) { if (r.nextBoolean()) 0.0 else -0.0 }
+        if (specialShare > 0 && r.nextDouble() < specialShare)
+          Specials(r.nextInt(Specials.length))
+        else if (r.nextDouble() < zeroShare) { if (r.nextBoolean()) 0.0 else -0.0 }
         else kind match {
           case Lattice => (r.nextInt(9) - 4).toDouble
           case _ => r.nextDouble() * 20 - 10

@@ -11,11 +11,15 @@ import graft.index.PointRTree2D
 
 /** Generated properties of the packed point tree against brute-force scans:
   * layer sizes that leave a partial last node at every level (0, 1, 16, 17,
-  * 256, 257, 4 097 at leaf size and fan-out 16), duplicate, all-identical
-  * and lattice layers full of exact ties, and NaN / ±Inf / −0.0
-  * coordinates in points, queries, boxes and radii. Distances are ordered
-  * as `Double.compare` orders them (NaN last, NaN == NaN). Pure Scala,
-  * 500 generated cases per property.
+  * 256, 257, 4 097 at leaf size and fan-out 16; the last two have three and
+  * four levels), duplicate, all-identical and lattice layers full of exact
+  * ties, runs of 17 copies of one point (one more than a leaf holds, so
+  * every run straddles a leaf boundary), and NaN / ±Inf / −0.0 coordinates
+  * in points, queries, boxes and radii, with queries far outside the layer.
+  * k runs up to 17, past one leaf, so `nearestK`'s seed leaf (the greedy
+  * descent's, scanned before the best-first loop) never holds the whole
+  * answer. Distances are ordered as `Double.compare` orders them (NaN
+  * last, NaN == NaN). Pure Scala, 500 generated cases per property.
   */
 class PointRTree2DPropertySpec extends AnyFunSuite {
   import PointRTree2DPropertySpec._
@@ -29,17 +33,18 @@ class PointRTree2DPropertySpec extends AnyFunSuite {
 
   private val genLayer: Gen[Layer] = for {
     n <- Gen.oneOf(0, 1, 16, 17, 256, 257, 4097)
-    kind <- Gen.oneOf(Uniform, Lattice, Pool, Identical)
+    kind <- Gen.oneOf(Uniform, Lattice, Pool, Identical, Runs)
     specialShare <- Gen.oneOf(0.0, 0.0, 0.02, 0.3)
     seed <- Gen.long
   } yield Layer.generate(n, kind, specialShare, seed)
 
   /** A query coordinate: inside, on the lattice or half-way between
-    * lattice points (exact ties), outside, or special.
+    * lattice points (exact ties), just outside, far outside, or special.
     */
   private val genCoord: Gen[Double] = Gen.frequency(
     4 -> Gen.choose(-12.0, 12.0),
     3 -> Gen.choose(-10, 10).map(_ / 2.0),
+    1 -> Gen.oneOf(-1e6, 1e6, -1e150, 1e150),
     1 -> Gen.oneOf(Specials.toSeq))
 
   private val genQuery: Gen[(Double, Double)] = Gen.zip(genCoord, genCoord)
@@ -57,6 +62,9 @@ class PointRTree2DPropertySpec extends AnyFunSuite {
     val sample = Gen.listOfN(500, genLayer)
       .apply(Gen.Parameters.default, Seed(7L)).get
     assert(Set(0, 1, 16, 17, 256, 257, 4097).subsetOf(sample.map(_.size).toSet))
+    assert(Set(3, 4).subsetOf(sample.map(l => envelopes(l.tree).length).toSet))
+    assert(sample.exists(l => l.kind == Runs && l.size == 4097 &&
+      straddlesLeaves(l.tree)))
     def has(p: Double => Boolean) =
       sample.exists(l => l.xs.exists(p) || l.ys.exists(p))
     assert(has(_.isNaN))
@@ -124,11 +132,11 @@ class PointRTree2DPropertySpec extends AnyFunSuite {
     })
   }
 
-  test("nearestK, k ∈ {1, 4, 10} × keepTies == sort by (Double.compare) " +
+  test("nearestK, k ∈ {1, 4, 10, 17} × keepTies == sort by (Double.compare) " +
     "distance") {
     check(Prop.forAll(genCase) { case (layer, qs) =>
       val t = layer.tree
-      (for ((qx, qy) <- qs; k <- Seq(1, 4, 10); ties <- Seq(false, true))
+      (for ((qx, qy) <- qs; k <- Ks; ties <- Seq(false, true))
         yield knnAgrees(layer, qx, qy, k, ties, probe(t, qx, qy, k, ties)))
         .forall(ok => ok)
     })
@@ -138,7 +146,7 @@ class PointRTree2DPropertySpec extends AnyFunSuite {
     val pool = Executors.newFixedThreadPool(4)
     try check(Prop.forAll(genCase) { case (layer, qs) =>
       val t = layer.tree
-      def answers() = for ((qx, qy) <- qs; k <- Seq(1, 4, 10);
+      def answers() = for ((qx, qy) <- qs; k <- Ks;
           ties <- Seq(false, true)) yield probe(t, qx, qy, k, ties)
       val alone = answers()
       val start = new CyclicBarrier(4)
@@ -157,6 +165,9 @@ object PointRTree2DPropertySpec {
   case object Lattice extends Kind   // integer grid: ties and duplicates
   case object Pool extends Kind      // drawn from 8 points: heavy duplicates
   case object Identical extends Kind // one point, n times
+  case object Runs extends Kind      // each point 17 times: runs past a leaf
+
+  val Ks: Seq[Int] = Seq(1, 4, 10, 17)
 
   val Specials: Array[Double] = Array(Double.NaN, Double.PositiveInfinity,
     Double.NegativeInfinity, -0.0, 0.0)
@@ -186,10 +197,12 @@ object PointRTree2DPropertySpec {
         }
       val pool = Array.fill(kind match { case Pool => 8; case _ => 1 })(
         (coord(), coord()))
-      val pts = Array.fill(n)(kind match {
-        case Pool | Identical => pool(r.nextInt(pool.length))
-        case _ => (coord(), coord())
-      })
+      val pts = kind match {
+        case Runs => Array.fill((n + 16) / 17)((coord(), coord()))
+          .flatMap(Array.fill(17)(_)).take(n)
+        case Pool | Identical => Array.fill(n)(pool(r.nextInt(pool.length)))
+        case _ => Array.fill(n)((coord(), coord()))
+      }
       Layer(kind, pts.map(_._1), pts.map(_._2))
     }
   }
@@ -200,6 +213,11 @@ object PointRTree2DPropertySpec {
     f.setAccessible(true)
     f.get(t).asInstanceOf[Array[Array[Double]]]
   }
+
+  /** Some point's copies lie in two different leaves. */
+  def straddlesLeaves(t: PointRTree2D): Boolean =
+    (0 until t.size).groupBy(p => (t.xs(p), t.ys(p)))
+      .exists(_._2.map(_ / 16).distinct.length > 1)
 
   /** The tree holds each input (id, x, y) exactly once (bit-exact). */
   def sameMultiset(t: PointRTree2D, layer: Layer): Boolean = {
