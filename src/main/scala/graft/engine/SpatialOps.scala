@@ -33,8 +33,9 @@ final case class CellStats(
 /** The distributed operators — each the Spark-first re-expression of a
   * reference entry point (SURVEY.md §2), built as declarative DataFrame /
   * typed Dataset plans so Catalyst handles pushdown, join selection, AQE
-  * skew splitting; per-partition `LocalRTree`s add the intra-partition
-  * pruning that rstar's tree levels provided.
+  * skew splitting; per-partition packed trees (`PointRTree2D`, and
+  * `LocalRTree` on the R* append path) add the intra-partition pruning
+  * that rstar's tree levels provided.
   *
   * Scale notes (100 TB / 1000 executors):
   *   - the only driver-side state is the per-cell histogram (bounded by
@@ -136,16 +137,16 @@ object SpatialOps {
   private def primitiveSchema(fields: (String, DataType)*): StructType =
     StructType(fields.map { case (name, t) => StructField(name, t, nullable = false) })
 
-  /** Intersection join against a BOUNDED right side: broadcast ONE
-    * `LocalRTree` of the whole layer and probe it per left row inside
-    * `mapPartitions` — zero shuffle of the (arbitrarily large) left side,
-    * the J1 sibling of [[knnJoinBroadcast]] and the plan a deployment
-    * uses whenever the layer fits an executor. Point-shaped left rows
-    * (minX==maxX, minY==maxY) take the `locateAllAtPoint` fast path; true
-    * rects use the envelope-intersecting query. Same closed-interval
-    * semantics as [[intersectionJoin]], and each qualifying pair is
-    * emitted exactly once (no grid copies, so no reference-point dedup
-    * is needed) — output row set identical.
+  /** Intersection join against a BOUNDED right side: broadcast ONE packed
+    * box tree ([[graft.index.PointRTree2D]]) of the whole layer and probe
+    * it per left row inside `mapPartitions` — zero shuffle of the
+    * (arbitrarily large) left side, the J1 sibling of [[knnJoinBroadcast]]
+    * and the plan a deployment uses whenever the layer fits an executor.
+    * Every left row, point-shaped or not, is one closed-box walk
+    * (`foreachInBox`). Same closed-interval semantics as
+    * [[intersectionJoin]], and each qualifying pair is emitted exactly
+    * once (no grid copies, so no reference-point dedup is needed) — output
+    * row set identical.
     */
   def intersectionJoinBroadcast(left: DataFrame, right: DataFrame): DataFrame = {
     val spark = left.sparkSession
@@ -154,21 +155,19 @@ object SpatialOps {
       right.select("id", "minX", "minY", "maxX", "maxY")
         .as[(Long, Double, Double, Double, Double)],
       "intersectionJoinBroadcast")
-    val entries = rects.map { case (id, x0, y0, x1, y1) =>
-      Entry(AABB.of2d(x0, y0, x1, y1), id)
-    }
     // Lifetime: as CellHistogram.broadcast's — the result's lazy plan holds
     // it, so ContextCleaner frees it once that plan is unreferenced.
-    val treeB = spark.sparkContext.broadcast(
-      new LocalRTree[Long](2, 40, 1).bulkLoad(entries))
+    val treeB = spark.sparkContext.broadcast(PointRTree2D.build(
+      rects.map(_._1), rects.map(_._2), rects.map(_._3), rects.map(_._4),
+      rects.map(_._5)))
     val l = left.select("id", "minX", "minY", "maxX", "maxY")
     // HOT PATH (the bench headline probes this per entity row): the probe
-    // is the push-based SoA walk (foreachIntersecting — no selection
-    // iterator, no per-probe stack; a degenerate [x,x]×[y,y] box makes it
-    // exactly locateAllAtPoint under closed intervals), hit ids land in a
-    // reusable growable long array, and output rows are written straight
-    // to one reused UnsafeRow — no Scala tuples, no Dataset encoder. Pair
-    // set unchanged (spec-pinned against intersectionJoin row for row).
+    // is the packed tree's push-based box walk (no selection iterator, no
+    // per-probe box; a degenerate [x,x]×[y,y] box makes it exactly
+    // locateAllAtPoint under closed intervals), hit ids land in a reusable
+    // growable long array, and output rows are written straight to one
+    // reused UnsafeRow — no Scala tuples, no Dataset encoder. Pair set
+    // unchanged (spec-pinned against intersectionJoin row for row).
     val schema = primitiveSchema("lid" -> LongType, "rid" -> LongType)
     val rdd = l.queryExecution.toRdd.mapPartitions { it =>
       val t = treeB.value
@@ -178,9 +177,9 @@ object SpatialOps {
         private var n = 0
         private var pos = 0
         private var lid = 0L
-        private val collect: Entry[Long] => Unit = { e =>
+        private val collect: Int => Unit = { p =>
           if (n == ids.length) ids = java.util.Arrays.copyOf(ids, n * 2)
-          ids(n) = e.value; n += 1
+          ids(n) = t.ids(p); n += 1
         }
         private def fill(): Unit =
           while (pos >= n && it.hasNext) {
@@ -189,7 +188,7 @@ object SpatialOps {
             val x0 = r.getDouble(1); val y0 = r.getDouble(2)
             val x1 = r.getDouble(3); val y1 = r.getDouble(4)
             n = 0; pos = 0
-            t.foreachIntersecting(AABB.of2d(x0, y0, x1, y1))(collect)
+            t.foreachInBox(x0, y0, x1, y1)(collect)
           }
         override def hasNext: Boolean = { fill(); pos < n }
         override def next(): InternalRow = {
@@ -594,16 +593,15 @@ object SpatialOps {
   }
 
   /** Fused-probe variant of [[knnEnvelopeJoin]] for RECTANGLE layers (the
-    * metric IS the envelope distance, so per-cell `LocalRTree`s of rect
-    * entries answer it exactly — segment layers keep their own refinement,
-    * [[knnSegJoinTrees]]). Each cell run bulk-loads a `LocalRTree[Long]`
-    * whose frozen SoA mirror serves distance-ordered probes; per query it
-    * emits the k nearest by EXACT box distance (`AABB.distance2` clamps
-    * then squares in the same IEEE order as `stBoxDistanceSq`, so values
-    * are oracle-identical) EXTENDED through float-exact ties at the k-th
-    * distance — the (d2, gid) window cut then never loses a lower-gid tie
-    * the heap's arbitrary order dropped. Output identical to
-    * [[knnEnvelopeJoin]] with the box metric, row for row.
+    * metric IS the envelope distance, so per-cell packed box trees answer
+    * it exactly — segment layers keep their own refinement,
+    * [[knnSegJoinTrees]]). Each cell run builds a packed box tree
+    * ([[graft.index.PointRTree2D]]); per query `nearestK` emits the k
+    * nearest by EXACT box distance (clamp then square, the IEEE order of
+    * `stBoxDistanceSq`, so values are oracle-identical) EXTENDED through
+    * float-exact ties at the k-th distance — the (d2, gid) window cut then
+    * never loses a lower-gid tie an arbitrary tie order dropped. Output
+    * identical to [[knnEnvelopeJoin]] with the box metric, row for row.
     */
   def knnRectJoinTrees(points: Dataset[PointRow], rects: DataFrame,
       k: Int, grid: CellGrid): DataFrame = {
@@ -613,23 +611,9 @@ object SpatialOps {
       col("gid"), col("minX"), col("minY"), col("maxX"), col("maxY")))
     envelopeKnn(points, rects, k, grid)(probeCellRuns(_, rectRdd, 4, "gid") {
       (gids, c) =>
-        val t = new LocalRTree[Long](2, 40, 1).bulkLoad(Array.tabulate(gids.length)(i =>
-          Entry(AABB.of2d(c(0)(i), c(1)(i), c(2)(i), c(3)(i)), gids(i))))
-        (qx, qy, emit) => {
-          val it = t.nearestNeighborIter(Array(qx, qy))
-          var got = 0
-          var kth = Double.MaxValue
-          var done = false
-          while (!done && it.hasNext) {
-            val (e, dd) = it.next()
-            if (got < k) {
-              emit(e.value, dd)
-              got += 1
-              if (got == k) kth = dd
-            } else if (dd == kth) emit(e.value, dd) // float-exact tie extension
-            else done = true
-          }
-        }
+        val t = PointRTree2D.build(gids, c(0), c(1), c(2), c(3))
+        (qx, qy, emit) =>
+          t.nearestK(qx, qy, k, keepTies = true)((p, d2) => emit(t.ids(p), d2))
     })
   }
 
@@ -658,8 +642,8 @@ object SpatialOps {
   /** Fused-probe variant of [[knnEnvelopeJoin]] for SEGMENT layers — the
     * sibling of [[knnRectJoinTrees]] where the ranking metric (true
     * point-segment distance, rstar/src/primitives/line.rs:71-113) is NOT
-    * the tree's envelope metric. Each cell run bulk-loads a `LocalRTree`
-    * of segment ENVELOPES (values index the run's coordinate columns); its
+    * the tree's envelope metric. Each cell run builds a packed box tree
+    * of segment ENVELOPES (ids index the run's coordinate columns); its
     * distance-ordered envelope iterator yields candidates by box distance
     * — a LOWER BOUND of the segment distance — and the probe refines each
     * candidate to its exact [[segDistanceSq]], stopping once the next
@@ -682,22 +666,24 @@ object SpatialOps {
     envelopeKnn(points, segs, k, grid)(probeCellRuns(_, segRdd, 4, "gid") {
       (gids, c) =>
         val Array(xs1, ys1, xs2, ys2) = c
-        val t = new LocalRTree[Long](2, 40, 1).bulkLoad(Array.tabulate(gids.length)(i =>
-          Entry(AABB.of2d(
-            math.min(xs1(i), xs2(i)), math.min(ys1(i), ys2(i)),
-            math.max(xs1(i), xs2(i)), math.max(ys1(i), ys2(i))), i.toLong)))
+        val n = gids.length
+        val t = PointRTree2D.build(Array.tabulate(n)(_.toLong),
+          Array.tabulate(n)(i => math.min(xs1(i), xs2(i))),
+          Array.tabulate(n)(i => math.min(ys1(i), ys2(i))),
+          Array.tabulate(n)(i => math.max(xs1(i), xs2(i))),
+          Array.tabulate(n)(i => math.max(ys1(i), ys2(i))))
         (qx, qy, emit) => {
-          val it = t.nearestNeighborIter(Array(qx, qy))
+          val it = t.nearestIter(qx, qy)
           // size-k max-heap of exact distances: peek = current k-th
           val heap = new java.util.PriorityQueue[java.lang.Double](
             k, java.util.Collections.reverseOrder())
           val evald = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
           var done = false
           while (!done && it.hasNext) {
-            val (e, boxD2) = it.next() // ascending envelope distance
+            val (p, boxD2) = it.next() // ascending envelope distance
             if (heap.size == k && boxD2 > heap.peek()) done = true
             else {
-              val i = e.value.toInt
+              val i = t.ids(p).toInt
               val d2 = segDistanceSq(xs1(i), ys1(i), xs2(i), ys2(i), qx, qy)
               evald += ((gids(i), d2))
               if (heap.size < k) heap.add(d2)

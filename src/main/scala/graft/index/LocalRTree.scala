@@ -31,10 +31,11 @@ final case class Entry[T](env: AABB, value: T) extends LocalRTree.Node[T]
   *   - dual-tree intersection candidates (rstar/src/algorithm/
   *     intersection_iterator.rs:15-104).
   *
-  * Each query has one implementation, a walk over the node graph. The one
-  * exception is a frozen 2-D tree's [[LocalRTree.FlatMirror]], which serves
-  * exactly the engine's two hot probes, `foreachIntersecting` and the
-  * default-metric `nearestNeighborIter`; everything else walks the nodes.
+  * Each query has one implementation, a walk over the node graph. The
+  * engine's 2-D probes (the broadcast box join, the per-cell rect and
+  * segment kNN, the point trees) run on the packed [[PointRTree2D]]; this
+  * tree serves the R* append path (`insertAppendRange`) and the rstar
+  * parity suites.
   *
   * Not thread-safe for mutation; queries are read-only and safe to share.
   */
@@ -52,23 +53,6 @@ final class LocalRTree[T](
 
   private var root: Inner[T] = Inner.empty[T]
   private var cnt: Int = 0
-  // Frozen = built by bulkLoad and unmodified since: the only state in
-  // which the mirror may serve probes. Any mutation clears it; rebuild-based
-  // removal re-freezes through bulkLoad.
-  private var frozen: Boolean = false
-
-  /** Lazily-built SoA mirror of a frozen 2-D tree (see [[FlatMirror]]). It
-    * answers only `foreachIntersecting` and the default-metric
-    * `nearestNeighborIter`; every other query walks the node graph. Null
-    * when unavailable (empty, mutated or not 2-D).
-    */
-  @transient private var mirrorCache: FlatMirror[T] = _
-  private def mirror: FlatMirror[T] =
-    if (!frozen || cnt == 0 || root.env.dims != 2) null
-    else {
-      if (mirrorCache == null) mirrorCache = FlatMirror.build(root, cnt)
-      mirrorCache
-    }
 
   def size: Int = cnt
   def rootNode: Inner[T] = root
@@ -98,8 +82,6 @@ final class LocalRTree[T](
         omtBuild(elements, keys, idx, 0, n, height)
       }
     cnt = elements.length
-    frozen = true
-    mirrorCache = null // rebuilt lazily for the new tree
     this
   }
 
@@ -174,8 +156,6 @@ final class LocalRTree[T](
     * micro-batch appends; bulk load is the hot path.
     */
   def insert(entry: Entry[T]): Unit = {
-    frozen = false
-    mirrorCache = null
     if (cnt == 0) {
       root = Inner.ofChildren(Array[Node[T]](entry))
       cnt = 1
@@ -482,18 +462,14 @@ final class LocalRTree[T](
   /** Unordered scan of all elements (`iter`, rstar/src/rtree.rs:313-329). */
   def iterator: Iterator[Entry[T]] = select(_ => true, _ => true)
 
-  /** Push-based `queryIntersecting` for the broadcast box probe — the
-    * reference's `_int` style (rstar/src/algorithm/iterators.rs:98-145,
-    * motivation rtree.rs:98-108). A frozen 2-D tree answers from the SoA
-    * mirror (plain recursion over primitive arrays, no allocation per
-    * probe); any other tree runs the selection iterator.
+  /** Push-based `queryIntersecting` — the reference's `_int` style
+    * (rstar/src/algorithm/iterators.rs:98-145, motivation rtree.rs:98-108):
+    * the node-graph walk of the selection iterator. No engine path calls
+    * it (the broadcast box join probes a packed [[PointRTree2D]]); the
+    * benchmark's index replay times it.
     */
-  def foreachIntersecting(q: AABB)(f: Entry[T] => Unit): Unit = {
-    val m = mirror
-    if (m != null)
-      m.foreachIntersecting(q.lower(0), q.lower(1), q.upper(0), q.upper(1))(f)
-    else queryIntersecting(q).foreach(f)
-  }
+  def foreachIntersecting(q: AABB)(f: Entry[T] => Unit): Unit =
+    queryIntersecting(q).foreach(f)
 
   /** FIRST element containing the point — `locate_at_point`
     * (rstar/src/rtree.rs:760-800): the lazy selection iterator stops at its
@@ -558,19 +534,11 @@ final class LocalRTree[T](
     * (rstar/src/rtree.rs:1075-1122, algorithm nearest_neighbor.rs:56-158):
     * a min-heap mixing nodes (keyed by envelope lower-bound distance) and
     * elements (keyed by exact distance); a popped element is the next
-    * nearest. With the default envelope metric, a frozen 2-D tree streams
-    * from the SoA mirror (the engine's per-cell kNN probe).
+    * nearest.
     */
   def nearestNeighborIter(
       p: Array[Double],
       dist: Entry[T] => Double = null): Iterator[(Entry[T], Double)] = {
-    if (dist == null && p.length == 2) {
-      val m = mirror
-      if (m != null)
-        return m.nearestIter(p(0), p(1)).map { case (i, dd) =>
-          (m.entries(i), dd)
-        }
-    }
     val d = if (dist == null) (e: Entry[T]) => e.env.distance2(p) else dist
     new Iterator[(Entry[T], Double)] {
       private val heap = new DistHeap[Node[T]](32)
@@ -794,155 +762,6 @@ object LocalRTree {
         n.env = e
       }
       n
-    }
-  }
-
-  /** Whole-tree struct-of-arrays mirror of a FROZEN 2-D tree: per-level
-    * flat envelope arrays plus contiguous child ranges (DFS order), so the
-    * engine's two hot probes touch only primitive arrays — no Node pattern
-    * matches, no pointer chasing, no per-child megamorphic dispatch. The
-    * same layout idea as [[PointRTree2D]], generalized to rectangle
-    * entries and the bulk-load tree's variable fan-out. Built lazily on
-    * first query, invalidated by any mutation (the `frozen` flag), and
-    * @transient across serialization.
-    *
-    * It serves exactly two probes: the box walk `foreachIntersecting`
-    * (the broadcast intersection join) and the distance-ordered
-    * `nearestIter` (the per-cell rect and segment kNN). Every other query
-    * walks the node graph, so no query has a second implementation here.
-    *
-    * Level 0 = leaf parents (child ranges index `entries`); level
-    * `levels-1` = root. Envelopes are (minX, minY, maxX, maxY) stride 4.
-    */
-  private[index] final class FlatMirror[T](
-      val entries: Array[Entry[T]],
-      val entryEnvs: Array[Double],
-      val levelEnvs: Array[Array[Double]],
-      val childStart: Array[Array[Int]],
-      val childEnd: Array[Array[Int]]) {
-
-    @inline private def boxDist2(
-        a: Array[Double], off: Int, px: Double, py: Double): Double = {
-      val dx = math.min(a(off + 2), math.max(a(off), px)) - px
-      val dy = math.min(a(off + 3), math.max(a(off + 1), py)) - py
-      dx * dx + dy * dy
-    }
-
-    private val top = levelEnvs.length - 1
-    private val ENTRY = 1L << 62
-
-    /** Enqueue a popped node's children, keyed by envelope distance. */
-    @inline private def expand(heap: LongHeap, v: Long,
-        px: Double, py: Double): Unit = {
-      val level = (v >>> 32).toInt
-      val idx = (v & 0xffffffffL).toInt
-      val from = childStart(level)(idx)
-      val to = childEnd(level)(idx)
-      if (level == 0) {
-        var i = from
-        while (i < to) {
-          heap.enqueue(boxDist2(entryEnvs, 4 * i, px, py), ENTRY | i)
-          i += 1
-        }
-      } else {
-        val a = levelEnvs(level - 1)
-        var i = from
-        while (i < to) {
-          heap.enqueue(boxDist2(a, 4 * i, px, py), ((level - 1).toLong << 32) | i)
-          i += 1
-        }
-      }
-    }
-
-    /** Distance-ordered stream of (entry index, distance²): a best-first
-      * heap seeded with the root. Entry keys are exact envelope distances,
-      * so each popped entry is the next nearest.
-      */
-    def nearestIter(px: Double, py: Double): Iterator[(Int, Double)] =
-      new Iterator[(Int, Double)] {
-        private val heap = new LongHeap(64)
-        if (entries.length > 0)
-          heap.enqueue(boxDist2(levelEnvs(top), 0, px, py), top.toLong << 32)
-        private def settle(): Unit =
-          while (heap.nonEmpty && (heap.headVal & ENTRY) == 0)
-            expand(heap, heap.dequeue(), px, py)
-        def hasNext: Boolean = { settle(); heap.nonEmpty }
-        def next(): (Int, Double) = {
-          settle()
-          val k = heap.headKey
-          val v = heap.dequeue()
-          ((v & 0xffffffffL).toInt, k)
-        }
-      }
-
-    /** Push-based closed-box intersection over the flat levels. */
-    def foreachIntersecting(qMinX: Double, qMinY: Double, qMaxX: Double,
-        qMaxY: Double)(f: Entry[T] => Unit): Unit = {
-      if (entries.length == 0) return
-      def hit(a: Array[Double], off: Int): Boolean =
-        a(off) <= qMaxX && a(off + 2) >= qMinX &&
-          a(off + 1) <= qMaxY && a(off + 3) >= qMinY
-      def walk(level: Int, idx: Int): Unit = {
-        val from = childStart(level)(idx)
-        val to = childEnd(level)(idx)
-        if (level == 0) {
-          var i = from
-          while (i < to) {
-            if (hit(entryEnvs, 4 * i)) f(entries(i))
-            i += 1
-          }
-        } else {
-          val a = levelEnvs(level - 1)
-          var i = from
-          while (i < to) {
-            if (hit(a, 4 * i)) walk(level - 1, i)
-            i += 1
-          }
-        }
-      }
-      if (hit(levelEnvs(top), 0)) walk(top, 0)
-    }
-  }
-
-  private[index] object FlatMirror {
-    /** DFS flattening: children of each node land contiguously at the
-      * level below (uniform leaf depth is a tree invariant).
-      */
-    def build[T](root: Inner[T], size: Int): FlatMirror[T] = {
-      var h = 0
-      var n: Node[T] = root
-      while (n.isInstanceOf[Inner[_]]) {
-        h += 1
-        val in = n.asInstanceOf[Inner[T]]
-        n = in.children(0)
-      }
-      val levelEnvs = Array.fill(h)(new mutable.ArrayBuffer[Double])
-      val starts = Array.fill(h)(new mutable.ArrayBuffer[Int])
-      val ends = Array.fill(h)(new mutable.ArrayBuffer[Int])
-      val entriesB = new mutable.ArrayBuffer[Entry[T]](size)
-      val entryEnvsB = new mutable.ArrayBuffer[Double](size * 4)
-      def walk(in: Inner[T], depth: Int): Unit = {
-        val level = h - 1 - depth
-        val e = in.env
-        levelEnvs(level) += e.lower(0) += e.lower(1) += e.upper(0) += e.upper(1)
-        if (level == 0) {
-          starts(0) += entriesB.length
-          in.children.foreach { c =>
-            val en = c.asInstanceOf[Entry[T]]
-            entriesB += en
-            entryEnvsB += en.env.lower(0) += en.env.lower(1) +=
-              en.env.upper(0) += en.env.upper(1)
-          }
-          ends(0) += entriesB.length
-        } else {
-          starts(level) += levelEnvs(level - 1).length / 4
-          in.children.foreach(c => walk(c.asInstanceOf[Inner[T]], depth + 1))
-          ends(level) += levelEnvs(level - 1).length / 4
-        }
-      }
-      walk(root, 0)
-      new FlatMirror[T](entriesB.toArray[Entry[T]], entryEnvsB.toArray,
-        levelEnvs.map(_.toArray), starts.map(_.toArray), ends.map(_.toArray))
     }
   }
 

@@ -1,9 +1,8 @@
 package graft.index
 
 /** Primitive binary min-heap: double keys, long payloads, no boxing — the
-  * best-first queue of both tree probes ([[PointRTree2D]] and
-  * `LocalRTree`'s flat mirror), whose payloads are packed node/entry
-  * handles.
+  * best-first queue of [[PointRTree2D]]'s `nearestK` and `nearestIter`,
+  * whose payloads are packed node/entry handles.
   */
 private[index] final class LongHeap(initialCapacity: Int) {
   private var keys = new Array[Double](initialCapacity)

@@ -7,17 +7,17 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.geom.AABB
-import graft.index.{Entry, LocalRTree}
+import graft.index.{Entry, LocalRTree, PointRTree2D}
 
 /** Generated properties of `LocalRTree` against brute-force scans — the
   * rstar suite's semantics (bulk-load round trip, NN vs a linear scan,
   * envelope-query completeness; rstar/src/algorithm/nearest_neighbor.rs:
   * 336-397, iterators.rs:309-410) — in each state a tree reaches:
-  *   - bulk-loaded 2-D, where `foreachIntersecting` and
-  *     `nearestNeighborIter` answer from the struct-of-arrays mirror;
-  *   - bulk-loaded 3-D, where every query walks the node graph;
+  *   - bulk-loaded 2-D (OMT);
+  *   - bulk-loaded 3-D;
   *   - insert-built 2-D (R* insertion);
-  *   - bulk-loaded 2-D plus one insert, which drops the mirror.
+  *   - bulk-loaded 2-D plus one insert (the R* append path's shape).
+  * Every query walks the node graph in every state.
   * Both the engine's `(2, 40, 1)` parameters and the defaults, layer sizes
   * 0, 1, 40, 41 and 1 601 (one node, one past it, two levels plus one),
   * point and rectangle entries with duplicates, zero-area boxes and ±0.0.
@@ -190,6 +190,8 @@ class LocalRTreePropertySpec extends AnyFunSuite {
     })
   }
 
+  // "The mirror" is the packed box tree (`PointRTree2D`) that took over the
+  // deleted flat mirror's 2-D box probes.
   test("a NaN entry is never a box hit, in the mirror or the node graph") {
     val pts = Array.tabulate(200)(i => Entry(AABB.fromPoint(
       Array((i % 20) * 0.5, (i / 20) * 1.0)), i))
@@ -200,6 +202,13 @@ class LocalRTreePropertySpec extends AnyFunSuite {
     bulk.foreachIntersecting(q)(e => pushed += e.value)
     assert(pushed.result().sorted == (0 until 200))
     assert(bulk.queryIntersecting(q).map(_.value).toSeq.sorted == (0 until 200))
+    val es = pts :+ nan
+    val packed = PointRTree2D.build(es.map(_.value.toLong),
+      es.map(_.env.lower(0)), es.map(_.env.lower(1)),
+      es.map(_.env.upper(0)), es.map(_.env.upper(1)))
+    val packedHits = Seq.newBuilder[Long]
+    packed.foreachInBox(0, 0, 10, 10)(p => packedHits += packed.ids(p))
+    assert(packedHits.result().sorted == (0L until 200L))
     val inserted = new LocalRTree[Int](2, 40, 1)
     (pts :+ nan).foreach(inserted.insert)
     assert(!inserted.rootNode.env.lower.exists(_.isNaN))
@@ -268,11 +277,11 @@ class LocalRTreePropertySpec extends AnyFunSuite {
 
 object LocalRTreePropertySpec {
   sealed trait State
-  case object Bulk2D extends State     // the mirror serves its two probes
-  case object Bulk3D extends State     // node graph only
+  case object Bulk2D extends State     // OMT bulk load, 2-D
+  case object Bulk3D extends State     // OMT bulk load, 3-D
   case object Inserted2D extends State // R* insertion, one entry at a time
-  case object Thawed2D extends State   // bulk load, then one insert
-  val States: Seq[State] = Seq(Bulk2D, Bulk3D, Inserted2D, Thawed2D)
+  case object Appended2D extends State // bulk load, then one insert
+  val States: Seq[State] = Seq(Bulk2D, Bulk3D, Inserted2D, Appended2D)
   def dimsOf(state: State): Int = if (state == Bulk3D) 3 else 2
 
   /** (minSize, maxSize, reinsertionCount) */
@@ -320,7 +329,7 @@ object LocalRTreePropertySpec {
       state match {
         case Bulk2D | Bulk3D => t.bulkLoad(es)
         case Inserted2D => es.foreach(t.insert)
-        case Thawed2D =>
+        case Appended2D =>
           t.bulkLoad(es.dropRight(1))
           es.lastOption.foreach(t.insert)
       }

@@ -395,22 +395,22 @@ class LocalRTreeSpec extends AnyFunSuite {
     "locateAllAtPoint") {
     // hits and misses on a bulk-loaded, an insert-mutated and a rect tree
     val ps = points(1200, seed = 31)
-    val frozen = pointTree(ps)
+    val bulk = pointTree(ps)
     ps.foreach { p =>
-      val got = frozen.locateAtPoint(p)
+      val got = bulk.locateAtPoint(p)
       assert(got.isDefined && got.get.env.containsPoint(p))
     }
     points(150, seed = 32).foreach { q =>
-      val want = frozen.locateAllAtPoint(q).toSeq
-      val got = frozen.locateAtPoint(q)
+      val want = bulk.locateAllAtPoint(q).toSeq
+      val got = bulk.locateAtPoint(q)
       assert(got.isDefined == want.nonEmpty)
       got.foreach(e => assert(want.contains(e)))
     }
     // mutated tree (insert), same contract
-    val thawed = pointTree(ps.take(600))
+    val mutated = pointTree(ps.take(600))
     ps.slice(600, 700).foreach(p =>
-      thawed.insert(Entry(AABB.fromPoint(p), 9999)))
-    ps.take(700).foreach(p => assert(thawed.locateAtPoint(p).isDefined))
+      mutated.insert(Entry(AABB.fromPoint(p), 9999)))
+    ps.take(700).foreach(p => assert(mutated.locateAtPoint(p).isDefined))
     // rectangle layer: containment is box containment; overlapping boxes
     // return SOME containing box (first-match semantics)
     val boxes = rects(400, seed = 33)
