@@ -23,7 +23,8 @@ import graft.index.CellGrid
   * On a 2-D grid the counts alone also bound d_up, with no probe
   * ([[knnBound]]), so a query's exact cover is known before any entry is
   * read ([[knnCover]]): [[IndexStore.knnQuery]] plans its covers on the
-  * driver and probes the stored trees in one pass.
+  * driver and probes the stored trees in one job with no shuffle — each
+  * scan partition cuts its queries' k best, and the driver merges them.
   *
   * Bounded by the grid (≤ 4^res entries), so it is collected to the
   * driver and broadcast. An [[IndexStore]] group's cell manifest is the

@@ -8,6 +8,7 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 import org.apache.spark.util.AccumulatorV2
@@ -439,58 +440,117 @@ object IndexStore {
     */
   val MaxKnnBatch: Long = 100L * 1000
 
+  /** One query's k best (d2, id) pairs among those offered, ascending in
+    * `Double.compare` order on d2, then id — the total order of the
+    * `row_number` window the answer is numbered in. A pair offered twice
+    * is kept twice, as the window keeps a repeated row.
+    */
+  private final class TopK(k: Int) extends Serializable {
+    private var ds = new Array[Double](math.min(k, 16))
+    private var ids = new Array[Long](ds.length)
+    private var n = 0
+
+    private def before(d: Double, id: Long, j: Int): Boolean = {
+      val c = java.lang.Double.compare(d, ds(j))
+      c < 0 || (c == 0 && id < ids(j))
+    }
+
+    /** Insert (d, id) if it beats the k-th pair, which it then evicts. */
+    def offer(d: Double, id: Long): Unit =
+      if (n < k || before(d, id, n - 1)) {
+        if (n == ds.length && n < k) {
+          ds = java.util.Arrays.copyOf(ds, math.min(k, 2 * n))
+          ids = java.util.Arrays.copyOf(ids, ds.length)
+        }
+        var j = math.min(n, k - 1)
+        while (j > 0 && before(d, id, j - 1)) {
+          ds(j) = ds(j - 1); ids(j) = ids(j - 1)
+          j -= 1
+        }
+        ds(j) = d; ids(j) = id
+        if (n < k) n += 1
+      }
+
+    def pairs: Iterator[(Double, Long)] = Iterator.range(0, n).map(j => (ds(j), ids(j)))
+  }
+
   /** K1/J2 over the persisted index — the 100 TB cold-start serving path:
     * answer a kNN join by DESERIALIZING the stored per-cell trees and
     * probing them, never rebuilding (reference analog: serde round-trip
-    * then query, rstar/src/rtree.rs:1289-1305). One pass: the driver
-    * collects the batch (at most [[MaxKnnBatch]] queries) and bounds each
-    * query's cover from the cell manifests alone
-    * ([[CellHistogram.knnCover]]); one scan of the covered cells probes
-    * each stored tree once, deserialized once for all the queries
-    * covering its cell, and [[SpatialOps.knnJoin]]'s (d2, id) cut ranks
-    * the hits. Per-cell probes keep float-exact boundary ties, so the
-    * output is bit-equal to the in-memory kNN join on the same inputs.
+    * then query, rstar/src/rtree.rs:1289-1305). The driver collects the
+    * batch (at most [[MaxKnnBatch]] queries; a local batch costs no job)
+    * and bounds each query's cover from the cell manifests alone
+    * ([[CellHistogram.knnCover]]). Then ONE job with no shuffle scans the
+    * covered cells: each stored tree is deserialized once for all the
+    * queries covering its cell and probed with ties kept, and each scan
+    * partition cuts its queries' k best in (d2, id) order; the driver
+    * merges those lists into each query's k best in the same order and
+    * numbers them rn = 1..k. Per-cell probes keep float-exact boundary
+    * ties, so the output is bit-equal to the in-memory kNN join on the
+    * same inputs.
+    *
+    * The answer is computed when this is called, and returned as a local
+    * relation `(qid, id, d2, rn int)`: collecting it runs no job. It is
+    * held on the driver, so a batch whose answer could exceed
+    * [[SpatialOps.MaxBroadcastLayerRows]] rows (batch × min(k, stored
+    * points)) fails before the scan with a contract message.
     */
   def knnQuery(spark: SparkSession, root: String, grid: CellGrid,
       queries: Dataset[QueryRow], k: Int): DataFrame = {
-    import spark.implicits._
     val owned = served(spark, root)
     val hist = CellHistogram.of(owned.flatMap(o => o.cells.zip(o.ns)))
     val batch = SpatialOps.collectBounded(queries, MaxKnnBatch)(
       s"knnQuery: query batch exceeds $MaxKnnBatch rows — the batch is " +
         "planned on the driver; split it into smaller batches")
-    // each query under every cell of its cover, or under `everywhere`
-    // when that cover is every cell
-    val byCell = mutable.LongMap.empty[mutable.ArrayBuffer[QueryRow]]
-    val everywhere = mutable.ArrayBuffer.empty[QueryRow]
-    batch.foreach { q =>
-      val cover = hist.knnCover(grid, k)(q.x, q.y)
-      if (cover.length == hist.cells.length) everywhere += q
-      else cover.foreach(byCell.getOrElseUpdate(_, mutable.ArrayBuffer.empty) += q)
-    }
-    // Lifetime: as CellHistogram.broadcast's — the result's lazy plan holds
-    // it, so ContextCleaner frees it once that plan is unreferenced.
-    val planB = spark.sparkContext.broadcast(
-      (byCell.map { case (c, qs) => c -> qs.toArray }.toMap, everywhere.toArray))
-    val keep: Long => Boolean =
-      if (everywhere.nonEmpty) _ => true else byCell.contains
-    val hits = view(spark, owned, keep).select("cell", "tree")
-      .as[(Long, Array[Byte])]
-      .flatMap { case (cell, bytes) =>
-        val (cellQs, allQs) = planB.value
-        val t = treeFrom(bytes) // once per stored tree, for all its queries
-        (cellQs.getOrElse(cell, Array.empty[QueryRow]) ++ allQs).iterator
-          .flatMap { q =>
-            val buf = Vector.newBuilder[(Long, Long, Double)]
-            t.nearestK(q.x, q.y, k, keepTies = true) { (i, d2) =>
-              buf += ((q.qid, t.ids(i), d2))
-            }
-            buf.result()
-          }
+    val stored = hist.ns.sum
+    val held = batch.length * math.min(math.max(k, 0).toLong, stored)
+    require(held <= SpatialOps.MaxBroadcastLayerRows,
+      s"knnQuery: ${batch.length} queries × min(k = $k, $stored stored " +
+        s"points) = $held answer rows exceed " +
+        s"${SpatialOps.MaxBroadcastLayerRows} — the answer is merged on the " +
+        "driver; split the batch into smaller batches")
+    val merged = mutable.LongMap.empty[TopK]
+    if (held > 0) {
+      // each query under every cell of its cover, or under `everywhere`
+      // when that cover is every cell
+      val byCell = mutable.LongMap.empty[mutable.ArrayBuffer[QueryRow]]
+      val everywhere = mutable.ArrayBuffer.empty[QueryRow]
+      batch.foreach { q =>
+        val cover = hist.knnCover(grid, k)(q.x, q.y)
+        if (cover.length == hist.cells.length) everywhere += q
+        else cover.foreach(byCell.getOrElseUpdate(_, mutable.ArrayBuffer.empty) += q)
       }
-      .toDF("qid", "id", "d2")
-    SpatialOps.pointCut(k, keepTies = false)(hits)
-      .select(col("qid"), col("id"), col("d2"), col("rn"))
+      // Lifetime: the scan job below is its only reader, so it is
+      // destroyed as soon as that job ends.
+      val planB = spark.sparkContext.broadcast(
+        (byCell.map { case (c, qs) => c -> qs.toArray }.toMap, everywhere.toArray))
+      val keep: Long => Boolean =
+        if (everywhere.nonEmpty) _ => true else byCell.contains
+      val scan = view(spark, owned, keep).select("cell", "tree").queryExecution.toRdd
+      val parts = try spark.sparkContext.runJob(scan, (rows: Iterator[InternalRow]) => {
+        val (cellQs, allQs) = planB.value
+        val best = mutable.LongMap.empty[TopK]
+        rows.foreach { r =>
+          val qs = cellQs.getOrElse(r.getLong(0), Array.empty[QueryRow])
+          val t = treeFrom(r.getBinary(1)) // once per stored tree, for all its queries
+          def probe(q: QueryRow): Unit = {
+            val top = best.getOrElseUpdate(q.qid, new TopK(k))
+            t.nearestK(q.x, q.y, k, keepTies = true)((i, d2) => top.offer(d2, t.ids(i)))
+          }
+          qs.foreach(probe)
+          allQs.foreach(probe)
+        }
+        best.toArray
+      }) finally planB.destroy()
+      parts.iterator.flatten.foreach { case (qid, top) =>
+        val m = merged.getOrElseUpdate(qid, new TopK(k))
+        top.pairs.foreach { case (d2, id) => m.offer(d2, id) }
+      }
+    }
+    import spark.implicits._
+    merged.toSeq.flatMap { case (qid, top) =>
+      top.pairs.zipWithIndex.map { case ((d2, id), i) => (qid, id, d2, i + 1) }
+    }.toDF("qid", "id", "d2", "rn")
   }
 
   /** LSM COMPACTION for the generational store: materialize the

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -98,10 +98,11 @@ class KnnAdversarialSpec extends AnyFunSuite {
   }
 
   /** Brute-force point kNN: (qid, id, d2, rn int). */
-  private def brutePoints(k: Int, keepTies: Boolean = false): DataFrame = {
+  private def brutePoints(k: Int, keepTies: Boolean = false,
+      qs: Dataset[QueryRow] = queries, pts: Dataset[PointRow] = points): DataFrame = {
     val w = Window.partitionBy("qid")
-    queries.select(col("qid"), col("x").as("qx"), col("y").as("qy"))
-      .crossJoin(points.toDF())
+    qs.select(col("qid"), col("x").as("qx"), col("y").as("qy"))
+      .crossJoin(pts.toDF())
       .withColumn("d2", stDistanceSq(col("x"), col("y"), col("qx"), col("qy")))
       .withColumn("rn",
         if (keepTies) rank().over(w.orderBy(col("d2")))
@@ -187,9 +188,18 @@ class KnnAdversarialSpec extends AnyFunSuite {
     }
   }
 
-  test("IndexStore.knnQuery k=4 and k > |layer| == brute force") {
+  /** A temporary store root, deleted after `body`. */
+  private def withRoot(body: String => Unit): Unit = {
     val root = java.nio.file.Files.createTempDirectory("graft_adv").toString
-    try {
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete()
+    }
+    try body(root) finally rm(new java.io.File(root))
+  }
+
+  test("IndexStore.knnQuery k=4 and k > |layer| == brute force") {
+    withRoot { root =>
       IndexStore.build(spark, points, grid, root, nGroups = 2)
       same(IndexStore.knnQuery(spark, root, grid, queries, 1), brutePoints(1))
       same(IndexStore.knnQuery(spark, root, grid, queries, 4), brutePoints(4))
@@ -199,12 +209,55 @@ class KnnAdversarialSpec extends AnyFunSuite {
         spark, root, grid, spark.range(IndexStore.MaxKnnBatch + 1)
           .map(QueryRow(_, 5.0, 5.0)), 1))
       assert(overCap.getMessage.contains("query batch exceeds"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
+      // the answer is held on the driver: a full batch at k = 101 over
+      // 117 stored points could reach 10.1 M rows, past the driver bound
+      IndexStore.append(spark, (0L until 100L).map(i =>
+        PointRow(100 + i, -100.0 + i, -50.0)).toDS(), grid, root, gen = 1, nGroups = 2)
+      val overHeld = intercept[IllegalArgumentException](IndexStore.knnQuery(
+        spark, root, grid, spark.range(IndexStore.MaxKnnBatch)
+          .map(QueryRow(_, 5.0, 5.0)), 101))
+      assert(overHeld.getMessage.contains(
+        s"answer rows exceed ${SpatialOps.MaxBroadcastLayerRows}"))
+      assert(overHeld.getMessage.contains("split the batch"))
+    }
+  }
+
+  test("IndexStore.knnQuery merges k-th distance ties across trees, groups, " +
+    "generations and repeated qids == brute force") {
+    val s = spark; import s.implicits._
+    // lonLat(4) cells around the origin: [−22.5, 0) × [0, 11.25) is cell 120
+    // and [0, 22.5) × [0, 11.25) cell 136 (group 0 of 2), the two below them
+    // cells 119 and 135 (group 1). A 13 × 13 integer lattice with scrambled
+    // ids, plus low ids on the lattice's neighbours of the origin: three
+    // duplicates at (0, 1) in one tree, one at (1, 0) in the same tree, one
+    // at (0, −1) in group 1; the append adds low ids to cell 120 only, so
+    // its tree (the whole cell) is served by the appended generation.
+    val lattice = for (x <- -6 to 6; y <- -6 to 6)
+      yield ((x + 6) * 13 + y + 6, x.toDouble, y.toDouble)
+    val base = lattice.map { case (i, x, y) => PointRow(100L + i * 37 % 169, x, y) } ++
+      Seq(PointRow(5, 0, 1), PointRow(3, 0, 1), PointRow(7, 0, 1),
+        PointRow(6, 1, 0), PointRow(4, 0, -1))
+    val appended = Seq(PointRow(1, -1, 0), PointRow(2, -3, 4), PointRow(8, -4, 3))
+    val qs = Seq(
+      QueryRow(0, 0.0, 0.0),     // corner of four cells: ties at d2 = 1
+      QueryRow(1, 0.0, 0.5),     // on x = 0: (0, 0) and (0, 1) ×4 tie
+      QueryRow(2, -0.5, 0.0),    // on y = 0: (−1, 0) appended vs (0, 0)
+      QueryRow(3, 0.0, -0.5),    // on y = 0: group 1's (0, −1) vs group 0
+      QueryRow(4, 0.5, 0.0),     // the same qid twice, at two points
+      QueryRow(4, 0.0, 0.5),
+      QueryRow(0, 0.0, 0.0),     // qid 0 again, at the same point
+      QueryRow(5, 22.5, 11.25),  // a far corner of the layer's cells
+      QueryRow(6, -2.5, 2.5)).toDS()
+    val all = (base ++ appended).toDS()
+    withRoot { root =>
+      IndexStore.build(spark, base.toDS(), grid, root, nGroups = 2)
+      IndexStore.append(spark, appended.toDS(), grid, root, gen = 1, nGroups = 2)
+      Seq(0, 1, 4, base.length + appended.length + 5).foreach { k =>
+        val (got, want) = (rows(IndexStore.knnQuery(spark, root, grid, qs, k)),
+          rows(brutePoints(k, qs = qs, pts = all)))
+        assert(got == want, s"k = $k")
+        assert(want._2.nonEmpty == (k > 0))
       }
-      rm(new java.io.File(root))
     }
   }
 }

@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.data.PagesGen
 import graft.engine.{IndexStore, PointRow, QueryRow}
@@ -14,8 +14,8 @@ import graft.index.CellGrid
 /** Spark job counts of the persisted-store calls on a 3-generation store
   * (base + 2 appends, then a compaction): reads resolve latest-wins on the
   * driver from the cell manifests, so a range probe is one scan job with
-  * no shuffle, a kNN batch is bounded on the driver and probes the stored
-  * trees in one pass, and every commit group is one write job — the
+  * no shuffle, a kNN batch is planned on the driver and answered by one
+  * scan job with no shuffle, and every commit group is one write job — the
   * manifests and lineage rows it commits are collected inside that write,
   * and an append plans its base slice on the driver.
   */
@@ -77,8 +77,7 @@ class StoreJobsSpec extends AnyFunSuite {
     (l.jobs(name), l.shuffleBytes(name))
   }
 
-  test("3-generation store: rangeQuery is 1 job with no shuffle, knnQuery " +
-    "≤ 4 jobs, build gains no job") {
+  test("3-generation store: rangeQuery and knnQuery scan in 1 job with no shuffle") {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val grid = CellGrid.lonLat(4)
@@ -108,22 +107,30 @@ class StoreJobsSpec extends AnyFunSuite {
       val qs = spark.range(50).map(i =>
         QueryRow(i, PagesGen.uniform(i + 91, 3) * 300.0 - 150.0,
           PagesGen.uniform(i + 91, 4) * 150.0 - 75.0))
+      var knn: DataFrame = null
+      val (knnJobs, knnShuffle) = measure(l, "knn") {
+        knn = IndexStore.knnQuery(spark, root, grid, qs, 3)
+      }
       var knnRows = 0
-      val (knnJobs, _) = measure(l, "knn") {
-        knnRows = IndexStore.knnQuery(spark, root, grid, qs, 3).collect().length
+      val (knnCollectJobs, _) = measure(l, "knn-collect") {
+        knnRows = knn.collect().length
       }
       val (compactJobs, _) = measure(l, "compact") {
         IndexStore.compact(spark, root, nGroups = 2)
       }
       info(s"jobs: build $buildJobs, append $appendJobs, range $rangeJobs, " +
-        s"knn $knnJobs, compact $compactJobs; range shuffle bytes $rangeShuffle")
+        s"knn $knnJobs (+ $knnCollectJobs to collect), compact $compactJobs; " +
+        s"shuffle bytes: range $rangeShuffle, knn $knnShuffle")
       assert(rows > 0 && knnRows >= 150)
       assert(rangeJobs == 1, s"rangeQuery ran $rangeJobs jobs")
       assert(rangeShuffle == 0L, s"rangeQuery wrote $rangeShuffle shuffle bytes")
       // the spark.range query batch collected in one job (a local batch
-      // takes none), then the covered-cell scan's exchange into the
-      // (d2, id) cut and the cut's result
-      assert(knnJobs == 3, s"knnQuery ran $knnJobs jobs")
+      // takes none), then the covered-cell scan, whose partitions cut their
+      // queries' k best for the driver to merge; the answer is a local
+      // relation, so collecting it runs no job
+      assert(knnJobs == 2, s"knnQuery ran $knnJobs jobs")
+      assert(knnShuffle == 0L, s"knnQuery wrote $knnShuffle shuffle bytes")
+      assert(knnCollectJobs == 0, s"collecting the kNN answer ran $knnCollectJobs jobs")
       // per group, the exchange of the batch by cell and the write, whose
       // lineage row and manifest are observed inside it: 2·nGroups
       assert(buildJobs == 4, s"build ran $buildJobs jobs")
