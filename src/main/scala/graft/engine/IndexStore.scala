@@ -446,7 +446,7 @@ object IndexStore {
     * is kept twice, as the window keeps a repeated row.
     */
   private final class TopK(k: Int) extends Serializable {
-    private var ds = new Array[Double](math.min(k, 16))
+    private var ds = new Array[Double](math.max(0, math.min(k, 16)))
     private var ids = new Array[Long](ds.length)
     private var n = 0
 
@@ -509,43 +509,41 @@ object IndexStore {
         s"points) = $held answer rows exceed " +
         s"${SpatialOps.MaxBroadcastLayerRows} — the answer is merged on the " +
         "driver; split the batch into smaller batches")
-    val merged = mutable.LongMap.empty[TopK]
-    if (held > 0) {
-      // each query under every cell of its cover, or under `everywhere`
-      // when that cover is every cell
-      val byCell = mutable.LongMap.empty[mutable.ArrayBuffer[QueryRow]]
-      val everywhere = mutable.ArrayBuffer.empty[QueryRow]
-      batch.foreach { q =>
-        val cover = hist.knnCover(grid, k)(q.x, q.y)
-        if (cover.length == hist.cells.length) everywhere += q
-        else cover.foreach(byCell.getOrElseUpdate(_, mutable.ArrayBuffer.empty) += q)
-      }
-      // Lifetime: the scan job below is its only reader, so it is
-      // destroyed as soon as that job ends.
-      val planB = spark.sparkContext.broadcast(
-        (byCell.map { case (c, qs) => c -> qs.toArray }.toMap, everywhere.toArray))
-      val keep: Long => Boolean =
-        if (everywhere.nonEmpty) _ => true else byCell.contains
-      val scan = view(spark, owned, keep).select("cell", "tree").queryExecution.toRdd
-      val parts = try spark.sparkContext.runJob(scan, (rows: Iterator[InternalRow]) => {
-        val (cellQs, allQs) = planB.value
-        val best = mutable.LongMap.empty[TopK]
-        rows.foreach { r =>
-          val qs = cellQs.getOrElse(r.getLong(0), Array.empty[QueryRow])
-          val t = treeFrom(r.getBinary(1)) // once per stored tree, for all its queries
-          def probe(q: QueryRow): Unit = {
-            val top = best.getOrElseUpdate(q.qid, new TopK(k))
-            t.nearestK(q.x, q.y, k, keepTies = true)((i, d2) => top.offer(d2, t.ids(i)))
-          }
-          qs.foreach(probe)
-          allQs.foreach(probe)
+    // each query under every cell of its cover, or under `everywhere`
+    // when that cover is every cell
+    val byCell = mutable.LongMap.empty[mutable.ArrayBuffer[QueryRow]]
+    val everywhere = mutable.ArrayBuffer.empty[QueryRow]
+    batch.foreach { q =>
+      val cover = hist.knnCover(grid, k)(q.x, q.y)
+      if (cover.length == hist.cells.length) everywhere += q
+      else cover.foreach(byCell.getOrElseUpdate(_, mutable.ArrayBuffer.empty) += q)
+    }
+    // Lifetime: the scan job below is its only reader, so it is
+    // destroyed as soon as that job ends.
+    val planB = spark.sparkContext.broadcast(
+      (byCell.map { case (c, qs) => c -> qs.toArray }.toMap, everywhere.toArray))
+    val keep: Long => Boolean =
+      if (everywhere.nonEmpty) _ => true else byCell.contains
+    val scan = view(spark, owned, keep).select("cell", "tree").queryExecution.toRdd
+    val parts = try spark.sparkContext.runJob(scan, (rows: Iterator[InternalRow]) => {
+      val (cellQs, allQs) = planB.value
+      val best = mutable.LongMap.empty[TopK]
+      rows.foreach { r =>
+        val qs = cellQs.getOrElse(r.getLong(0), Array.empty[QueryRow])
+        val t = treeFrom(r.getBinary(1)) // once per stored tree, for all its queries
+        def probe(q: QueryRow): Unit = {
+          val top = best.getOrElseUpdate(q.qid, new TopK(k))
+          t.nearestK(q.x, q.y, k, keepTies = true)((i, d2) => top.offer(d2, t.ids(i)))
         }
-        best.toArray
-      }) finally planB.destroy()
-      parts.iterator.flatten.foreach { case (qid, top) =>
-        val m = merged.getOrElseUpdate(qid, new TopK(k))
-        top.pairs.foreach { case (d2, id) => m.offer(d2, id) }
+        qs.foreach(probe)
+        allQs.foreach(probe)
       }
+      best.toArray
+    }) finally planB.destroy()
+    val merged = mutable.LongMap.empty[TopK]
+    parts.iterator.flatten.foreach { case (qid, top) =>
+      val m = merged.getOrElseUpdate(qid, new TopK(k))
+      top.pairs.foreach { case (d2, id) => m.offer(d2, id) }
     }
     import spark.implicits._
     merged.toSeq.flatMap { case (qid, top) =>

@@ -252,7 +252,7 @@ class KnnAdversarialSpec extends AnyFunSuite {
     withRoot { root =>
       IndexStore.build(spark, base.toDS(), grid, root, nGroups = 2)
       IndexStore.append(spark, appended.toDS(), grid, root, gen = 1, nGroups = 2)
-      Seq(0, 1, 4, base.length + appended.length + 5).foreach { k =>
+      Seq(-1, 0, 1, 4, base.length + appended.length + 5).foreach { k =>
         val (got, want) = (rows(IndexStore.knnQuery(spark, root, grid, qs, k)),
           rows(brutePoints(k, qs = qs, pts = all)))
         assert(got == want, s"k = $k")
